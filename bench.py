@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from gtfs_realtime_etl_spark.plans.queries import QUERIES
-from gtfs_realtime_etl_spark.session import get_spark
+from gtfs_realtime_etl_spark.session import get_spark, spark_graft_cpus
 
 
 def _build_session(sf_dir: str):
@@ -122,8 +122,7 @@ def main() -> None:
     # below still triggers on a bad run), at half the wall clock.  The
     # main-lane methodology (>= 24 cores: 4 runs) is unchanged, and
     # n_runs is self-reported in the JSON line either way.
-    _cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    _cpus = int(_cpus_env) if _cpus_env.isdigit() else 32
+    _cpus = spark_graft_cpus()
     _runs_env = os.environ.get("SPARK_GRAFT_BENCH_RUNS")
     if _runs_env is None:
         n_runs = 4 if _cpus >= 24 else 2

@@ -184,6 +184,16 @@ def schedule_deviation(
     ).select(*out_cols)
 
 
+def _z(edge: float) -> Column:
+    """``(edge − μ) / σ`` with cell 14's numpy division at σ = 0 (a stop
+    whose deviations are all equal): ±inf, so Φ is 0 or 1, and NaN when
+    μ sits on the edge.  ANSI division raises DIVIDE_BY_ZERO there."""
+    num = F.lit(edge) - F.col("avg_diff")
+    return F.when(F.col("stddev_diff") != 0, num / F.col("stddev_diff")).otherwise(
+        num * F.lit(float("inf"))
+    )
+
+
 def stop_reliability(
     deviation: DataFrame,
     window: tuple[float, float] = RELIABILITY_WINDOW,
@@ -191,10 +201,8 @@ def stop_reliability(
     """Cell-14 parity, in-plan: dropna → z-scores → Φ(z_max)−Φ(z_min)."""
     lo, hi = window
     out = deviation.na.drop(subset=["avg_diff", "stddev_diff"])
-    z_min = (F.lit(lo) - F.col("avg_diff")) / F.col("stddev_diff")
-    z_max = (F.lit(hi) - F.col("avg_diff")) / F.col("stddev_diff")
     return (
-        out.withColumn("z_min", z_min)
-        .withColumn("z_max", z_max)
+        out.withColumn("z_min", _z(lo))
+        .withColumn("z_max", _z(hi))
         .withColumn("reliability", norm_cdf(F.col("z_max")) - norm_cdf(F.col("z_min")))
     )

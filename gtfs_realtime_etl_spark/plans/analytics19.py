@@ -68,8 +68,6 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
-# Module-level import so staging.py stays inside the v2 closure hash
-# (a function-local import hides the callee from the walker).
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 

@@ -1,5 +1,6 @@
-"""Closure-aware registry entry hash (v2) — round-11 migration
-candidate for ``plans/queries.py::_entry_src_hash``.
+"""Closure-aware registry entry hash (v2): the source hash the
+driver-gate ordering (``plans/driver_order.py``) compares against
+GREEN_MANIFEST_V2.json.
 
 The v1 hash covers only the query function's own source plus its
 oracle SQL.  Most registry entries are thin ``q_`` wrappers over
@@ -28,14 +29,9 @@ included via repr too, but insertion order could differ across
 versions), and anything reached only through dynamic dispatch.
 
 This module is STANDALONE (stdlib only — no pyspark, no package
-imports) and lives inside the package since round 12 so installed /
-packaged deployments can import ``plans.queries`` without a repo-root
-checkout (round-11 advisor finding).  ``scripts/entry_hash_v2.py`` is
-a thin by-path shim over this file so the manifest migration
-(``scripts/migrate_manifest_v2.py``), which applies the CURRENT
-implementation to historical git worktrees via subprocesses, keeps a
-single definition to load.  The v2 hash has been the live rotation
-hash since round 11.
+imports) and lives inside the package so installed / packaged
+deployments can order the registry without a repo-root checkout.
+The v2 hash has been the live rotation hash since round 11.
 """
 
 from __future__ import annotations

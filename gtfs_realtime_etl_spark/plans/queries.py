@@ -22,6 +22,7 @@ reliability) so the driver gate exercises the same plan shapes.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -2962,420 +2963,54 @@ ORACLE_SQL: dict[str, str] = {
     "mixture_sample": Q_MIXTURE_SAMPLE_SQL,
 }
 
-# Second bank: corpus/event analytics extensions (TF-IDF profile, exact
-# n-gram duplicate spans, sharding, histograms, edit-distance verify,
-# funnel / retention / rolling-window / anomaly event analytics).
-from gtfs_realtime_etl_spark.plans.analytics import (  # noqa: E402
-    EXT_ORACLE_SQL,
-    EXT_QUERIES,
-)
-
-QUERIES.update(EXT_QUERIES)
-ORACLE_SQL.update(EXT_ORACLE_SQL)
-
-# Third bank: bucketed interval-overlap join, gap-fill resampling,
-# one-pass table profiling, boilerplate prefixes, lexical diversity.
-from gtfs_realtime_etl_spark.plans.analytics2 import (  # noqa: E402
-    EXT2_ORACLE_SQL,
-    EXT2_QUERIES,
-)
-
-QUERIES.update(EXT2_QUERIES)
-ORACLE_SQL.update(EXT2_ORACLE_SQL)
-
-# Fourth bank: TPC-H plan classics — decorrelated scalar subqueries,
-# left-outer count distribution, EXISTS/NOT-EXISTS self-joins,
-# HAVING-over-scalar, conditional-aggregate ratios.
-from gtfs_realtime_etl_spark.plans.classics import (  # noqa: E402
-    EXT3_ORACLE_SQL,
-    EXT3_QUERIES,
-)
-
-QUERIES.update(EXT3_QUERIES)
-ORACLE_SQL.update(EXT3_ORACLE_SQL)
-
-# Fifth bank: k-NN-graph PageRank (unrolled-CTE oracle — iterative
-# algorithms promoted into the hash gate) + winnowing profile.
-from gtfs_realtime_etl_spark.plans.graph import (  # noqa: E402
-    EXT4_ORACLE_SQL,
-    EXT4_QUERIES,
-)
-
-QUERIES.update(EXT4_QUERIES)
-ORACLE_SQL.update(EXT4_ORACLE_SQL)
-
-# Sixth bank: corpus novelty, bigram-LM scoring, embedding silhouette.
-from gtfs_realtime_etl_spark.plans.analytics3 import (  # noqa: E402
-    EXT5_ORACLE_SQL,
-    EXT5_QUERIES,
-)
-
-QUERIES.update(EXT5_QUERIES)
-ORACLE_SQL.update(EXT5_ORACLE_SQL)
-
-# Seventh bank: distributed linear algebra (decimal-exact covariance,
-# per-dim standardization) + MinHash sketch-accuracy harness.
-from gtfs_realtime_etl_spark.plans.analytics4 import (  # noqa: E402
-    EXT6_ORACLE_SQL,
-    EXT6_QUERIES,
-)
-
-QUERIES.update(EXT6_QUERIES)
-ORACLE_SQL.update(EXT6_ORACLE_SQL)
-
-# Eighth bank: the remaining TPC-H plan classics (Q4/Q6/Q7/Q8/Q9/Q12/
-# Q19/Q20 shapes).
-from gtfs_realtime_etl_spark.plans.classics2 import (  # noqa: E402
-    EXT7_ORACLE_SQL,
-    EXT7_QUERIES,
-)
-
-QUERIES.update(EXT7_QUERIES)
-ORACLE_SQL.update(EXT7_ORACLE_SQL)
-
-# Ninth bank: Misra-Gries heavy hitters (theorem-verdict columns over
-# the exact twin), sequential-Poisson weighted sampling, Zipf fit.
-from gtfs_realtime_etl_spark.plans.analytics5 import (  # noqa: E402
-    EXT8_ORACLE_SQL,
-    EXT8_QUERIES,
-)
-
-QUERIES.update(EXT8_QUERIES)
-ORACLE_SQL.update(EXT8_ORACLE_SQL)
-
-# Tenth bank: iterative BPE tokenizer training (unrolled-CTE oracle)
-# + k-anonymity privacy audit.
-from gtfs_realtime_etl_spark.plans.analytics6 import (  # noqa: E402
-    EXT9_ORACLE_SQL,
-    EXT9_QUERIES,
-)
-
-QUERIES.update(EXT9_QUERIES)
-ORACLE_SQL.update(EXT9_ORACLE_SQL)
-
-# Eleventh bank: two-phase Pareto skyline, categorical mutual
-# information, market-basket association rules, HOF phrase search.
-from gtfs_realtime_etl_spark.plans.analytics7 import (  # noqa: E402
-    EXT10_ORACLE_SQL,
-    EXT10_QUERIES,
-)
-
-QUERIES.update(EXT10_QUERIES)
-ORACLE_SQL.update(EXT10_ORACLE_SQL)
-
-# Twelfth bank: integer-exact distribution drift (two-sample KS, PSI),
-# kNN-graph link prediction, Johnson-Lindenstrauss random projection.
-from gtfs_realtime_etl_spark.plans.analytics8 import (  # noqa: E402
-    EXT11_ORACLE_SQL,
-    EXT11_QUERIES,
-)
-
-QUERIES.update(EXT11_QUERIES)
-ORACLE_SQL.update(EXT11_ORACLE_SQL)
-
-# Thirteenth bank: integer-exact CUSUM change-point, info-gain decision
-# stump, closed-form OLS, Z-order layout statistics, greedy max-coverage
-# document selection.
-from gtfs_realtime_etl_spark.plans.analytics9 import (  # noqa: E402
-    EXT12_ORACLE_SQL,
-    EXT12_QUERIES,
-)
-
-QUERIES.update(EXT12_QUERIES)
-ORACLE_SQL.update(EXT12_ORACLE_SQL)
-
-# Fourteenth bank: statistical testing / scoring — Mann-Whitney ROC
-# AUC, chi-square independence, Benford first-digit audit, lagged
-# autocorrelation, diagonal-Mahalanobis embedding outliers.
-from gtfs_realtime_etl_spark.plans.analytics10 import (  # noqa: E402
-    EXT13_ORACLE_SQL,
-    EXT13_QUERIES,
-)
-
-QUERIES.update(EXT13_QUERIES)
-ORACLE_SQL.update(EXT13_ORACLE_SQL)
-
-# Fifteenth bank: graph BFS, event-sequence trigrams, calibration
-# bins, discrete hazard table, NDCG retrieval report.  The oracle dict
-# is built by a function because the NDCG oracle splices the ANN
-# top-k SQL defined above in this module (the EXT8 late-bind pattern).
-from gtfs_realtime_etl_spark.plans.analytics11 import (  # noqa: E402
-    EXT14_QUERIES,
-    _ext14_oracle_sql,
-)
-
-QUERIES.update(EXT14_QUERIES)
-ORACLE_SQL.update(_ext14_oracle_sql())
-
-# Sixteenth bank: lossless prefix-filtered set-similarity join, KMV
-# distinct sketch (with in-plan mergeability theorem), multinomial
-# naive-Bayes language scoring, RAKE keyphrases, feature hashing.
-from gtfs_realtime_etl_spark.plans.analytics12 import (  # noqa: E402
-    EXT15_QUERIES,
-    _ext15_oracle_sql,
-)
-
-QUERIES.update(EXT15_QUERIES)
-ORACLE_SQL.update(_ext15_oracle_sql())
-
-# Seventeenth bank: first/last-touch funnel attribution, grid quantile
-# normalization, RFM quintile segmentation, two-proportion A/B z-test.
-from gtfs_realtime_etl_spark.plans.analytics13 import (  # noqa: E402
-    EXT16_ORACLE_SQL,
-    EXT16_QUERIES,
-)
-
-QUERIES.update(EXT16_QUERIES)
-ORACLE_SQL.update(EXT16_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics14 import (  # noqa: E402
-    EXT17_ORACLE_SQL,
-    EXT17_QUERIES,
-)
-
-QUERIES.update(EXT17_QUERIES)
-ORACLE_SQL.update(EXT17_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics15 import (  # noqa: E402
-    EXT18_ORACLE_SQL,
-    EXT18_QUERIES,
-)
-
-QUERIES.update(EXT18_QUERIES)
-ORACLE_SQL.update(EXT18_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics16 import (  # noqa: E402
-    EXT19_ORACLE_SQL,
-    EXT19_QUERIES,
-)
-
-QUERIES.update(EXT19_QUERIES)
-ORACLE_SQL.update(EXT19_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics17 import (  # noqa: E402
-    EXT20_ORACLE_SQL,
-    EXT20_QUERIES,
-)
-
-QUERIES.update(EXT20_QUERIES)
-ORACLE_SQL.update(EXT20_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics18 import (  # noqa: E402
-    EXT21_ORACLE_SQL,
-    EXT21_QUERIES,
-)
-
-QUERIES.update(EXT21_QUERIES)
-ORACLE_SQL.update(EXT21_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics19 import (  # noqa: E402
-    EXT22_ORACLE_SQL,
-    EXT22_QUERIES,
-)
-
-QUERIES.update(EXT22_QUERIES)
-ORACLE_SQL.update(EXT22_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics20 import (  # noqa: E402
-    EXT23_ORACLE_SQL,
-    EXT23_QUERIES,
-)
-
-QUERIES.update(EXT23_QUERIES)
-ORACLE_SQL.update(EXT23_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics21 import (  # noqa: E402
-    EXT24_ORACLE_SQL,
-    EXT24_QUERIES,
-)
-
-QUERIES.update(EXT24_QUERIES)
-ORACLE_SQL.update(EXT24_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics22 import (  # noqa: E402
-    EXT25_ORACLE_SQL,
-    EXT25_QUERIES,
-)
-
-QUERIES.update(EXT25_QUERIES)
-ORACLE_SQL.update(EXT25_ORACLE_SQL)
-
-from gtfs_realtime_etl_spark.plans.analytics23 import (  # noqa: E402
-    EXT26_ORACLE_SQL,
-    EXT26_QUERIES,
-)
-
-QUERIES.update(EXT26_QUERIES)
-ORACLE_SQL.update(EXT26_ORACLE_SQL)
-
-# ---------------------------------------------------------------------------
-# Driver-gate ordering — STRUCTURAL, derived from the CORRECTNESS artifacts.
-#
-# The external driver checks only the first ~50 registry entries per round
-# (a budget, not a code failure — all entries are hash-green under the local
-# oracle gate, tests/test_oracle_parity.py).  Driver coverage is cumulative
-# across rounds, so entries that do NOT yet have a driver-green CORRECTNESS
-# row must lead the dict order.  Rounds 6 and 7 both hit the same staleness
-# trap by maintaining hardcoded ``_DRIVER_GREEN_R{N}`` tuples by hand; this
-# loader reads the committed ``CORRECTNESS_r*.json`` files instead, so the
-# rotation can never go stale again: never-driver-verified entries first,
-# then verified entries ordered stalest-first (oldest last-green round), so
-# any leftover budget re-verifies the most at-risk greens.
-#
-# Purely a dict-ordering change — every (name, callable, oracle) triple is
-# unchanged, and no entry is ever excluded.
-# ---------------------------------------------------------------------------
-import json as _json  # noqa: E402
-import os as _os  # noqa: E402
-import re as _re  # noqa: E402
-
-_REPO_ROOT = _os.path.dirname(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-)
-#: Committed by scripts/update_green_manifest.py at round start (full
-#: regeneration: scripts/migrate_manifest_v2.py, which recomputes every
-#: hash AT the entry's green-round commit via git worktrees): the
-#: closure-aware v2 source hash of each entry AT THE TIME its latest
-#: green driver row landed.  An entry whose current hash differs was
-#: rewritten after its verification and must rotate forward like a
-#: never-green one (round-8 lesson: ann_pq_topk / ann_recall_report
-#: shipped material rewrites on top of r07 greens and the rotation
-#: never noticed; round-10 lesson: the v1 wrapper-only hash missed
-#: kernel-level drift — epoch_shuffle's kernel extraction after its r6
-#: green was invisible until the v2 dry run).
-_GREEN_MANIFEST_PATH = _os.path.join(_REPO_ROOT, "GREEN_MANIFEST_V2.json")
-
-
-#: Live since round 11: the closure-aware v2 hash (query function source
-#: + every transitively reached same-package function's source + simple
-#: module constants + oracle SQL).  The single definition is vendored
-#: inside the package (``plans/entry_hash_v2.py``) since round 12 so an
-#: installed/packaged deployment imports without a repo-root checkout;
-#: ``scripts/entry_hash_v2.py`` is a by-path shim over the same file
-#: for the migration's historical-worktree subprocess use.
-from gtfs_realtime_etl_spark.plans.entry_hash_v2 import (
-    entry_src_hash_v2 as _entry_src_hash,
-)
-
-
-def _load_green_manifest() -> dict[str, str]:
-    try:
-        with open(_GREEN_MANIFEST_PATH) as fh:
-            data = _json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if not isinstance(data, dict):
-        return {}
-    return {
-        k: v.get("hash", "")
-        for k, v in data.items()
-        if isinstance(v, dict)
-    }
-
-
-def _driver_rows() -> dict[str, tuple[int, bool, bool]]:
-    """Latest driver row per query: name -> (round, ok, value-verified).
-
-    A row is ok when the driver recorded no error, matching row counts,
-    and neither a schema nor a value-hash mismatch; value-verified means
-    ``hash_match`` is True (rows-only rows have ``hash_match: null``)."""
-    latest: dict[str, tuple[int, bool, bool]] = {}
-    try:
-        names = sorted(_os.listdir(_REPO_ROOT))
-    except OSError:
-        return {}
-    for fname in names:
-        m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(_os.path.join(_REPO_ROOT, fname)) as fh:
-                data = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            ok = (
-                row.get("err") is None
-                and bool(row.get("rows_match"))
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            full = ok and row.get("hash_match") is True
-            prev = latest.get(name)
-            if prev is None or rnd >= prev[0]:
-                latest[name] = (rnd, ok, full)
-    return latest
-
-
-def _load_driver_green() -> dict[str, tuple[int, bool]]:
-    """Map query name -> (most recent green round, value-verified) for
-    entries with a TRUSTWORTHY green driver row.
-
-    ``value-verified`` is True only when ``hash_match`` is True —
-    rows-only rows (``hash_match: null``) count as green but carry a
-    weaker check, so the ordering puts them ahead of fully-verified
-    greens for re-burn (r8 advice: the old code let value-unverified
-    entries hide behind the green block forever).  If an entry's LATEST
-    driver check was red, it is treated as never-green so it rotates
-    back to the front of the queue.  Entries whose current source hash
-    differs from the committed GREEN_MANIFEST hash (i.e. the
-    implementation changed after the green row landed) are likewise
-    excluded — the r8 lesson: a green row verifies the code that
-    existed when it landed, nothing newer.
-    """
-    manifest = _load_green_manifest()
-    out: dict[str, tuple[int, bool]] = {}
-    for name, (rnd, ok, full) in _driver_rows().items():
-        if not ok:
-            continue
-        fn = QUERIES.get(name)
-        if fn is not None and manifest:
-            if manifest.get(name) != _entry_src_hash(
-                fn, ORACLE_SQL.get(name)
-            ):
-                continue  # rewritten since its green row — re-verify
-        out[name] = (rnd, full)
-    return out
-
-
-def _driver_gate_order(d: dict) -> dict:
-    """Order the registry so the driver's per-round correctness budget
-    (a ~50-entry prefix) lands on the least-trusted entries first:
-
-    1. latest-red or never-checked (original order) — known wrong or
-       wholly unverified; these must always lead;
-    2. changed-since-green (stalest green first) — code rewritten after
-       verification;
-    3. rows-only greens (value-unverified, stalest first);
-    4. fully-verified greens stalest-first (original relative order as
-       tie-break)."""
-    green = _load_driver_green()
-    rows = _driver_rows()
-    idx = {k: i for i, k in enumerate(d)}
-
-    def front_key(k: str):
-        row = rows.get(k)
-        if row is None or not row[1]:
-            return (0, 0, idx[k])  # red / never-checked
-        return (1, row[0], idx[k])  # changed since its green row
-
-    front_keys = sorted((k for k in d if k not in green), key=front_key)
-    back_keys = sorted(
-        (k for k in d if k in green),
-        key=lambda k: (green[k][1], green[k][0], idx[k]),
+# Extension banks, in registration order (the base entries above come
+# first).  Bank n exports ``EXT{n}_QUERIES`` / ``EXT{n}_ORACLE_SQL``
+# (the first bank without the number).  analytics11 and analytics12
+# instead export a late-bound ``_ext{n}_oracle_sql()``: their oracles
+# splice SQL defined in this module, which they can only import once it
+# has run this far.  Each bank's module docstring describes its
+# queries.  The dicts keep this declaration order; the driver's
+# verification order is applied by ``plans/driver_order.py``.
+_BANKS = tuple(
+    importlib.import_module(f"gtfs_realtime_etl_spark.plans.{name}")
+    for name in (
+        "analytics",
+        "analytics2",
+        "classics",
+        "graph",
+        "analytics3",
+        "analytics4",
+        "classics2",
+        "analytics5",
+        "analytics6",
+        "analytics7",
+        "analytics8",
+        "analytics9",
+        "analytics10",
+        "analytics11",
+        "analytics12",
+        "analytics13",
+        "analytics14",
+        "analytics15",
+        "analytics16",
+        "analytics17",
+        "analytics18",
+        "analytics19",
+        "analytics20",
+        "analytics21",
+        "analytics22",
+        "analytics23",
     )
-    return {
-        **{k: d[k] for k in front_keys},
-        **{k: d[k] for k in back_keys},
-    }
+)
 
-QUERIES = _driver_gate_order(QUERIES)
-ORACLE_SQL = _driver_gate_order(ORACLE_SQL)
+for _n, _bank in enumerate(_BANKS, start=1):
+    _tag = "EXT" if _n == 1 else f"EXT{_n}"
+    QUERIES.update(getattr(_bank, f"{_tag}_QUERIES"))
+    _oracle = getattr(_bank, f"{_tag}_ORACLE_SQL", None)
+    if _oracle is None:
+        _oracle = getattr(_bank, f"_ext{_n}_oracle_sql")()
+    ORACLE_SQL.update(_oracle)
+del _n, _bank, _tag, _oracle
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

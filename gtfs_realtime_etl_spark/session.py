@@ -21,6 +21,17 @@ from pyspark.sql import SparkSession
 DEFAULT_TZ = "America/Toronto"
 
 
+def spark_graft_cpus() -> int:
+    """Core count from ``SPARK_GRAFT_CPUS`` (default 32): a positive
+    integer, or a ValueError naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return int(raw)
+
+
 def get_spark(
     app_name: str = "gtfs-realtime-etl-spark",
     master: str | None = None,
@@ -29,10 +40,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_graft_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus
 
     b = (
         SparkSession.builder.appName(app_name)

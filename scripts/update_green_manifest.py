@@ -5,11 +5,13 @@ just verified (CORRECTNESS_r{N}.json was produced against exactly
 these sources).
 
 For every registry entry whose LATEST driver row is green, the
-manifest records the entry's current source hash (query function
-source + oracle SQL, via ``_entry_src_hash``).  The rotation in
-``plans/queries.py`` then treats any entry whose hash later drifts
-from its manifest value as never-green, so rewritten queries rotate
-back into the driver's verification prefix (round-8 lesson:
+manifest records the entry's current source hash (the closure-aware
+``plans/entry_hash_v2.py`` hash of the query function + oracle SQL).
+The driver-gate rotation in ``plans/driver_order.py`` — applied only
+by ``__spark_entry__.queries()`` / ``oracle_sql()``, never on a plain
+``plans.queries`` import — then treats any entry whose hash later
+drifts from its manifest value as never-green, so rewritten queries
+rotate back into the driver's verification prefix (round-8 lesson:
 ann_pq_topk / ann_recall_report shipped material rewrites on top of
 r07 greens and the stalest-first rotation never noticed).
 
@@ -119,7 +121,7 @@ def _files_changed_since_round_commit(latest_round: int) -> set[str] | None:
 
 
 def main() -> None:
-    from gtfs_realtime_etl_spark.plans.queries import (
+    from gtfs_realtime_etl_spark.plans.driver_order import (
         _GREEN_MANIFEST_PATH,
         ORACLE_SQL,
         QUERIES,
@@ -127,9 +129,8 @@ def main() -> None:
         _entry_src_hash,
     )
 
-    # Whatever manifest the live rotation reads is the one to refresh
-    # (GREEN_MANIFEST_V2.json since the round-11 v2 flip; hashes come
-    # from the same live _entry_src_hash the rotation uses).
+    # Whatever manifest the live rotation reads is the one to refresh,
+    # hashed with the same _entry_src_hash the rotation uses.
     path = _GREEN_MANIFEST_PATH
     try:
         with open(path) as fh:

@@ -1,9 +1,8 @@
 """Closure-aware entry hash v2 (the live rotation hash since round
 11): a kernel-only or constant-only edit must change the wrapper's
-hash; unrelated edits must not.  The canonical implementation is
-vendored in the package (``plans/entry_hash_v2.py``, round 12);
-``scripts/entry_hash_v2.py`` is a by-path shim the manifest migration
-loads — pinned below to resolve to the same file."""
+hash; unrelated edits must not.  The implementation lives in the
+package (``plans/entry_hash_v2.py``); the driver-gate rotation that
+uses it is ``plans/driver_order.py``."""
 
 from __future__ import annotations
 
@@ -11,38 +10,10 @@ import importlib.util
 import os
 import sys
 
-from gtfs_realtime_etl_spark.plans import entry_hash_v2 as _impl
 from gtfs_realtime_etl_spark.plans.entry_hash_v2 import (
     _walk,
     entry_src_hash_v2,
 )
-
-_SCRIPTS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
-)
-
-
-def _load_scripts_module(name: str):
-    spec = importlib.util.spec_from_file_location(
-        name, os.path.join(_SCRIPTS, f"{name}.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_scripts_shim_resolves_to_package_impl():
-    """The migration applies scripts/entry_hash_v2.py to historical
-    worktrees by path; it must be the SAME implementation the live
-    rotation imports, loaded from the package file."""
-    shim = _load_scripts_module("entry_hash_v2")
-    assert (
-        shim.entry_src_hash_v2.__code__.co_filename
-        == os.path.abspath(_impl.__file__)
-    )
-    assert shim.entry_src_hash_v2(
-        entry_src_hash_v2, "SELECT 1"
-    ) == entry_src_hash_v2(entry_src_hash_v2, "SELECT 1")
 
 _BASE = '''
 KONST = 7
@@ -186,7 +157,7 @@ def test_hash_is_deterministic_across_loads(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Live-rotation integration (round-11 flip): the registry's
+# Live-rotation integration (round-11 flip): the rotation's
 # _entry_src_hash IS the v2 implementation, the manifest path points at
 # the v2 file, and a kernel-only edit provably moves an entry into the
 # rotation front.
@@ -194,7 +165,7 @@ def test_hash_is_deterministic_across_loads(tmp_path):
 
 
 def test_live_rotation_uses_v2_hash():
-    from gtfs_realtime_etl_spark.plans import queries as q
+    from gtfs_realtime_etl_spark.plans import driver_order as q
 
     assert os.path.basename(q._GREEN_MANIFEST_PATH) == "GREEN_MANIFEST_V2.json"
     # Same function object semantics: identical output on a real entry.
@@ -210,7 +181,7 @@ def test_kernel_edit_fronts_entry_in_live_rotation(tmp_path, monkeypatch):
     manifest row no longer vouches and the entry joins the front."""
     import json
 
-    from gtfs_realtime_etl_spark.plans import queries as q
+    from gtfs_realtime_etl_spark.plans import driver_order as q
 
     name = "_hashv2_fake_entry"
     mod_a = _load_fake(tmp_path, _BASE, "ra")
@@ -226,8 +197,9 @@ def test_kernel_edit_fronts_entry_in_live_rotation(tmp_path, monkeypatch):
     monkeypatch.setitem(q.QUERIES, name, mod_a.wrapper)
     monkeypatch.setitem(q.ORACLE_SQL, name, "SELECT 1")
     try:
-        order = q._driver_gate_order({name: mod_a.wrapper})
-        assert name in q._load_driver_green(), "variant A should be trusted"
+        green = q._load_driver_green()
+        assert name in green, "variant A should be trusted"
+        order = q._driver_gate_order({name: mod_a.wrapper}, green)
 
         # Kernel-only edit: wrapper source identical, kernel differs.
         mod_b = _load_fake(tmp_path, _BASE.replace("* KONST", "* KONST + 1"), "rb")
@@ -235,10 +207,11 @@ def test_kernel_edit_fronts_entry_in_live_rotation(tmp_path, monkeypatch):
 
         assert inspect.getsource(mod_a.wrapper) == inspect.getsource(mod_b.wrapper)
         monkeypatch.setitem(q.QUERIES, name, mod_b.wrapper)
-        assert name not in q._load_driver_green(), (
+        green = q._load_driver_green()
+        assert name not in green, (
             "kernel-only drift must evict the entry from the trusted set"
         )
-        order = q._driver_gate_order({name: mod_b.wrapper})
+        order = q._driver_gate_order({name: mod_b.wrapper}, green)
         assert list(order) == [name]  # fronted (only entry, front block)
     finally:
         q.QUERIES.pop(name, None)

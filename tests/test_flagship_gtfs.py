@@ -188,6 +188,50 @@ def test_reliability_matches_scipy_shape(spark, lake):
         assert row.reliability == pytest.approx(exp, abs=2e-7)
 
 
+def test_reliability_zero_variance_stop(spark):
+    """A stop whose deviations are all equal has stddev 0.  Cell 14
+    divides with numpy there: z = ±inf gives Φ = 0 or 1, and z is NaN
+    (so is the reliability) when the mean sits on a window edge."""
+    import numpy as np
+
+    rows = [
+        ("inside", 100.0, 0.0),
+        ("early", -120.0, 0.0),
+        ("late", 400.0, 0.0),
+        ("on_edge", -60.0, 0.0),
+        ("spread", 30.0, 90.0),
+        ("single", 5.0, None),  # one event: dropped, as by dropna
+    ]
+    dev = spark.createDataFrame(
+        rows, "stop_id string, avg_diff double, stddev_diff double"
+    )
+    got = stop_reliability(dev).toPandas().set_index("stop_id")
+
+    exp = pd.DataFrame(rows, columns=["stop_id", "avg_diff", "stddev_diff"])
+    exp = exp.dropna().set_index("stop_id")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        z_min = (-60 - exp["avg_diff"]) / exp["stddev_diff"]
+        z_max = (300 - exp["avg_diff"]) / exp["stddev_diff"]
+
+    def phi(x):
+        return 0.5 * (1 + math.erf(x / math.sqrt(2)))
+
+    reliability = z_max.map(phi) - z_min.map(phi)
+    assert sorted(got.index) == sorted(exp.index)
+    assert got["z_min"].to_dict() == pytest.approx(z_min.to_dict(), nan_ok=True)
+    assert got["z_max"].to_dict() == pytest.approx(z_max.to_dict(), nan_ok=True)
+    assert got["reliability"].to_dict() == pytest.approx(
+        reliability.to_dict(), abs=2e-7, nan_ok=True
+    )
+    # Spelled out: inside the window 1, outside 0, on an edge NaN.
+    assert got.loc[["inside", "early", "late"], "reliability"].tolist() == [
+        1.0,
+        0.0,
+        0.0,
+    ]
+    assert math.isnan(got.loc["on_edge", "reliability"])
+
+
 def test_flagship_optional_mercator_columns(spark, lake):
     """with_web_mercator=True appends EPSG:3857 mercator_x/y consistent
     with each stop's lon/lat (closing the notebook's client-side

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -28,13 +30,15 @@ def test_driver_gate_rotation_is_structural():
     budget to hand-maintained green lists going stale; the order is
     derived from the committed CORRECTNESS_r*.json + the live green manifest (GREEN_MANIFEST_V2.json since round 11)
     artifacts, and this test fails if any green entry ever precedes a
-    needs-verification one."""
-    from gtfs_realtime_etl_spark.plans.queries import _load_driver_green
+    needs-verification one in the order the driver reads
+    (``__spark_entry__.queries()``)."""
+    import __spark_entry__ as ep
+    from gtfs_realtime_etl_spark.plans.driver_order import _load_driver_green
 
     green = _load_driver_green()
     if not green:
         pytest.skip("no CORRECTNESS_r*.json artifacts visible (round 1?)")
-    keys = list(QUERIES)
+    keys = list(ep.queries())
     seen_green = False
     for k in keys:
         if k in green:
@@ -52,7 +56,9 @@ def test_driver_gate_rotation_is_structural():
         "driver-green entries are not (rows-only-first, stalest-first); "
         "leftover budget should re-verify the weakest/oldest greens"
     )
-    assert list(ORACLE_SQL) == keys, "ORACLE_SQL order diverged from QUERIES"
+    assert list(ep.oracle_sql()) == keys, (
+        "oracle_sql() order diverged from queries()"
+    )
 
 
 def test_green_manifest_current_for_green_entries():
@@ -60,7 +66,8 @@ def test_green_manifest_current_for_green_entries():
     hash equal to its CURRENT source hash — i.e. the committed
     the live green manifest was regenerated after the last code change to
     any green entry (scripts/update_green_manifest.py)."""
-    from gtfs_realtime_etl_spark.plans.queries import (
+    import __spark_entry__ as ep
+    from gtfs_realtime_etl_spark.plans.driver_order import (
         _entry_src_hash,
         _load_driver_green,
         _load_green_manifest,
@@ -70,15 +77,37 @@ def test_green_manifest_current_for_green_entries():
     manifest = _load_green_manifest()
     if not green or not manifest:
         pytest.skip("no driver artifacts / manifest yet")
+    queries, oracles = ep.queries(), ep.oracle_sql()
     stale = [
         k
         for k in green
-        if manifest.get(k) != _entry_src_hash(QUERIES[k], ORACLE_SQL.get(k))
+        if manifest.get(k) != _entry_src_hash(queries[k], oracles.get(k))
     ]
     assert stale == [], (
         f"green entries with stale manifest hashes: {stale[:10]} — "
         "_load_driver_green should already have excluded these"
     )
+
+
+def test_registry_import_skips_driver_ordering():
+    """Importing the registry must not pay for the driver-gate order
+    (closure hashing of every entry plus the CORRECTNESS artifact
+    reads): only ``__spark_entry__`` applies it, via
+    ``plans/driver_order.py``."""
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, gtfs_realtime_etl_spark.plans.queries; "
+            "print(sorted(m for m in sys.modules if m.endswith(("
+            "'plans.entry_hash_v2', 'plans.driver_order'))))",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.stdout.strip() == "[]", out.stdout
 
 
 def test_every_query_has_an_oracle():
@@ -96,8 +125,9 @@ def test_every_query_has_an_oracle():
 def test_entry_module_exposes_contract(spark):
     import __spark_entry__ as ep
 
-    assert set(ep.queries()) == set(QUERIES)
-    assert set(ep.oracle_sql()) == set(ORACLE_SQL)
+    # Same name -> callable / SQL pairs; only the order differs.
+    assert ep.queries() == QUERIES
+    assert ep.oracle_sql() == ORACLE_SQL
     df = ep.entry(spark)
     assert df.columns  # stable schema, no collect here (driver's job)
 
