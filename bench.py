@@ -22,14 +22,13 @@ the round-7 judge measured against fresh-session isolated runs):
   1-minute timer injected into ~random queries' medians) and instead
   an EXPLICIT GC+drain+GC runs immediately before EVERY timed run
   (the drain sleep lets the ASYNC ContextCleaner finish the enqueued
-  block/shuffle-file drops before the timer starts — round-11 fix)
-  ($SPARK_GRAFT_BENCH_GC_ENABLED on/off, default on — round-9 made it
-  per query group; round-10 made it per RUN after measuring
-  containment_join's localCheckpoint blocks leaking across its own
-  back-to-back runs: 10.3/10.5/12.2/37.1 s group-GC'd vs flat
-  ~10-11 s per-run-GC'd.  With the timer off,
+  block/shuffle-file drops before the timer starts — round-11 fix).
+  It is always on: round-9 made it per query group; round-10 made it
+  per RUN after measuring containment_join's localCheckpoint blocks
+  leaking across its own back-to-back runs: 10.3/10.5/12.2/37.1 s
+  group-GC'd vs flat ~10-11 s per-run-GC'd.  With the timer off,
   shuffle-file/broadcast/checkpoint cleanup happens ONLY on explicit
-  GC).  The GC is outside the timed window: it costs total wall clock
+  GC.  The GC is outside the timed window: it costs total wall clock
   (~0.1-0.4 s per GC), never median fidelity.
 - The stall self-repair (extra runs when median > 2*best + 1s) is
   recorded: BENCH_FULL.json carries "repaired" (which queries took
@@ -137,32 +136,13 @@ def main() -> None:
     # group-GC'd vs flat ~10-11 s per-run-GC'd).  The bench session
     # disables the periodic ContextCleaner GC timer (so no mid-timing
     # pauses), which means shuffle-file/broadcast/checkpoint cleanup
-    # happens ONLY on an explicit System.gc(); that GC sits OUTSIDE
-    # the timed window (~0.1-0.4 s each), so it costs total wall
-    # clock, never median fidelity.  SPARK_GRAFT_BENCH_GC_ENABLED is
-    # an on/off switch (default on); the historical numeric env var is
-    # honored as the same switch — any non-zero value means on, since
-    # a "GC only every Nth query" cadence is exactly the
-    # position-dependence both prior rounds had to root out.
-    gc_env = os.environ.get("SPARK_GRAFT_BENCH_GC_ENABLED")
-    if gc_env is None and "SPARK_GRAFT_BENCH_GC_EVERY" in os.environ:
-        gc_env = os.environ["SPARK_GRAFT_BENCH_GC_EVERY"]
-        print(
-            "bench: legacy SPARK_GRAFT_BENCH_GC_EVERY honored as an "
-            "on/off switch (any non-zero value = GC before EVERY run); "
-            "set SPARK_GRAFT_BENCH_GC_ENABLED instead",
-            file=sys.stderr,
-        )
-    try:
-        gc_enabled = bool(int(gc_env if gc_env is not None else "1"))
-    except ValueError:
-        raise SystemExit(
-            f"bench: non-numeric GC switch {gc_env!r} (from "
-            "SPARK_GRAFT_BENCH_GC_ENABLED / legacy "
-            "SPARK_GRAFT_BENCH_GC_EVERY); use 0 or 1"
-        )
+    # happens ONLY on an explicit System.gc(); so a GC+drain runs
+    # before EVERY timed run, outside the timed window (~0.1-0.4 s
+    # each): it costs total wall clock, never median fidelity.  There
+    # is no off switch — skipping it brings back the position
+    # dependence both rounds had to root out.
     # Absolute canary reference (quiet-phase setsim median, seconds) —
-    # validated UP FRONT like the GC switch: it is only consumed after
+    # validated UP FRONT: it is only consumed after
     # the whole suite has run, and a malformed env var surfacing there
     # would discard hours of timings (round-11 advisor finding).
     canary_ref_env = os.environ.get("SPARK_GRAFT_BENCH_CANARY_REF", "5.0")
@@ -213,8 +193,7 @@ def main() -> None:
         _time_query(s, cfn, "setsim_join")
         runs = []
         for _ in range(3):
-            if gc_enabled:
-                _gc_drain(s)
+            _gc_drain(s)
             runs.append(_time_query(s, cfn, "setsim_join"))
         return round(statistics.median(runs), 3)
 
@@ -255,8 +234,7 @@ def main() -> None:
             spark = _build_session(sf_dir)
         times = []
         for _ in range(n_runs):
-            if gc_enabled:
-                _gc_drain(spark)
+            _gc_drain(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
@@ -275,8 +253,7 @@ def main() -> None:
         if statistics.median(times) > 2 * min(times) + 1.0:
             repaired.append(name)
             for _ in range(n_runs):
-                if gc_enabled:
-                    _gc_drain(spark)
+                _gc_drain(spark)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 times.append(time.perf_counter() - t0)
@@ -332,7 +309,7 @@ def main() -> None:
                 "sf": sf,
                 "n_runs": n_runs,
                 "session_every": session_every,
-                "gc_per_run": gc_enabled,
+                "gc_per_run": True,
                 **totals,
             },
             f,

@@ -8,15 +8,20 @@ polynomial rolling hashes over character codes mod the Mersenne prime
 
     h(s) = (sum_j code(s[j]) * BASE^(len-1-j)) mod (2^31 - 1)
 
-which every engine can compute exactly in int64 arithmetic.  Three
-bit-identical implementations are provided:
+which every engine can compute exactly in int64 arithmetic.  Each hash
+has one Spark form and one DuckDB form, bit-identical to each other:
 
-- **Arrow-batched numpy kernels** (the hot path): sliding-window matrix
-  products, no per-character Python.
-- **Spark Column twins** (documentation + tests): explicit k-term sums
-  over ``substring``/``ascii``.
-- **DuckDB SQL emitters** (the oracle side): the same arithmetic as
-  ``list_transform``/``list_reduce`` expressions.
+- **Arrow-batched numpy kernels** run every Spark shingle, MinHash,
+  SimHash, winnowing and document-fingerprint computation:
+  sliding-window matrix products, no per-character Python.
+- **One Spark Column form**, :func:`token_hash64_column`, hashes short
+  keys (a doc id, a split group) inside a projection where a UDF
+  round trip would cost more than the hash (``q_weighted_sample``,
+  ``operators.splits.group_hash_mixed``).
+- **DuckDB SQL emitters** are the oracle side: the same arithmetic as
+  ``list_transform``/``list_reduce`` expressions.  The registry oracles
+  and ``tests/test_hashing_properties.py`` check each Spark form
+  against them.
 
 64-bit token hashes for SimHash are built from two independent 31-bit
 polynomial hashes (bases 31 and 37): ``h64 = h31 * 2^31 + h37`` — 62
@@ -38,9 +43,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-#: Case folding for shingle hashing is ASCII-ONLY (A-Z → a-z) in all
-#: three implementations.  Full Unicode lowercasing is engine-specific
-#: (Python 'İ'.lower() → 2 codepoints, DuckDB/utf8proc → 1, JVM locale
+#: Case folding for shingle hashing is ASCII-ONLY (A-Z → a-z) in every
+#: form.  Full Unicode lowercasing is engine-specific (Python
+#: 'İ'.lower() → 2 codepoints, DuckDB/utf8proc → 1, JVM locale
 #: rules differ again) and would break bit-identity on non-ASCII text —
 #: ASCII folding is deterministic everywhere and is the conventional
 #: normalization for dedup fingerprints.
@@ -130,8 +135,7 @@ def _poly_hash_rows(mat: np.ndarray, base: int) -> np.ndarray:
 
 def shingle_hash_kernel(k: int = 5):
     """pandas_udf: text → array<bigint> of per-window polynomial hashes
-    (base BASE_A).  Twin of :func:`shingle_hashes_column` / SQL
-    :func:`sql_shingle_hashes`."""
+    (base BASE_A).  DuckDB emitter: :func:`sql_shingle_hashes`."""
     pow_vec = _pow_vec(BASE_A, k)
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -186,9 +190,8 @@ def shingle_hash64_set_kernel(k: int = 5):
     """pandas_udf: text → SORTED DISTINCT 62-bit composite window
     hashes — the setsim_join comparison sets, collision-safe at
     10^7-10^8-shingle vocabularies where the plain 31-bit space
-    produces millions of colliding pairs.  Twins:
-    plans/analytics12._shingle_hashes_prefolded (Column) and
-    plans/analytics12._sql_shingle_hashes64 (DuckDB)."""
+    produces millions of colliding pairs.  DuckDB emitter:
+    plans/analytics12._sql_shingle_hashes64."""
     pwa = _pow_vec(BASE_A, k)
     pwb = _pow_vec(BASE_B, k)
 
@@ -256,8 +259,10 @@ def token_hash64_set_kernel():
 
 def winnow_fingerprints_kernel(k: int = 5, window: int = 4):
     """pandas_udf: text → array<bigint> of DISTINCT winnowing
-    fingerprints (sliding-window minima of the shingle hashes) — the
-    hot-path twin of :func:`operators.dedup.winnow_fingerprints`."""
+    fingerprints: the minimum shingle hash of every sliding window of
+    ``window`` consecutive shingles.  Texts with fewer than ``window``
+    shingles yield ONE window covering all of them.  The fingerprint
+    step of :func:`operators.dedup.winnow_candidates`."""
     from numpy.lib.stride_tricks import sliding_window_view
 
     pow_vec = _pow_vec(BASE_A, k)
@@ -286,9 +291,9 @@ def winnow_profile_kernel(k: int = 5, window: int = 4):
     the sliding-window minima in one numpy pass (stride-view min), no
     intermediate arrays shipped back.
 
-    Bit-identical to profiling :func:`operators.dedup.winnow_fingerprints`
-    (the Column twin): texts shorter than the window yield ONE window
-    covering all shingles, matching the twin's clamped ``slice``."""
+    Bit-identical to profiling :func:`winnow_fingerprints_kernel`'s
+    output: texts shorter than the window yield ONE window covering all
+    shingles, as the oracle's clamped ``list_slice`` does."""
     from numpy.lib.stride_tricks import sliding_window_view
     from pyspark.sql.types import StructField, StructType
 
@@ -351,12 +356,12 @@ def minhash_text_kernel(num_hashes: int = 32, k: int = 5):
 def doc_fingerprint_kernel():
     """pandas_udf: text → whole-document polynomial fingerprint (bigint).
 
-    Bit-identical to the Column twin in ``plans/queries.py``
-    (``aggregate`` Horner fold, base BASE_A, mod MOD) and the DuckDB
-    ``list_reduce`` oracle: Horner with a mod per step equals
+    Bit-identical to the ``doc_fingerprint`` DuckDB oracle's
+    ``list_reduce`` Horner fold (base BASE_A, mod MOD): Horner with a
+    mod per step equals
     ``sum(code_i * BASE^(n-1-i)) mod MOD``, computed here as one
     vectorized power-dot per document — no per-character interpreted
-    expressions (the Column HOF chain costs O(n) interpreted calls per
+    expressions (a Column HOF chain costs O(n) interpreted calls per
     char; this was the round-2 `doc_fingerprint` regression)."""
 
     @F.pandas_udf(LongType())
@@ -427,31 +432,14 @@ def simhash_tokens_kernel():
 
 
 # ---------------------------------------------------------------------------
-# Spark Column twins (documentation + small-data tests; interpreted
-# higher-order functions — NOT the hot path).
+# Spark Column form (production: short keys hashed inside a projection).
 # ---------------------------------------------------------------------------
 
 
-def shingle_hashes_column(text: Column, k: int = 5) -> Column:
-    """Column twin of :func:`shingle_hash_kernel` (bit-identical)."""
-    lower = F.translate(text, _ASCII_UPPER, _ASCII_LOWER)
-    n = F.length(lower)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    pow_vec = _pow_vec(BASE_A, k)
-
-    def _window_hash(i: Column) -> Column:
-        acc = F.lit(0).cast("long")
-        for j in range(k):
-            acc = acc + F.ascii(F.substring(lower, i + F.lit(j), 1)).cast(
-                "long"
-            ) * F.lit(int(pow_vec[j]))
-        return F.pmod(acc, F.lit(MOD))
-
-    return F.transform(idx, _window_hash)
-
-
 def token_hash64_column(tok: Column) -> Column:
-    """Column twin of the kernel's 62-bit token hash."""
+    """62-bit composite token hash (``h31 * 2^31 + h37``) of one string
+    Column — the same hash as :func:`token_hash64_set_kernel` and
+    :func:`sql_token_hash64`."""
 
     def _poly(base: int) -> Column:
         chars = F.sequence(F.lit(1), F.length(tok))

@@ -112,23 +112,6 @@ _LOG2_TERMS = 14
 _LN2 = 0.6931471805599453
 
 
-def portable_int_log2(n: Column) -> Column:
-    """log2 of a positive INTEGER column, bit-identical across engines
-    (see block comment).  Behavior is undefined for n < 1."""
-    nl = n.cast("long")
-    e = F.length(F.bin(nl)) - F.lit(1)
-    # F.shiftleft only takes a literal bit count; the SQL function
-    # accepts a column — 1 << e is the EXACT 2^e (never libm pow).
-    p = F.call_function("shiftleft", F.lit(1).cast("long"), e).cast("double")
-    m = nl.cast("double") / p
-    t = (m - F.lit(1.0)) / (m + F.lit(1.0))
-    s = t * t
-    acc = F.lit(1.0 / (2 * _LOG2_TERMS + 1))
-    for j in range(_LOG2_TERMS - 1, -1, -1):
-        acc = acc * s + F.lit(1.0 / (2 * j + 1))
-    return e.cast("double") + F.lit(2.0) * t * acc / F.lit(_LN2)
-
-
 def micro_bits(lg: Column) -> Column:
     """``floor(lg·1e6 + 0.5)`` as BIGINT — the shared micro-bit
     quantization over an (already-staged) portable log2 double.  IEEE
@@ -144,24 +127,36 @@ def _log2_horner_sql(s_ref: str) -> str:
     Double.parseDouble (correctly rounded; a bare decimal literal would
     route through DECIMAL first).  ``repr`` emits the shortest string
     that round-trips, so each parsed double is bit-identical to the
-    ``F.lit(1.0 / (2*j+1))`` the Column form embeds."""
+    Python double ``1.0 / (2*j+1)``, which the DuckDB emitter writes
+    with the same ``repr``."""
     acc = f"{1.0 / (2 * _LOG2_TERMS + 1)!r}D"
     for j in range(_LOG2_TERMS - 1, -1, -1):
         acc = f"({acc}) * {s_ref} + {1.0 / (2 * j + 1)!r}D"
     return acc
 
 
-def _staged_sql_fast(df, cols: dict) -> "DataFrame":
-    """selectExpr fast path of :func:`portable_int_log2_staged` for
-    string (SQL-expression) inputs: the same staged arithmetic, parsed
-    JVM-side in SIX round trips instead of thousands of Column-builder
-    py4j calls.  Round-12 finding: feature_mi's 3.7 s sf0.1 median was
-    ~60% PLAN CONSTRUCTION — 15k py4j send_commands, 2.2 s of them
-    inside the Column-built staged log2 (the Horner loop alone is
-    14 terms × 4 instances × 3 pairs of Column ops).  Each level below
-    mirrors the Column form op-for-op (same casts, same function, same
-    association), so results stay bit-identical — pinned on the same
-    213-value grid in tests/test_functions.py."""
+def portable_int_log2_staged(df, cols: dict) -> "DataFrame":
+    """Portable log2 of positive INTEGER SQL expressions: adds one
+    DOUBLE column per ``(name, sql_expr)`` of ``cols`` (behavior is
+    undefined for values < 1).  The arithmetic is the block comment's,
+    op-for-op the same as :func:`portable_int_log2_sql` (the DuckDB
+    emitter), so both engines produce the bit-identical double — pinned
+    on a 213-value grid in tests/test_functions.py.
+
+    Each instance's ``n / e / m / t / s`` intermediates are bound to
+    NAMED columns, one ``selectExpr`` level per intermediate.  Inlined,
+    the Horner chain splices the whole mantissa subtree once per term
+    (``s`` appears ``_LOG2_TERMS`` times, each carrying the full
+    ``t → m → e → n`` chain), so a plan needing several log2 columns
+    pays O(terms × subtree × instances) in Catalyst analysis and codegen
+    — on ``feature_mi`` that compile cost, not data, dominated the
+    query.  Every named intermediate is referenced more than once
+    downstream, so Catalyst's CollapseProject keeps it materialized and
+    the plan stays linear in the term count.  Parsing SQL text JVM-side
+    costs six py4j round trips where building the same tree from Column
+    objects cost thousands (2.2 s of feature_mi's plan construction at
+    sf0.1).  Intermediates are dropped before returning; column order
+    of ``cols`` is preserved."""
     names = list(cols)
     out = df.selectExpr(
         "*", *[f"CAST(({cols[n]}) AS BIGINT) AS _{n}__n" for n in names]
@@ -169,6 +164,7 @@ def _staged_sql_fast(df, cols: dict) -> "DataFrame":
     out = out.selectExpr(
         "*", *[f"length(bin(_{n}__n)) - 1 AS _{n}__e" for n in names]
     )
+    # shiftleft(1, e) is the EXACT 2^e (never libm pow).
     out = out.selectExpr(
         "*",
         *[
@@ -196,67 +192,9 @@ def _staged_sql_fast(df, cols: dict) -> "DataFrame":
     return out.drop(*[f"_{n}__{p}" for n in names for p in "nemts"])
 
 
-def portable_int_log2_staged(df, cols: dict) -> "DataFrame":
-    """Multi-column staged twin of :func:`portable_int_log2`: adds one
-    DOUBLE column per ``(name, expr)`` with IDENTICAL arithmetic (same
-    correctly-rounded ops in the same order — bit-identical results),
-    but binds each instance's ``e / m / t / s`` intermediates to NAMED
-    columns.
-
-    ``cols`` values may be Columns or SQL-expression STRINGS; when all
-    are strings the construction takes :func:`_staged_sql_fast` (six
-    selectExpr round trips — the round-12 plan-CONSTRUCTION fix; the
-    round-11 staged form had already fixed plan COMPILE but still
-    built the Horner tree one py4j call at a time).
-
-    Why it exists (round-11 plan-compile finding): the inline form
-    splices the whole mantissa subtree once per Horner term — ``s``
-    appears ``_LOG2_TERMS`` (14) times, each carrying the full
-    ``t → m → e → n`` chain — so a plan that needs several log2 columns
-    pays O(terms × subtree × instances) in driver ANALYSIS and codegen.
-    On ``feature_mi`` that compile cost, not data, dominated the query
-    (~1.9 s vs 0.4 s for the same aggregate with the log terms
-    removed, on a few-hundred-row contingency table).  Every named
-    intermediate here is referenced more than once downstream, so
-    Catalyst's CollapseProject keeps them materialized (it never
-    re-inlines a non-cheap alias with multiple references) and the
-    plan stays linear in the term count.  Intermediates are dropped
-    before returning; column order of ``cols`` is preserved."""
-    if cols and all(isinstance(c, str) for c in cols.values()):
-        return _staged_sql_fast(df, cols)
-    out = df
-    tmp: list[str] = []
-    for name, col in cols.items():
-        n_, e_, m_, t_, s_ = (f"_{name}__n", f"_{name}__e",
-                              f"_{name}__m", f"_{name}__t", f"_{name}__s")
-        tmp += [n_, e_, m_, t_, s_]
-        out = out.withColumn(n_, col.cast("long"))
-        out = out.withColumn(e_, F.length(F.bin(F.col(n_))) - F.lit(1))
-        out = out.withColumn(
-            m_,
-            F.col(n_).cast("double")
-            / F.call_function(
-                "shiftleft", F.lit(1).cast("long"), F.col(e_)
-            ).cast("double"),
-        )
-        out = out.withColumn(
-            t_, (F.col(m_) - F.lit(1.0)) / (F.col(m_) + F.lit(1.0))
-        )
-        out = out.withColumn(s_, F.col(t_) * F.col(t_))
-        acc = F.lit(1.0 / (2 * _LOG2_TERMS + 1))
-        for j in range(_LOG2_TERMS - 1, -1, -1):
-            acc = acc * F.col(s_) + F.lit(1.0 / (2 * j + 1))
-        out = out.withColumn(
-            name,
-            F.col(e_).cast("double")
-            + F.lit(2.0) * F.col(t_) * acc / F.lit(_LN2),
-        )
-    return out.drop(*tmp)
-
-
 def portable_int_log2_sql(expr: str, prefix: str) -> str:
-    """DuckDB twin of :func:`portable_int_log2` as lateral-alias SELECT
-    items.  Returns a SQL fragment defining ``<prefix>_lg`` (the log2
+    """DuckDB emitter of :func:`portable_int_log2_staged` as lateral-alias
+    SELECT items.  Returns a SQL fragment defining ``<prefix>_lg`` (the log2
     value) via intermediate aliases — splice into a SELECT list."""
     c0 = repr(1.0 / (2 * _LOG2_TERMS + 1))
     acc = c0

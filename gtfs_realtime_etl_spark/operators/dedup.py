@@ -32,13 +32,10 @@ from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import (
     H64_BITS,
-    MOD,
     minhash_text_kernel,
-    perm_params,
     shingle_hash_set_kernel,
-    shingle_hashes_column,
     simhash_tokens_kernel,
-    token_hash64_column,
+    winnow_fingerprints_kernel,
 )
 from gtfs_realtime_etl_spark.functions.text import tokens
 
@@ -76,40 +73,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def shingle_hashes(text: Column, shingle_k: int = 5) -> Column:
-    """Portable polynomial hash per k-char window (Column twin of the
-    Arrow kernel; array<bigint>).  Use the kernel in hot paths."""
-    return shingle_hashes_column(text, shingle_k)
-
-
-def minhash_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (array<bigint>) from a shingle-hash array.
-
-    ``hashes`` should be a MATERIALIZED attribute (its own projection
-    step), not an inline expression: this builds ``num_hashes``
-    permutation folds that each reference it, and an inlined expression
-    would be recomputed once per permutation.
-    """
-    mins = []
-    for a, b in perm_params(num_hashes):
-        # (a*h + b) mod MOD; a, b, h < 2^31 so no int64 overflow.
-        permuted = F.transform(
-            hashes,
-            lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MOD)),  # noqa: B023
-        )
-        mins.append(F.array_min(permuted))
-    return F.array(*mins)
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 32, shingle_k: int = 5
-) -> Column:
-    """MinHash signature as a single Column expression (convenience /
-    test form; the fused Arrow kernel in functions/hashing.py is the hot
-    path — see minhash_lsh_candidates)."""
-    return minhash_from_hashes(shingle_hashes(text, shingle_k), num_hashes)
 
 
 def _saturate(docs: DataFrame) -> DataFrame:
@@ -297,35 +260,6 @@ def minhash_lsh_dedup(
     return jaccard_pairs(docs, cands, text_col, id_col, shingle_k, threshold)
 
 
-def simhash_from_hashes(hashes: Column, bits: int = H64_BITS) -> Column:
-    """SimHash from a token-hash array (Column twin of the Arrow kernel).
-    ``hashes`` should be a materialized attribute — this builds ``bits``
-    vote aggregations that each reference it."""
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        votes = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),  # noqa: B023
-        )
-        out = out + F.shiftleft(F.when(votes > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), i)
-    return out
-
-
-def token_hashes(text: Column) -> Column:
-    """Portable 62-bit polynomial hash of each whitespace token
-    (array<bigint>; Column twin of the kernel's token hashing)."""
-    return F.transform(tokens(text), token_hash64_column)
-
-
-def simhash(text: Column, bits: int = H64_BITS) -> Column:
-    """SimHash over whitespace tokens as a single Column expression.
-    Prefer the fused Arrow kernel (functions/hashing.py) in hot paths —
-    see simhash_dedup."""
-    return simhash_from_hashes(token_hashes(text), bits)
-
-
 def simhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -394,24 +328,6 @@ def simhash_dedup(
     )
 
 
-def winnow_fingerprints(text: Column, shingle_k: int = 5, window: int = 4) -> Column:
-    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
-    algorithm): the minimum shingle hash of every sliding window of
-    ``window`` consecutive shingles, deduplicated.  Guarantees at least
-    one fingerprint per (window + k - 1)-char span, so any sufficiently
-    long shared substring yields a shared fingerprint — a positional
-    dedup family complementing MinHash (whole-doc set similarity) and
-    SimHash (weighted profile similarity).
-
-    Pure Column math on the portable polynomial shingle hashes, so the
-    oracle replays it token for token."""
-    h = shingle_hashes_column(text, shingle_k)
-    n = F.size(h)
-    starts = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))
-    wins = F.transform(starts, lambda i: F.array_min(F.slice(h, i, window)))
-    return F.array_distinct(wins)
-
-
 def winnow_candidates(
     docs: DataFrame,
     text_col: str = "text",
@@ -420,7 +336,6 @@ def winnow_candidates(
     window: int = 4,
     min_shared: int = 2,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Candidate pairs sharing >= ``min_shared`` winnowing fingerprints
     (id_a < id_b, with the shared-fingerprint count).
@@ -431,19 +346,17 @@ def winnow_candidates(
     word, not a join key), sorted pair explode, then an integer count
     per pair — no distinct-shuffle, no self-join.
 
-    ``use_kernel=True`` (default) computes fingerprints with the fused
-    Arrow kernel; the Column-twin path (``use_kernel=False``) exists
-    for bit-parity tests — its nested HOF re-embeds the shingle-hash
-    expression per window and is orders of magnitude slower on an
-    untuned (ICU-on) session."""
-    if use_kernel:
-        from gtfs_realtime_etl_spark.functions.hashing import (
-            winnow_fingerprints_kernel,
-        )
-
-        fp_col = winnow_fingerprints_kernel(shingle_k, window)(F.col(text_col))
-    else:
-        fp_col = winnow_fingerprints(F.col(text_col), shingle_k, window)
+    Fingerprints come from the fused Arrow kernel
+    :func:`~gtfs_realtime_etl_spark.functions.hashing.winnow_fingerprints_kernel`:
+    the minimum portable shingle hash of every sliding window of
+    ``window`` consecutive shingles, deduplicated (Schleimer/Wilkerson/
+    Aiken winnowing, the MOSS algorithm).  At least one fingerprint
+    falls in every (window + k - 1)-char span, so any sufficiently long
+    shared substring yields a shared fingerprint — a positional dedup
+    family complementing MinHash (whole-doc set similarity) and SimHash
+    (weighted profile similarity).  The oracle replays the same
+    polynomial hashes in SQL."""
+    fp_col = winnow_fingerprints_kernel(shingle_k, window)(F.col(text_col))
     fps = _saturate(docs).select(
         F.col(id_col), F.explode(fp_col).alias("fp")
     )

@@ -72,16 +72,6 @@ def _fake_decode(payload: bytes, dim: int = 16) -> np.ndarray:
     return hist / max(len(arr), 1)
 
 
-def _unavailable(modality: str) -> Callable[[bytes], np.ndarray]:
-    def _raise(payload: bytes) -> np.ndarray:
-        raise NotImplementedError(
-            f"real {modality} decoding requires codec libraries not present "
-            "in this environment; use the deterministic stub (default)"
-        )
-
-    return _raise
-
-
 #: Pluggable codec registry.  Default: the deterministic stub.
 DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {
     "image": _fake_decode,

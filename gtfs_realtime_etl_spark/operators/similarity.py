@@ -601,7 +601,6 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "qvec",
-    use_kernel: bool = True,
 ) -> DataFrame:
     """PQ/ADC approximate top-k: rank by the asymmetric distance
     ``sum_m l2sq(q_m, codebook[m][code(v, m)])`` — the query stays
@@ -614,29 +613,21 @@ def pq_adc_topk(
     M table lookups → salted two-phase top-k.  One shuffle (the top-k
     aggregate), no join.
 
-    Two bit-identical scoring paths (pinned equal bit-for-bit on the
-    registry shape by ``tests/test_pq_kernel_parity.py``):
+    Corpus scoring is a vectorized numpy ``mapInPandas`` kernel
+    (:func:`_pq_adc_scores_kernel`): the corpus's M·K codeword
+    distances are M·K fused array ops per Arrow batch.  A Column form
+    plans the code assignment as ~M·K·d_sub interpreted expression
+    nodes that Catalyst cannot codegen (measured 42× slower than DuckDB
+    on the same shape — round-7 verdict); the kernel is the same
+    medicine as ``operators/linalg.gram_matrix``.  The ``ann_pq_topk``
+    oracle pins it bit-for-bit (``tests/test_pq_kernel_parity.py``).
 
-    - ``use_kernel=True`` (default): a vectorized numpy ``mapInPandas``
-      kernel — the corpus's M·K codeword distances are M·K fused
-      array ops per Arrow batch instead of M·K interpreted
-      higher-order-function folds per ROW.  The Column path plans the
-      code assignment as ~M·K·d_sub interpreted expression nodes that
-      Catalyst cannot codegen (measured 42× slower than DuckDB on the
-      same shape — round-7 verdict); the kernel is the same medicine as
-      ``operators/linalg.gram_matrix``.
-    - ``use_kernel=False``: the pure-Column twin (whole plan stays
-      JVM-side; keeps the expression semantics inspectable and is the
-      parity anchor for the oracle).
-
-    Fold-order contract (oracle-matchable, identical in BOTH paths):
-    per-subspace l2sq accumulates left-to-right seeded 0.0
-    (:func:`_l2sq`; the kernel accumulates per-dimension into a zeroed
-    array — the same IEEE op order), ties in the code argmin break to
-    the lowest codeword index, and the M ADC terms fold in subspace
-    order seeded 0.0.
+    Fold-order contract (oracle-matchable): per-subspace l2sq
+    accumulates left-to-right seeded 0.0 (the kernel accumulates
+    per-dimension into a zeroed array — the same IEEE op order), ties
+    in the code argmin break to the lowest codeword index, and the M
+    ADC terms fold in subspace order seeded 0.0.
     """
-    n_sub = len(codebook)
     d_sub = len(codebook[0][0])
     qrows = query.select(
         F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_q")
@@ -663,34 +654,9 @@ def pq_adc_topk(
             )
         )
 
-    if use_kernel:
-        scored = _pq_adc_scores_kernel(
-            embeddings, qtables, codebook, query, query_id_col, vec_col, passthrough
-        )
-    else:
-        vec = F.col(vec_col).cast("array<double>")
-        per_query = []
-        for qid, qdist in qtables:
-            terms = F.array(
-                *[
-                    F.element_at(
-                        lit_double_array(qdist[m]),
-                        _pq_code(vec, codebook[m], m, d_sub) + F.lit(1),
-                    )
-                    for m in range(n_sub)
-                ]
-            )
-            adc = F.aggregate(terms, F.lit(0.0), lambda acc, v: acc + v)
-            per_query.append(
-                embeddings.select(
-                    F.lit(qid).alias(query_id_col),
-                    *passthrough,
-                    (-adc).alias("_negd"),
-                )
-            )
-        scored = per_query[0]
-        for df in per_query[1:]:
-            scored = scored.unionByName(df)
+    scored = _pq_adc_scores_kernel(
+        embeddings, qtables, codebook, query, query_id_col, vec_col, passthrough
+    )
     topk = _two_phase_topk(scored, k, query_id_col, id_col, score_col="_negd")
     return topk.select(
         query_id_col,
@@ -713,9 +679,8 @@ def _pq_adc_scores_kernel(
     pass per batch computes every row's codeword assignment (argmin of
     per-dimension-accumulated squared distances — first-occurrence
     argmin == lowest-index tie-break) and each query's ADC distance
-    (per-subspace accumulation into a zeroed array == the Column
-    path's seeded left fold).  Output is (query_id, *passthrough,
-    _negd), bit-identical to the Column twin."""
+    (per-subspace accumulation into a zeroed array == the oracle's
+    seeded left fold).  Output is (query_id, *passthrough, _negd)."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 

@@ -161,52 +161,15 @@ SETSIM_NUM = 9  # Jaccard threshold t = NUM/DEN, exact rational
 SETSIM_DEN = 10
 
 
-def _shingle_hashes_prefolded(lower, k: int = SETSIM_K):
-    """Distinct 62-bit composite polynomial window hashes of an ALREADY
-    case-folded attribute (h = hA * 2^31 + hB over the MinHash family's
-    BASE_A/BASE_B, the token_hash64 composition) — computed per SHINGLE
-    STRING, not by indexing the whole document per window
-    (``substring`` on a long UTF-8 string is an O(position) scan, so
-    hashing k chars straight off the document costs O(k*n^2) per doc —
-    measured minutes at sf0.1; hashing the k-char shingle is O(k)).
-    62 bits, not the family's plain 31: a fresh-content corpus reaches
-    ~10^7-10^8 distinct shingles (the 100k-doc scale smoke has ~64M),
-    where a 31-bit space produces millions of colliding PAIRS — each a
-    spurious candidate the verify stage must reject.  Distinct-before-
-    hash equals hash-then-distinct as SETS, which is what the caller
-    uses."""
-    from gtfs_realtime_etl_spark.functions.hashing import (
-        BASE_A,
-        BASE_B,
-        H64_SHIFT,
-        MOD,
-        _pow_vec,
-    )
-
-    pwa = _pow_vec(BASE_A, k)
-    pwb = _pow_vec(BASE_B, k)
-
-    def _hash5(s):
-        acc_a = F.lit(0).cast("long")
-        acc_b = F.lit(0).cast("long")
-        for j in range(k):
-            c = F.ascii(F.substring(s, j + 1, 1)).cast("long")
-            acc_a = acc_a + c * F.lit(int(pwa[j]))
-            acc_b = acc_b + c * F.lit(int(pwb[j]))
-        return F.pmod(acc_a, F.lit(MOD)) * F.lit(H64_SHIFT) + F.pmod(
-            acc_b, F.lit(MOD)
-        )
-
-    return F.array_distinct(
-        F.transform(
-            F.array_distinct(char_shingles(lower, k, prefolded=True)), _hash5
-        )
-    )
-
-
 def _sql_shingle_hashes64(text_expr: str, k: int = SETSIM_K) -> str:
-    """DuckDB twin of :func:`_shingle_hashes_prefolded` (pre-distinct):
-    62-bit composite window hashes of ``translate(text_expr)``."""
+    """DuckDB emitter of
+    :func:`~gtfs_realtime_etl_spark.functions.hashing.shingle_hash64_set_kernel`
+    (pre-distinct): 62-bit composite window hashes (h = hA * 2^31 + hB
+    over BASE_A/BASE_B, the token_hash64 composition) of
+    ``translate(text_expr)``.  62 bits, not the family's plain 31: a
+    fresh-content corpus reaches ~10^7-10^8 distinct shingles, where a
+    31-bit space produces millions of colliding PAIRS — each a spurious
+    candidate the verify stage must reject."""
     from gtfs_realtime_etl_spark.functions.hashing import (
         BASE_A,
         BASE_B,
@@ -260,11 +223,10 @@ def setsim_pairs(
     spark = documents.sparkSession
     n_tasks = spark.sparkContext.defaultParallelism
     # Spread BEFORE shingling (the dedup_ngram_jaccard discipline),
-    # then hash via the Arrow kernel — the Column twin
-    # (_shingle_hashes_prefolded) walks the document with per-window
-    # substring calls, which are O(position) scans on UTF-8 strings:
-    # O(n^2) per doc, minutes at the 50k x 1,280-char smoke scale; the
-    # numpy kernel is one vectorized window matmul.
+    # then hash via the Arrow kernel — a Column form walks the document
+    # with per-window substring calls, which are O(position) scans on
+    # UTF-8 strings: O(n^2) per doc, minutes at the 50k x 1,280-char
+    # smoke scale; the numpy kernel is one vectorized window matmul.
     folded = documents.select("doc_id", "text").repartition(
         n_tasks, "doc_id"
     )

@@ -23,7 +23,7 @@ robust rank trend, and inter-arrival dynamics.
   ``(c0+c1)*lg(c0+c1) - c0*lg(c0) - c1*lg(c1)`` and the total is the
   SAME form applied to (n0, n1) minus the per-type sum — every log is
   a log2 of a positive INTEGER, so the whole query rides
-  ``portable_int_log2`` (bit-identical across engines, the
+  ``portable_int_log2_staged`` (bit-identical across engines, the
   ``feature_mi`` idiom) in integer micro fixed point.  Zero counts
   need no special case: ``c * lg(max(c,1))`` vanishes at c = 0.
 - ``kendall_trend`` — Kendall concordance trend (tau-a with explicit
@@ -70,7 +70,6 @@ from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.stats import (
     micro_bits,
-    portable_int_log2,
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
@@ -186,17 +185,6 @@ FROM g
 
 #: Sentinel event_type for the corpus-level total row.
 JS_TOTAL_ROW = "__TOTAL__"
-
-
-def _lgm(c: Column) -> Column:
-    """floor(log2(max(c,1)) * 1e6 + 0.5) as BIGINT — the feature_mi
-    micro-log idiom; c * _lgm(c) vanishes at c = 0 so zero counts need
-    no CASE."""
-    return F.floor(
-        portable_int_log2(F.greatest(c, F.lit(1)))
-        * F.lit(1_000_000.0)
-        + F.lit(0.5)
-    ).cast("long")
 
 
 def _mul_micro(cnt: Column, lg: Column) -> Column:

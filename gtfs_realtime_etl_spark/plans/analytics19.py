@@ -22,7 +22,7 @@ Markov entropy rate, and degree assortativity.
 - ``markov_entropy_rate`` — the entropy rate of the first-order
   event-type chain, in exact count form: per source state,
   ``h_term = n_s*lg(n_s) - sum_t n_st*lg(n_st)`` (micro units on
-  ``portable_int_log2`` — every log is of a positive integer), and
+  ``portable_int_log2_staged`` — every log is of a positive integer), and
   ``N * H_rate`` is just the sum of the per-state terms (emitted as a
   ``__TOTAL__`` row).  Complements ``markov_transitions`` (which
   reports the row-stochastic matrix, not its entropy).
@@ -410,7 +410,7 @@ def assortativity_report(edges: DataFrame) -> DataFrame:
     # subtree as the endpoint joins below, so AQE runtime exchange
     # reuse dedups all of them into one execution — while the explode
     # is a DIFFERENT subtree that forces its own pass over the edge
-    # pipeline.  Interleaved A/B at sf0.1 (scripts/r13_ab.py, 21
+    # pipeline.  Interleaved A/B at sf0.1 (commit f1f81f1, 21
     # alternated rounds incl. an order-reversed batch): union+reuse
     # med 3.34-4.73 s vs explode forms 3.96-4.85 s.
     deg = (
@@ -509,7 +509,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the static plan replays the basket lineage per consumer (44
     # exchanges on paper), but at runtime AQE exchange reuse executes
     # it once — the staged write was a pure extra write+read job.
-    # Interleaved A/B at sf0.1 (scripts/r13_ab.py, run-for-run
+    # Interleaved A/B at sf0.1 (commit f1f81f1, run-for-run
     # alternated, 21 rounds incl. an order-reversed batch): unstaged
     # med 3.34/3.69/4.73 s per batch vs staged 4.15/4.05/4.85 s.
     return assortativity_report(edges)

@@ -144,7 +144,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SQL-parsed form (round-12, same conversion as decision_stump):
     # the two Column-Horner instances cost ~0.5 s of py4j plan
     # construction per build and spliced the mantissa subtree 14× each
-    # into codegen; bit-parity with the Column form is pinned on the
+    # into codegen; bit-parity with the DuckDB emitter is pinned on the
     # 213-value grid in tests/test_functions.py.
     lgd = portable_int_log2_staged(
         model.join(uni, "w1").crossJoin(F.broadcast(vocab)),

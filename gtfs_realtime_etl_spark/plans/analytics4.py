@@ -442,7 +442,6 @@ def _window_pair_array(t, window: int):
 
 
 def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2
     from gtfs_realtime_etl_spark.functions.text import tokens
 
     (documents,) = _t(spark, sf_dir, "documents")

@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.stats import (
-    portable_int_log2,
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
@@ -141,15 +140,6 @@ WHERE NOT EXISTS (
 # micro-products ride DECIMAL(18,0)×DECIMAL(12,0) so c·lg_micro up to
 # ~1e20 at extreme corpus sizes cannot overflow a BIGINT accumulator
 # mid-sum.  Consumers divide by n·1e6 for bits.
-
-
-def _lg_micro(c):
-    """portable_int_log2 in integer micro-bits (BIGINT; one IEEE
-    multiply + add and an exact floor on identical doubles —
-    engine-exact by construction)."""
-    return F.floor(
-        portable_int_log2(c) * F.lit(1_000_000.0) + F.lit(0.5)
-    ).cast("long")
 
 
 def _lg_micro_sql(lg_expr: str) -> str:

@@ -55,10 +55,10 @@ from pyspark.sql import functions as F
 from gtfs_realtime_etl_spark.functions.exprs import lit_double_matrix
 
 from gtfs_realtime_etl_spark.functions.stats import (
-    portable_int_log2,
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
+from gtfs_realtime_etl_spark.plans.analytics7 import _lg_micro_sql
 from gtfs_realtime_etl_spark.plans.graph import _KNN_CTES, _knn_edges
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
@@ -168,18 +168,6 @@ FROM c GROUP BY event_type
 PSI_BIN_WIDTH = 25_000
 PSI_MAX_BIN = 19
 PSI_SPLIT_DATE = "1995-06-01"
-
-
-def _lg_micro(c):
-    """portable_int_log2 in integer micro-bits (the ``feature_mi``
-    quantization — floor on engine-identical doubles)."""
-    return F.floor(
-        portable_int_log2(c) * F.lit(1_000_000.0) + F.lit(0.5)
-    ).cast("long")
-
-
-def _lg_micro_sql(lg_expr: str) -> str:
-    return f"CAST(floor(({lg_expr}) * 1000000.0 + 0.5) AS BIGINT)"
 
 
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,9 +311,9 @@ def link_candidates(und: DataFrame) -> DataFrame:
     # Adamic-Adar weight of this wedge center, in integer micro-units.
     # deg >= 2 here, so log2(deg) >= 1 and the reciprocal is in (0, 1].
     # The log2 is SQL-parsed via the staged fast path (round-12, the
-    # feature_mi/decision_stump lesson) — identical arithmetic to the
-    # Column form, a handful of selectExpr parses instead of py4j
-    # Column-builder chatter; floor(double) is BIGINT in both forms.
+    # feature_mi/decision_stump lesson) — a handful of selectExpr parses
+    # instead of py4j Column-API chatter; floor(double) is BIGINT in
+    # both engines.
     adj = portable_int_log2_staged(adj, {"deg_lg": "size(nbrs)"})
     recip = F.expr("CAST(floor(1000000.0D / deg_lg + 0.5D) AS BIGINT)")
     pair_arr = F.flatten(

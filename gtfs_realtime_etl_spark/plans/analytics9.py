@@ -71,7 +71,7 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_staged,
 )
 from gtfs_realtime_etl_spark.functions.text import char_shingles
-from gtfs_realtime_etl_spark.plans.analytics8 import _lg_micro, _lg_micro_sql
+from gtfs_realtime_etl_spark.plans.analytics7 import _lg_micro_sql
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 
@@ -184,14 +184,8 @@ FROM best WHERE rn = 1
 # ---------------------------------------------------------------------------
 
 
-def _f_term(c):
-    """f(c) = c·lg_micro(c) with f(0) = 0 — the lifted entropy term."""
-    return F.when(c > 0, c * _lg_micro(F.greatest(c, F.lit(1)))).otherwise(
-        F.lit(0).cast("long")
-    )
-
-
 def _f_term_sql(c: str, lg: str) -> str:
+    """f(c) = c·lg_micro(c) with f(0) = 0 — the lifted entropy term."""
     return f"CASE WHEN ({c}) > 0 THEN ({c}) * {lg} ELSE 0 END"
 
 
@@ -263,7 +257,7 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _m(x: str) -> str:
-        # _lg_micro over a staged lg column, D-suffixed literals
+        # _lg_micro_sql over a staged lg column, D-suffixed literals
         return f"CAST(floor(({x}) * 1000000.0D + 0.5D) AS BIGINT)"
 
     nh_t = (

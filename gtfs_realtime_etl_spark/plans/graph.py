@@ -28,11 +28,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import sql_shingle_hashes
-from gtfs_realtime_etl_spark.functions.vector import dot, l2_norm
 from gtfs_realtime_etl_spark.operators.pagerank import pagerank
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
@@ -64,8 +63,8 @@ PR_DAMPING = 0.85
 
 
 def _half_up_round_6dp(cos: np.ndarray) -> np.ndarray:
-    """Bit-exact numpy replica of the Column form's
-    ``ROUND(cos * 1e6, 0) / 1e6`` on DOUBLE.
+    """Bit-exact numpy replica of ``ROUND(cos * 1e6, 0) / 1e6`` on
+    DOUBLE, as Spark and the DuckDB oracle (``_KNN_CTES``) compute it.
 
     Spark's one-arg-scale ROUND at digit 0 is round-half-away-from-zero
     and equals C ``round`` bit-for-bit (the repo's engine-exact
@@ -73,7 +72,7 @@ def _half_up_round_6dp(cos: np.ndarray) -> np.ndarray:
     Every rounding boundary ``n + 0.5`` is exactly representable in
     binary64 and ``|x| < 2^53`` here, so ``|x| - floor(|x|)`` is exact
     and the half test needs no fuzzy ``+ 0.5`` add.  The 1e6 scale
-    multiply and final divide are the same IEEE ops the Column form
+    multiply and final divide are the same IEEE ops the oracle
     performs."""
     x = cos * 1e6
     ax = np.abs(x)
@@ -88,17 +87,17 @@ def _half_up_round_6dp(cos: np.ndarray) -> np.ndarray:
 def _knn_topk_block(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-label kNN block kernel: all-pairs cosine + top-k, numpy.
 
-    Bit-identical to :func:`_knn_edges_column` (the parity pin is
-    tests/test_graph_bank.py::test_knn_edges_kernel_column_parity):
+    Bit-identical to the oracle's ``_KNN_CTES`` edge set (pinned by
+    the ``pagerank_knn`` oracle check in tests/test_graph_bank.py):
     the dot/norm left folds run the IDENTICAL IEEE add/multiply
-    sequence over the dims, vectorized across the pair matrix instead
-    of interpreted per pair by the HOF fallback; rounding via
+    sequence over the dims as the oracle's ``list_reduce`` folds,
+    vectorized across the pair matrix; rounding via
     :func:`_half_up_round_6dp`; top-k ordering (cosine DESC, d ASC) via
     a per-source lexsort over the same rounded doubles."""
     empty = pd.DataFrame(
         {"s": pd.Series(dtype="int64"), "d": pd.Series(dtype="int64")}
     )
-    # A NULL label never satisfies the Column twin's equi-join
+    # A NULL label never satisfies the oracle's equi-join
     # (NULL = NULL is NULL), so those rows produce no pairs.
     if len(pdf) == 0 or pdf["label"].isnull().any():
         return empty
@@ -108,8 +107,8 @@ def _knn_topk_block(pdf: pd.DataFrame) -> pd.DataFrame:
     )
     n, dim = vecs.shape
     # Left folds over the dims: acc_{t+1} = acc_t + x_t * y_t — the
-    # exact IEEE sequence of the zip_with/aggregate fold per pair (and
-    # of l2_norm's acc + v*v per row), vectorized across pairs.
+    # exact IEEE sequence of the oracle's list_reduce fold per pair (and
+    # of its acc + v*v norm fold per row), vectorized across pairs.
     acc = np.zeros((n, n))
     nsq = np.zeros(n)
     for t in range(dim):
@@ -142,8 +141,7 @@ def _knn_topk_block(pdf: pd.DataFrame) -> pd.DataFrame:
 def _knn_edges(embeddings: DataFrame) -> DataFrame:
     """Label-blocked kNN edges via a grouped Arrow kernel.
 
-    Round 12: the Column pair-join form (kept verbatim below as
-    :func:`_knn_edges_column`, the bit-parity twin) evaluated one
+    Round 12: the Column pair-join form this replaced evaluated one
     interpreted 64-dim HOF fold per ordered pair (~400 k pairs at
     sf0.1) — the shared ~1.4 s floor under all five graph-family
     queries.  The kernel ships only the 2 000 × 64 vectors through
@@ -155,40 +153,6 @@ def _knn_edges(embeddings: DataFrame) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     return emb.groupBy("label").applyInPandas(_knn_topk_block, "s long, d long")
-
-
-def _knn_edges_column(embeddings: DataFrame) -> DataFrame:
-    emb = (
-        embeddings.select(
-            "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
-        )
-        # Norms hoisted before the pair join (same rationale as
-        # q_embedding_neardup: 1 fold/pair instead of 3); pinned
-        # parallelism so AQE's byte-based coalescing doesn't fuse the
-        # CPU-heavy pair fold into two tasks.
-        .withColumn("norm", l2_norm(F.col("vec")))
-        .repartition(32, "label")
-    )
-    a, b = emb.alias("a"), emb.alias("b")
-    denom = F.col("a.norm") * F.col("b.norm")
-    cos = (F.round((F.when(denom > 0, dot(F.col("a.vec"), F.col("b.vec")) / denom).otherwise(
-            F.lit(0.0)
-        )) * F.lit(1e6), 0) / F.lit(1e6))
-    pairs = a.join(
-        b,
-        (F.col("a.label") == F.col("b.label"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("s"),
-        F.col("b.vec_id").alias("d"),
-        cos.alias("cosine"),
-    )
-    w = Window.partitionBy("s").orderBy(F.desc("cosine"), F.asc("d"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KNN_K)
-        .select("s", "d")
-    )
 
 
 def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,14 +248,14 @@ WINNOW_W = 4
 
 
 def q_winnow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Fused Arrow kernel, NOT the Column twin: the twin's nested HOF
-    # (a transform whose lambda re-embeds the whole shingle-hash
-    # expression) is interpreted row-at-a-time and, in a session
-    # without the repo's ICU-off tuning, the collation-aware
-    # substring/ascii path turns the O(n·w) window scan into minutes
-    # per thousand docs.  The kernel does shingles + stride-view
-    # window minima in one numpy pass — same arithmetic, pinned
-    # bit-identical to the twin by tests/test_winnow.py.
+    # Fused Arrow kernel: a Column form's nested HOF (a transform
+    # whose lambda re-embeds the whole shingle-hash expression) is
+    # interpreted row-at-a-time and, in a session without the repo's
+    # ICU-off tuning, the collation-aware substring/ascii path turns
+    # the O(n·w) window scan into minutes per thousand docs.  The
+    # kernel does shingles + stride-view window minima in one numpy
+    # pass — pinned bit-identical to a pure-Python reference by
+    # tests/test_winnow.py and to the DuckDB oracle below.
     from gtfs_realtime_etl_spark.functions.hashing import winnow_profile_kernel
 
     (documents,) = _t(spark, sf_dir, "documents")

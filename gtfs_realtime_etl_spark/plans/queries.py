@@ -863,8 +863,8 @@ GROUP BY 1, 2
 
 # ---------------------------------------------------------------------------
 # Q15: document fingerprint — polynomial rolling hash over characters
-# (LLM-pipeline op).  Pure higher-order-function arithmetic, identical
-# mod-2^31-1 recurrence on both engines.
+# (LLM-pipeline op).  The same mod-2^31-1 Horner recurrence on both
+# engines: an Arrow kernel in Spark, a list_reduce fold in DuckDB.
 # ---------------------------------------------------------------------------
 
 _FP_MOD = 2147483647
@@ -872,29 +872,10 @@ _FP_MOD = 2147483647
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = _t(spark, sf_dir, "documents")
-    # Arrow kernel hot path (fused fold+hash, one vectorized power-dot
-    # per doc).  The Column twin below documents the exact arithmetic
-    # and is pinned bit-identical by tests/test_functions.py.
+    # Arrow kernel (fused fold+hash, one vectorized power-dot per doc),
+    # pinned bit-identical to the oracle below by tests/test_functions.py.
     return documents.select(
         "doc_id", doc_fingerprint_kernel()(F.col("text")).alias("fingerprint")
-    )
-
-
-def doc_fingerprint_column(text: Column) -> Column:
-    """Column twin of functions.hashing.doc_fingerprint_kernel —
-    interpreted HOF Horner fold; O(n) interpreted calls per character,
-    so NOT the hot path.  Fold case into an attribute before calling in
-    any real plan (a non-attribute expression inside the per-char
-    lambda re-evaluates per element — O(n²)/doc)."""
-    lower = F.translate(text, _AZ_UPPER, _AZ_LOWER)
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length(lower)),
-        lambda i: F.ascii(F.substring(lower, i, 1)).cast("long"),
-    )
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + c) % F.lit(_FP_MOD).cast("long"),
     )
 
 

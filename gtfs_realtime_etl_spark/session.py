@@ -1,11 +1,12 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are sized for the local[32] test harness but every knob is the
-one you would also set on a 1000-executor cluster:
+The local master and shuffle partitions default to the cores this
+process may run on (``SPARK_GRAFT_CPUS`` overrides), but every knob is
+the one you would also set on a 1000-executor cluster:
 
 - AQE on (runtime join re-planning, skew-join splitting, partition
   coalescing) so plans survive skewed / mis-estimated inputs at scale.
-- ``spark.sql.shuffle.partitions`` sized to the harness; on a real
+- ``spark.sql.shuffle.partitions`` sized to the core count; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
 - Arrow enabled for any pandas_udf / toPandas edge (vectorized transfer).
 - Session timezone pinned per agency (the reference stores zoned
@@ -22,9 +23,12 @@ DEFAULT_TZ = "America/Toronto"
 
 
 def spark_graft_cpus() -> int:
-    """Core count from ``SPARK_GRAFT_CPUS`` (default 32): a positive
-    integer, or a ValueError naming the variable."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Core count from ``SPARK_GRAFT_CPUS``: a positive integer, or a
+    ValueError naming the variable.  Unset, it is the number of cores
+    this process may run on (its CPU affinity set)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
     if not raw.isdecimal() or int(raw) < 1:
         raise ValueError(
             f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"

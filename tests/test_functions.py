@@ -177,20 +177,39 @@ def test_lang_id_kernel_matches_column(spark):
         assert r.col_form == r.kernel
 
 
-def test_doc_fingerprint_kernel_matches_column(spark):
-    """The Arrow fingerprint kernel is bit-identical to the interpreted
-    Column Horner fold (same base/modulus) on edge-shaped inputs."""
-    from gtfs_realtime_etl_spark.functions.hashing import doc_fingerprint_kernel
-    from gtfs_realtime_etl_spark.plans.queries import doc_fingerprint_column
+def test_doc_fingerprint_kernel_matches_oracle(spark):
+    """The Arrow fingerprint kernel is bit-identical to the registry's
+    DuckDB oracle (the same base/modulus Horner fold): verbatim on
+    edge-shaped inputs, and end to end as the ``doc_fingerprint`` query
+    (the sampled oracle lane does not reach it).  NULL text maps to
+    NULL in Spark and to 0 in the oracle; the corpus has no NULL
+    text."""
+    import duckdb
 
-    texts = ["", "A", "abc", "The QUICK brown FOX! 123", "é" * 5, "x" * 3000, None]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(
-        doc_fingerprint_column(F.col("text")).alias("col_form"),
-        doc_fingerprint_kernel()(F.col("text")).alias("kernel"),
-    ).collect()
-    for r in rows:
-        assert r.col_form == r.kernel
+    from gtfs_realtime_etl_spark.functions.hashing import doc_fingerprint_kernel
+    from gtfs_realtime_etl_spark.plans.queries import Q_DOC_FINGERPRINT_SQL
+    from gtfs_realtime_etl_spark.testing import compare_to_oracle
+    from tests.conftest import SF_CORRECTNESS
+
+    texts = ["", "A", "abc", "The QUICK brown FOX! 123", "é" * 5, "x" * 3000, "it's"]
+    df = spark.createDataFrame(list(enumerate(texts)) + [(len(texts), None)],
+                               "doc_id long, text string")
+    got = {
+        r.doc_id: r.fp
+        for r in df.select(
+            "doc_id", doc_fingerprint_kernel()(F.col("text")).alias("fp")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    want = dict(con.execute(Q_DOC_FINGERPRINT_SQL).fetchall())
+    assert got.pop(len(texts)) is None
+    assert got == want
+
+    res = compare_to_oracle(spark, "doc_fingerprint", SF_CORRECTNESS)
+    assert res.spark_rows > 0
+    assert res.ok, (res.notes, res.max_abs_delta)
 
 
 def test_pii_patterns_on_crafted_strings(spark):
@@ -286,67 +305,57 @@ def test_to_web_mercator_known_values(spark):
         assert abs(r.m.y - y) <= 1e-6, (r.lon, r.lat)
 
 
-def test_portable_int_log2_accuracy_and_cross_engine_bits(spark):
-    """portable_int_log2 is (a) within 1e-12 of math.log2 and (b)
-    BIT-identical between Spark and DuckDB — the property engine-native
-    log2 lacks (last-ulp divergence flips fixed-dp rounding)."""
-    import math
-
+def _duckdb_portable_log2(vals: list[int]) -> dict[int, float]:
+    """``portable_int_log2_sql`` evaluated by DuckDB over ``vals``."""
     import duckdb
 
-    from gtfs_realtime_etl_spark.functions.stats import (
-        portable_int_log2,
-        portable_int_log2_sql,
-    )
+    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE g(n BIGINT)")
+    con.executemany("INSERT INTO g VALUES (?)", [(v,) for v in vals])
+    frag = portable_int_log2_sql("n", "p")
+    return dict(con.execute(f"SELECT n, p_lg FROM (SELECT n, {frag} FROM g)").fetchall())
+
+
+def test_portable_int_log2_accuracy_and_cross_engine_bits(spark):
+    """The staged portable log2 is (a) within 1e-12 of math.log2 and
+    (b) BIT-identical between Spark and DuckDB — the property
+    engine-native log2 lacks (last-ulp divergence flips fixed-dp
+    rounding)."""
+    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_staged
 
     vals = [1, 2, 3, 7, 29, 1023, 1024, 1025, 999_983, 2**40 - 1, 2**40,
             12_345_678_901]
     df = spark.createDataFrame([(v,) for v in vals], "n long")
-    got = {
-        r.n: r.lg
-        for r in df.select("n", portable_int_log2(F.col("n")).alias("lg")).collect()
-    }
-    con = duckdb.connect()
+    got = {r.n: r.lg for r in portable_int_log2_staged(df, {"lg": "n"}).collect()}
+    oracle = _duckdb_portable_log2(vals)
     for n in vals:
-        frag = portable_int_log2_sql(str(n), "p")
-        (oracle,) = con.execute(f"SELECT p_lg FROM (SELECT {frag})").fetchone()
-        assert got[n] == oracle, (n, got[n], oracle)  # bit-identical
+        assert got[n] == oracle[n], (n, got[n], oracle[n])  # bit-identical
         assert abs(got[n] - math.log2(n)) < 1e-12, (n, got[n])
 
 
 def test_portable_int_log2_staged_bit_identical(spark):
-    """The staged multi-column form (round-11, plan-compile fix) must
-    produce the bit-identical double of the inline Column form for
-    every input — same correctly-rounded ops in the same order, only
-    the intermediates are named."""
+    """The staged form (named intermediates, SQL-parsed) must produce
+    the bit-identical double of the DuckDB emitter for every input on a
+    213-value grid: small values, powers of two and their neighbours,
+    the BIGINT maximum, and 200 random 50-bit odd values."""
     import random
 
-    from gtfs_realtime_etl_spark.functions.stats import (
-        portable_int_log2,
-        portable_int_log2_staged,
-    )
+    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_staged
 
     rnd = random.Random(411)
     vals = [1, 2, 3, 5, 7, 8, 1023, 1024, 1025, 10**6, 10**12,
             2**62, (2**63) - 1]
     vals += [rnd.getrandbits(50) | 1 for _ in range(200)]
-    df = spark.createDataFrame([(v,) for v in sorted(set(vals))], "n long")
-    inline = df.select("n", portable_int_log2(F.col("n")).alias("lg_i"))
-    staged = portable_int_log2_staged(df, {"lg_s": F.col("n")})
-    # String inputs take the round-12 selectExpr fast path — same grid,
-    # same bit-identity requirement.
-    fast = portable_int_log2_staged(df, {"lg_q": "n"})
-    j = inline.join(staged, "n").join(fast, "n")
-    assert (
-        j.filter(
-            F.col("lg_i").isNull()
-            | F.col("lg_s").isNull()
-            | F.col("lg_q").isNull()
-        ).count()
-        == 0
-    )
-    assert j.filter(F.col("lg_i") != F.col("lg_s")).count() == 0
-    assert j.filter(F.col("lg_i") != F.col("lg_q")).count() == 0
+    vals = sorted(set(vals))
+    df = spark.createDataFrame([(v,) for v in vals], "n long")
+    got = {r.n: r.lg for r in portable_int_log2_staged(df, {"lg": "n"}).collect()}
+    oracle = _duckdb_portable_log2(vals)
+    assert len(got) == len(oracle) == len(vals)
+    for n in vals:
+        assert struct.pack("<d", got[n]) == struct.pack("<d", oracle[n]), (
+            n, got[n], oracle[n])
 
 
 def test_lit_double_array_bit_identical(spark):

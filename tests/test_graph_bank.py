@@ -117,16 +117,23 @@ def test_half_up_round_6dp_matches_spark_round(spark):
         assert struct.pack("<d", a) == struct.pack("<d", b), (v, a, b)
 
 
-def test_knn_edges_kernel_column_parity(spark):
-    """The grouped Arrow kernel must emit EXACTLY the Column twin's
-    edge set (the round-12 rewrite's contract) — multiset equality via
-    exceptAll in both directions, at both small SFs."""
-    from gtfs_realtime_etl_spark.plans.graph import _knn_edges_column
+def test_knn_edges_kernel_oracle_parity(spark):
+    """The grouped Arrow kernel must emit EXACTLY the oracle's kNN edge
+    set (``_KNN_CTES``, shared by every kNN-graph oracle) — multiset
+    equality at both small SFs — and ``pagerank_knn`` must match its
+    oracle end to end (the sampled oracle lane does not reach it)."""
+    from collections import Counter
+
+    from gtfs_realtime_etl_spark.plans.graph import _KNN_CTES
+    from gtfs_realtime_etl_spark.testing import compare_to_oracle, run_oracle
     from tests.conftest import SF_CORRECTNESS
 
     for sf_dir in (SF_SMOKE, SF_CORRECTNESS):
         emb = load_testdata(spark, sf_dir, tables=("embeddings",))["embeddings"]
-        kernel = _knn_edges(emb)
-        column = _knn_edges_column(emb)
-        assert kernel.exceptAll(column).count() == 0, sf_dir
-        assert column.exceptAll(kernel).count() == 0, sf_dir
+        kernel = Counter((r.s, r.d) for r in _knn_edges(emb).collect())
+        oracle = run_oracle(f"WITH {_KNN_CTES} SELECT s, d FROM knn", sf_dir)
+        assert kernel == Counter(zip(oracle["s"], oracle["d"])), sf_dir
+        assert kernel, sf_dir
+    res = compare_to_oracle(spark, "pagerank_knn", SF_CORRECTNESS)
+    assert res.spark_rows > 0
+    assert res.ok, (res.notes, res.max_abs_delta)

@@ -4,8 +4,9 @@ The numpy kernels use vectorization tricks (sliding-window matrix
 products, right-aligned zero padding, chunked modular dots) whose
 equivalence to the plain polynomial fold is exactly what could silently
 break — hypothesis hammers them against naive references; a curated
-tricky corpus then checks kernel == Spark Column twin == DuckDB SQL on
-the full engine path.
+tricky corpus then checks the Spark forms (the Arrow shingle kernel and
+the Column token hash) against the DuckDB SQL emitters on the full
+engine path.
 """
 
 from __future__ import annotations
@@ -96,21 +97,20 @@ TRICKY = [
     "tab\tseparated\ttokens here",
     # Unicode special-casing chars: Python lower('İ') expands to 2
     # codepoints while DuckDB's collapses to 1 — ASCII-only folding
-    # (the fix) must keep all three implementations identical here.
+    # (the fix) must keep the Spark forms and DuckDB identical here.
     "İSTANBUL Mixed ẞHARP çöğüş",
 ]
 
 
 @pytest.mark.parametrize("k", [3, 5])
 def test_kernel_equals_column_twin_equals_duckdb(spark, k):
-    """Full-path equivalence on the tricky corpus: Arrow kernel ==
-    Spark Column twin == DuckDB SQL emitter (shingles), and Column
-    token hash == DuckDB token hash."""
+    """Full-path equivalence on the tricky corpus: Arrow shingle
+    kernel == DuckDB SQL emitter, and the Column token hash
+    (token_hash64_column) == DuckDB token hash, on every document."""
     from pyspark.sql import functions as F
 
     from gtfs_realtime_etl_spark.functions.hashing import (
         shingle_hash_kernel,
-        shingle_hashes_column,
         token_hash64_column,
     )
     from gtfs_realtime_etl_spark.functions.text import tokens
@@ -122,19 +122,19 @@ def test_kernel_equals_column_twin_equals_duckdb(spark, k):
         df.select(
             "doc_id",
             shingle_hash_kernel(k)(F.col("text")).alias("kern"),
-            shingle_hashes_column(F.col("text"), k).alias("twin"),
             F.transform(tokens(F.col("text")), token_hash64_column).alias("tok64"),
         )
         .orderBy("doc_id")
         .collect()
     )
-    for r in rows:
-        assert r["kern"] == r["twin"], TRICKY[r["doc_id"]]
 
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE d AS SELECT * FROM (VALUES "
-        + ", ".join(f"({i}, '{t}')" for i, t in enumerate(TRICKY) if "'" not in t)
+        + ", ".join(
+            "({}, '{}')".format(i, t.replace("'", "''"))
+            for i, t in enumerate(TRICKY)
+        )
         + ") t(doc_id, text)"
     )
     duck = {
@@ -148,10 +148,10 @@ def test_kernel_equals_column_twin_equals_duckdb(spark, k):
             FROM d ORDER BY doc_id"""
         ).fetchall()
     }
+    assert set(duck) == {r["doc_id"] for r in rows}
     for r in rows:
-        if r["doc_id"] in duck:
-            assert r["kern"] == duck[r["doc_id"]][0]
-            assert r["tok64"] == duck[r["doc_id"]][1]
+        assert r["kern"] == duck[r["doc_id"]][0], TRICKY[r["doc_id"]]
+        assert r["tok64"] == duck[r["doc_id"]][1], TRICKY[r["doc_id"]]
 
 
 @settings(max_examples=200, deadline=None)

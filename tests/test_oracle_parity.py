@@ -5,13 +5,14 @@ Lane gating (round-13): the all-202 pass takes ~35 min and pushed the
 default suite past the driver's verification window (VERIFY_r12 shows
 pytest truncating mid-run at 46% with zero failures — an unverifiable
 gate).  The default lane therefore runs a DETERMINISTIC 1-in-3 sample
-(every 3rd name of the sorted registry, ~68 queries — stable across
-runs, spread over every query bank); ``SPARK_GRAFT_FULL_SUITE=1``
-restores the full registry.  A handful of individually-slow oracle
-comparisons (``_SLOW_ORACLE`` below) are additionally excluded from
-the default sample.  The builder runs the full lane once per round;
-the driver's own CORRECTNESS sample plus this default lane still
-cross-checks every module's shared infrastructure every run.
+(every 3rd name of the sorted registry — stable across runs, spread
+over every query bank); ``SPARK_GRAFT_FULL_SUITE=1`` restores the full
+registry.  Five individually-slow oracle comparisons (``_SLOW_ORACLE``
+below) are additionally excluded from the default sample, so with 202
+registry queries the default lane runs 68 - 5 = 63 of them.  The full
+lane runs once per round; the external CORRECTNESS sample plus this
+default lane still cross-checks every module's shared infrastructure
+every run.
 """
 
 from __future__ import annotations

@@ -1,7 +1,10 @@
-"""``SPARK_GRAFT_CPUS`` parsing: a malformed core count fails fast
-instead of silently falling back to the 32-core default."""
+"""``SPARK_GRAFT_CPUS`` parsing: unset means the host's usable cores,
+and a malformed core count fails fast instead of silently falling back
+to that default."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -10,7 +13,7 @@ from gtfs_realtime_etl_spark.session import spark_graft_cpus
 
 def test_cpus_default_and_positive_integer(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert spark_graft_cpus() == 32
+    assert spark_graft_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
     assert spark_graft_cpus() == 4
 

@@ -9,13 +9,13 @@ query (same call as the multimodal codecs)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from gtfs_realtime_etl_spark.functions.hashing import MOD, BASE_A
-from gtfs_realtime_etl_spark.operators.dedup import (
-    winnow_candidates,
-    winnow_fingerprints,
+from gtfs_realtime_etl_spark.functions.hashing import (
+    BASE_A,
+    MOD,
+    winnow_fingerprints_kernel,
+    winnow_profile_kernel,
 )
+from gtfs_realtime_etl_spark.operators.dedup import winnow_candidates
 
 K, W = 5, 4
 
@@ -55,7 +55,7 @@ def test_winnow_matches_naive(spark):
     got = {
         r["doc_id"]: set(r["fps"])
         for r in df.select(
-            "doc_id", winnow_fingerprints(F.col("text"), K, W).alias("fps")
+            "doc_id", winnow_fingerprints_kernel(K, W)("text").alias("fps")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -90,10 +90,9 @@ def test_winnow_bucket_cap_drops_boilerplate(spark):
 
 def test_winnow_profile_kernel_matches_column_twin(spark):
     """The fused Arrow profile kernel (the registry hot path) must be
-    bit-identical to profiling the Column-twin fingerprints — including
-    the shorter-than-window clamp and unicode passthrough."""
-    from gtfs_realtime_etl_spark.functions.hashing import winnow_profile_kernel
-
+    bit-identical to profiling the naive reference's shingles and
+    fingerprints — including the shorter-than-window clamp and unicode
+    passthrough."""
     texts = [
         "The quick brown fox jumps over the lazy dog",
         "ab",          # shorter than k: one zero-padded shingle
@@ -107,30 +106,17 @@ def test_winnow_profile_kernel_matches_column_twin(spark):
         r["doc_id"]: (r["p"]["n_shingles"], r["p"]["n_fps"], r["p"]["fp_min"], r["p"]["fp_max"])
         for r in df.select("doc_id", prof("text").alias("p")).collect()
     }
-    fps_col = winnow_fingerprints(F.col("text"), K, W)
-    from gtfs_realtime_etl_spark.functions.hashing import shingle_hashes_column
-
-    slow = {
-        r["doc_id"]: (r["ns"], r["nf"], r["lo"], r["hi"])
-        for r in df.select(
-            "doc_id",
-            F.size(shingle_hashes_column(F.col("text"), K)).cast("long").alias("ns"),
-            F.size(fps_col).cast("long").alias("nf"),
-            F.array_min(fps_col).alias("lo"),
-            F.array_max(fps_col).alias("hi"),
-        ).collect()
-    }
+    slow = {}
+    for i, t in enumerate(texts):
+        fps = _naive_winnow(t)
+        slow[i] = (len(_naive_shingle_hashes(t)), len(fps), min(fps), max(fps))
     assert fast == slow
 
 
 def test_winnow_fingerprints_kernel_matches_column_twin(spark):
-    """Array kernel (the winnow_candidates hot path) returns the same
-    fingerprint SETS as the Column twin, and candidates from both paths
-    agree."""
-    from gtfs_realtime_etl_spark.functions.hashing import (
-        winnow_fingerprints_kernel,
-    )
-
+    """Array kernel (the winnow_candidates hot path) returns the naive
+    reference's fingerprint SETS, and the candidate pairs with their
+    shared-fingerprint counts are the pairwise set intersections."""
     texts = [
         "alpha beta gamma delta epsilon zeta eta theta",
         "alpha beta gamma delta epsilon different tail here",
@@ -143,20 +129,17 @@ def test_winnow_fingerprints_kernel_matches_column_twin(spark):
         r["doc_id"]: sorted(r["f"])
         for r in df.select("doc_id", kern("text").alias("f")).collect()
     }
-    slow = {
-        r["doc_id"]: sorted(r["f"])
-        for r in df.select(
-            "doc_id", winnow_fingerprints(F.col("text"), K, W).alias("f")
-        ).collect()
-    }
-    assert fast == slow
+    naive = {i: _naive_winnow(t) for i, t in enumerate(texts)}
+    assert fast == {i: sorted(fps) for i, fps in naive.items()}
 
-    a = {
+    got = {
         (r["id_a"], r["id_b"], r["n_shared"])
-        for r in winnow_candidates(df, min_shared=1, use_kernel=True).collect()
+        for r in winnow_candidates(df, min_shared=1).collect()
     }
-    b = {
-        (r["id_a"], r["id_b"], r["n_shared"])
-        for r in winnow_candidates(df, min_shared=1, use_kernel=False).collect()
+    want = {
+        (a, b, len(naive[a] & naive[b]))
+        for a in naive
+        for b in naive
+        if a < b and naive[a] & naive[b]
     }
-    assert a == b and a
+    assert got == want and got
