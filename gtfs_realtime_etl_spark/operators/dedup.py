@@ -7,7 +7,8 @@ Four strategies, all shuffle-frugal by construction:
   MinHash signature → banded LSH bucket-join.  The quadratic comparison
   only ever happens WITHIN an LSH bucket (size-capped), so at 100 TB the
   cost is one shuffle on (band_id, band_key) plus tiny per-bucket cross
-  products.
+  products.  :func:`lsh_band_rows` is the one place the banded index
+  layout ``(doc_id, band_id, band_key)`` is built.
 - :func:`simhash_dedup` — 62-bit SimHash over tokens, bucketed by BANDED
   SEGMENTS (pigeonhole: hamming ≤ d ⇒ at least one of d+1 equal-width
   segments matches exactly), the same bounded-bucket plan shape as the
@@ -18,6 +19,28 @@ Four strategies, all shuffle-frugal by construction:
 - n-gram Jaccard verification (:func:`jaccard_pairs`) — exact similarity
   on candidate pairs only (never all pairs).
 
+The MinHash family also runs as an incremental fold over arrival
+batches: each batch's band rows are probed against the standing index
+(:func:`probe_index`: new×index plus new×new) and then appended to it;
+:func:`finalize_dedup_candidates` merges the accumulated candidates.
+The fold equals the one-shot :func:`minhash_lsh_candidates` under any
+batch slicing and any ``max_bucket``:
+
+* a final bucket B = ∪_d B_d emits, across batches, exactly
+  { (x, y) : x ∈ B_i, y ∈ B_j, j <= i } = all unordered pairs of B —
+  the set the one-shot's per-bucket pair explosion emits;
+* the cap is MONOTONE: a bucket's cumulative size only grows, so the
+  probe's "skip buckets whose running size already exceeds the cap"
+  never discards a pair the one-shot keeps, and finalize re-filters
+  every candidate against the FINAL bucket sizes (a SUM-merge monoid
+  over per-batch counts), dropping pairs emitted while a bucket was
+  still small exactly when the one-shot drops the whole bucket;
+* candidates then dedup (a pair may collide in several bands or
+  batches) and verify with the same :func:`jaccard_pairs` tail.
+
+The registry form is ``plans/analytics23.py::dedup_incremental_pairs``;
+the Structured Streaming form is ``streaming/dedup_fold.py``.
+
 All hashing uses the portable polynomial scheme in
 :mod:`gtfs_realtime_etl_spark.functions.hashing` (mod 2^31 - 1), so every
 signature is reproducible in ANSI SQL and the driver's DuckDB oracle can
@@ -26,6 +49,8 @@ signatures were Spark-only and therefore unverifiable).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -118,6 +143,43 @@ def _pair_explode(rows_col: str, fields) -> Column:
     )
 
 
+def lsh_band_rows(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_k: int = 5,
+) -> DataFrame:
+    """The banded MinHash index layout ``(doc_id, band_id, band_key)``:
+    one fused Arrow text→signature pass, then a narrow explode of the
+    ``bands`` signature slices.  ``num_hashes`` must divide into
+    ``bands`` equal rows-per-band; the band key is the raw slice
+    (array<bigint>), not a rehash — portable to the SQL oracle and
+    collision-free.  A document's rows depend only on its own text, so
+    rows computed batch by batch equal rows computed over the corpus."""
+    rows_per_band = num_hashes // bands
+    assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
+    # Alias only to rename: a same-name alias changes nothing but still
+    # takes an expression id, which reorders some downstream plans.
+    ids = F.col(id_col) if id_col == "doc_id" else F.col(id_col).alias("doc_id")
+    sig = _saturate(docs).select(
+        ids,
+        minhash_text_kernel(num_hashes, shingle_k)(F.col(text_col)).alias("sig"),
+    )
+    return sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band)
+                    for i in range(bands)
+                ]
+            )
+        ).alias("band_id", "band_key"),
+    )
+
+
 def minhash_lsh_candidates(
     docs: DataFrame,
     text_col: str = "text",
@@ -129,35 +191,15 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on MinHash signatures.
 
-    ``num_hashes`` must divide into ``bands`` equal rows-per-band.  Two
-    docs become a candidate pair iff SOME band of their signatures is
-    identical.  Plan: fused text→signature Arrow kernel (one pass) →
-    explode band slices (narrow) → shuffle once on (band_id, band_key)
-    → per-bucket pair explosion → distinct pairs.  The band key is the
-    raw signature slice (array<bigint>), not a rehash — portable to the
-    SQL oracle and collision-free.
+    Two docs become a candidate pair iff SOME band of their signatures
+    is identical.  Plan: :func:`lsh_band_rows` (one kernel pass, narrow
+    band explode) → shuffle once on (band_id, band_key) → per-bucket
+    pair explosion → distinct pairs.
     """
-    rows_per_band = num_hashes // bands
-    assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-
-    sig = _saturate(docs).select(
-        F.col(id_col),
-        minhash_text_kernel(num_hashes, shingle_k)(F.col(text_col)).alias("sig"),
-    )
-    banded = sig.select(
-        id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band)
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band_id", "band_key"),
-    )
+    banded = lsh_band_rows(docs, text_col, id_col, num_hashes, bands, shingle_k)
     buckets = (
         banded.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
     )
     pair = _pair_explode("ids", lambda x, y: [x.alias("id_a"), y.alias("id_b")])
@@ -258,6 +300,79 @@ def minhash_lsh_dedup(
         docs, text_col, id_col, num_hashes, bands, shingle_k, max_bucket
     )
     return jaccard_pairs(docs, cands, text_col, id_col, shingle_k, threshold)
+
+
+def probe_index(
+    new_rows: DataFrame,
+    index_rows: DataFrame | None,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
+) -> DataFrame:
+    """Candidate pairs contributed by ONE batch: new×index plus
+    new×new, bucket-capped on the RUNNING bucket size (index ∪ new).
+
+    Emits ``(band_id, band_key, id_a, id_b)`` with ``id_a < id_b`` —
+    the bucket key is kept so the finalize step can re-filter against
+    FINAL bucket sizes (see module doc).  The running-size guard is a
+    pure scale protection: sizes only grow, so any bucket it skips
+    would be dropped by the finalize filter anyway."""
+    keys = ["band_id", "band_key"]
+    cumulative = (
+        index_rows.unionByName(new_rows) if index_rows is not None else new_rows
+    )
+    ok = (
+        cumulative.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") <= max_bucket)
+        .select(*keys)
+    )
+    guarded_new = new_rows.join(ok, keys, "left_semi")
+    parts = []
+    if index_rows is not None:
+        parts.append(
+            guarded_new.alias("n")
+            .join(index_rows.alias("o"), keys)
+            .select(
+                *keys,
+                F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_a"),
+                F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_b"),
+            )
+        )
+    parts.append(
+        guarded_new.alias("a")
+        .join(guarded_new.alias("b"), keys)
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            *keys,
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+        )
+    )
+    return reduce(lambda x, y: x.unionByName(y), parts)
+
+
+def finalize_dedup_candidates(
+    all_candidates: DataFrame,
+    index_rows: DataFrame,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
+) -> DataFrame:
+    """Merge step: re-filter accumulated candidates against the FINAL
+    bucket sizes (SUM-merge monoid over per-batch counts — computed
+    here directly from the full index), then dedup pairs.  This is
+    what makes the fold equal the one-shot under the bucket cap: a
+    bucket that outgrew the cap AFTER emitting pairs has every one of
+    those pairs dropped, exactly as the one-shot drops the bucket."""
+    keys = ["band_id", "band_key"]
+    final_ok = (
+        index_rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter((F.col("cnt") >= 2) & (F.col("cnt") <= max_bucket))
+        .select(*keys)
+    )
+    return (
+        all_candidates.join(final_ok, keys, "left_semi")
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def simhash_dedup(

@@ -28,19 +28,17 @@ from gtfs_realtime_etl_spark.functions.time import to_zoned_ts
 from gtfs_realtime_etl_spark.sources.lake import with_partition_cols
 
 
-def enrich_positions(raw: DataFrame, with_wkb: bool = True) -> DataFrame:
+def enrich_positions(raw: DataFrame) -> DataFrame:
     """Pure transform: VEHICLE_POSITIONS_RAW schema in, lake schema out.
 
     Entirely narrow — no shuffle, stays in one whole-stage-codegen span
-    (apart from the Arrow-batched WKB udf, which ``with_wkb=False`` can
-    skip for compute-only pipelines).
+    (apart from the Arrow-batched WKB udf).
     """
     lat, lon = F.col("latitude"), F.col("longitude")
     df = (
         raw.withColumn("timestamp", to_zoned_ts(F.col("timestamp")))
         .withColumn("geohash", geohash_encode(lat, lon, precision=7))
         .withColumn("bbox", bbox_struct(lon, lat))
+        .withColumn("geometry", point_wkb(lon, lat))
     )
-    if with_wkb:
-        df = df.withColumn("geometry", point_wkb(lon, lat))
     return with_partition_cols(df, "timestamp")

@@ -6,30 +6,15 @@ maintenance of a near-duplicate index over arrival batches).
   (``operators/dedup.py::minhash_lsh_dedup``) restated as an
   INCREMENTAL fold over arrival batches, the shape a 100 TB
   training-data lake actually runs: each new batch of documents is
-  signed and banded ONCE (O(batch) work — a document's signature
-  depends only on its own text, so the per-batch fold is
-  batch-local by construction), probed against the STANDING banded
-  index (new×index candidate pairs) and against itself (new×new
-  pairs), and then appended to the index.  Nothing re-signs or
-  re-pairs history.
-
-  Exactness vs the one-shot (the fold/merge contract):
-
-  * a final bucket B = ∪_d B_d emits, across batches, exactly
-    { (x, y) : x ∈ B_i, y ∈ B_j, j <= i } = all unordered pairs of
-    B — the same set the one-shot's per-bucket pair explosion emits;
-  * the ``max_bucket`` cap is MONOTONE: a bucket's cumulative size
-    only grows, so "skip probing buckets whose running size already
-    exceeds the cap" never discards a pair the one-shot would keep
-    (scale guard: no quadratic emission from an overgrown bucket at
-    ANY point of the fold), and the finalize step re-filters every
-    surviving candidate against the FINAL bucket sizes — a SUM-merge
-    monoid over per-batch bucket counts — so pairs emitted while a
-    bucket was still small are dropped exactly when the one-shot
-    would have dropped the whole bucket;
-  * candidate pairs then dedup (a pair may collide in several bands
-    / several batches) and verify with the exact shingle-Jaccard,
-    identical to the one-shot tail.
+  signed and banded ONCE (``lsh_band_rows``), probed against the
+  STANDING banded index and against itself (``probe_index``), and
+  then appended to the index; ``finalize_dedup_candidates`` re-filters
+  the accumulated candidates against the final bucket sizes and the
+  exact shingle-Jaccard verifies them.  Nothing re-signs or re-pairs
+  history.  The fold primitives and their exactness contract (fold ==
+  one-shot under any slicing and any bucket cap) live in
+  ``operators/dedup.py``; ``streaming/dedup_fold.py`` runs the same
+  fold with Structured Streaming as the arrival mechanism.
 
   The registry form drives the fold over ``DEDUP_INC_BATCHES``
   deterministic arrival slices (``doc_id % DEDUP_INC_BATCHES``) inside
@@ -58,8 +43,8 @@ bucket-capped, and the finalize aggregates are bucket-grain (bounded
 by the cap).  History is never re-signed.
 
 Reference scope note: the reference (smohiudd/gtfs-realtime-etl) has
-no analytics surface of this kind; this is a driver-mandated
-LLM-pipeline extension (SURVEY.md §7 step 7).
+no analytics surface of this kind; this is the LLM-pipeline
+extension of SURVEY.md §7 step 7.
 """
 
 from __future__ import annotations
@@ -70,14 +55,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import (
-    minhash_text_kernel,
     sql_minhash_sig,
     sql_shingle_hashes,
 )
 from gtfs_realtime_etl_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
-    _saturate,
+    finalize_dedup_candidates,
     jaccard_pairs,
+    lsh_band_rows,
+    probe_index,
 )
 from gtfs_realtime_etl_spark.plans.staging import stage_to_tmp_partitioned
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
@@ -92,110 +78,6 @@ DEDUP_INC_BATCHES = 4
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     tabs = load_testdata(spark, sf_dir, tables=tuple(names))
     return [tabs[n] for n in names]
-
-
-def lsh_band_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = DEDUP_INC_NUM,
-    bands: int = DEDUP_INC_BANDS,
-    shingle_k: int = DEDUP_INC_K,
-) -> DataFrame:
-    """Banded MinHash rows ``(doc_id, band_id, band_key)`` for a batch
-    of documents — the per-batch unit of the incremental index.  One
-    fused Arrow text→signature pass, then a narrow band explode; a
-    batch's rows depend only on that batch's text (batch-local fold)."""
-    rows_per_band = num_hashes // bands
-    assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-    sig = _saturate(docs).select(
-        F.col(id_col).alias("doc_id"),
-        minhash_text_kernel(num_hashes, shingle_k)(F.col(text_col)).alias("sig"),
-    )
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band)
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band_id", "band_key"),
-    )
-
-
-def probe_index(
-    new_rows: DataFrame,
-    index_rows: DataFrame | None,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Candidate pairs contributed by ONE batch: new×index plus
-    new×new, bucket-capped on the RUNNING bucket size (index ∪ new).
-
-    Emits ``(band_id, band_key, id_a, id_b)`` with ``id_a < id_b`` —
-    the bucket key is kept so the finalize step can re-filter against
-    FINAL bucket sizes (see module doc).  The running-size guard is a
-    pure scale protection: sizes only grow, so any bucket it skips
-    would be dropped by the finalize filter anyway."""
-    keys = ["band_id", "band_key"]
-    cumulative = (
-        index_rows.unionByName(new_rows) if index_rows is not None else new_rows
-    )
-    ok = (
-        cumulative.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") <= max_bucket)
-        .select(*keys)
-    )
-    guarded_new = new_rows.join(ok, keys, "left_semi")
-    parts = []
-    if index_rows is not None:
-        parts.append(
-            guarded_new.alias("n")
-            .join(index_rows.alias("o"), keys)
-            .select(
-                *keys,
-                F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_a"),
-                F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_b"),
-            )
-        )
-    parts.append(
-        guarded_new.alias("a")
-        .join(guarded_new.alias("b"), keys)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            *keys,
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-    )
-    return reduce(lambda x, y: x.unionByName(y), parts)
-
-
-def finalize_dedup_candidates(
-    all_candidates: DataFrame,
-    index_rows: DataFrame,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Merge step: re-filter accumulated candidates against the FINAL
-    bucket sizes (SUM-merge monoid over per-batch counts — computed
-    here directly from the full index), then dedup pairs.  This is
-    what makes the fold equal the one-shot under the bucket cap: a
-    bucket that outgrew the cap AFTER emitting pairs has every one of
-    those pairs dropped, exactly as the one-shot drops the bucket."""
-    keys = ["band_id", "band_key"]
-    final_ok = (
-        index_rows.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter((F.col("cnt") >= 2) & (F.col("cnt") <= max_bucket))
-        .select(*keys)
-    )
-    return (
-        all_candidates.join(final_ok, keys, "left_semi")
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def dedup_incremental_pairs(
@@ -221,7 +103,12 @@ def dedup_incremental_pairs(
     in its own job — the probe/finalize fold contract is unchanged
     here, only the staging emulation is consolidated)."""
     staged = stage_to_tmp_partitioned(
-        lsh_band_rows(documents).withColumn(
+        lsh_band_rows(
+            documents,
+            num_hashes=DEDUP_INC_NUM,
+            bands=DEDUP_INC_BANDS,
+            shingle_k=DEDUP_INC_K,
+        ).withColumn(
             "batch",
             F.pmod(F.col("doc_id"), F.lit(n_batches)).cast("int"),
         ),

@@ -1,35 +1,47 @@
-"""Streaming twin of bank 27's incremental MinHash-LSH dedup fold.
+"""Incremental MinHash-LSH near-dup detection over Structured Streaming.
 
-``streaming/dedup_stream.py`` (round 6) already lands a near-dup index
-continuously, but its per-batch candidates are emitted under a RUNNING
-bucket cap, so its batch-twin equivalence holds only when caps don't
-bind.  This module wires the bank-27 fold primitives
-(``plans/analytics23.py::probe_index`` / ``finalize_dedup_candidates``)
-into Structured Streaming instead: per micro-batch the sink emits
-probe_index's candidates (new-vs-index + new-vs-new, running-cap
-guarded as a pure scale protection) and extends the standing banded
-index; ``finalize_fold`` then re-filters the accumulated candidates
-against FINAL bucket sizes — so the finalized verified pair set equals
-the one-shot banded-LSH dedup EVEN WHEN CAPS BIND, the proven
-fold==one-shot contract of ``tests/test_dedup_incremental.py``, now
-with Structured Streaming as the arrival mechanism.
+The engine's continuous near-dup path: documents arrive continuously,
+and each micro-batch is deduped against everything already ingested
+without re-reading or re-hashing historical text.  The sink runs the
+incremental fold of ``operators/dedup.py`` (``lsh_band_rows`` →
+``probe_index`` → ``finalize_dedup_candidates``), the same fold the
+``dedup_incremental`` registry entry runs in one plan:
 
-Idempotency follows the house pattern (``streaming/ingest.py``,
-``streaming/dedup_stream.py``): a batch-id commit marker skips
-whole-batch redelivery, and the two appends are each retry-safe on
-their own — the index append anti-joins against THIS batch's stored
-rows (``batch_id`` is a partition column, so the guard read prunes to
-the retried batch's directories: O(batch), not O(index)), and the
-candidate append may duplicate rows on a crash-retry, which
-``finalize_dedup_candidates``'s terminal ``distinct()`` absorbs.  One
-hazard is specific to the fold: a retry AFTER a partial index append
-would otherwise probe an index already containing (some of) its own
-batch, emitting self-pairs; the probe therefore reads the index with
-``batch_id != current`` — partition-pruned to exactly the pre-batch
-state a clean first attempt would have seen.
+per micro-batch (foreachBatch):
+  1. the batch is signed and banded once, and ``probe_index`` emits
+     its candidates (new-vs-index plus new-vs-new, guarded by the
+     running bucket size as a pure scale protection) — appended to
+     ``cand_root``;
+  2. the batch's band rows are appended to the standing index
+     (partitioned by ``batch_id``), so the next batch probes this one.
 
-Same doc-id contract as dedup_stream: ids are unique and immutable
-across the stream's lifetime; dedup re-deliveries upstream.
+``finalize_fold`` then re-filters the accumulated candidates against
+the FINAL bucket sizes and verifies them with the exact
+shingle-Jaccard, so the finalized pair set equals the one-shot
+``minhash_lsh_dedup`` under any micro-batch slicing, even when bucket
+caps bind.
+
+Idempotency (effectively-once under batch retry, the house pattern of
+``streaming/ingest.py``): a batch-id commit marker skips a whole-batch
+redelivery.  A crash BETWEEN an append and the marker re-runs the
+batch, so each step is retry-safe on its own:
+
+- the probe reads the index with ``batch_id != current`` — the
+  pre-batch state a clean first attempt saw.  Without it, a retry
+  after the index append would probe an index holding its own rows and
+  emit self-pairs ``(d, d)``;
+- the index append anti-joins against THIS batch's stored rows
+  (``batch_id`` is a partition column, so the guard read prunes to the
+  retried batch's directories: O(batch), not O(index)), keeping one
+  row per (doc, band), which the bucket sizes rely on;
+- the candidate append may duplicate rows on a retry, which
+  ``finalize_dedup_candidates``'s terminal ``distinct()`` absorbs.
+
+Doc-id contract (load-bearing): document ids are unique and immutable
+across the stream's lifetime.  Structured Streaming replays a failed
+micro-batch under the SAME batch_id, which the guards above handle; a
+source that re-emits an already-ingested doc_id in a later batch is
+outside the contract — dedup re-deliveries upstream.
 
 Scale shape: each batch signs ONLY its own text (one fused Arrow
 pass), probes the index with one exchange on (band_id, band_key), and
@@ -47,14 +59,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from gtfs_realtime_etl_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
-    jaccard_pairs,
-)
-from gtfs_realtime_etl_spark.plans.analytics23 import (
-    DEDUP_INC_BANDS,
-    DEDUP_INC_K,
-    DEDUP_INC_NUM,
-    DEDUP_INC_THRESHOLD,
     finalize_dedup_candidates,
+    jaccard_pairs,
     lsh_band_rows,
     probe_index,
 )
@@ -68,13 +74,13 @@ def make_dedup_fold_sink(
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = DEDUP_INC_NUM,
-    bands: int = DEDUP_INC_BANDS,
-    shingle_k: int = DEDUP_INC_K,
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_k: int = 5,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ):
     """foreachBatch function: probe the batch against the standing
-    index (bank-27 semantics), append candidates + band rows."""
+    index, append candidates + band rows."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -163,8 +169,8 @@ def finalize_fold(
     index_root: str,
     cand_root: str,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    shingle_k: int = DEDUP_INC_K,
-    threshold: float = DEDUP_INC_THRESHOLD,
+    shingle_k: int = 5,
+    threshold: float = 0.35,
 ) -> DataFrame:
     """The merge step: accumulated candidates re-filtered against FINAL
     bucket sizes, then exact shingle-Jaccard verification — the same

@@ -48,18 +48,18 @@ from gtfs_realtime_etl_spark.sources.gtfs_rt import (
 from gtfs_realtime_etl_spark.sources.lake import write_locations_batch
 
 
-def feed_pipeline(
-    frames: DataFrame,
-    dedup: bool = True,
-    watermark: str = "10 minutes",
-    with_wkb: bool = True,
-) -> DataFrame:
+#: How late (event time) a repeated (vehicle_id, timestamp) report may
+#: arrive and still be dropped; also bounds the streaming dedup state.
+DEDUP_WATERMARK = "10 minutes"
+
+
+def feed_pipeline(frames: DataFrame, dedup: bool = True) -> DataFrame:
     """payload frames → enriched position rows (works batch or stream)."""
     positions = decode_feed_frames(frames)
-    enriched = enrich_positions(positions, with_wkb=with_wkb)
+    enriched = enrich_positions(positions)
     if dedup:
         if enriched.isStreaming:
-            enriched = enriched.withWatermark("timestamp", watermark)
+            enriched = enriched.withWatermark("timestamp", DEDUP_WATERMARK)
         enriched = enriched.dropDuplicates(["vehicle_id", "timestamp"])
     return enriched
 

@@ -222,10 +222,12 @@ def probe_pair_join(docs, which: str, mode: str) -> dict:
 def probe_dedup_incremental(docs) -> dict:
     from pyspark.sql import functions as F
 
-    from gtfs_realtime_etl_spark.operators.dedup import DEFAULT_MAX_BUCKET
+    from gtfs_realtime_etl_spark.operators.dedup import (
+        DEFAULT_MAX_BUCKET,
+        lsh_band_rows,
+    )
     from gtfs_realtime_etl_spark.plans.analytics23 import (
         dedup_incremental_pairs,
-        lsh_band_rows,
     )
 
     t0 = time.perf_counter()

@@ -100,7 +100,7 @@ def _plog2m(n: int) -> int:
     return math.floor(1_000_000.0 * _plog2(n) + 0.5)
 
 
-def test_shingle_hash64_kernel_matches_column_twin(spark):
+def test_shingle_hash64_kernel_matches_python_reference(spark):
     """The Arrow kernel setsim_join runs on must produce the Python
     reference's hash SETS (sorted, distinct) on the real corpus."""
     from pyspark.sql import functions as F

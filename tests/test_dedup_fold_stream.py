@@ -1,19 +1,24 @@
-"""Streaming dedup fold (bank 27 over Structured Streaming): the
-finalized pair set must equal the one-shot banded-LSH dedup EVEN WHEN
-BUCKET CAPS BIND — the strong contract the running-cap dedup_stream
-can't give — and the sink must be idempotent under whole-batch and
-partial-failure retries."""
+"""Streaming dedup fold (the incremental MinHash-LSH fold over
+Structured Streaming): the finalized pair set must equal the one-shot
+banded-LSH dedup EVEN WHEN BUCKET CAPS BIND, the uncapped candidates
+must equal the one-shot candidates, and the sink must be idempotent
+under whole-batch and partial-failure retries."""
 
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gtfs_realtime_etl_spark.operators.dedup import minhash_lsh_dedup
+from gtfs_realtime_etl_spark.operators.dedup import (
+    minhash_lsh_candidates,
+    minhash_lsh_dedup,
+)
 from gtfs_realtime_etl_spark.plans.analytics23 import (
     DEDUP_INC_BANDS,
     DEDUP_INC_K,
@@ -33,6 +38,7 @@ SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("text", StringType())]
 )
 CAP = 3  # deliberately tiny so buckets DO overflow
+UNCAPPED = 100_000
 
 
 def _rows(df):
@@ -77,12 +83,11 @@ def _write_slices(rows, src_dir, n_slices):
         pq.write_table(tbl, os.path.join(src_dir, f"slice_{i}.parquet"))
 
 
-def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
-    documents = _docs(spark)
-    rows = documents.orderBy("doc_id").collect()
+def _stream_slices(spark, tmp_path, rows, max_bucket, n_slices=3):
+    """Land ``rows`` as ``n_slices`` files and fold them through the
+    stream, one file per micro-batch."""
     src = str(tmp_path / "incoming")
-    _write_slices(rows, src, n_slices=3)
-
+    _write_slices(rows, src, n_slices=n_slices)
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -94,9 +99,14 @@ def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
         cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
-        max_bucket=CAP,
+        max_bucket=max_bucket,
     )
     q.awaitTermination(300)
+
+
+def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
+    documents = _docs(spark)
+    _stream_slices(spark, tmp_path, documents.orderBy("doc_id").collect(), CAP)
 
     got = _rows(
         finalize_fold(
@@ -113,7 +123,40 @@ def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
     assert got == _rows(dedup_incremental_pairs(documents, max_bucket=CAP))
     # The cap must actually bite here, or the "even when caps bind"
     # claim is vacuous.
-    assert len(_rows(_one_shot(documents, 100_000))) > len(exp)
+    assert len(_rows(_one_shot(documents, UNCAPPED))) > len(exp)
+
+
+def test_stream_candidates_equal_one_shot_candidates_uncapped(spark, tmp_path):
+    """With no binding cap, the candidates the stream accumulates are
+    exactly the one-shot candidate set: each pair is found in the batch
+    where its later member arrives.  The index ends with one row per
+    (doc, band) over the whole corpus."""
+    documents = _docs(spark)
+    rows = documents.orderBy("doc_id").collect()
+    _stream_slices(spark, tmp_path, rows, UNCAPPED)
+
+    streamed = {
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "cands"))
+        .select("id_a", "id_b")
+        .distinct()
+        .collect()
+    }
+    one_shot = {
+        tuple(r)
+        for r in minhash_lsh_candidates(
+            documents,
+            num_hashes=DEDUP_INC_NUM,
+            bands=DEDUP_INC_BANDS,
+            shingle_k=DEDUP_INC_K,
+            max_bucket=UNCAPPED,
+        ).collect()
+    }
+    assert streamed == one_shot and one_shot
+
+    idx = spark.read.parquet(str(tmp_path / "index"))
+    assert idx.count() == len(rows) * DEDUP_INC_BANDS
+    assert idx.select("doc_id").distinct().count() == len(rows)
 
 
 def test_sink_retries_are_idempotent(spark, tmp_path):
@@ -132,8 +175,17 @@ def test_sink_retries_are_idempotent(spark, tmp_path):
     )
     assert baseline == _rows(_one_shot(documents, CAP))
 
-    # Whole-batch redelivery: the commit marker short-circuits.
+    def counts():
+        return (
+            spark.read.parquet(index_root).count(),
+            spark.read.parquet(cand_root).count(),
+        )
+
+    # Whole-batch redelivery: the commit marker short-circuits, so
+    # neither output gains a row.
+    before = counts()
     sink(b1, 1)
+    assert counts() == before
     assert baseline == _rows(
         finalize_fold(spark, documents, index_root, cand_root, max_bucket=CAP)
     )
@@ -147,3 +199,61 @@ def test_sink_retries_are_idempotent(spark, tmp_path):
     assert baseline == _rows(
         finalize_fold(spark, documents, index_root, cand_root, max_bucket=CAP)
     )
+    # One index row per (doc, band): the bucket sizes rely on it.
+    idx = spark.read.parquet(index_root)
+    assert idx.groupBy("doc_id", "band_id").count().filter(
+        F.col("count") > 1
+    ).isEmpty()
+    # The retry probed the pre-batch index, so it wrote no self-pair.
+    cands = spark.read.parquet(cand_root)
+    assert cands.filter(F.col("id_a") == F.col("id_b")).isEmpty()
+
+
+@pytest.mark.scale_smoke
+@pytest.mark.skipif(
+    not os.environ.get("SPARK_GRAFT_SCALE_SMOKE"),
+    reason="opt-in: SPARK_GRAFT_SCALE_SMOKE=1 runs the 20x streaming smoke",
+)
+def test_streaming_dedup_scale_smoke(spark, tmp_path):
+    """Opt-in scale probe: a 20x corpus (100k docs, heavy planted
+    duplicates) streamed through the fold in micro-batches of two
+    slice files each.  Each batch's probe must stay bounded (capped
+    buckets, index scanned narrow) — the continuous-ingestion stand-in
+    for the 100 TB posture."""
+    docs = (
+        spark.read.parquet(
+            os.path.join(os.path.dirname(SF_SMOKE), "sf0.1", "documents.parquet")
+        )
+        .crossJoin(spark.range(20).select(F.col("id").alias("rep")))
+        .select((F.col("doc_id") * 100 + F.col("rep")).alias("doc_id"), "text")
+    )
+    src = str(tmp_path / "incoming")
+    # 5 slice files via one partitioned write (fast path for 100k rows).
+    docs.withColumn("slice", F.pmod("doc_id", F.lit(5))).repartition(
+        5, "slice"
+    ).write.partitionBy("slice").mode("overwrite").parquet(src)
+
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+    t0 = time.time()
+    q = start_dedup_fold_stream(
+        stream,
+        index_root=str(tmp_path / "index"),
+        cand_root=str(tmp_path / "cands"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+        max_bucket=1000,
+    )
+    q.awaitTermination(600)
+    dt = time.time() - t0
+    n = (
+        spark.read.parquet(str(tmp_path / "cands"))
+        .select("id_a", "id_b")
+        .distinct()
+        .count()
+    )
+    assert n > 0
+    assert dt < 480, f"streaming dedup smoke took {dt:.0f}s"

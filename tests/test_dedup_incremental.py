@@ -10,16 +10,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.operators.dedup import minhash_lsh_dedup
+from gtfs_realtime_etl_spark.operators.dedup import (
+    finalize_dedup_candidates,
+    jaccard_pairs,
+    lsh_band_rows,
+    minhash_lsh_dedup,
+    probe_index,
+)
 from gtfs_realtime_etl_spark.plans.analytics23 import (
     DEDUP_INC_BATCHES,
     DEDUP_INC_K,
     DEDUP_INC_NUM,
     DEDUP_INC_THRESHOLD,
     dedup_incremental_pairs,
-    finalize_dedup_candidates,
-    lsh_band_rows,
-    probe_index,
+    q_dedup_incremental,
 )
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 from tests.conftest import SF_SMOKE
@@ -58,8 +62,6 @@ def test_batch_jobs_merge_to_one_shot_result(spark, tmp_path):
         new_rows.write.mode("append" if d else "overwrite").parquet(index_path)
 
     # --- finalize job: candidates vs FINAL bucket sizes, then verify.
-    from gtfs_realtime_etl_spark.operators.dedup import jaccard_pairs
-
     kept = finalize_dedup_candidates(
         spark.read.parquet(cand_path), spark.read.parquet(index_path)
     )
@@ -87,8 +89,6 @@ def test_batch_jobs_merge_to_one_shot_result(spark, tmp_path):
     assert got == exp
 
     # And the registry form (the in-plan fold) agrees with both.
-    from gtfs_realtime_etl_spark.plans.analytics23 import q_dedup_incremental
-
     assert _rows(q_dedup_incremental(spark, SF_SMOKE)) == exp
 
 

@@ -103,7 +103,7 @@ TRICKY = [
 
 
 @pytest.mark.parametrize("k", [3, 5])
-def test_kernel_equals_column_twin_equals_duckdb(spark, k):
+def test_shingle_kernel_and_token_hash_equal_duckdb(spark, k):
     """Full-path equivalence on the tricky corpus: Arrow shingle
     kernel == DuckDB SQL emitter, and the Column token hash
     (token_hash64_column) == DuckDB token hash, on every document."""

@@ -88,7 +88,7 @@ def test_winnow_bucket_cap_drops_boilerplate(spark):
     assert winnow_candidates(df, min_shared=1, max_bucket=100).count() == 45
 
 
-def test_winnow_profile_kernel_matches_column_twin(spark):
+def test_winnow_profile_kernel_matches_naive_reference(spark):
     """The fused Arrow profile kernel (the registry hot path) must be
     bit-identical to profiling the naive reference's shingles and
     fingerprints — including the shorter-than-window clamp and unicode
@@ -113,7 +113,7 @@ def test_winnow_profile_kernel_matches_column_twin(spark):
     assert fast == slow
 
 
-def test_winnow_fingerprints_kernel_matches_column_twin(spark):
+def test_winnow_fingerprints_kernel_matches_naive_reference(spark):
     """Array kernel (the winnow_candidates hot path) returns the naive
     reference's fingerprint SETS, and the candidate pairs with their
     shared-fingerprint counts are the pairwise set intersections."""
