@@ -1,23 +1,16 @@
-"""Streaming near-dup ingestion: batch-partitioning invariance and
-retry idempotency of the dedup-index sink."""
+"""Retry idempotency of the streaming near-dup sink (the fold sink of
+``streaming.dedup_fold``) under at-least-once redelivery: counts of
+index and candidate rows must not move on a retried batch."""
 
 from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gtfs_realtime_etl_spark.operators.dedup import minhash_lsh_candidates
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-from gtfs_realtime_etl_spark.streaming.dedup_stream import (
-    make_dedup_index_sink,
-    read_candidate_pairs,
-    start_dedup_stream,
-)
+from gtfs_realtime_etl_spark.streaming.dedup_fold import make_dedup_fold_sink
 from tests.conftest import SF_SMOKE
 
 KW = dict(num_hashes=32, bands=8, shingle_k=5, max_bucket=100_000)
@@ -35,78 +28,27 @@ def _doc_rows(spark):
     )
 
 
-def _write_slices(rows, src_dir, n_slices=3):
-    os.makedirs(src_dir, exist_ok=True)
-    per = (len(rows) + n_slices - 1) // n_slices
-    for i in range(n_slices):
-        chunk = rows[i * per : (i + 1) * per]
-        tbl = pa.table(
-            {
-                "doc_id": pa.array([r["doc_id"] for r in chunk], pa.int64()),
-                "text": pa.array([r["text"] for r in chunk], pa.string()),
-            }
-        )
-        pq.write_table(tbl, os.path.join(src_dir, f"slice_{i}.parquet"))
-
-
-def test_stream_dedup_equals_batch(spark, tmp_path):
-    """Streaming the corpus through in 3 micro-batches must discover
-    EXACTLY the batch pipeline's candidate set (caps not binding):
-    each pair is found in the batch where its later member arrives."""
-    rows = _doc_rows(spark)
-    src = str(tmp_path / "incoming")
-    _write_slices(rows, src, n_slices=3)
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = start_dedup_stream(
-        stream,
+def _sink(tmp_path):
+    return make_dedup_fold_sink(
         index_root=str(tmp_path / "index"),
-        pairs_root=str(tmp_path / "pairs"),
+        cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
         **KW,
     )
-    q.awaitTermination(300)
-
-    docs = spark.createDataFrame(rows, SCHEMA)
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_candidates(docs, **KW)
-        .select("id_a", "id_b")
-        .collect()
-    }
-    streamed = {
-        (r["id_a"], r["id_b"])
-        for r in read_candidate_pairs(spark, str(tmp_path / "pairs")).collect()
-    }
-    assert streamed == full and full
-
-    # The index now covers the whole corpus: one row per (doc, band).
-    idx = spark.read.parquet(str(tmp_path / "index"))
-    assert idx.count() == len(rows) * KW["bands"]
-    assert idx.select("doc_id").distinct().count() == len(rows)
 
 
 def test_dedup_sink_retry_is_noop(spark, tmp_path):
     """At-least-once redelivery: invoking the sink twice with the same
-    batch_id must not double-append pairs or signatures."""
+    batch_id must not double-append candidates or band rows."""
     rows = _doc_rows(spark)[:80]
     batch = spark.createDataFrame(rows, SCHEMA)
-    sink = make_dedup_index_sink(
-        index_root=str(tmp_path / "index"),
-        pairs_root=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        **KW,
-    )
+    sink = _sink(tmp_path)
     sink(batch, 0)
-    pairs_1 = spark.read.parquet(str(tmp_path / "pairs")).count()
+    cands_1 = spark.read.parquet(str(tmp_path / "cands")).count()
     index_1 = spark.read.parquet(str(tmp_path / "index")).count()
+    assert index_1 == len(rows) * KW["bands"]
     sink(batch, 0)  # retry
-    assert spark.read.parquet(str(tmp_path / "pairs")).count() == pairs_1
+    assert spark.read.parquet(str(tmp_path / "cands")).count() == cands_1
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_1
     sink(batch.withColumn("doc_id", F.col("doc_id") + 10_000), 1)  # new batch
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_1 * 2
@@ -115,25 +57,21 @@ def test_dedup_sink_retry_is_noop(spark, tmp_path):
 def test_dedup_sink_partial_failure_retry(spark, tmp_path):
     """Crash BETWEEN the appends and the commit marker: the retry
     re-runs the whole batch, and the index append must stay idempotent
-    (one row per (doc, band)) via the stored-side anti-join — the
-    whole-batch commit log alone cannot cover this window."""
+    (one row per (doc, band)) via the stored-side anti-join, while the
+    probe of the pre-batch index writes no self-pair — the whole-batch
+    commit log alone cannot cover this window."""
     rows = _doc_rows(spark)[:80]
     batch0 = spark.createDataFrame(rows, SCHEMA)
     batch1 = batch0.withColumn("doc_id", F.col("doc_id") + 10_000)
     index_root = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
-    sink = make_dedup_index_sink(
-        index_root=index_root,
-        pairs_root=str(tmp_path / "pairs"),
-        checkpoint_dir=ckpt,
-        **KW,
-    )
+    sink = _sink(tmp_path)
     sink(batch0, 0)
     sink(batch1, 1)
     index_after = spark.read.parquet(index_root).count()
-    # Simulate the crash: batch 1's appends committed but its marker was
+    # Simulate the crash: batch 1's appends landed but its marker was
     # never written.
-    os.remove(os.path.join(ckpt, "dedup_commits", "1"))
+    os.remove(os.path.join(ckpt, "fold_commits", "1"))
     sink(batch1, 1)  # at-least-once redelivery
     idx = spark.read.parquet(index_root)
     assert idx.count() == index_after  # no double-append
@@ -141,51 +79,5 @@ def test_dedup_sink_partial_failure_retry(spark, tmp_path):
         idx.groupBy("doc_id", "band_id").count().filter(F.col("count") > 1).count()
     )
     assert dupes == 0  # one-row-per-(doc, band) invariant holds
-
-
-@pytest.mark.scale_smoke
-@pytest.mark.skipif(
-    not os.environ.get("SPARK_GRAFT_SCALE_SMOKE"),
-    reason="opt-in: SPARK_GRAFT_SCALE_SMOKE=1 runs the 20x streaming smoke",
-)
-def test_streaming_dedup_scale_smoke(spark, tmp_path):
-    """Opt-in scale probe: a 20x corpus (100k docs, heavy planted
-    duplicates) streamed through in 5 micro-batches.  Each batch's
-    candidate pass must stay bounded (capped buckets, index scanned
-    narrow) — the continuous-ingestion stand-in for the 100 TB
-    posture."""
-    import time
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-        .crossJoin(spark.range(20).select(F.col("id").alias("rep")))
-        .select((F.col("doc_id") * 100 + F.col("rep")).alias("doc_id"), "text")
-    )
-    src = str(tmp_path / "incoming")
-    # 5 slice files via one partitioned write (fast path for 100k rows).
-    docs.withColumn("slice", F.pmod("doc_id", F.lit(5))).repartition(
-        5, "slice"
-    ).write.partitionBy("slice").mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    t0 = time.time()
-    q = start_dedup_stream(
-        stream,
-        index_root=str(tmp_path / "index"),
-        pairs_root=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        num_hashes=32,
-        bands=8,
-        shingle_k=5,
-        max_bucket=1000,
-    )
-    q.awaitTermination(600)
-    dt = time.time() - t0
-    n = read_candidate_pairs(spark, str(tmp_path / "pairs")).count()
-    assert n > 0
-    assert dt < 480, f"streaming dedup smoke took {dt:.0f}s"
+    cands = spark.read.parquet(str(tmp_path / "cands"))
+    assert cands.filter(F.col("id_a") == F.col("id_b")).isEmpty()
