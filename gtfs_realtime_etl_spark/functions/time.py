@@ -42,13 +42,6 @@ def seconds_of_day(ts: Column) -> Column:
     return F.hour(ts) * 3600 + F.minute(ts) * 60 + F.second(ts)
 
 
-def time_diff_secs(ts: Column, sched_secs: Column) -> Column:
-    """Seconds between a ping's local time-of-day and a scheduled
-    seconds-of-day; positive = late.  DuckDB ``DATEDIFF('seconds',
-    arrival_time::TIME, strftime(ts,'%H:%M:%S')::TIME)`` parity."""
-    return seconds_of_day(ts) - sched_secs
-
-
 def to_zoned_ts(epoch_s: Column) -> Column:
     """Epoch seconds → session-timezone timestamp (handler.py:104-114)."""
     return F.to_timestamp(F.from_unixtime(epoch_s))

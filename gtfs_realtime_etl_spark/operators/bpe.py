@@ -105,12 +105,11 @@ def bpe_train(
     documents: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
-    keep_dict: bool = False,
-):
+) -> list[dict]:
     """Fit ``n_merges`` BPE merge rules; returns
-    ``[{merge_rank, lhs, rhs, pair_count}]`` in training order (and,
-    with ``keep_dict=True``, also the final encoded dictionary as a
-    persisted ``(s, c)`` frame the CALLER must unpersist).
+    ``[{merge_rank, lhs, rhs, pair_count}]`` in training order.  Every
+    frame the fit persists is unpersisted before it returns; encode
+    with :func:`apply_merges`.
 
     Each round MATERIALIZES the folded dictionary (persist, previous
     round unpersisted once superseded) instead of re-deriving it from
@@ -158,10 +157,6 @@ def bpe_train(
         # loses its persisted parent.
         if len(live) > 2:
             live.pop(0).unpersist()
-    if keep_dict:
-        for fr in live[:-1]:
-            fr.unpersist()
-        return merges, live[-1]
     for fr in live:
         fr.unpersist()
     return merges

@@ -217,7 +217,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 5,
     threshold: float = 0.5,
-    broadcast_sets: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard verification of candidate pairs.
 
@@ -228,12 +227,10 @@ def jaccard_pairs(
     distinct int64), identical to the oracle's
     list_intersect/list_distinct form.
 
-    ``broadcast_sets`` (default) broadcasts the involved-doc hash sets:
-    the candidate side then streams through a broadcast hash join and
-    the (heavy) set arrays are never shuffled or duplicated in a shuffle
-    file — a dup-dense corpus puts one doc in thousands of pairs.  Turn
-    it off when the involved-doc set outgrows executor memory (extreme
-    candidate volume); the plan degrades to a shuffle join.
+    The involved-doc hash sets are broadcast: the candidate side then
+    streams through a broadcast hash join and the (heavy) set arrays
+    are never shuffled or duplicated in a shuffle file — a dup-dense
+    corpus puts one doc in thousands of pairs.
     """
     # Lazy checkpoints: the candidate set feeds three plan legs (both
     # sides of `involved` plus the verify join) and the hash-set kernel
@@ -246,7 +243,7 @@ def jaccard_pairs(
         .union(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sh = (
+    sh = F.broadcast(
         docs.join(involved, id_col, "left_semi")
         .select(
             F.col(id_col),
@@ -254,8 +251,6 @@ def jaccard_pairs(
         )
         .localCheckpoint(eager=False)
     )
-    if broadcast_sets:
-        sh = F.broadcast(sh)
     # The candidate rows are skinny (two ids) but each drives an O(set)
     # intersect/union — spread them across the cluster with a PINNED
     # partition count: AQE sizes exchanges by BYTES and would coalesce

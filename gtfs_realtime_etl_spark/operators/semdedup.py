@@ -147,8 +147,8 @@ def semdedup_profile(
     final plan references it FOUR times (both pair sides, totals,
     survivors), and without the checkpoint each branch re-runs the
     argmin projection over the corpus.  One vector + ids per row —
-    input-sized, not pair-sized; executor loss invalidates it for the
-    session (same caveat as the minhash pair cache)."""
+    input-sized, not pair-sized; the checkpoint truncates lineage, so
+    losing its blocks fails the query instead of recomputing them."""
     if isinstance(centroids, list):
         cents = sorted(centroids, key=lambda r: r["cell_id"])
     else:

@@ -1,8 +1,7 @@
 """Document-level text analysis operators.
 
-Thin DataFrame-level compositions of the ``functions.text`` library:
-profile a corpus, score quality, predict language, fingerprint.  All
-narrow (per-row) transforms — they add zero shuffles to a pipeline.
+Thin DataFrame-level compositions of the ``functions.text`` library.
+Narrow (per-row) transforms — they add zero shuffles to a pipeline.
 """
 
 from __future__ import annotations
@@ -10,30 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.text import (
-    digit_ratio,
-    lang_id,
-    punct_ratio,
-    quality_score,
-    token_count,
-    upper_ratio,
-    whitespace_ratio,
-)
-
-
-def profile_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the standard per-document analysis columns."""
-    t = F.col(text_col)
-    return (
-        docs.withColumn("n_chars_calc", F.length(t))
-        .withColumn("n_tokens", token_count(t))
-        .withColumn("punct_ratio", punct_ratio(t))
-        .withColumn("digit_ratio", digit_ratio(t))
-        .withColumn("upper_ratio", upper_ratio(t))
-        .withColumn("ws_ratio", whitespace_ratio(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("quality", quality_score(t))
-    )
+from gtfs_realtime_etl_spark.functions.text import quality_score, token_count
 
 
 def quality_filter(
@@ -48,16 +24,3 @@ def quality_filter(
         (quality_score(t) >= min_quality) & (token_count(t) >= min_tokens)
     )
 
-
-def corpus_stats(docs: DataFrame, text_col: str = "text", by: str | None = None) -> DataFrame:
-    """Aggregate corpus statistics, optionally grouped."""
-    profiled = profile_documents(docs, text_col)
-    keys = [by] if by else []
-    return profiled.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.avg("n_tokens").alias("avg_tokens"),
-        F.avg("quality").alias("avg_quality"),
-        F.avg("punct_ratio").alias("avg_punct_ratio"),
-        F.expr("percentile_approx(n_tokens, 0.5)").alias("median_tokens"),
-    )

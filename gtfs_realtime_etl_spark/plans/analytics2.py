@@ -481,8 +481,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gtfs_realtime_etl_spark.plans.queries import _label_centroids_rows
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
-    # Shared with ann_ivf_topk / the at-rest IVF writer: same
-    # decimal-stabilized centroid table, collected once per session.
+    # The same decimal-stabilized centroid table ann_ivf_topk probes.
     cents = _label_centroids_rows(spark, sf_dir, _SD_DIM)
     return semdedup_profile(embeddings, cents, SEMDEDUP_TAU)
 

@@ -32,7 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.operators.bpe import _symbols, bpe_train
+from gtfs_realtime_etl_spark.operators.bpe import (
+    _symbols,
+    apply_merges,
+    bpe_train,
+    word_dictionary,
+)
 from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
@@ -44,29 +49,9 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [tabs[n] for n in names]
 
 
-# Session-scoped fit cache (the _MINHASH_PAIRS_CACHE discipline): both
-# registry entries consume the SAME fit, so the trainer runs once per
-# (session, sf_dir) and the final encoded dictionary stays persisted
-# for the session (vocabulary-sized — broadcast-class footprint).
-_BPE_CACHE: dict = {}
-
-
-def _bpe_fit_cached(spark: SparkSession, sf_dir: str):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, BPE_MERGES)
-    hit = _BPE_CACHE.get(key)
-    if hit is None:
-        # evict only entries from DEAD sessions (see minhash cache note)
-        for k in [k for k in _BPE_CACHE if k[0] != app_id]:
-            del _BPE_CACHE[k]
-        (documents,) = _t(spark, sf_dir, "documents")
-        hit = bpe_train(documents, n_merges=BPE_MERGES, keep_dict=True)
-        _BPE_CACHE[key] = hit
-    return hit
-
-
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merges, _encoded = _bpe_fit_cached(spark, sf_dir)
+    (documents,) = _t(spark, sf_dir, "documents")
+    merges = bpe_train(documents, n_merges=BPE_MERGES)
     return spark.createDataFrame(
         [
             (m["merge_rank"], m["lhs"], m["rhs"], m["pair_count"])
@@ -77,9 +62,11 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The trainer's final materialized dictionary IS the encoded
-    # corpus — aggregate it directly instead of re-folding.
-    _merges, encoded = _bpe_fit_cached(spark, sf_dir)
+    (documents,) = _t(spark, sf_dir, "documents")
+    merges = bpe_train(documents, n_merges=BPE_MERGES)
+    encoded = word_dictionary(documents).select(
+        apply_merges(F.col("s"), merges).alias("s"), "c"
+    )
     return (
         encoded.select(F.size(_symbols(F.col("s"))).alias("n_syms"), "c")
         .groupBy("n_syms")
@@ -443,9 +430,8 @@ LIMIT {BM25_N}
 # the Jaccard agreement of every method pair.  No "recall" claim — the
 # methods use different similarity definitions by design; the matrix
 # is the drift diagnostic a pipeline owner watches when retuning
-# bands/thresholds.  Plan: three existing pair pipelines (the MinHash
-# side reuses the session-wide DISK_ONLY verified-pair cache), one
-# union + self-equi-join on the pair key, seeded so all three rows
+# bands/thresholds.  Plan: three existing pair pipelines, one pinned
+# union grouped to per-pair method sets, seeded so all three rows
 # always exist.
 # ---------------------------------------------------------------------------
 

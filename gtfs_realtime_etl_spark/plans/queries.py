@@ -1737,45 +1737,18 @@ MINHASH_THRESHOLD = 0.2
 SIMHASH_HAMMING = 3
 
 
-#: Verified-pairs cache keyed on (Spark applicationId, sf_dir): the
-#: production shape is "persist the verified pair set ONCE, then every
-#: consumer (pair listing, clustering, survivor selection) reads the
-#: persisted table" — recomputing the full shingle→signature→verify
-#: pipeline per consumer doubles the most expensive stage of the dedup
-#: family.  Keyed on applicationId so a new session never sees a stale
-#: DataFrame; entries from stopped sessions are dropped lazily.
-_MINHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist(DISK_ONLY), NOT localCheckpoint: persist keeps the full
-    # lineage, so a block lost to executor preemption / dynamic
-    # allocation is transparently RECOMPUTED from the shingle pipeline
-    # instead of poisoning the cached entry for the rest of the session
-    # (localCheckpoint truncates lineage and its blocks are
-    # unrecoverable).  Disk-only because the verified pair set is read
-    # by several downstream consumers but far too cold to pin in
-    # executor memory at 100 TB.
-    from pyspark import StorageLevel
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    pairs = _MINHASH_PAIRS_CACHE.get(key)
-    if pairs is None:
-        # evict only entries from DEAD sessions — a session alternating
-        # between two sf_dirs must not thrash its own live entries
-        for k in [k for k in _MINHASH_PAIRS_CACHE if k[0] != app_id]:
-            del _MINHASH_PAIRS_CACHE[k]
-        (documents,) = _t(spark, sf_dir, "documents")
-        pairs = minhash_lsh_dedup(
-            documents,
-            num_hashes=MINHASH_NUM,
-            bands=MINHASH_BANDS,
-            shingle_k=MINHASH_SHINGLE_K,
-            threshold=MINHASH_THRESHOLD,
-        ).persist(StorageLevel.DISK_ONLY)
-        _MINHASH_PAIRS_CACHE[key] = pairs
-    return pairs
+    """The verified MinHash pair set every dedup consumer starts from,
+    built inside the caller's own plan (``minhash_lsh_dedup``
+    materializes its own multi-read legs)."""
+    (documents,) = _t(spark, sf_dir, "documents")
+    return minhash_lsh_dedup(
+        documents,
+        num_hashes=MINHASH_NUM,
+        bands=MINHASH_BANDS,
+        shingle_k=MINHASH_SHINGLE_K,
+        threshold=MINHASH_THRESHOLD,
+    )
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1861,9 +1834,8 @@ FROM comp GROUP BY cluster_id
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End of the dedup funnel: the corpus with every non-survivor
     dropped (min-id survives per cluster; operators/clusters.py
-    resolve_duplicates), summarized per source.  Reuses the same
-    session-cached verified pair set as the pair/cluster queries — the
-    persist-pairs-once production shape."""
+    resolve_duplicates), summarized per source.  Starts from the same
+    verified pair set as the pair/cluster queries."""
     from gtfs_realtime_etl_spark.operators.clusters import resolve_duplicates
 
     (documents,) = _t(spark, sf_dir, "documents")
@@ -2192,16 +2164,16 @@ GROUP BY source
 
 def q_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split contamination audit: verified near-duplicate pairs
-    (the MinHash+LSH pipeline, shared session cache) bucketed by the
-    train/val/test assignment of BOTH endpoints.  Any pair whose two
+    (the MinHash+LSH pipeline) bucketed by the train/val/test
+    assignment of BOTH endpoints.  Any pair whose two
     docs land in different splits is evaluation leakage — a near-copy
     of a test document sitting in the training corpus, the
     highest-stakes audit a pre-training data team runs before a model
     sees the split.
 
     Plan shape: the expensive stage (shingle→signature→banded
-    candidates→Jaccard verify) is the SAME persisted pair set every
-    other dedup consumer reads (``_minhash_verified_pairs``); the
+    candidates→Jaccard verify) is the same pair set every other dedup
+    consumer starts from (``_minhash_verified_pairs``); the
     split labels are pure projections on the hashed doc id (no join
     against an assignment table), so the audit itself is one small
     aggregation over the pair set — at 100 TB it costs one scan of the
@@ -2414,34 +2386,19 @@ IVF_NPROBE = 2
 IVF_DIM = 64
 
 
-#: Collected coarse-quantizer centroids, keyed (applicationId, sf_dir,
-#: dim).  The centroid build (posexplode x dim + two decimal groupBys +
-#: collect) costs ~3 s at sf0.1 and is byte-identical input to THREE
-#: registry queries (ann_ivf_topk, semantic_dedup, and the at-rest IVF
-#: writer) — recomputing it per consumer doubles the coarse-quantizer
-#: stage of the ANN family.  Unlike the minhash DataFrame cache this
-#: holds plain driver-side rows, so there is no executor-loss caveat.
-_CENTROID_CACHE: dict[tuple[str, str, int], list] = {}
-
-
 def _label_centroids_rows(spark: SparkSession, sf_dir: str, dim: int) -> list:
+    """Decimal-stabilized per-label centroids, collected in ``cell_id``
+    order: the coarse quantizer ``ann_ivf_topk`` and ``semantic_dedup``
+    both probe."""
     from gtfs_realtime_etl_spark.operators.similarity import (
         centroids_from_labels,
     )
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, dim)
-    rows = _CENTROID_CACHE.get(key)
-    if rows is None:
-        for k in [k for k in _CENTROID_CACHE if k[0] != app_id]:
-            del _CENTROID_CACHE[k]
-        (embeddings,) = _t(spark, sf_dir, "embeddings")
-        rows = sorted(
-            centroids_from_labels(embeddings, dim=dim).collect(),
-            key=lambda r: r["cell_id"],
-        )
-        _CENTROID_CACHE[key] = rows
-    return rows
+    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    return sorted(
+        centroids_from_labels(embeddings, dim=dim).collect(),
+        key=lambda r: r["cell_id"],
+    )
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

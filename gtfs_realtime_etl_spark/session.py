@@ -9,6 +9,8 @@ the one you would also set on a 1000-executor cluster:
 - ``spark.sql.shuffle.partitions`` sized to the core count; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
 - Arrow enabled for any pandas_udf / toPandas edge (vectorized transfer).
+- Driver heap sized to the box: half of physical memory, capped at
+  48g (``SPARK_DRIVER_MEMORY`` overrides).
 - Session timezone pinned per agency (the reference stores zoned
   timestamps; cf. /root/reference/etl/runtime/handler.py:104-114).
 """
@@ -16,10 +18,12 @@ the one you would also set on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_TZ = "America/Toronto"
+_SPARK_SIZE = re.compile(r"\d+[kmgtp]?b?", re.IGNORECASE)
 
 
 def spark_graft_cpus() -> int:
@@ -34,6 +38,23 @@ def spark_graft_cpus() -> int:
             f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
         )
     return int(raw)
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` from ``SPARK_DRIVER_MEMORY``: a Spark
+    size string (digits, an optional ``k|m|g|t|p`` suffix, optionally
+    followed by ``b``), or a ValueError naming the variable.  Unset, it
+    is half of physical memory, capped at 48g."""
+    raw = os.environ.get("SPARK_DRIVER_MEMORY")
+    if raw is None:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        return f"{min(phys // 2 // 2**20, 48 * 1024)}m"
+    if not _SPARK_SIZE.fullmatch(raw):
+        raise ValueError(
+            f"SPARK_DRIVER_MEMORY must be a Spark size such as 8192m or "
+            f"16g, got {raw!r}"
+        )
+    return raw
 
 
 def get_spark(
@@ -74,7 +95,7 @@ def get_spark(
         # array-heavy ops (shingle sets, signatures) churn real memory at
         # 32-way parallelism, and an undersized heap turns into GC storms
         # with 10x run-to-run variance.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Even with the UI off, AppStatusListener/SQLAppStatusListener
         # retain per-execution state (full physical-plan description
@@ -89,7 +110,7 @@ def get_spark(
         .config("spark.ui.retainedTasks", "10000")
         # The ContextCleaner reclaims shuffle files, broadcast blocks,
         # and accumulators only when the DRIVER GC collects their
-        # references — and a 48g heap almost never full-GCs on its own,
+        # references — and a large heap almost never full-GCs on its own,
         # so a long session (the 170-query x 4-run bench is ~850 query
         # executions in one JVM) accumulates state until every query
         # slows several-fold (measured: 0.9 s queries at 15 s, 7 s at

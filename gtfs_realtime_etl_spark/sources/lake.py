@@ -215,11 +215,3 @@ def write_bucketed_table(
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(name)
 
-
-def register_locations_view(
-    spark: SparkSession, root: str, name: str = "locations"
-) -> DataFrame:
-    """``CREATE VIEW locations AS SELECT * FROM read_parquet(…)`` parity."""
-    df = read_locations(spark, root)
-    df.createOrReplaceTempView(name)
-    return df

@@ -313,28 +313,6 @@ def test_embedding_quantization_roundtrip_bounds(spark, vectors):
             assert abs(x - y) <= half_step + 1e-12, (i, x, y)
 
 
-def test_minhash_pair_cache_recomputes_after_block_loss(spark):
-    """The cached verified-pair set must survive losing every cached
-    block (the worst-case executor-loss event on a preemptible
-    cluster).  persist(DISK_ONLY) keeps lineage, so a post-loss read
-    recomputes instead of failing — the exact failure mode the old
-    localCheckpoint cache had (truncated lineage, unrecoverable
-    blocks)."""
-    from pyspark import StorageLevel
-
-    from gtfs_realtime_etl_spark.plans.queries import _minhash_verified_pairs
-
-    pairs = _minhash_verified_pairs(spark, "/root/testdata/sf0.001")
-    baseline = sorted((r.id_a, r.id_b) for r in pairs.collect())
-    assert baseline
-    # Simulate total block loss: unpersist drops every cached partition.
-    pairs.unpersist(blocking=True)
-    again = sorted((r.id_a, r.id_b) for r in pairs.collect())
-    assert again == baseline
-    # Restore the persisted invariant for any later consumer.
-    pairs.persist(StorageLevel.DISK_ONLY)
-
-
 def test_pq_full_codebook_reduces_to_exact_l2(spark):
     """PQ identity property: when the codebook contains EVERY corpus
     vector's subvectors, each vector encodes to itself (all subspace

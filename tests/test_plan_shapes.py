@@ -48,10 +48,8 @@ def test_minhash_verify_joins_are_broadcast(spark):
     """The Jaccard verify must stay a broadcast join (no sort-merge:
     the heavy hash-set arrays would be shuffled and duplicated).
 
-    Inspects the UNDERLYING operator pipeline, not the registry entry:
-    `q_minhash_lsh_pairs` serves from the session-cached checkpointed
-    pair set (plans/queries.py::_minhash_verified_pairs), whose plan is
-    a checkpoint scan by design."""
+    Inspects the operator every MinHash registry entry builds its pair
+    set with (plans/queries.py::_minhash_verified_pairs)."""
     import contextlib
     import io
 
