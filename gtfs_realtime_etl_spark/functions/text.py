@@ -88,25 +88,6 @@ def whitespace_ratio(text: Column) -> Column:
     return _ratio(F.length(text) - F.length(stripped), F.length(text))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    """Number of tokens that are stopwords of ``lang``."""
-    words = STOPWORDS[lang]
-    return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
-
-
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID: the language with the most stopword hits
-    (ties broken by language-code order; 'und' when no hits at all)."""
-    hits = [(lang, stopword_hits(text, lang)) for lang in sorted(STOPWORDS)]
-    best_lang, best_hits = F.lit("und"), F.lit(0)
-    # Strict > keeps the earliest language on ties (deterministic).
-    for lang, h in hits:
-        take = h > best_hits
-        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
-        best_hits = F.when(take, h).otherwise(best_hits)
-    return best_lang
-
-
 #: PII-shaped patterns, deliberately written in the regex subset Java
 #: (Spark) and RE2 (DuckDB) interpret identically: character classes,
 #: bounded repetition, \b word boundaries — no backrefs, no lookaround.
@@ -158,16 +139,20 @@ def bigrams(toks: Column) -> Column:
 
 
 def lang_id_kernel():
-    """pandas_udf: text → predicted language code (Arrow hot path).
+    """pandas_udf: text → predicted language code (Arrow hot path of
+    the ``lang_id`` registry entry).
 
-    Bit-identical to :func:`lang_id`: ASCII-only case folding, split on
-    ``\\s+`` with ASCII semantics (``re.ASCII`` makes Python's ``\\s``
-    the same [ \\t\\n\\x0B\\f\\r] class Java and RE2 use), empty tokens
-    dropped, per-language stopword-hit counts, argmax with earliest
-    language (sorted order) winning ties, 'und' on zero hits.  The
-    Column version costs four interpreted ``filter`` passes over the
-    token array per row (the round-2 `lang_id` regression); this does
-    one Python set-membership pass per token."""
+    Matches the entry's DuckDB oracle
+    (``plans/queries.py::Q_LANG_ID_SQL``): ASCII-only case folding,
+    split on ``\\s+`` with ASCII semantics, empty tokens dropped,
+    per-language stopword-hit counts, argmax with earliest language
+    (sorted order) winning ties, 'und' on zero hits.  Two inputs differ
+    from the oracle, and the corpus holds neither: NULL text maps to
+    'und' here and to NULL in the oracle, and ``re.ASCII``'s ``\\s``
+    (Java's [ \\t\\n\\x0B\\f\\r]) splits on \\x0B where RE2's does not.
+    A Column form costs four interpreted ``filter`` passes over the
+    token array per row; this does one Python set-membership pass per
+    token."""
     ws = re.compile(r"\s+", re.ASCII)
     langs = sorted(STOPWORDS)
     sets = [frozenset(STOPWORDS[lang]) for lang in langs]
@@ -178,8 +163,6 @@ def lang_id_kernel():
         out = []
         for t in texts:
             if t is None:
-                # Column twin: NULL hit counts fail every `>` test and
-                # fall through to the 'und' default.
                 out.append("und")
                 continue
             toks = [x for x in ws.split(t.strip(" ").translate(fold)) if x]

@@ -8,7 +8,6 @@
   n-gram-Jaccard dedup; connected components + survivor resolution.
 - ``similarity``: brute-force, LSH-bucketed, and IVF cosine ANN.
 - ``skew``: salted join / salted set-agg for hot keys.
-- ``text``: document quality / language-ID / token statistics.
 - ``multimodal``: binary-column decode/resize/frame plumbing (stub codecs).
 """
 

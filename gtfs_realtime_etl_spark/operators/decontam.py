@@ -1,4 +1,4 @@
-"""Benchmark decontamination: drop training docs that contain an
+"""Benchmark decontamination: flag training docs that contain an
 evaluation/benchmark document.
 
 The standard large-corpus curation step (run alongside dedup in every
@@ -104,21 +104,3 @@ def contamination_pairs(
         .select("train_id", "test_id", "containment")
     )
 
-
-def decontaminate(
-    train: DataFrame,
-    test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 8,
-    containment: float = 0.5,
-    max_doc_freq: int = DEFAULT_MAX_DOC_FREQ,
-) -> DataFrame:
-    """The training corpus with every contaminated document removed
-    (anti-join against the flagged train ids); clean docs pass through
-    untouched."""
-    pairs = contamination_pairs(
-        train, test, text_col, id_col, shingle_k, containment, max_doc_freq
-    )
-    flagged = pairs.select(F.col("train_id").alias(id_col)).distinct()
-    return train.join(flagged, id_col, "left_anti")

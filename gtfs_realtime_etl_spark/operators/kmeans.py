@@ -4,8 +4,7 @@
 table from a pre-existing label column; this operator LEARNS the cells
 when no label exists — the production path for an unlabeled corpus.
 Output shape is identical (``cell_id int, centroid array<double>``), so
-``assign_cells`` / ``ivf_topk`` / ``write_ivf_index`` consume it
-unchanged.
+``assign_cells`` / ``ivf_topk`` consume it unchanged.
 
 Determinism contract (the whole point — an external engine can replay
 the fit round for round):

@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.vector import dot, l2_norm
-from gtfs_realtime_etl_spark.operators.similarity import (
-    _assign_cells_rows,
-    assign_cells,
-)
+from gtfs_realtime_etl_spark.operators.similarity import _assign_cells_rows
 
 
 def _cell_pairs(
@@ -96,40 +93,6 @@ def _drops_from_assigned(
         .select("cell_id", F.col("b_id").alias(id_col))
         .distinct()
     )
-
-
-def semdedup_drops(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pair_partitions: int = 32,
-) -> DataFrame:
-    """(cell_id, vec_id) rows for every vector dropped by the min-id
-    rule: it has at least one lower-id cell-mate with rounded cosine
-    >= ``threshold``."""
-    assigned = assign_cells(embeddings, centroids, vec_col=vec_col)
-    return _drops_from_assigned(
-        assigned, threshold, id_col, vec_col, pair_partitions
-    )
-
-
-def semdedup(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pair_partitions: int = 32,
-) -> DataFrame:
-    """Survivors: the input minus ``semdedup_drops`` (left anti join on
-    the id — drops are tiny relative to the corpus, so Catalyst
-    broadcasts them)."""
-    drops = semdedup_drops(
-        embeddings, centroids, threshold, id_col, vec_col, pair_partitions
-    ).select(id_col)
-    return embeddings.join(drops, id_col, "left_anti")
 
 
 def semdedup_profile(

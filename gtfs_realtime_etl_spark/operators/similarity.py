@@ -16,10 +16,7 @@ Three paths, mirroring what a 100 TB ANN pipeline needs:
   come from :func:`centroids_from_labels` (decimal-stabilized per-label
   means — deterministic across engines and cluster layouts; swap in any
   k-means table at production scale).  Cell assignment is a pure
-  projection; the in-plan probe is one broadcast join on cell_id, and
-  the at-rest form (:func:`write_ivf_index` / :func:`ivf_index_topk`)
-  turns the probe into partition pruning — only the nprobe cells' files
-  are ever listed or read.
+  projection; the probe is one broadcast join on cell_id.
 
 Hyperplanes/centroids are deterministic so results are reproducible
 across runs and cluster sizes (and oracle-checkable).
@@ -366,93 +363,6 @@ def dequantize(
     )
 
 
-def write_ivf_index(
-    embeddings: DataFrame,
-    centroids: "DataFrame | list",
-    path: str,
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Persist the corpus as an at-rest IVF index: cell assignment (a
-    pure projection, see :func:`assign_cells`) then
-    ``partitionBy("cell_id")`` parquet — the inverted lists ARE the
-    hive partitions.  A probe against this layout is partition pruning
-    (the file index lists only the probed cells' files), not a join or
-    even a shuffle; see :func:`ivf_index_topk`."""
-    assign_cells(embeddings, centroids, vec_col).write.mode(mode).partitionBy(
-        "cell_id"
-    ).parquet(path)
-
-
-def select_probe_cells(
-    query: DataFrame,
-    centroids: "DataFrame | list",
-    nprobe: int,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-) -> list[tuple]:
-    """Driver-side probe-cell selection for the at-rest index path:
-    ``(query_id, cell_id, qvec)`` triples for each query's ``nprobe``
-    nearest centroids.  Same left-to-right squared-L2 fold and the same
-    (dist, cell_id) tie-break as :func:`_l2sq` + :func:`ivf_topk`'s
-    in-plan window, so both probe paths pick identical cells."""
-    cents = _centroid_rows(centroids)
-
-    def l2sq(a, b) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) * (x - y)
-        return acc
-
-    probes: list[tuple] = []
-    for r in query.collect():
-        qv = [float(x) for x in r[query_vec_col]]
-        ranked = sorted((l2sq(qv, c["centroid"]), c["cell_id"]) for c in cents)
-        probes.extend((r[query_id_col], cell, qv) for _, cell in ranked[:nprobe])
-    return probes
-
-
-def ivf_index_topk(
-    spark,
-    index_path: str,
-    query: DataFrame,
-    centroids: "DataFrame | list",
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-) -> DataFrame:
-    """IVF top-k against the at-rest index written by
-    :func:`write_ivf_index` — the 100 TB probe path.
-
-    The query side is tiny by definition, so probe-cell selection runs
-    driver-side (same seeded left-to-right fold as :func:`_l2sq`, same
-    (dist, cell_id) tie-break — bit-identical to :func:`ivf_topk`'s
-    in-plan selection) and the probed cell ids become LITERAL partition
-    predicates: ``cell_id IN (...)`` prunes the scan to the nprobe
-    cells' files at plan time.  Scanned bytes ≈ nprobe / n_cells of the
-    index, with zero shuffle before the salted top-k rank.
-    """
-    probes = select_probe_cells(query, centroids, nprobe, query_id_col, query_vec_col)
-    qcells = spark.createDataFrame(
-        probes, schema=f"{query_id_col} long, cell_id long, _qvec array<double>"
-    )
-    probed_cells = sorted({cell for _, cell, _ in probes})
-    scan = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin(probed_cells)
-    )
-    emb = scan.withColumn("_vec", F.col(vec_col).cast("array<double>"))
-    passthrough = [c for c in scan.columns if c not in (vec_col, "cell_id")]
-    scored = emb.join(F.broadcast(qcells), "cell_id").select(
-        query_id_col,
-        *passthrough,
-        cosine_similarity(F.col("_vec"), F.col("_qvec")).alias("cosine"),
-    )
-    return _two_phase_topk(scored, k, query_id_col, id_col)
-
-
 def lsh_bucketed_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -557,41 +467,6 @@ def pq_codebook_from_ids(
     ]
 
 
-def _pq_code(vec: Column, subbook: "list[list[float]]", m: int, d_sub: int) -> Column:
-    """Nearest-codeword index for subspace ``m``: lexicographic struct
-    min over (l2sq, codeword_index) — ties break to the lowest index,
-    the same contract as ``_assign_cells_rows``."""
-    sub = F.slice(vec, m * d_sub + 1, d_sub)
-    entries = [
-        F.struct(
-            _l2sq(sub, lit_double_array(cw)).alias("dist"),
-            F.lit(c).alias("c"),
-        )
-        for c, cw in enumerate(subbook)
-    ]
-    return F.array_min(F.array(*entries))["c"]
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebook: "list[list[list[float]]]",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Append ``code_col`` (``array<int>``, one codeword index per
-    subspace) — a PURE PROJECTION like ``assign_cells``: the codebook
-    rides the plan as literals, so encoding is a narrow map over the
-    corpus scan with no shuffle and no Python.  This is the write-side
-    op: at rest, store the codes (M small ints) next to (or instead of)
-    the raw vectors."""
-    d_sub = len(codebook[0][0])
-    vec = F.col(vec_col).cast("array<double>")
-    codes = F.array(
-        *[_pq_code(vec, subbook, m, d_sub) for m, subbook in enumerate(codebook)]
-    )
-    return embeddings.withColumn(code_col, codes)
-
-
 def pq_adc_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -618,9 +493,10 @@ def pq_adc_topk(
     distances are M·K fused array ops per Arrow batch.  A Column form
     plans the code assignment as ~M·K·d_sub interpreted expression
     nodes that Catalyst cannot codegen (measured 42× slower than DuckDB
-    on the same shape — round-7 verdict); the kernel is the same
-    medicine as ``operators/linalg.gram_matrix``.  The ``ann_pq_topk``
-    oracle pins it bit-for-bit (``tests/test_pq_kernel_parity.py``).
+    on the same shape).  The ``ann_pq_topk`` oracle pins the kernel
+    bit-for-bit (``tests/test_pq_kernel_parity.py``), and
+    ``tests/test_dedup_similarity.py`` checks its ADC distances against
+    exact L2 under a full codebook.
 
     Fold-order contract (oracle-matchable): per-subspace l2sq
     accumulates left-to-right seeded 0.0 (the kernel accumulates

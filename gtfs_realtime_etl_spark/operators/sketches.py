@@ -100,17 +100,16 @@ def mg_summary(
     tokens: DataFrame,
     token_col: str = "token",
     capacity: int = DEFAULT_CAPACITY,
-) -> tuple[DataFrame, DataFrame]:
-    """Merged global sketch: returns ``(estimates, scalars)`` where
-    ``estimates`` is (token, est) summed across partitions and
-    ``scalars`` is a 1-row (dec_total,) frame — the global undercount
-    bound D.  ``exact - D <= est <= exact`` for every token; any token
-    with ``exact > N/(capacity+1)`` is guaranteed present."""
-    partials = mg_partials(tokens, token_col, capacity)
-    est = (
-        partials.where(F.col("token").isNotNull())
+) -> DataFrame:
+    """Merged global sketch as ONE grouped ``(token, est, d)`` frame:
+    each surviving token carries its estimate summed across partitions
+    (``d`` = 0), and the single NULL-token row carries ``d``, the global
+    decrement mass D.  ``exact - D <= est <= exact`` for every token;
+    any token with ``exact > N/(capacity+1)`` is guaranteed present.
+    One aggregate yields both, so a consumer that reads the estimates
+    and D from it scans ``tokens`` once."""
+    return (
+        mg_partials(tokens, token_col, capacity)
         .groupBy("token")
-        .agg(F.sum("est").alias("est"))
+        .agg(F.sum("est").alias("est"), F.sum("dec").alias("d"))
     )
-    scalars = partials.agg(F.sum("dec").alias("dec_total"))
-    return est, scalars

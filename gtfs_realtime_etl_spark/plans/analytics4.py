@@ -7,9 +7,7 @@ training pipeline runs before/while assembling data:
 - ``embedding_covariance`` — the (upper-triangle) covariance matrix of
   the embedding distribution: the input to whitening / PCA / drift
   monitoring.  Decimal-accumulated so the result is bit-identical
-  across engines and partitionings; the float fast path for 100 TB
-  lives in ``operators/linalg.py::gram_matrix`` (mapInPandas partial
-  Gram per partition — one narrow pass + one tiny reduce).
+  across engines and partitionings.
 - ``embedding_standardize`` — per-dimension z-scoring (diagonal
   whitening) of the leading dimensions, the feature-scaling transform:
   one tiny per-dim stats aggregate broadcast back over a narrow
@@ -69,9 +67,8 @@ _AZ_LOWER = "abcdefghijklmnopqrstuvwxyz"
 # Scale shape: the explode multiplies rows ×2,080 but each exploded
 # row is 3 numbers wide, and partial agg collapses them within the
 # task — network traffic is tasks × 2,080 partials, not rows × 2,080.
-# The non-exact float alternative (one numpy X^T·X per partition) is
-# operators/linalg.py::gram_matrix; parity between the two is pinned
-# by tests/test_linalg.py.
+# tests/test_linalg.py checks the triangle against a numpy population
+# covariance.
 # ---------------------------------------------------------------------------
 
 COV_ROUND = 8
@@ -571,7 +568,7 @@ Q_TOKEN_PMI_SQL = _token_pmi_sql()
 # (cos desc, vec_id asc tie-break) — no window over the pair set, and
 # map-side partial agg collapses each task to ≤ HN_ANCHORS rows.  At
 # production scale the corpus scan is replaced by ANN candidates
-# (ivf_index_topk / lsh_bucketed_topk) feeding the same argmax — the
+# (ivf_topk / lsh_bucketed_topk) feeding the same argmax — the
 # mining batch loop is embarrassingly parallel across batches.
 # Cosine is rounded to 6 dp BEFORE the argmax in both engines so the
 # tie-break compares identical values.
@@ -662,8 +659,7 @@ JOIN (SELECT * FROM rpos WHERE rn = 1) p ON n.aid = p.aid
 # rounds and hash-matches the final vector bit-for-bit.
 #
 # Scale shape: the 100 TB part is the covariance build (one corpus
-# scan; decimal triangle here, operators/linalg.py mapInPandas Gram in
-# production).  The iteration itself runs on the d×d matrix — 64²
+# scan into the decimal triangle).  The iteration itself runs on the d×d matrix — 64²
 # rows — as tiny joins/aggregates; per round one scalar norm rides a
 # 1-row broadcast crossJoin (allowlisted).  Output: the unit vector
 # (dim, v) plus the Rayleigh-estimate eigenvalue.

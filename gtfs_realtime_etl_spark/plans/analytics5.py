@@ -36,7 +36,7 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_staged,
 )
 from gtfs_realtime_etl_spark.functions.text import tokens
-from gtfs_realtime_etl_spark.operators.sketches import mg_partials
+from gtfs_realtime_etl_spark.operators.sketches import mg_summary
 from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
@@ -73,13 +73,11 @@ HH_TOPK = 40
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = _t(spark, sf_dir, "documents")
     toks = documents.select(F.explode(tokens(F.col("text"))).alias("token"))
-    # One groupBy consumes the partials for BOTH outputs (the per-token
-    # estimates and the global decrement scalar D, which lands in the
-    # NULL-token group) — the shared aggregate exchange is reused at
-    # runtime, so the sketch side scans the corpus exactly once.
-    grouped = mg_partials(toks, "token", HH_CAPACITY).groupBy("token").agg(
-        F.sum("est").alias("est"), F.sum("dec").alias("d")
-    )
+    # One groupBy yields BOTH sketch outputs (the per-token estimates
+    # and the global decrement scalar D, which lands in the NULL-token
+    # group) — the shared aggregate exchange is reused at runtime, so
+    # the sketch side scans the corpus exactly once.
+    grouped = mg_summary(toks, "token", HH_CAPACITY)
     est = grouped.where(F.col("token").isNotNull()).select("token", "est")
     # The exact twin also scans the corpus once: N rides off the
     # (already vocabulary-sized) count frame, not a second corpus pass.

@@ -35,8 +35,8 @@ re-scanned per row.  The Q21 semi/anti pair is the one shape that
 keeps two fact-sized inputs: both sides are pre-projected to
 (orderkey, suppkey) before the shuffle so the exchange carries two
 ints per row, and the join keys are the natural orderkey partitioning
-— co-bucketing lineitem by orderkey (operators/layout.py
-``write_bucketed_table``) removes both exchanges entirely at rest.
+— co-bucketing lineitem by orderkey at rest (``bucketBy``) would
+remove both exchanges.
 
 Reference scope: the reference engine (smohiudd/gtfs-realtime-etl)
 delegates ad-hoc analytics of this shape to its notebook SQL layer

@@ -820,11 +820,9 @@ GROUP BY source
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = _t(spark, sf_dir, "documents")
-    # Arrow kernel hot path: the Column form (functions.text.lang_id)
-    # needs four interpreted `filter` passes over the token array per
-    # row even with the tokenize-once hoist — the kernel does one
-    # set-membership pass per token.  Bit-identity with the Column twin
-    # is pinned by tests/test_functions.py.
+    # Arrow kernel hot path: one set-membership pass per token.  Its
+    # per-document agreement with the CASE of Q_LANG_ID_SQL is pinned
+    # by tests/test_functions.py.
     return (
         documents.select(
             lang_id_kernel()(F.col("text")).alias("lang_pred"),

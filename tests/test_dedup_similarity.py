@@ -198,74 +198,10 @@ def test_lsh_recall_vs_brute_force(vectors):
     assert recall >= 0.7, f"LSH recall too low: {recall}"
 
 
-def test_ivf_at_rest_index_prunes_partitions(spark, vectors, tmp_path):
-    """The at-rest IVF layout: write_ivf_index partitions the corpus by
-    cell_id, and ivf_index_topk's probe must (a) prune the scan to
-    exactly the nprobe probed cells' files — the scan's runtime
-    numFiles metric equals the files on disk under those cells'
-    directories — and (b) return the identical rows to the in-plan
-    ivf_topk on the same corpus/centroids/query."""
-    import os
-
-    from gtfs_realtime_etl_spark.operators.similarity import (
-        ivf_index_topk,
-        select_probe_cells,
-        write_ivf_index,
-    )
-
-    cents = centroids_from_labels(vectors, label_col="label", dim=64)
-    others = vectors.filter("vec_id != 0")
-    index = str(tmp_path / "ivf_index")
-    write_ivf_index(others, cents, index)
-    cell_dirs = [d for d in os.listdir(index) if d.startswith("cell_id=")]
-    assert len(cell_dirs) == 3
-
-    q = vectors.filter("vec_id = 0").select(
-        F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    nprobe = 2
-    # AQE wraps executed stages (the scan's runtime metrics end up
-    # buried inside QueryStageExec nodes); pruning itself is plan-time
-    # and AQE-independent, so turn AQE off just for the metric read.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        res = ivf_index_topk(spark, index, q, cents, k=10, nprobe=nprobe)
-        explained = res._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in explained
-
-        probed = {cell for _, cell, _ in select_probe_cells(q, cents, nprobe)}
-        assert len(probed) == nprobe
-        n_files_probed = sum(
-            f.endswith(".parquet")
-            for cell in probed
-            for f in os.listdir(os.path.join(index, f"cell_id={cell}"))
-        )
-        out = res.toPandas()
-        leaves = res._jdf.queryExecution().executedPlan().collectLeaves()
-        n_files_read = sum(
-            leaves.apply(i).metrics().apply("numFiles").value()
-            for i in range(leaves.length())
-            # the broadcast query-cells leaf (ExistingRDD): no file metric
-            if leaves.apply(i).metrics().contains("numFiles")
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert n_files_read == n_files_probed  # only the probed cells' files
-
-    expected = ivf_topk(others, q, cents, k=10, nprobe=nprobe).toPandas()
-    got = out.sort_values("rank").reset_index(drop=True)
-    exp = expected[got.columns].sort_values("rank").reset_index(drop=True)
-    assert got["vec_id"].tolist() == exp["vec_id"].tolist()
-    assert (got["cosine"] - exp["cosine"]).abs().max() < 1e-12
-
-
 def test_decontamination_flags_embedded_benchmark(spark):
     """A train doc embedding a benchmark doc verbatim has containment
     1.0 and is flagged + removed; unrelated docs pass through."""
-    from gtfs_realtime_etl_spark.operators.decontam import (
-        contamination_pairs,
-        decontaminate,
-    )
+    from gtfs_realtime_etl_spark.operators.decontam import contamination_pairs
 
     bench = "the quick brown fox jumps over the lazy dog near the river bank"
     test = spark.createDataFrame([(100, bench)], "doc_id long, text string")
@@ -281,9 +217,6 @@ def test_decontamination_flags_embedded_benchmark(spark):
     got = {(r.train_id, r.test_id): r.containment for r in pairs.collect()}
     assert set(got) == {(1, 100)}
     assert got[(1, 100)] == 1.0  # every 8-gram of the benchmark is present
-
-    clean = decontaminate(train, test, shingle_k=8, containment=0.5)
-    assert sorted(r.doc_id for r in clean.collect()) == [2, 3]
 
 
 def test_embedding_quantization_roundtrip_bounds(spark, vectors):
@@ -318,11 +251,11 @@ def test_pq_full_codebook_reduces_to_exact_l2(spark):
     vector's subvectors, each vector encodes to itself (all subspace
     distances 0, ties impossible for distinct subvectors) and the ADC
     distance IS the exact squared L2 to the query — so the PQ ranking
-    must equal the exact ranking bit-for-bit."""
+    must equal the exact ranking bit-for-bit.  k covers the whole
+    corpus, so every vector's ADC distance is checked."""
     from gtfs_realtime_etl_spark.operators.similarity import (
         pq_adc_topk,
         pq_codebook_from_ids,
-        pq_encode,
     )
 
     rng = np.random.default_rng(7)
@@ -335,19 +268,15 @@ def test_pq_full_codebook_reduces_to_exact_l2(spark):
     corpus = df.filter("vec_id != 0")
     codebook = pq_codebook_from_ids(corpus, list(range(1, 13)), n_subspaces=4)
 
-    # encode: every vector's code must point at its own subvectors
-    codes = {r["vec_id"]: r["pq_code"] for r in pq_encode(corpus, codebook).collect()}
-    for vid, code in codes.items():
-        assert code == [vid - 1] * 4, (vid, code)
-
     q = df.filter("vec_id = 0").select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
     )
-    got = pq_adc_topk(corpus, q, codebook, k=5).toPandas()
+    got = pq_adc_topk(corpus, q, codebook, k=12).toPandas()
     qv = np.array(rows[0][2])
     exact = sorted(
         ((float(((np.array(v) - qv) ** 2).sum()), i) for i, _, v in rows[1:]),
-    )[:5]
+    )
+    assert len(got) == len(exact) == 12
     assert list(got["vec_id"]) == [i for _, i in exact]
     assert np.allclose(sorted(got["adc_dist"]), [d for d, _ in exact], atol=1e-9)
 

@@ -18,7 +18,7 @@ from gtfs_realtime_etl_spark.functions import (
     token_count,
 )
 from gtfs_realtime_etl_spark.functions.stats import norm_cdf_sql
-from gtfs_realtime_etl_spark.functions.text import lang_id
+from gtfs_realtime_etl_spark.functions.text import lang_id_kernel
 from gtfs_realtime_etl_spark.functions.time import NOT_PAST_MIDNIGHT
 
 # Known geohash vectors (classic public test points).
@@ -137,7 +137,9 @@ def test_lang_id_real_sentences(spark):
         ("zzz qqq xxx", "und"),
     ]
     df = spark.createDataFrame(cases, "text string, expected string")
-    rows = df.select(lang_id(F.col("text")).alias("got"), "expected").collect()
+    rows = df.select(
+        lang_id_kernel()(F.col("text")).alias("got"), "expected"
+    ).collect()
     for r in rows:
         assert r.got == r.expected
 
@@ -149,16 +151,27 @@ def test_token_count(spark):
 
 
 def test_lang_id_kernel_matches_column(spark):
-    """The Arrow lang-ID kernel (hot path) is bit-identical to the
-    Column form on adversarial inputs: ties, zero hits, mixed case,
-    tabs/newlines, empties, nulls, non-ASCII."""
-    from gtfs_realtime_etl_spark.functions.text import lang_id_kernel
+    """The Arrow lang-ID kernel (the ``lang_id`` entry's hot path)
+    agrees with the oracle's per-document DuckDB CASE on adversarial
+    inputs: ties, zero hits, mixed case, tabs/newlines, empties,
+    non-ASCII.  NULL text maps to 'und' in the kernel and to NULL in
+    the oracle; the corpus has no NULL text."""
+    import duckdb
+
+    from gtfs_realtime_etl_spark.plans.queries import (
+        _ARGMAX_CASES,
+        _GREATEST,
+        _LANGS,
+        _lang_hits_sql,
+    )
 
     texts = [
         "THE cat AND the dog IS it",
         "le chat est sur la table",
         "el perro y el gato",          # es words
-        "de la en es",                 # fr/es tie → earliest sorted lang
+        "de la en es",                 # es beats fr by one hit
+        "de la",                       # es/fr tie → earliest sorted lang
+        "und the",                     # de/en tie → earliest sorted lang
         "zzz qqq",                     # und
         "  \t the \n and\tof  ",      # odd whitespace
         "",
@@ -166,15 +179,30 @@ def test_lang_id_kernel_matches_column(spark):
         "das ist nicht von zu der die und ein mit",
         "café déjà vu the the",       # non-ASCII chars present
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    from gtfs_realtime_etl_spark.functions.text import lang_id
-
-    rows = df.select(
-        lang_id(F.col("text")).alias("col_form"),
-        lang_id_kernel()(F.col("text")).alias("kernel"),
-    ).collect()
-    for r in rows:
-        assert r.col_form == r.kernel
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: r.lang
+        for r in df.select(
+            "doc_id", lang_id_kernel()(F.col("text")).alias("lang")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    hits = ", ".join(f"{_lang_hits_sql(lang)} AS h_{lang}" for lang in _LANGS)
+    want = dict(
+        con.execute(
+            f"SELECT doc_id, CASE WHEN {_GREATEST} = 0 THEN 'und' "
+            f"{_ARGMAX_CASES} END FROM (SELECT doc_id, {hits} FROM documents)"
+        ).fetchall()
+    )
+    null_id = texts.index(None)
+    assert got.pop(null_id) == "und"
+    assert want.pop(null_id) is None
+    assert got == want
+    assert got[texts.index("de la")] == "es"
+    assert got[texts.index("und the")] == "de"
 
 
 def test_doc_fingerprint_kernel_matches_oracle(spark):

@@ -1,7 +1,11 @@
-"""Layering guard: the engine's lower layers (functions, operators,
-sources, streaming) must not import the query registry layer (plans).
-Plans compose operators; an import the other way round ties a reusable
-operator or stream to one registry bank."""
+"""Layering guards, both AST scans of the source.
+
+- The engine's lower layers (functions, operators, sources, streaming)
+  must not import the query registry layer (plans).  Plans compose
+  operators; an import the other way round ties a reusable operator or
+  stream to one registry bank.
+- Every def in functions/ and operators/ must have a caller outside
+  tests/: the library keeps one form per capability."""
 
 from __future__ import annotations
 
@@ -46,5 +50,55 @@ def test_lower_layers_do_not_import_plans(layer):
         for path in modules
         for name in _imported_modules(path)
         if name == PLANS or name.startswith(PLANS + ".")
+    ]
+    assert not offenders, offenders
+
+
+REPO_DIR = PKG_DIR.parent
+CHECKED_LAYERS = ("functions", "operators")
+
+
+def _references(tree: ast.AST):
+    """Every name ``tree`` refers to: ``Name`` ids, ``Attribute`` attrs
+    and import aliases. Strings, docstrings and comments are not
+    references."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield from node.name.split(".")
+
+
+def test_functions_and_operators_have_non_test_callers():
+    """One form per capability: every top-level def and class in
+    ``functions/`` and ``operators/`` is used inside its own module or
+    referenced from a module outside ``tests/`` (a package ``__init__``
+    re-export counts). A def only tests call is a second form of
+    something the engine does another way; delete it or route the
+    engine through it."""
+    sources = {
+        path: ast.parse(path.read_text(), filename=str(path))
+        for path in sorted(REPO_DIR.rglob("*.py"))
+        if "tests" not in path.relative_to(REPO_DIR).parts
+    }
+    checked = [
+        path
+        for layer in CHECKED_LAYERS
+        for path in sorted((PKG_DIR / layer).glob("*.py"))
+        if path.name != "__init__.py"
+    ]
+    assert checked
+    # A reference from the def's own module or from any other non-test
+    # module counts, so one name set over every non-test source serves
+    # all checked modules.
+    referenced = {name for tree in sources.values() for name in _references(tree)}
+    offenders = [
+        f"{path.relative_to(PKG_DIR)}::{node.name}"
+        for path in checked
+        for node in sources[path].body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and node.name not in referenced
     ]
     assert not offenders, offenders

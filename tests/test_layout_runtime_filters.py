@@ -1,7 +1,5 @@
-"""At-rest layout + runtime-filter scale levers, verified physically:
+"""Runtime-filter scale levers, verified physically:
 
-- z-order write: parquet footer min/max stats prune most files for a
-  2-D box predicate (vs ~no pruning under a layout sorted on one key);
 - dynamic partition pruning: a join against a filtered dim prunes the
   hive-partitioned lake's partitions at runtime;
 - runtime Bloom-filter semi-join reduction: Spark injects a
@@ -13,67 +11,9 @@ from __future__ import annotations
 
 import contextlib
 import io
-import random
 import re
 
-import pytest
 from pyspark.sql import functions as F
-
-from gtfs_realtime_etl_spark.operators.layout import (
-    candidate_files,
-    write_zordered,
-)
-
-
-def _points(spark, n=40_000, seed=3):
-    rng = random.Random(seed)
-    rows = [
-        (i, rng.randrange(0, 1_000_000), rng.randrange(0, 1_000_000))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, ["id", "x", "y"])
-
-
-def test_zorder_prunes_2d_box(spark, tmp_path):
-    df = _points(spark)
-    zpath = str(tmp_path / "zordered")
-    lpath = str(tmp_path / "linear")
-    # 64 files and a 25% x 25% box: the x-sorted baseline must keep
-    # every file whose x-range intersects the box (>= 16 of 64, since
-    # x is uniform), while z-order bounds BOTH axes (box covers 6.25%
-    # of the plane).  At 16 files the two layouts' candidate sets were
-    # both 2-4 files and range-sampler boundary noise could flip the
-    # comparison; at this granularity the gap is structural (~13 vs
-    # ~17 across repeated runs).
-    write_zordered(df, zpath, cols=("x", "y"), num_files=64)
-    # Baseline: same data sorted on x only.
-    df.repartitionByRange(64, "x").sortWithinPartitions("x").write.mode(
-        "overwrite"
-    ).parquet(lpath)
-
-    box = {"x": (100_000, 350_000), "y": (100_000, 350_000)}
-    z_hit, z_total = candidate_files(zpath, box)
-    l_hit, l_total = candidate_files(lpath, box)
-    assert z_total == 64 and l_total == 64
-    # Linear layout prunes on x (the sort key) but every surviving file
-    # spans all of y; z-order bounds BOTH, so it must beat it.
-    assert z_hit < l_hit, (z_hit, l_hit)
-    assert z_hit <= z_total // 4, (z_hit, z_total)
-
-    # The layout is a rewrite, not a transformation: row set unchanged,
-    # and the pruned file set still contains every matching row.
-    assert spark.read.parquet(zpath).count() == df.count()
-    got = (
-        spark.read.parquet(zpath)
-        .where(
-            (F.col("x").between(*box["x"])) & (F.col("y").between(*box["y"]))
-        )
-        .count()
-    )
-    expect = df.where(
-        (F.col("x").between(*box["x"])) & (F.col("y").between(*box["y"]))
-    ).count()
-    assert got == expect
 
 
 def test_dynamic_partition_pruning_on_lake(spark, tmp_path):

@@ -1,56 +1,29 @@
-"""Distributed Gram/covariance (operators/linalg.py): the mapInPandas
-float fast path must agree with the decimal-exact registry query to
-tight tolerance, independent of partitioning."""
+"""The decimal-exact ``embedding_covariance`` registry entry against a
+numpy population covariance over the full upper triangle."""
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.operators.linalg import covariance_matrix, gram_matrix
 from gtfs_realtime_etl_spark.plans.analytics4 import q_embedding_covariance
-
-SF = "/root/testdata/sf0.001"
-
-
-def _as_map(rows, val):
-    return {(r["i"], r["j"]): r[val] for r in rows}
-
-
-def test_gram_matches_numpy_exactly_shaped(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    mat = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in emb.collect()]
-    )
-    expected = mat.T @ mat
-    got = _as_map(gram_matrix(emb).collect(), "sxy")
-    d = mat.shape[1]
-    assert len(got) == d * (d + 1) // 2
-    for (i, j), v in got.items():
-        assert i <= j
-        ref = expected[i - 1, j - 1]
-        assert abs(v - ref) <= 1e-9 * max(1.0, abs(ref)), (i, j)
+from tests.conftest import SF_SMOKE as SF
 
 
 def test_covariance_fast_path_matches_exact_query(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    exact = _as_map(q_embedding_covariance(spark, SF).collect(), "cov")
-    fast = _as_map(covariance_matrix(emb).collect(), "cov")
-    assert set(fast) == set(exact)
+    mat = np.asarray(
+        [np.asarray(r["embedding"], dtype=np.float64) for r in emb.collect()]
+    )
+    n, d = mat.shape
+    mu = mat.mean(axis=0)
+    expected = mat.T @ mat / n - np.outer(mu, mu)
+    exact = {
+        (r["i"], r["j"]): r["cov"]
+        for r in q_embedding_covariance(spark, SF).collect()
+    }
+    assert set(exact) == {(i, j) for i in range(1, d + 1) for j in range(i, d + 1)}
     # the exact query rounds to COV_ROUND=8 decimals (half-width 5e-9);
     # allow that plus float-fold error
-    for k, v in fast.items():
-        assert abs(v - exact[k]) <= 6e-9 + 1e-9 * abs(exact[k]), k
-
-
-def test_gram_is_partitioning_invariant_to_tolerance(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    one = _as_map(gram_matrix(emb.coalesce(1)).collect(), "sxy")
-    many = _as_map(gram_matrix(emb.repartition(16)).collect(), "sxy")
-    assert set(one) == set(many)
-    for k in one:
-        assert abs(one[k] - many[k]) <= 1e-9 * max(1.0, abs(one[k])), k
-    # row counts survive the reduce
-    n = emb.count()
-    nvals = {r["n"] for r in gram_matrix(emb.repartition(7)).collect()}
-    assert nvals == {n}
+    for (i, j), v in exact.items():
+        ref = expected[i - 1, j - 1]
+        assert abs(v - ref) <= 6e-9 + 1e-9 * abs(ref), (i, j)

@@ -1,14 +1,9 @@
-"""Round-7 opt-in scale probes (SPARK_GRAFT_SCALE_SMOKE=1):
-
-1. epoch_shuffle's two-level range rank at 200x corpus — verifies the
-   parallel shape actually beats the naive single-task-per-epoch
-   ROW_NUMBER it replaced (the round-6 change doubled the sf0.1 cost;
-   this is the scale where the trade pays off), and that both shapes
-   produce bit-identical positions.
-2. The learned-quantizer IVF path: kmeans_fit centroids -> at-rest
-   write_ivf_index -> ivf_index_topk, asserting the probe's runtime
-   numFiles equals the probed cells' files on disk — partition pruning
-   under UNLABELED (learned) centroids, not just label-derived ones.
+"""Round-7 opt-in scale probe (SPARK_GRAFT_SCALE_SMOKE=1):
+epoch_shuffle's two-level range rank at 200x corpus — verifies the
+parallel shape actually beats the naive single-task-per-epoch
+ROW_NUMBER it replaced (the round-6 change doubled the sf0.1 cost;
+this is the scale where the trade pays off), and that both shapes
+produce bit-identical positions.
 """
 
 from __future__ import annotations
@@ -87,58 +82,3 @@ def test_epoch_shuffle_two_level_beats_naive_rank(spark):
         f"two-level rank ({t_two:.1f}s) did not beat the naive "
         f"single-task sort ({t_naive:.1f}s) at 200x"
     )
-
-
-@pytest.mark.scale_smoke
-@scale
-def test_kmeans_learned_ivf_index_prunes_partitions(spark, tmp_path):
-    from gtfs_realtime_etl_spark.operators.kmeans import kmeans_fit
-    from gtfs_realtime_etl_spark.operators.similarity import (
-        ivf_index_topk,
-        select_probe_cells,
-        write_ivf_index,
-    )
-
-    src = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    big = src.crossJoin(spark.range(20).select(F.col("id").alias("rep"))).select(
-        (F.col("vec_id") * 100 + F.col("rep")).alias("vec_id"), "embedding"
-    )
-
-    # learned coarse quantizer on the UNLABELED corpus — the index build
-    # path a real 100 TB corpus uses (no label column to derive cells)
-    cents = kmeans_fit(big, k=16, iterations=2)
-    index = str(tmp_path / "ivf_learned")
-    write_ivf_index(big, cents, index)
-    cell_dirs = [d for d in os.listdir(index) if d.startswith("cell_id=")]
-    assert 2 <= len(cell_dirs) <= 16
-
-    q = src.orderBy("vec_id").limit(3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    nprobe = 2
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        res = ivf_index_topk(spark, index, q, cents, k=10, nprobe=nprobe)
-        probed = {c for _, c, _ in select_probe_cells(q, cents, nprobe)}
-        # a learned cell can be empty (Lloyd's does not guarantee every
-        # centroid keeps members) — an empty probed cell has no
-        # partition directory and contributes zero files
-        n_files_probed = sum(
-            f.endswith(".parquet")
-            for cell in probed
-            if os.path.isdir(os.path.join(index, f"cell_id={cell}"))
-            for f in os.listdir(os.path.join(index, f"cell_id={cell}"))
-        )
-        out = res.toPandas()
-        leaves = res._jdf.queryExecution().executedPlan().collectLeaves()
-        n_files_read = sum(
-            leaves.apply(i).metrics().apply("numFiles").value()
-            for i in range(leaves.length())
-            if leaves.apply(i).metrics().contains("numFiles")
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # the probe reads EXACTLY the learned cells' files — pruning holds
-    # for fitted centroids the same as for label-derived ones
-    assert n_files_read == n_files_probed
-    assert set(out.groupby("query_id").size()) == {10}

@@ -10,10 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.operators.chunking import chunk_documents
-from gtfs_realtime_etl_spark.operators.semdedup import (
-    semdedup,
-    semdedup_profile,
-)
+from gtfs_realtime_etl_spark.operators.semdedup import semdedup_profile
 
 
 def _clustered_vectors(seed: int = 7, n_clusters: int = 3, per: int = 12):
@@ -64,6 +61,31 @@ def _reference_survivors(rows, centroids, tau):
     return {vid for vid, _, _ in rows if vid not in dropped}, assigned
 
 
+def _reference_profile(rows, centroids, tau):
+    """``semdedup_profile``'s per-cell report replayed from
+    :func:`_reference_survivors`: cell_id -> (n_vecs, n_kept, n_dropped,
+    min_kept_id)."""
+    survivors, assigned = _reference_survivors(rows, centroids, tau)
+    report = {}
+    for cell in set(assigned.values()):
+        members = [vid for vid, c in assigned.items() if c == cell]
+        kept = [vid for vid in members if vid in survivors]
+        report[cell] = (
+            len(members),
+            len(kept),
+            len(members) - len(kept),
+            min(kept, default=None),
+        )
+    return report
+
+
+def _profile(emb, cents, tau):
+    return {
+        r["cell_id"]: (r["n_vecs"], r["n_kept"], r["n_dropped"], r["min_kept_id"])
+        for r in semdedup_profile(emb, cents, threshold=tau).collect()
+    }
+
+
 def test_semdedup_matches_bruteforce(spark):
     from gtfs_realtime_etl_spark.operators.similarity import (
         centroids_from_labels,
@@ -74,14 +96,12 @@ def test_semdedup_matches_bruteforce(spark):
     cents_df = centroids_from_labels(emb, dim=dim)
     cents = {r["cell_id"]: list(r["centroid"]) for r in cents_df.collect()}
 
-    surv = semdedup(emb, cents_df, threshold=0.999)
-    got = {r["vec_id"] for r in surv.select("vec_id").collect()}
-    expect, _ = _reference_survivors(rows, cents, 0.999)
-    assert got == expect
+    got = _profile(emb, cents_df, 0.999)
+    assert got == _reference_profile(rows, cents, 0.999)
     # Tight clusters at a high threshold: most of each cluster drops,
     # at least one survivor per cluster remains.
-    assert len(got) < len(rows)
-    assert got >= {0}
+    assert sum(n_kept for _, n_kept, _, _ in got.values()) < len(rows)
+    assert 0 in {min_kept for *_, min_kept in got.values()}
 
 
 def test_semdedup_profile_accounting(spark):
@@ -111,9 +131,12 @@ def test_semdedup_threshold_one_keeps_everything_distinct(spark):
         (2, [0.0, 1.0], 1),
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    cents = centroids_from_labels(emb, dim=2)
-    surv = {r["vec_id"] for r in semdedup(emb, cents, 1.0).collect()}
-    assert surv == {0, 2}
+    cents_df = centroids_from_labels(emb, dim=2)
+    cents = {r["cell_id"]: list(r["centroid"]) for r in cents_df.collect()}
+    got = _profile(emb, cents_df, 1.0)
+    assert got == _reference_profile(rows, cents, 1.0)
+    # the exact duplicate drops, the distinct vector stays
+    assert sorted(got.values()) == [(1, 1, 0, 2), (2, 1, 1, 0)]
 
 
 def _py_chunks(toks, chunk, stride):
