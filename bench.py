@@ -92,9 +92,25 @@ def _build_session(sf_dir: str):
 
     from gtfs_realtime_etl_spark.sources.testdata import TABLES, load_testdata
 
-    for _t, _df in load_testdata(spark, sf_dir, tables=TABLES).items():
+    for _df in load_testdata(spark, sf_dir, *TABLES):
         _df.write.format("noop").mode("overwrite").save()
     return spark
+
+
+def _gc_drain(s):
+    """Between timed windows only — GC, then a short wait so the
+    ASYNC ContextCleaner actually processes the enqueued drops
+    (shuffle files, broadcast/checkpoint blocks — System.gc() only
+    ENQUEUES them; round-10 judge measured a later run starting
+    while the previous run's evictions were still in flight), then
+    a second GC to collect what the drain itself freed.  Keeps all
+    pause time out of the medians (~0.5-0.7 s per run, billed to
+    total wall clock).  Round-11 probe on containment_join, the
+    heaviest multi-stage query: single-GC 8-run med/best 1.27,
+    worst/best 1.85; GC+drain+GC 1.09 / 1.39."""
+    s.sparkContext._jvm.System.gc()
+    time.sleep(0.3)
+    s.sparkContext._jvm.System.gc()
 
 
 def main() -> None:
@@ -155,21 +171,6 @@ def main() -> None:
         )
 
     spark = _build_session(sf_dir)
-
-    def _gc_drain(s):
-        """Between timed windows only — GC, then a short wait so the
-        ASYNC ContextCleaner actually processes the enqueued drops
-        (shuffle files, broadcast/checkpoint blocks — System.gc() only
-        ENQUEUES them; round-10 judge measured a later run starting
-        while the previous run's evictions were still in flight), then
-        a second GC to collect what the drain itself freed.  Keeps all
-        pause time out of the medians (~0.5-0.7 s per run, billed to
-        total wall clock).  Round-11 probe on containment_join, the
-        heaviest multi-stage query: single-GC 8-run med/best 1.27,
-        worst/best 1.85; GC+drain+GC 1.09 / 1.39."""
-        s.sparkContext._jvm.System.gc()
-        time.sleep(0.3)
-        s.sparkContext._jvm.System.gc()
 
     def _time_query(s, fn_, name_):
         """One timed end-to-end run (noop sink) of a registry query."""

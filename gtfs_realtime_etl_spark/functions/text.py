@@ -14,9 +14,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-#: ASCII-only case folding — engine-portable (see functions/hashing.py).
-_AZ_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_AZ_LOWER = "abcdefghijklmnopqrstuvwxyz"
+#: ASCII-only case folding — engine-portable (see functions/hashing.py):
+#: full Unicode lowercasing is engine-specific and breaks cross-engine
+#: value parity.
+AZ_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+AZ_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 #: Tiny per-language stopword lists for the n-gram/stopword language-ID
 #: heuristic.  Deliberately small + deterministic.
@@ -35,7 +37,7 @@ def tokens(text: Column) -> Column:
     bit-identical across Spark / DuckDB / Python — full Unicode
     lowercasing is engine-specific (see functions/hashing.py)."""
     return F.filter(
-        F.split(F.translate(F.trim(text), _AZ_UPPER, _AZ_LOWER), r"\s+"),
+        F.split(F.translate(F.trim(text), AZ_UPPER, AZ_LOWER), r"\s+"),
         lambda t: t != "",
     )
 
@@ -57,7 +59,7 @@ def char_shingles(text: Column, k: int = 5, prefolded: bool = False) -> Column:
     ``F.translate(text, A-Z, a-z)`` as its own projected column first
     and call with ``prefolded=True``.
     """
-    lower = text if prefolded else F.translate(text, _AZ_UPPER, _AZ_LOWER)
+    lower = text if prefolded else F.translate(text, AZ_UPPER, AZ_LOWER)
     n = F.length(lower)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.substring(lower, i, k))
@@ -143,7 +145,7 @@ def lang_id_kernel():
     the ``lang_id`` registry entry).
 
     Matches the entry's DuckDB oracle
-    (``plans/queries.py::Q_LANG_ID_SQL``): ASCII-only case folding,
+    (``plans/base.py::Q_LANG_ID_SQL``): ASCII-only case folding,
     split on ``\\s+`` with ASCII semantics, empty tokens dropped,
     per-language stopword-hit counts, argmax with earliest language
     (sorted order) winning ties, 'und' on zero hits.  Two inputs differ
@@ -156,7 +158,7 @@ def lang_id_kernel():
     ws = re.compile(r"\s+", re.ASCII)
     langs = sorted(STOPWORDS)
     sets = [frozenset(STOPWORDS[lang]) for lang in langs]
-    fold = str.maketrans(_AZ_UPPER, _AZ_LOWER)
+    fold = str.maketrans(AZ_UPPER, AZ_LOWER)
 
     @F.pandas_udf(StringType())
     def _kernel(texts: pd.Series) -> pd.Series:

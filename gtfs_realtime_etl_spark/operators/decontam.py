@@ -23,7 +23,7 @@ operators/dedup.py):
 4. per-(train, test) shared counts → containment ≥ τ.
 
 All hashing is the portable polynomial scheme of functions/hashing.py,
-so the DuckDB oracle (plans/queries.py::Q_DECONTAMINATION_SQL) replays
+so the DuckDB oracle (plans/base.py::Q_DECONTAMINATION_SQL) replays
 the pipeline exactly.
 """
 

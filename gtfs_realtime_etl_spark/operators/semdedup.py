@@ -20,7 +20,7 @@ Data-efficient learning at web-scale through semantic deduplication"):
 
 Thresholding happens on the round-to-6-digits cosine so the keep/drop
 decision is identical on any engine that reproduces the documented
-left-fold dot product (see plans/queries.py::_FOLD_SUM).
+left-fold dot product (see plans/base.py::FOLD_SUM).
 
 Scale shape: norms are hoisted to attributes before the pair join (one
 fold per vector, not three per pair), the join key is cell_id with an

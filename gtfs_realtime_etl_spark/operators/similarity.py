@@ -28,11 +28,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.exprs import lit_double_array
+from gtfs_realtime_etl_spark.functions.exprs import _d, lit_double_array
 from gtfs_realtime_etl_spark.functions.vector import cosine_similarity, dot
 
 #: Candidate-pruning fan-out for the salted two-phase top-k (the same
-#: pattern as plans/queries.py::q_top_bigrams).  Any value yields the
+#: pattern as plans/base.py::q_top_bigrams).  Any value yields the
 #: same result; it only bounds per-bucket state — raise with volume.
 TOPK_SALT = 32
 
@@ -215,7 +215,6 @@ def _assign_cells_rows(embeddings: DataFrame, cents: list, vec_col: str) -> Data
     — and the D-suffixed repr literals go through Double.parseDouble,
     bit-identical to the lit() doubles of the old form (the
     embedding_pc1 / staged-log2 literal discipline)."""
-    from gtfs_realtime_etl_spark.functions.exprs import _d
 
     emb = embeddings.withColumn("_vec", F.col(vec_col).cast("array<double>"))
     entries = ", ".join(

@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.hashing import MOD
+from gtfs_realtime_etl_spark.functions.hashing import (
+    MOD,
+    sql_token_hash64,
+    token_hash64_column,
+)
 
 #: Fixed affine parameters (coprime multiplier, odd offset) — chosen
 #: once so splits are stable forever; different from every MinHash
@@ -224,7 +228,6 @@ def group_hash_mixed(group: Column) -> Column:
     splits entirely (observed: 20/20 sources in 'train').  Squaring
     breaks the progression while staying exact int64 arithmetic on any
     engine (r < 2^31, so r² < 2^62)."""
-    from gtfs_realtime_etl_spark.functions.hashing import token_hash64_column
 
     r = F.pmod(token_hash64_column(group), F.lit(MOD))
     return F.pmod(r * r + r, F.lit(MOD))
@@ -232,7 +235,6 @@ def group_hash_mixed(group: Column) -> Column:
 
 def sql_group_hash_mixed(group_expr: str) -> str:
     """DuckDB twin of :func:`group_hash_mixed`."""
-    from gtfs_realtime_etl_spark.functions.hashing import sql_token_hash64
 
     m = f"CAST({MOD} AS BIGINT)"
     r = f"((({sql_token_hash64(group_expr)}) % {m} + {m}) % {m})"

@@ -9,7 +9,7 @@ sharding, edit-distance verification, length histograms) and the
 event-stream analytics battery (funnel conversion, weekly retention
 cohorts, time-range rolling windows, rate-anomaly detection).
 
-Cross-engine determinism follows the same rules as ``plans.queries``:
+Cross-engine determinism follows the same rules as ``plans.base``:
 integer arithmetic everywhere ranking happens, DECIMAL-stabilized sums
 for means, fixed round-to-6-digits on float outputs, and explicit
 tie-breaks on every top-k.  ``events.ts`` is the loader-normalized
@@ -23,21 +23,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.text import bigrams, tokens
-from gtfs_realtime_etl_spark.operators.splits import split_slot, sql_split_slot
-from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-# DuckDB twin of functions.text.tokens (ASCII fold, split on whitespace,
-# drop empties) — kept in lockstep with plans.queries._SQL_TOKS.
-SQL_TOKS = (
-    "list_filter(string_split_regex(translate(trim(text), "
-    "'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), "
-    "x -> x <> '')"
+from gtfs_realtime_etl_spark.operators.cdc import merge_upsert
+from gtfs_realtime_etl_spark.operators.incremental import (
+    finalize,
+    merge_partials,
+    partial_aggregate,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
+from gtfs_realtime_etl_spark.operators.splits import (
+    cap_per_group,
+    split_slot,
+    sql_cap_per_group_pred,
+    sql_split_slot,
+)
+from gtfs_realtime_etl_spark.plans.base import (
+    NS_PER_DAY,
+    NS_PER_HOUR,
+    SQL_TOKS,
+    dsum,
+    dsum_sql,
+)
+from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +63,7 @@ TFIDF_SALT = 16
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     terms = documents.select(
         "lang",
         F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
@@ -162,7 +167,7 @@ def _fivegrams(toks):
 
 
 def q_ngram_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     # One pass over the exploded grams — the heavy lineage (tokenize +
     # gram build + explode) runs exactly once; a reuse via self-join
     # would recompute it per branch.  Grams group by a 64-bit hash, not
@@ -252,7 +257,7 @@ N_SHARDS = 16
 
 
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     shard = F.pmod(split_slot(F.col("doc_id")), F.lit(N_SHARDS))
     return (
         documents.select(shard.alias("shard"), "doc_id", "n_chars")
@@ -285,7 +290,7 @@ HIST_MAX_BUCKET = 9
 
 
 def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     bucket = F.least(
         (F.col("n_chars") / F.lit(HIST_WIDTH)).cast("long"),
         F.lit(HIST_MAX_BUCKET).cast("long"),
@@ -328,7 +333,7 @@ EDIT_BAND = 40
 
 
 def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     d = documents.select(
         "doc_id", "source", "lang", "n_chars",
         F.substring("text", 1, EDIT_PREFIX).alias("prefix"),
@@ -376,7 +381,7 @@ FUNNEL = ("view", "click", "purchase")
 
 
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     e = events.select("user_id", "event_type", F.col("ts").alias("tns"))
 
     stage1 = (
@@ -444,13 +449,11 @@ FROM counts
 # div 86400e9), so no timezone or date-function divergence is possible.
 # ---------------------------------------------------------------------------
 
-_NS_PER_DAY = 86_400_000_000_000
-
 
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     days = events.select(
-        "user_id", F.expr(f"ts div {_NS_PER_DAY}").alias("day")
+        "user_id", F.expr(f"ts div {NS_PER_DAY}").alias("day")
     )
     first = days.groupBy("user_id").agg(F.min("day").alias("first_day"))
     active = (
@@ -469,7 +472,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_RETENTION_COHORTS_SQL = f"""
 WITH days AS (
-  SELECT user_id, epoch_ns(ts) // {_NS_PER_DAY} AS day FROM events
+  SELECT user_id, epoch_ns(ts) // {NS_PER_DAY} AS day FROM events
 ),
 first AS (SELECT user_id, MIN(day) AS first_day FROM days GROUP BY user_id),
 active AS (
@@ -495,7 +498,7 @@ ROLL_NS = 600_000_000_000  # 10 minutes
 
 
 def q_rolling_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     e = events.select("user_id", F.col("ts").alias("tns"), "value")
     w = (
         Window.partitionBy("user_id")
@@ -540,14 +543,13 @@ FROM r GROUP BY user_id
 # FILTER is engine-exact — no boundary-row risk.
 # ---------------------------------------------------------------------------
 
-_NS_PER_HOUR = 3_600_000_000_000
 ANOMALY_Z = 2.0
 
 
 def q_event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     hours = (
-        events.select(F.expr(f"ts div {_NS_PER_HOUR}").alias("hour"))
+        events.select(F.expr(f"ts div {NS_PER_HOUR}").alias("hour"))
         .groupBy("hour")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -573,7 +575,7 @@ def q_event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_EVENT_RATE_ANOMALY_SQL = f"""
 WITH hours AS (
-  SELECT epoch_ns(ts) // {_NS_PER_HOUR} AS hour, CAST(COUNT(*) AS BIGINT) AS n
+  SELECT epoch_ns(ts) // {NS_PER_HOUR} AS hour, CAST(COUNT(*) AS BIGINT) AS n
   FROM events GROUP BY 1
 ),
 stats AS (
@@ -598,21 +600,6 @@ FROM scored WHERE abs(z) >= {ANOMALY_Z}
 
 
 # ---------------------------------------------------------------------------
-# Decimal-exact aggregation helpers — duplicated from plans.queries
-# (importing them would make the queries↔analytics import order
-# significant; these are 6 lines of arithmetic, not logic).
-# ---------------------------------------------------------------------------
-
-
-def _dsum(col, scale: int = 2):
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
-
-
-def _dsum_sql(x: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({x} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-# ---------------------------------------------------------------------------
 # CDC latest-wins merge (MERGE INTO analog): base snapshot + synthetic
 # update batch (price corrections on every 7th order, tombstones on
 # every 91st) merged by operators/cdc.merge_upsert — ONE shuffle on the
@@ -626,9 +613,7 @@ CDC_PRICE_BUMP = 1000.0
 
 
 def q_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.cdc import merge_upsert
-
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     base = orders.withColumn("_v", F.lit(0).cast("long"))
     updates = (
         orders.filter(F.col("o_orderkey") % CDC_UPDATE_MOD == 0)
@@ -643,7 +628,7 @@ def q_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return merged.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _dsum(F.col("o_totalprice")).alias("revenue"),
+        dsum(F.col("o_totalprice")).alias("revenue"),
     )
 
 
@@ -657,7 +642,7 @@ WITH merged AS (
   WHERE o_orderkey % {CDC_UPDATE_MOD} = 0 AND o_orderkey % {CDC_DELETE_MOD} <> 0
 )
 SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-       {_dsum_sql("o_totalprice")} AS revenue
+       {dsum_sql("o_totalprice")} AS revenue
 FROM merged GROUP BY o_orderpriority
 """
 
@@ -671,29 +656,29 @@ FROM merged GROUP BY o_orderpriority
 
 
 def q_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
-    day = F.expr(f"ts div {_NS_PER_DAY}")
+    (events,) = load_testdata(spark, sf_dir, "events")
+    day = F.expr(f"ts div {NS_PER_DAY}")
     dow = F.pmod(day + F.lit(4), F.lit(7))
-    hour = F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}")
+    hour = F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}")
     return (
         events.select(dow.alias("dow"), hour.alias("hour"), "value")
         .groupBy("dow", "hour")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.round((_dsum(F.col("value"), 6) / F.count(F.lit(1)).cast("double")) * F.lit(1e6), 0) / F.lit(1e6)).alias("avg_value"),
+            (F.round((dsum(F.col("value"), 6) / F.count(F.lit(1)).cast("double")) * F.lit(1e6), 0) / F.lit(1e6)).alias("avg_value"),
         )
     )
 
 
 Q_ACTIVITY_HEATMAP_SQL = f"""
 WITH e AS (
-  SELECT (epoch_ns(ts) // {_NS_PER_DAY} + 4) % 7 AS dow,
-         (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR} AS hour,
+  SELECT (epoch_ns(ts) // {NS_PER_DAY} + 4) % 7 AS dow,
+         (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR} AS hour,
          value
   FROM events
 )
 SELECT dow, hour, CAST(COUNT(*) AS BIGINT) AS n_events,
-       ROUND(({_dsum_sql("value", 6)} / CAST(COUNT(*) AS DOUBLE)) * 1e6, 0) / 1e6 AS avg_value
+       ROUND(({dsum_sql("value", 6)} / CAST(COUNT(*) AS DOUBLE)) * 1e6, 0) / 1e6 AS avg_value
 FROM e GROUP BY dow, hour
 """
 
@@ -708,8 +693,8 @@ FROM e GROUP BY dow, hour
 
 
 def q_value_hour_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
-    hour = F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}")
+    (events,) = load_testdata(spark, sf_dir, "events")
+    hour = F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}")
     e = events.select("event_type", F.col("value").alias("x"), hour.alias("y"))
     agg = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -737,7 +722,7 @@ def q_value_hour_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_VALUE_HOUR_CORR_SQL = f"""
 WITH e AS (
   SELECT event_type, value AS x,
-         (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR} AS y
+         (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR} AS y
   FROM events
 ),
 m AS (
@@ -776,7 +761,7 @@ QUALITY_DECILES = 10
 
 
 def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     scored = documents.select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
@@ -824,13 +809,7 @@ INCR_SPLITS = 3
 
 
 def q_incremental_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.incremental import (
-        finalize,
-        merge_partials,
-        partial_aggregate,
-    )
-
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     monthed = orders.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
         "o_orderkey",
@@ -858,10 +837,10 @@ def q_incremental_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_INCREMENTAL_REVENUE_SQL = f"""
 SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
-       {_dsum_sql("o_totalprice")} AS revenue,
+       {dsum_sql("o_totalprice")} AS revenue,
        MIN(o_totalprice) AS min_price,
        MAX(o_totalprice) AS max_price,
-       ROUND(({_dsum_sql("o_totalprice")} / CAST(COUNT(*) AS DOUBLE)) * 1e6, 0) / 1e6
+       ROUND(({dsum_sql("o_totalprice")} / CAST(COUNT(*) AS DOUBLE)) * 1e6, 0) / 1e6
          AS avg_price
 FROM orders GROUP BY order_month
 """
@@ -878,9 +857,7 @@ DOMAIN_CAP_K = 3
 
 
 def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.splits import cap_per_group
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     kept = cap_per_group(documents, DOMAIN_CAP_K)
     kept_stats = kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -896,8 +873,6 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _domain_cap_sql() -> str:
-    from gtfs_realtime_etl_spark.operators.splits import sql_cap_per_group_pred
-
     pred = sql_cap_per_group_pred("doc_id", "source", DOMAIN_CAP_K)
     return f"""
 WITH kept AS (
@@ -922,7 +897,7 @@ FROM totals t JOIN ks k USING (source)
 Q_DOMAIN_CAP_SQL = _domain_cap_sql()
 
 
-EXT_QUERIES = {
+QUERIES = {
     "tfidf_top_terms": q_tfidf_top_terms,
     "ngram_dup_spans": q_ngram_dup_spans,
     "shard_assignment": q_shard_assignment,
@@ -940,7 +915,7 @@ EXT_QUERIES = {
     "domain_cap": q_domain_cap,
 }
 
-EXT_ORACLE_SQL = {
+ORACLE_SQL = {
     "tfidf_top_terms": Q_TFIDF_TOP_TERMS_SQL,
     "ngram_dup_spans": Q_NGRAM_DUP_SPANS_SQL,
     "shard_assignment": Q_SHARD_ASSIGNMENT_SQL,

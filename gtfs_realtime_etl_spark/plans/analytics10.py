@@ -66,12 +66,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 _D38 = "decimal(38,0)"
@@ -84,7 +80,7 @@ _D38 = "decimal(38,0)"
 
 def q_auc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney ROC AUC with exact tie handling (module doc)."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     bins = (
         lineitem.select(
             "l_linestatus",
@@ -172,7 +168,7 @@ FROM agg
 def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square of (priority × status), integer micro units
     (module doc)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     cells = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("obs")
     )
@@ -294,7 +290,7 @@ def _first_digit_sql() -> str:
 
 def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit of o_totalprice (module doc)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     cents = orders.select(
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -366,7 +362,6 @@ SELECT *, CAST(SUM(dev_ppm) OVER () // 2 AS BIGINT) AS tvd_ppm FROM s2
 # autocorrelation
 # ---------------------------------------------------------------------------
 
-_NS_PER_DAY = 86_400_000_000_000
 ACF_LAGS = (1, 2, 3)
 
 
@@ -374,10 +369,10 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1/2/3 autocorrelation of daily counts per event type
     (module doc).  One window pass computes all leads; the unpivot is
     an in-row struct-array explode (no extra shuffle)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     daily = (
         events.select(
-            "event_type", F.expr(f"ts div {_NS_PER_DAY}L").alias("day")
+            "event_type", F.expr(f"ts div {NS_PER_DAY}L").alias("day")
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -430,7 +425,7 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_AUTOCORRELATION_SQL = f"""
 WITH daily AS (
-  SELECT event_type, epoch_ns(ts) // {_NS_PER_DAY} AS day,
+  SELECT event_type, epoch_ns(ts) // {NS_PER_DAY} AS day,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ),
@@ -518,7 +513,7 @@ def mahalanobis_topk(emb: DataFrame, k: int = MAHA_TOPK) -> DataFrame:
 def q_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 diagonal-Mahalanobis embedding outliers, integer-exact
     (module doc)."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = load_testdata(spark, sf_dir, "embeddings")
     return mahalanobis_topk(emb, MAHA_TOPK)
 
 
@@ -555,7 +550,7 @@ ORDER BY d2_micro DESC, vec_id ASC LIMIT {MAHA_TOPK}
 """
 
 
-EXT13_QUERIES = {
+QUERIES = {
     "auc_score": q_auc_score,
     "chi2_independence": q_chi2_independence,
     "benford_digits": q_benford_digits,
@@ -563,7 +558,7 @@ EXT13_QUERIES = {
     "mahalanobis_outliers": q_mahalanobis_outliers,
 }
 
-EXT13_ORACLE_SQL = {
+ORACLE_SQL = {
     "auc_score": Q_AUC_SCORE_SQL,
     "chi2_independence": Q_CHI2_INDEPENDENCE_SQL,
     "benford_digits": Q_BENFORD_DIGITS_SQL,

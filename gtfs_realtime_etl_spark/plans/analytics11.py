@@ -56,13 +56,15 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
+from gtfs_realtime_etl_spark.plans.base import (
+    Q_ANN_COSINE_TOPK_SQL,
+    Q_ANN_LSH_TOPK_SQL,
+    TOP_K,
+    q_ann_cosine_topk,
+    q_ann_lsh_topk,
+)
 from gtfs_realtime_etl_spark.plans.graph import _KNN_CTES, _knn_edges
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -78,7 +80,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The loop is driver-side control flow only — every frontier stays a
     DataFrame; nothing is collected."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     e = _knn_edges(embeddings)
     und = (
         e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
@@ -156,7 +158,7 @@ TRI_TOPK = 25
 
 def q_event_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 ordered event-type trigrams per the module doc."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     seqs = (
         events.select("user_id", F.struct("ts", "event_id", "event_type").alias("e"))
         .groupBy("user_id")
@@ -207,7 +209,7 @@ CAL_BIN_WIDTH = 5
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability-diagram bins for quantity vs returnflag (module
     doc)."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     binned = lineitem.select(
         F.expr(
             f"(cast(floor(l_quantity) as bigint) - 1L) div {CAL_BIN_WIDTH}L"
@@ -261,7 +263,7 @@ FROM g
 
 def q_hazard_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete-time hazard of order→ship delay (module doc)."""
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
+    orders, lineitem = load_testdata(spark, sf_dir, "orders", "lineitem")
     delays = lineitem.select("l_orderkey", "l_shipdate").join(
         orders.select("o_orderkey", "o_orderdate"),
         F.col("l_orderkey") == F.col("o_orderkey"),
@@ -330,11 +332,6 @@ def q_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast path (round-12, the feature_mi/decision_stump lesson): same
     arithmetic op for op, a handful of selectExpr parses instead of
     Column-builder py4j chatter."""
-    from gtfs_realtime_etl_spark.plans.queries import (
-        TOP_K,
-        q_ann_cosine_topk,
-        q_ann_lsh_topk,
-    )
 
     exact = q_ann_cosine_topk(spark, sf_dir).select("vec_id")
     approx = q_ann_lsh_topk(spark, sf_dir).select("vec_id", "rank")
@@ -362,12 +359,6 @@ def q_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_sql() -> str:
-    from gtfs_realtime_etl_spark.plans.queries import (
-        Q_ANN_COSINE_TOPK_SQL,
-        Q_ANN_LSH_TOPK_SQL,
-        TOP_K,
-    )
-
     return f"""
 WITH hits AS (
   SELECT ap.rank
@@ -398,7 +389,7 @@ FROM dcg CROSS JOIN ideal
 """
 
 
-EXT14_QUERIES = {
+QUERIES = {
     "graph_bfs": q_graph_bfs,
     "event_ngrams": q_event_ngrams,
     "calibration_bins": q_calibration_bins,
@@ -407,11 +398,10 @@ EXT14_QUERIES = {
 }
 
 
-def _ext14_oracle_sql() -> dict[str, str]:
-    return {
-        "graph_bfs": _graph_bfs_sql(),
-        "event_ngrams": Q_EVENT_NGRAMS_SQL,
-        "calibration_bins": Q_CALIBRATION_BINS_SQL,
-        "hazard_table": Q_HAZARD_TABLE_SQL,
-        "ndcg_report": _ndcg_sql(),
-    }
+ORACLE_SQL = {
+    "graph_bfs": _graph_bfs_sql(),
+    "event_ngrams": Q_EVENT_NGRAMS_SQL,
+    "calibration_bins": Q_CALIBRATION_BINS_SQL,
+    "hazard_table": Q_HAZARD_TABLE_SQL,
+    "ndcg_report": _ndcg_sql(),
+}

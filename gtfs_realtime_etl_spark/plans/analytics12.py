@@ -100,36 +100,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.functions.hashing import (
+    BASE_A,
+    BASE_B,
+    H64_SHIFT,
+    MOD,
+    _pow_vec,
+    shingle_hash64_set_kernel,
+    token_hash64_set_kernel,
+)
 from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
 from gtfs_realtime_etl_spark.functions.text import (
+    AZ_LOWER,
+    AZ_UPPER,
     STOPWORDS,
     char_shingles,
     tokens,
 )
-from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
-# Module-level import so staging.py stays inside the v2 closure hash
-# (a function-local import hides the callee from the walker).
+from gtfs_realtime_etl_spark.plans.base import SQL_TOKS
 from gtfs_realtime_etl_spark.plans.staging import stage_to_tmp
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-_AZ_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_AZ_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 #: DuckDB twin of functions.text.char_shingles over the `text` column
 #: (ASCII fold + all k-char windows; short texts yield one whole-text
-#: shingle) — kept in lockstep with plans.queries.Q_DEDUP_NGRAM_*.
+#: shingle) — kept in lockstep with plans.base.Q_DEDUP_NGRAM_*.
 _SQL_SHINGLES = (
     "list_transform(range(1, GREATEST(length(text) - {km1}, 1) + 1), "
     "i -> substr(translate(text, '{u}', '{l}'), i, {k}))"
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 def _h40(col) -> F.Column:
@@ -170,15 +172,8 @@ def _sql_shingle_hashes64(text_expr: str, k: int = SETSIM_K) -> str:
     fresh-content corpus reaches ~10^7-10^8 distinct shingles, where a
     31-bit space produces millions of colliding PAIRS — each a spurious
     candidate the verify stage must reject."""
-    from gtfs_realtime_etl_spark.functions.hashing import (
-        BASE_A,
-        BASE_B,
-        H64_SHIFT,
-        MOD,
-        _pow_vec,
-    )
 
-    t = f"translate({text_expr}, '{_AZ_UPPER}', '{_AZ_LOWER}')"
+    t = f"translate({text_expr}, '{AZ_UPPER}', '{AZ_LOWER}')"
 
     def _terms(base: int) -> str:
         pw = _pow_vec(base, k)
@@ -215,10 +210,6 @@ def setsim_pairs(
     scale, and the one the 50k scale smoke exercises.  Hash collisions
     merge tokens deterministically in BOTH engines, so parity is by
     construction."""
-    from gtfs_realtime_etl_spark.functions.hashing import (
-        shingle_hash64_set_kernel,
-        token_hash64_set_kernel,
-    )
 
     spark = documents.sparkSession
     n_tasks = spark.sparkContext.defaultParallelism
@@ -342,7 +333,7 @@ def setsim_pairs(
 
 def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: setsim_pairs over the documents table."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     return setsim_pairs(documents.select("doc_id", "text"))
 
 
@@ -402,7 +393,7 @@ def _bottom_k(dh: DataFrame, keys: list[str], k: int) -> DataFrame:
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct sketch + exact twin + mergeability theorem (module
     doc)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     hashed = events.select(
         "event_type",
         (F.col("user_id") % 2).alias("parity"),
@@ -512,7 +503,7 @@ FROM est
 def q_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial NB language confusion matrix in integer micro-bits
     (module doc)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     train = documents.filter(F.col("doc_id") % 2 == 0)
     test = documents.filter(F.col("doc_id") % 2 == 1)
     ttok = train.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
@@ -659,7 +650,7 @@ _RAKE_STOPS: tuple[str, ...] = tuple(
 
 def q_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrases, ratio-of-sums scoring (module doc)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     pt = documents.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
@@ -778,10 +769,10 @@ FH_TOPK = 20
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick collision profile over the shingle vocabulary
     (module doc)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     n_tasks = spark.sparkContext.defaultParallelism
     folded = documents.select(
-        F.translate("text", _AZ_UPPER, _AZ_LOWER).alias("_t")
+        F.translate("text", AZ_UPPER, AZ_LOWER).alias("_t")
     ).repartition(n_tasks)
     tokocc = folded.select(
         F.explode(
@@ -817,7 +808,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _feature_hashing_sql() -> str:
     h = _sql_h40("tok")
     sh = _SQL_SHINGLES.format(
-        km1=SETSIM_K - 1, k=SETSIM_K, u=_AZ_UPPER, l=_AZ_LOWER
+        km1=SETSIM_K - 1, k=SETSIM_K, u=AZ_UPPER, l=AZ_LOWER
     )
     return f"""
 WITH tokocc AS (SELECT unnest({sh}) AS tok FROM documents),
@@ -841,7 +832,7 @@ ORDER BY n_tokens DESC, bucket ASC LIMIT {FH_TOPK}
 """
 
 
-EXT15_QUERIES = {
+QUERIES = {
     "setsim_join": q_setsim_join,
     "kmv_distinct": q_kmv_distinct,
     "naive_bayes_lang": q_naive_bayes_lang,
@@ -850,11 +841,10 @@ EXT15_QUERIES = {
 }
 
 
-def _ext15_oracle_sql() -> dict[str, str]:
-    return {
-        "setsim_join": _setsim_sql(),
-        "kmv_distinct": _kmv_sql(),
-        "naive_bayes_lang": _naive_bayes_sql(),
-        "keyphrase_rake": _rake_sql(),
-        "feature_hashing": _feature_hashing_sql(),
-    }
+ORACLE_SQL = {
+    "setsim_join": _setsim_sql(),
+    "kmv_distinct": _kmv_sql(),
+    "naive_bayes_lang": _naive_bayes_sql(),
+    "keyphrase_rake": _rake_sql(),
+    "feature_hashing": _feature_hashing_sql(),
+}

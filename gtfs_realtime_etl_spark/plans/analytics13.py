@@ -52,13 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.exprs import lit_double_array
-
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +64,7 @@ TOUCH_TYPES = ("click", "view")
 
 
 def q_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     touch = F.when(
         F.col("event_type").isin(*TOUCH_TYPES), F.col("event_type")
     )
@@ -255,7 +249,7 @@ def _qn_pooled_grid(events: DataFrame) -> DataFrame:
 
 
 def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     grid = _qn_pooled_grid(events)  # 1 row, broadcast-class
     w = Window.partitionBy("source").orderBy("value", "event_id")
     ranked = (
@@ -315,7 +309,7 @@ RFM_Q = 5
 
 
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("freq"),
@@ -380,7 +374,7 @@ AB_Z_CRIT = 1.96
 
 
 def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     g = events.groupBy("event_type").agg(
         F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0)).alias("n1"),
         F.sum(
@@ -453,14 +447,14 @@ FROM z
 """
 
 
-EXT16_QUERIES = {
+QUERIES = {
     "funnel_attribution": q_funnel_attribution,
     "quantile_normalization": q_quantile_normalization,
     "rfm_segments": q_rfm_segments,
     "ab_test_ztest": q_ab_test_ztest,
 }
 
-EXT16_ORACLE_SQL = {
+ORACLE_SQL = {
     "funnel_attribution": Q_FUNNEL_ATTRIBUTION_SQL,
     "quantile_normalization": _qn_sql(),
     "rfm_segments": Q_RFM_SEGMENTS_SQL,

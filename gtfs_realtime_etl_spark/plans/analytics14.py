@@ -56,20 +56,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.plans.staging import stage_to_tmp as _stage_to_tmp
+from gtfs_realtime_etl_spark.functions.hashing import (
+    shingle_hash64_set_kernel,
+    token_hash64_set_kernel,
+)
+from gtfs_realtime_etl_spark.functions.text import tokens
+from gtfs_realtime_etl_spark.plans.analytics12 import SETSIM_K, _sql_shingle_hashes64
+from gtfs_realtime_etl_spark.plans.base import CENTS, NS_PER_DAY, NS_PER_HOUR
+from gtfs_realtime_etl_spark.plans.staging import stage_to_tmp
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_NS_PER_HOUR = 3_600 * 10**9
-_NS_PER_DAY = 86_400 * 10**9
-
-#: Exact integer cents of the double ``value`` column (both engines).
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -78,9 +73,9 @@ _CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 
 def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     ev = events.select(
-        "user_id", F.col("ts").alias("tns"), F.expr(_CENTS).alias("cents")
+        "user_id", F.col("ts").alias("tns"), F.expr(CENTS).alias("cents")
     )
     cut = ev.agg(F.expr("(min(tns) + max(tns)) div 2").alias("cut"))
     per_user = (
@@ -141,7 +136,7 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_CUPED_ADJUSTMENT_SQL = f"""
 WITH ev AS (
-  SELECT user_id, epoch_ns(ts) AS tns, {_CENTS} AS cents FROM events
+  SELECT user_id, epoch_ns(ts) AS tns, {CENTS} AS cents FROM events
 ),
 cut AS (SELECT (MIN(tns) + MAX(tns)) // 2 AS cut FROM ev),
 per_user AS (
@@ -199,13 +194,13 @@ CONF_BUCKETS = 256
 
 
 def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     e = events.select(
         "user_id",
         "event_id",
         F.col("ts").alias("tns"),
-        F.expr(_CENTS).alias("cents"),
-        F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}").alias("hr"),
+        F.expr(CENTS).alias("cents"),
+        F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}").alias("hr"),
     )
     fit = e.filter(F.col("user_id") % 3 == 0).agg(
         F.count(F.lit(1)).alias("n_tr"),
@@ -306,8 +301,8 @@ def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_CONFORMAL_INTERVALS_SQL = f"""
 WITH e AS (
-  SELECT user_id, event_id, epoch_ns(ts) AS tns, {_CENTS} AS cents,
-         (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR} AS hr
+  SELECT user_id, event_id, epoch_ns(ts) AS tns, {CENTS} AS cents,
+         (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR} AS hr
   FROM events
 ),
 fit AS (
@@ -366,10 +361,10 @@ GROUP BY a, b, qhat, n_cal
 
 
 def q_grid_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     cells = events.select(
-        F.expr(f"(ts div {_NS_PER_DAY} + 4) % 7").alias("dow"),
-        F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}").alias("hour"),
+        F.expr(f"(ts div {NS_PER_DAY} + 4) % 7").alias("dow"),
+        F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}").alias("hour"),
     ).groupBy("dow", "hour").agg(F.count(F.lit(1)).alias("n_events"))
     offs = F.array(
         *[
@@ -403,8 +398,8 @@ def q_grid_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_GRID_HOTSPOTS_SQL = f"""
 WITH cells AS (
-  SELECT (epoch_ns(ts) // {_NS_PER_DAY} + 4) % 7 AS dow,
-         (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR} AS hour,
+  SELECT (epoch_ns(ts) // {NS_PER_DAY} + 4) % 7 AS dow,
+         (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR} AS hour,
          CAST(COUNT(*) AS BIGINT) AS n_events
   FROM events GROUP BY 1, 2
 ),
@@ -428,14 +423,14 @@ WHERE c.n_events > COALESCE(nb.max_neighbor, 0)
 # decayed_topk
 # ---------------------------------------------------------------------------
 
-DECAY_HALFLIFE_NS = 7 * _NS_PER_DAY  # one halving per week of age
+DECAY_HALFLIFE_NS = 7 * NS_PER_DAY  # one halving per week of age
 DECAY_SHIFT = 40  # fixed-point: weight = 2^(SHIFT - age_halflives)
 DECAY_TOPN = 3
 DECAY_SALT = 32
 
 
 def q_decayed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     tmax = events.agg(F.max("ts").alias("tmax"))
     weighted = events.crossJoin(F.broadcast(tmax)).select(
         "event_type",
@@ -529,18 +524,6 @@ CONT_NUM = 9  # containment threshold t = NUM/DEN, exact rational
 CONT_DEN = 10
 
 
-def _stage(df: DataFrame, name: str) -> DataFrame:
-    """Deterministic materialization of a multi-read intermediate (see
-    :mod:`gtfs_realtime_etl_spark.plans.staging` for why this replaces
-    ``localCheckpoint`` here).  The import is module-level via the
-    global below — a function-local import here would hide staging.py
-    from the v2 closure hash (the walker only sees ``__globals__``),
-    so a staging rewrite would never re-front this entry (round-12
-    lesson: the round-11 staging change was invisible to
-    containment_join's hash for exactly this reason)."""
-    return _stage_to_tmp(df, name)
-
-
 def containment_pairs(
     documents: DataFrame, token_mode: str = "shingle"
 ) -> DataFrame:
@@ -558,12 +541,6 @@ def containment_pairs(
     the same reason documented there (shingle vocabularies cap at
     alphabet^k so df grows linearly with the corpus and prefix
     filtering loses its bite; word vocabularies grow with the corpus)."""
-    from gtfs_realtime_etl_spark.functions.hashing import (
-        shingle_hash64_set_kernel,
-        token_hash64_set_kernel,
-    )
-    from gtfs_realtime_etl_spark.functions.text import tokens
-    from gtfs_realtime_etl_spark.plans.analytics12 import SETSIM_K
 
     spark = documents.sparkSession
     n_tasks = spark.sparkContext.defaultParallelism
@@ -589,7 +566,7 @@ def containment_pairs(
     # built plan never observes a later invocation's data).  At lake
     # scale this is also the shape you'd operate: tokenized corpus
     # staged once, probed many times.
-    sets = _stage(
+    sets = stage_to_tmp(
         folded.select("doc_id", sh_col.alias("sh")).select(
             "doc_id", "sh", F.size("sh").cast("long").alias("n")
         ),
@@ -598,7 +575,7 @@ def containment_pairs(
     tok = sets.select("doc_id", "n", F.explode("sh").alias("tok"))
     df_tok = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w_doc = Window.partitionBy("doc_id").orderBy("df", "tok")
-    ranked = _stage(
+    ranked = stage_to_tmp(
         tok.join(df_tok, "tok")
         .withColumn("rnk", F.row_number().over(w_doc).cast("long"))
         .select("doc_id", "n", "tok", "rnk"),
@@ -674,16 +651,11 @@ def containment_pairs(
 
 
 def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     return containment_pairs(documents.select("doc_id", "text"))
 
 
 def _containment_sql() -> str:
-    from gtfs_realtime_etl_spark.plans.analytics12 import (
-        SETSIM_K,
-        _sql_shingle_hashes64,
-    )
-
     sh = _sql_shingle_hashes64("text", SETSIM_K)
     return f"""
 WITH docs AS (
@@ -706,7 +678,7 @@ WHERE n_inter * {CONT_DEN} >= {CONT_NUM} * na.n
 """
 
 
-EXT17_QUERIES = {
+QUERIES = {
     "cuped_adjustment": q_cuped_adjustment,
     "conformal_intervals": q_conformal_intervals,
     "grid_hotspots": q_grid_hotspots,
@@ -714,7 +686,7 @@ EXT17_QUERIES = {
     "containment_join": q_containment_join,
 }
 
-EXT17_ORACLE_SQL = {
+ORACLE_SQL = {
     "cuped_adjustment": Q_CUPED_ADJUSTMENT_SQL,
     "conformal_intervals": Q_CONFORMAL_INTERVALS_SQL,
     "grid_hotspots": Q_GRID_HOTSPOTS_SQL,

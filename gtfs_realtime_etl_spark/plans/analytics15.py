@@ -37,15 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.plans.base import CENTS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -54,12 +47,12 @@ _CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 
 def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     counts = (
         events.select(
             "event_type",
             (F.col("user_id") % 2).alias("half"),
-            F.expr(_CENTS).alias("cents"),
+            F.expr(CENTS).alias("cents"),
         )
         .groupBy("event_type", "cents")
         .agg(
@@ -126,7 +119,7 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_WASSERSTEIN_DRIFT_SQL = f"""
 WITH ev AS (
-  SELECT event_type, user_id % 2 AS half, {_CENTS} AS cents FROM events
+  SELECT event_type, user_id % 2 AS half, {CENTS} AS cents FROM events
 ),
 counts AS (
   SELECT event_type, cents,
@@ -171,7 +164,7 @@ FROM (
 
 
 def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     per_user = events.groupBy("user_id").agg(
         F.array_sort(F.collect_set("event_type")).alias("types")
     )
@@ -249,7 +242,7 @@ JOIN sizes sb ON pairs.type_b = sb.event_type
 
 
 def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, supplier, nation = _t(
+    lineitem, supplier, nation = load_testdata(
         spark, sf_dir, "lineitem", "supplier", "nation"
     )
     rev = "CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)"
@@ -334,13 +327,13 @@ FROM per_nation JOIN nation ON s_nationkey = n_nationkey
 """
 
 
-EXT18_QUERIES = {
+QUERIES = {
     "wasserstein_drift": q_wasserstein_drift,
     "audience_overlap": q_audience_overlap,
     "hhi_concentration": q_hhi_concentration,
 }
 
-EXT18_ORACLE_SQL = {
+ORACLE_SQL = {
     "wasserstein_drift": Q_WASSERSTEIN_DRIFT_SQL,
     "audience_overlap": Q_AUDIENCE_OVERLAP_SQL,
     "hhi_concentration": Q_HHI_CONCENTRATION_SQL,

@@ -33,18 +33,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.sources.testdata import (
-    load_testdata,
-    saturate_scan,
-)
+from gtfs_realtime_etl_spark.plans.analytics12 import _h40, _sql_h40
+from gtfs_realtime_etl_spark.plans.base import CENTS
+from gtfs_realtime_etl_spark.sources.testdata import load_testdata, saturate_scan
 
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 BOOT_B = 32  # resamples
 #: Poisson(1) cumulative thresholds P(X <= k), k = 0..4 — weights cap
@@ -58,14 +50,12 @@ _H40_SPACE = float(1 << 40)
 
 
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.plans.analytics12 import _h40
-
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     # The ×BOOT_B explode + per-row hash below is the heavy map-side
     # class that justifies widening the narrow local scan (round-12
     # interleaved A/B: 3.06 -> 1.37 s; no-op on multi-file inputs).
     ev = saturate_scan(spark, events).select(
-        "event_type", "event_id", F.expr(_CENTS).alias("cents")
+        "event_type", "event_id", F.expr(CENTS).alias("cents")
     )
     exact = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("sc")
@@ -122,8 +112,6 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bootstrap_sql() -> str:
-    from gtfs_realtime_etl_spark.plans.analytics12 import _sql_h40
-
     h = _sql_h40("concat(CAST(event_id AS VARCHAR), '|', CAST(b AS VARCHAR))")
     wsum = " + ".join(
         f"CAST(({h} / {_H40_SPACE!r}) >= {c!r} AS INT)"
@@ -131,7 +119,7 @@ def _bootstrap_sql() -> str:
     )
     return f"""
 WITH ev AS (
-  SELECT event_type, event_id, {_CENTS} AS cents FROM events
+  SELECT event_type, event_id, {CENTS} AS cents FROM events
 ),
 exact AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -162,10 +150,10 @@ FROM exact e JOIN boot USING (event_type)
 """
 
 
-EXT19_QUERIES = {
+QUERIES = {
     "bootstrap_ci": q_bootstrap_ci,
 }
 
-EXT19_ORACLE_SQL = {
+ORACLE_SQL = {
     "bootstrap_ci": _bootstrap_sql(),
 }

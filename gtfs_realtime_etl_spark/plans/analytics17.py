@@ -50,18 +50,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# Module-level import so staging.py stays inside the v2 closure hash
-# (a function-local import hides the callee from the walker).
+from gtfs_realtime_etl_spark.plans.base import CENTS
 from gtfs_realtime_etl_spark.plans.staging import stage_to_tmp
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 # ---------------------------------------------------------------------------
 # apriori_triples
@@ -75,7 +67,7 @@ BASKET_CAP = 32  # hard bound on in-row triple expansion (cap^3 worst)
 
 
 def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     # The distinct basket-item table feeds three consumers (the order
     # count, the per-item counts, and the L1-pruned basket build);
     # staged once it is computed once instead of once per consumer
@@ -215,7 +207,7 @@ CROSS JOIN n_ord
 
 
 def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
         events.select("user_id", "event_id", "ts", "event_type")
@@ -274,9 +266,9 @@ TRIM_DEN = 10
 
 
 def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     hist = (
-        events.select("event_type", F.expr(_CENTS).alias("cents"))
+        events.select("event_type", F.expr(CENTS).alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -331,7 +323,7 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_TRIMMED_MEAN_SQL = f"""
 WITH hist AS (
-  SELECT event_type, {_CENTS} AS cents, CAST(COUNT(*) AS BIGINT) AS c
+  SELECT event_type, {CENTS} AS cents, CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ),
 cum AS (
@@ -371,14 +363,14 @@ GROUP BY 1, 2, k
 
 
 def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     cut = events.agg(F.expr("(min(ts) + max(ts)) div 2").alias("cut"))
     cells = (
         events.crossJoin(F.broadcast(cut))
         .select(
             (F.col("user_id") % 2).alias("arm"),
             F.expr("CASE WHEN ts >= cut THEN 1 ELSE 0 END").alias("post"),
-            F.expr(_CENTS).alias("cents"),
+            F.expr(CENTS).alias("cents"),
         )
         .groupBy("arm", "post")
         .agg(
@@ -429,7 +421,7 @@ cells AS (
   SELECT user_id % 2 AS arm,
          CASE WHEN epoch_ns(ts) >= cut THEN 1 ELSE 0 END AS post,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM({_CENTS}) AS BIGINT) AS s
+         CAST(SUM({CENTS}) AS BIGINT) AS s
   FROM events, cut GROUP BY 1, 2
 ),
 means AS (
@@ -457,14 +449,14 @@ FROM means
 """
 
 
-EXT20_QUERIES = {
+QUERIES = {
     "apriori_triples": q_apriori_triples,
     "markov_transitions": q_markov_transitions,
     "trimmed_mean": q_trimmed_mean,
     "did_estimator": q_did_estimator,
 }
 
-EXT20_ORACLE_SQL = {
+ORACLE_SQL = {
     "apriori_triples": Q_APRIORI_TRIPLES_SQL,
     "markov_transitions": Q_MARKOV_TRANSITIONS_SQL,
     "trimmed_mean": Q_TRIMMED_MEAN_SQL,

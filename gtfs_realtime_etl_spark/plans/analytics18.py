@@ -73,15 +73,10 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
+from gtfs_realtime_etl_spark.plans.base import CENTS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 _OCENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
 
 
@@ -100,7 +95,7 @@ def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and a final segment-grain aggregate.  Gini is over ACTIVE
     customers (>= 1 order) — a definition choice, documented here.
     """
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = load_testdata(spark, sf_dir, "orders", "customer")
     cust_rev = orders.groupBy("o_custkey").agg(
         F.sum(F.expr(_OCENTS)).alias("cents")
     )
@@ -206,7 +201,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup's null row is unambiguous); the total row's subtraction
     of the per-type sum is a window over the tiny aggregate output,
     not a second pass."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     cut = events.agg(F.expr("(min(ts) + max(ts)) div 2").alias("cut"))
     counts = (
         events.crossJoin(F.broadcast(cut))
@@ -355,7 +350,7 @@ def kendall_counts(events: DataFrame) -> DataFrame:
         "event_type",
         "event_id",
         "ts",
-        F.expr(_CENTS).alias("cents"),
+        F.expr(CENTS).alias("cents"),
         F.expr(_KH_EXPR).alias("h"),
         (F.col("event_id") % KENDALL_NSALT).alias("salt"),
     )
@@ -408,13 +403,13 @@ def kendall_counts(events: DataFrame) -> DataFrame:
 
 
 def q_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     return kendall_counts(events)
 
 
 Q_KENDALL_TREND_SQL = f"""
 WITH ranked AS (
-  SELECT event_type, event_id, epoch_ns(ts) AS ts, {_CENTS} AS cents,
+  SELECT event_type, event_id, epoch_ns(ts) AS ts, {CENTS} AS cents,
          ROW_NUMBER() OVER (PARTITION BY event_type
                             ORDER BY {_KH_EXPR}, event_id) AS hrn
   FROM events
@@ -465,7 +460,7 @@ _NS_PER_S = 1_000_000_000
 
 def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact inter-event gap moments per event type (see module doc)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
         events.select("user_id", "event_id", "ts", "event_type")
@@ -543,14 +538,14 @@ FROM stats
 """
 
 
-EXT21_QUERIES = {
+QUERIES = {
     "lorenz_gini": q_lorenz_gini,
     "js_divergence": q_js_divergence,
     "kendall_trend": q_kendall_trend,
     "interarrival_stats": q_interarrival_stats,
 }
 
-EXT21_ORACLE_SQL = {
+ORACLE_SQL = {
     "lorenz_gini": Q_LORENZ_GINI_SQL,
     "js_divergence": Q_JS_DIVERGENCE_SQL,
     "kendall_trend": Q_KENDALL_TREND_SQL,

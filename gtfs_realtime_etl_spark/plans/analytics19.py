@@ -68,17 +68,11 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
+from gtfs_realtime_etl_spark.plans.base import CENTS, NS_PER_DAY
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_NS_PER_DAY = 86_400_000_000_000
-_NS_PER_WEEK = 7 * _NS_PER_DAY
+_NS_PER_WEEK = 7 * NS_PER_DAY
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +81,7 @@ _NS_PER_WEEK = 7 * _NS_PER_DAY
 
 #: Funnel stages (the analytics.py FUNNEL triple) and the chain window.
 FUNNEL_STAGES = ("view", "click", "purchase")
-FUNNEL_WINDOW_NS = _NS_PER_DAY // 2
+FUNNEL_WINDOW_NS = NS_PER_DAY // 2
 #: Per-(user, stage) cap on candidate events (earliest first) — bounds
 #: the in-row chain search at CAP^3 regardless of corpus size.
 FUNNEL_CAP = 64
@@ -150,7 +144,7 @@ def funnel_levels(events: DataFrame) -> DataFrame:
 
 
 def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     return funnel_levels(events)
 
 
@@ -204,11 +198,11 @@ FROM hist
 
 
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     base = events.select(
         "user_id",
         F.expr(f"ts div {_NS_PER_WEEK}").alias("week"),
-        F.expr(_CENTS).alias("cents"),
+        F.expr(CENTS).alias("cents"),
     )
     first = base.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     cohort_sizes = first.groupBy("cohort_week").agg(
@@ -246,7 +240,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_COHORT_LTV_SQL = f"""
 WITH base AS (
   SELECT user_id, epoch_ns(ts) // {_NS_PER_WEEK} AS week,
-         {_CENTS} AS cents
+         {CENTS} AS cents
   FROM events
 ),
 first AS (
@@ -285,7 +279,7 @@ ME_TOTAL_ROW = "__TOTAL__"
 
 
 def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
         events.select("user_id", "event_id", "ts", "event_type")
@@ -485,7 +479,7 @@ def assortativity_report(edges: DataFrame) -> DataFrame:
 
 
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     items = lineitem.select("l_orderkey", "l_partkey").distinct()
     baskets = items.groupBy("l_orderkey").agg(
         F.expr(
@@ -569,14 +563,14 @@ FROM mom CROSS JOIN nn
 """
 
 
-EXT22_QUERIES = {
+QUERIES = {
     "window_funnel": q_window_funnel,
     "cohort_ltv": q_cohort_ltv,
     "markov_entropy_rate": q_markov_entropy_rate,
     "degree_assortativity": q_degree_assortativity,
 }
 
-EXT22_ORACLE_SQL = {
+ORACLE_SQL = {
     "window_funnel": Q_WINDOW_FUNNEL_SQL,
     "cohort_ltv": Q_COHORT_LTV_SQL,
     "markov_entropy_rate": Q_MARKOV_ENTROPY_RATE_SQL,

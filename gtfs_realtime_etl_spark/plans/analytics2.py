@@ -3,7 +3,7 @@
 profiling, boilerplate-prefix detection, and lexical-diversity quality
 signals.
 
-Cross-engine determinism rules are the same as ``plans.queries`` /
+Cross-engine determinism rules are the same as ``plans.base`` /
 ``plans.analytics``: integer arithmetic wherever a join key, rank, or
 filter boundary lives; DECIMAL-stabilized sums for means;
 round-to-6-digits only on output columns; explicit tie-breaks.  ``events.ts`` is the
@@ -24,16 +24,33 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-from gtfs_realtime_etl_spark.functions.text import tokens
+from gtfs_realtime_etl_spark.functions.exprs import _d
+from gtfs_realtime_etl_spark.functions.hashing import MOD
+from gtfs_realtime_etl_spark.functions.text import quality_score, tokens
+from gtfs_realtime_etl_spark.functions.vector import l2_norm, sql_dot_fold
+from gtfs_realtime_etl_spark.operators.chunking import chunk_documents
 from gtfs_realtime_etl_spark.operators.rangejoin import overlap_join
+from gtfs_realtime_etl_spark.operators.semdedup import semdedup_profile
 from gtfs_realtime_etl_spark.operators.sessions import sessionize
-from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
+from gtfs_realtime_etl_spark.operators.splits import (
+    SPLIT_A,
+    SPLIT_B,
+    group_split_assign,
+    split_slot,
+    sql_group_hash_mixed,
+    sql_split_assign,
+    sql_split_slot,
+)
+from gtfs_realtime_etl_spark.plans.base import (
+    FOLD_SUM,
+    NS_PER_HOUR,
+    QS_SCORE,
+    REVENUE_SQL,
+    SQL_TOKS,
+    label_centroids_rows,
+    revenue,
+)
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +89,7 @@ def _sessions(events: DataFrame) -> DataFrame:
 
 
 def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     sess = _sessions(events)
     pad_lo = (F.col("s_start") - F.lit(COACT_PAD_NS)).alias
     pad_hi = (F.col("s_end") + F.lit(COACT_PAD_NS)).alias
@@ -159,11 +176,9 @@ FROM both_dirs GROUP BY user_id
 # unbounded-preceding frame; grid rows are O(users * hours-spanned).
 # ---------------------------------------------------------------------------
 
-NS_PER_HOUR = 3_600_000_000_000
-
 
 def q_gap_fill_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     e = events.select(
         "user_id",
         F.expr(f"CAST(ts DIV {NS_PER_HOUR} AS BIGINT)").alias("hr"),
@@ -275,7 +290,7 @@ def _repr_col(name: str, kind: str, agg) -> Column:
 
 
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     # The local testdata files are single-row-group parquet, so without
     # this the Expand (x7 grouping ids) and the partial sort-aggregate
     # run in ONE task.  At production scale the scan arrives
@@ -342,7 +357,7 @@ PREFIX_MIN_DOCS = 2
 
 
 def q_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     d = documents.where(F.size(toks) >= PREFIX_LEN).select(
         "doc_id",
@@ -392,7 +407,7 @@ LOW_DIVERSITY = 0.90
 
 
 def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("term")
     )
@@ -473,30 +488,26 @@ FROM scored GROUP BY lang
 # corpora use 0.9+.
 SEMDEDUP_TAU = 0.3
 _SD_DIM = 64
-_SD_FOLD = "list_reduce(list_prepend(0.0, {terms}), (acc, x) -> acc + x)"
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.semdedup import semdedup_profile
-    from gtfs_realtime_etl_spark.plans.queries import _label_centroids_rows
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     # The same decimal-stabilized centroid table ann_ivf_topk probes.
-    cents = _label_centroids_rows(spark, sf_dir, _SD_DIM)
+    cents = label_centroids_rows(spark, sf_dir, _SD_DIM)
     return semdedup_profile(embeddings, cents, SEMDEDUP_TAU)
 
 
 def _semantic_dedup_sql() -> str:
-    l2sq = _SD_FOLD.format(
+    l2sq = FOLD_SUM.format(
         terms=(
             "list_transform(range(1, len(e.vec) + 1), "
             "j -> (e.vec[j] - c.centroid[j]) * (e.vec[j] - c.centroid[j]))"
         )
     )
-    dot = _SD_FOLD.format(
+    dot = FOLD_SUM.format(
         terms="list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * b.vec[i])"
     )
-    nrm = "sqrt(" + _SD_FOLD.format(terms="list_transform(e.vec, v -> v * v)") + ")"
+    nrm = "sqrt(" + FOLD_SUM.format(terms="list_transform(e.vec, v -> v * v)") + ")"
     return f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 cdim AS (
@@ -573,9 +584,7 @@ CHUNK_STRIDE = 24
 
 
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.chunking import chunk_documents
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     chunks = chunk_documents(
         documents, chunk_size=CHUNK_SIZE, stride=CHUNK_STRIDE
     )
@@ -627,11 +636,7 @@ FROM c
 
 
 def q_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.hashing import MOD
-    from gtfs_realtime_etl_spark.functions.text import quality_score
-    from gtfs_realtime_etl_spark.operators.splits import split_slot
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     score = quality_score(F.col("text"))
     scored = documents.select(
         "source",
@@ -662,15 +667,11 @@ def q_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_resample_sql() -> str:
-    from gtfs_realtime_etl_spark.functions.hashing import MOD
-    from gtfs_realtime_etl_spark.operators.splits import sql_split_slot
-    from gtfs_realtime_etl_spark.plans import queries as _q
-
     slot = sql_split_slot("doc_id")
     return f"""
 WITH scored AS (
-  SELECT source, doc_id, {_q._QS_SCORE} AS score,
-         {_q._QS_SCORE} * {_q._QS_SCORE} AS p
+  SELECT source, doc_id, {QS_SCORE} AS score,
+         {QS_SCORE} * {QS_SCORE} AS p
   FROM documents
 ),
 flagged AS (
@@ -707,7 +708,7 @@ Q_QUALITY_RESAMPLE_SQL = _quality_resample_sql()
 
 
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
@@ -782,7 +783,7 @@ APPROX_DISTINCT_TOL = 0.025
 
 
 def q_approx_distinct_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     tol = F.lit(APPROX_DISTINCT_TOL)
     exact = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -837,7 +838,7 @@ VOCAB_SALT = 16
 
 
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select(
         "lang", F.explode(tokens(F.col("text"))).alias("term")
     )
@@ -912,10 +913,7 @@ SEMDECON_BENCH_N = 20  # vec_id < 20 plays the benchmark set
 
 
 def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.exprs import _d
-    from gtfs_realtime_etl_spark.functions.vector import l2_norm
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     bench = sorted(
         embeddings.where(F.col("vec_id") < SEMDECON_BENCH_N)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
@@ -943,8 +941,6 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured SLOWER — round-12 probe 1.5 → 2.9 s median — analysis/
     # codegen of ~1300 terms outweighs interpreted-fold eval on a
     # 2000-row corpus.)
-    from gtfs_realtime_etl_spark.functions.vector import sql_dot_fold
-
     cos_texts = []
     for r in bench:
         bn = sum(v * v for v in r["vec"]) ** 0.5
@@ -967,15 +963,15 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_decontam_sql() -> str:
-    dotexpr = _SD_FOLD.format(
+    dotexpr = FOLD_SUM.format(
         terms="list_transform(range(1, len(c.vec) + 1), i -> c.vec[i] * b.vec[i])"
     )
-    ncorp = "sqrt(" + _SD_FOLD.format(terms="list_transform(c.vec, v -> v * v)") + ")"
+    ncorp = "sqrt(" + FOLD_SUM.format(terms="list_transform(c.vec, v -> v * v)") + ")"
     return f"""
 WITH emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
 bench AS (
   SELECT vec_id, vec,
-         sqrt({_SD_FOLD.format(terms="list_transform(vec, v -> v * v)")}) AS bn
+         sqrt({FOLD_SUM.format(terms="list_transform(vec, v -> v * v)")}) AS bn
   FROM emb WHERE vec_id < {SEMDECON_BENCH_N}
 ),
 corpus AS (SELECT vec_id, label, vec FROM emb WHERE vec_id >= {SEMDECON_BENCH_N}),
@@ -1011,9 +1007,7 @@ GROUP_SPLITS = {"train": 0.7, "val": 0.15, "test": 0.15}
 
 
 def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.splits import group_split_assign
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     d = group_split_assign(documents, GROUP_SPLITS, group_col="source")
     leaked = (
         d.groupBy("source")
@@ -1030,11 +1024,6 @@ def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _group_split_sql() -> str:
-    from gtfs_realtime_etl_spark.operators.splits import (
-        sql_group_hash_mixed,
-        sql_split_assign,
-    )
-
     assign = sql_split_assign(sql_group_hash_mixed("source"), GROUP_SPLITS)
     return f"""
 WITH d AS (
@@ -1069,24 +1058,13 @@ Q_GROUP_SPLIT_SQL = _group_split_sql()
 # ties break on the integer key.
 # ---------------------------------------------------------------------------
 
-def _rev() -> Column:
-    # Built lazily: Column construction touches the active SparkContext,
-    # which doesn't exist at module-import time.
-    return F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)")
-    )
 
-
-_REV_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(18,2)) "
-    "* (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
-)
 SHIP_CUTOFF = "1998-01-01"
 SHIP_SEGMENT = "BUILDING"
 
 
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders, lineitem = _t(
+    customer, orders, lineitem = load_testdata(
         spark, sf_dir, "customer", "orders", "lineitem"
     )
     return (
@@ -1102,7 +1080,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
             "o_orderpriority",
         )
-        .agg(F.sum(_rev()).cast("double").alias("revenue"))
+        .agg(F.sum(revenue()).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
     )
@@ -1111,7 +1089,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_SHIPPING_PRIORITY_SQL = f"""
 SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
        o_orderpriority,
-       CAST(SUM({_REV_SQL}) AS DOUBLE) AS revenue
+       CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -1128,7 +1106,7 @@ RETURN_Q_END = "1997-04-01"
 
 
 def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders, lineitem, nation = _t(
+    customer, orders, lineitem, nation = load_testdata(
         spark, sf_dir, "customer", "orders", "lineitem", "nation"
     )
     return (
@@ -1142,7 +1120,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(_rev()).cast("double").alias("revenue"),
+            F.sum(revenue()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -1152,7 +1130,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_RETURNED_ITEMS_SQL = f"""
 SELECT c_custkey, c_name, n_name,
-       CAST(SUM({_REV_SQL}) AS DOUBLE) AS revenue,
+       CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS revenue,
        CAST(COUNT(*) AS BIGINT) AS n_lines
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
@@ -1198,9 +1176,6 @@ EPOCH_SHUFFLE_BUCKETS = 32
 
 
 def _shuffle_key(doc_id: Column, epoch: Column) -> Column:
-    from gtfs_realtime_etl_spark.functions.hashing import MOD
-    from gtfs_realtime_etl_spark.operators.splits import SPLIT_A, SPLIT_B
-
     r = F.pmod(
         F.pmod(doc_id.cast("long"), F.lit(MOD)) * F.lit(SPLIT_A)
         + epoch.cast("long") * F.lit(EPOCH_STRIDE)
@@ -1235,8 +1210,6 @@ def epoch_shuffle_positions(
     # Two-level range rank (see block comment above): contiguous
     # fixed-width key buckets sort in parallel; prefix offsets come from
     # a broadcast-sized per-bucket count.
-    from gtfs_realtime_etl_spark.functions.hashing import MOD
-
     width = (MOD + n_buckets - 1) // n_buckets
     keyed = keyed.withColumn("bucket", (F.col("k") / F.lit(width)).cast("int"))
     local = keyed.withColumn(
@@ -1269,14 +1242,11 @@ def epoch_shuffle_positions(
 
 
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     return epoch_shuffle_positions(documents)
 
 
 def _epoch_shuffle_sql() -> str:
-    from gtfs_realtime_etl_spark.functions.hashing import MOD
-    from gtfs_realtime_etl_spark.operators.splits import SPLIT_A, SPLIT_B
-
     m = f"CAST({MOD} AS BIGINT)"
     blend = (
         f"(((CAST(doc_id AS BIGINT) % {m} + {m}) % {m}) * {SPLIT_A} "
@@ -1300,7 +1270,7 @@ FROM k
 Q_EPOCH_SHUFFLE_SQL = _epoch_shuffle_sql()
 
 
-EXT2_QUERIES = {
+QUERIES = {
     "interval_overlap_join": q_interval_overlap_join,
     "gap_fill_resample": q_gap_fill_resample,
     "table_profile": q_table_profile,
@@ -1319,7 +1289,7 @@ EXT2_QUERIES = {
     "epoch_shuffle": q_epoch_shuffle,
 }
 
-EXT2_ORACLE_SQL = {
+ORACLE_SQL = {
     "interval_overlap_join": Q_INTERVAL_OVERLAP_JOIN_SQL,
     "gap_fill_resample": Q_GAP_FILL_RESAMPLE_SQL,
     "table_profile": Q_TABLE_PROFILE_SQL,

@@ -72,17 +72,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.plans.base import CENTS, NS_PER_DAY, NS_PER_HOUR
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_NS_PER_DAY = 86_400_000_000_000
-_NS_PER_HOUR = 3_600_000_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -218,20 +209,20 @@ def quantize_spearman_components(raw: DataFrame) -> DataFrame:
 
 
 def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     return spearman_moments(
         events.select(
             "event_type",
-            F.expr(_CENTS).alias("x"),
-            F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}").alias("y"),
+            F.expr(CENTS).alias("x"),
+            F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}").alias("y"),
         )
     )
 
 
 Q_SPEARMAN_CORR_SQL = f"""
 WITH base AS (
-  SELECT event_type, {_CENTS} AS x,
-         (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR} AS y
+  SELECT event_type, {CENTS} AS x,
+         (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR} AS y
   FROM events
 ),
 joint AS (
@@ -351,7 +342,7 @@ def seq_pair_support(events: DataFrame) -> DataFrame:
 
 
 def q_seq_pairs_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     return seq_pair_support(events)
 
 
@@ -384,12 +375,12 @@ FROM support CROSS JOIN eligible
 """
 
 
-EXT23_QUERIES = {
+QUERIES = {
     "spearman_corr": q_spearman_corr,
     "seq_pairs_support": q_seq_pairs_support,
 }
 
-EXT23_ORACLE_SQL = {
+ORACLE_SQL = {
     "spearman_corr": Q_SPEARMAN_CORR_SQL,
     "seq_pairs_support": Q_SEQ_PAIRS_SUPPORT_SQL,
 }

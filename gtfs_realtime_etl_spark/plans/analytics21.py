@@ -45,16 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.plans.base import CENTS, NS_PER_DAY
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_NS_PER_DAY = 86_400_000_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -73,8 +65,8 @@ def ewma_daily_anomaly(events: DataFrame) -> DataFrame:
     daily = (
         events.select(
             "event_type",
-            F.expr(f"ts div {_NS_PER_DAY}").alias("day"),
-            F.expr(_CENTS).alias("cents"),
+            F.expr(f"ts div {NS_PER_DAY}").alias("day"),
+            F.expr(CENTS).alias("cents"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("cents").alias("x"))
@@ -118,7 +110,7 @@ def ewma_daily_anomaly(events: DataFrame) -> DataFrame:
 
 
 def q_ewma_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     return ewma_daily_anomaly(events)
 
 
@@ -134,8 +126,8 @@ def _ewma_sql() -> str:
     )
     return f"""
 WITH daily AS (
-  SELECT event_type, epoch_ns(ts) // {_NS_PER_DAY} AS day,
-         CAST(SUM({_CENTS}) AS BIGINT) AS x
+  SELECT event_type, epoch_ns(ts) // {NS_PER_DAY} AS day,
+         CAST(SUM({CENTS}) AS BIGINT) AS x
   FROM events GROUP BY 1, 2
 ),
 lagged AS (
@@ -169,7 +161,7 @@ Q_EWMA_DAILY_ANOMALY_SQL = _ewma_sql()
 
 
 def q_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     firsts = (
         events.filter(F.col("event_type").isin("view", "purchase"))
         .groupBy("user_id")
@@ -189,7 +181,7 @@ def q_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = firsts.select(
         F.expr(
-            f"(first_purchase - first_view) div {_NS_PER_DAY}"
+            f"(first_purchase - first_view) div {NS_PER_DAY}"
         ).alias("delay_days")
     ).groupBy("delay_days").agg(F.count(F.lit(1)).alias("n_users"))
     w = (
@@ -224,7 +216,7 @@ WITH firsts AS (
   GROUP BY 1
 ),
 conv AS (
-  SELECT (first_purchase - first_view) // {_NS_PER_DAY} AS delay_days
+  SELECT (first_purchase - first_view) // {NS_PER_DAY} AS delay_days
   FROM firsts
   WHERE first_view IS NOT NULL AND first_purchase IS NOT NULL
     AND first_purchase > first_view
@@ -256,11 +248,11 @@ MAU_WINDOW_DAYS = 30
 
 
 def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     base = events.select(
         "event_type",
         "user_id",
-        F.expr(f"ts div {_NS_PER_DAY}").alias("day"),
+        F.expr(f"ts div {NS_PER_DAY}").alias("day"),
     ).withColumn("win", F.expr(f"day div {MAU_WINDOW_DAYS}"))
     dau = (
         base.select("event_type", "win", "day", "user_id")
@@ -294,8 +286,8 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_DAU_MAU_STICKINESS_SQL = f"""
 WITH base AS (
   SELECT event_type, user_id,
-         epoch_ns(ts) // {_NS_PER_DAY} AS day,
-         (epoch_ns(ts) // {_NS_PER_DAY}) // {MAU_WINDOW_DAYS} AS win
+         epoch_ns(ts) // {NS_PER_DAY} AS day,
+         (epoch_ns(ts) // {NS_PER_DAY}) // {MAU_WINDOW_DAYS} AS win
   FROM events
 ),
 dau AS (
@@ -319,13 +311,13 @@ FROM dau d JOIN mau m ON d.event_type = m.event_type AND d.win = m.win
 """
 
 
-EXT24_QUERIES = {
+QUERIES = {
     "ewma_daily_anomaly": q_ewma_daily_anomaly,
     "time_to_convert": q_time_to_convert,
     "dau_mau_stickiness": q_dau_mau_stickiness,
 }
 
-EXT24_ORACLE_SQL = {
+ORACLE_SQL = {
     "ewma_daily_anomaly": Q_EWMA_DAILY_ANOMALY_SQL,
     "time_to_convert": Q_TIME_TO_CONVERT_SQL,
     "dau_mau_stickiness": Q_DAU_MAU_STICKINESS_SQL,

@@ -44,15 +44,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.stats import norm_cdf, norm_cdf_sql
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_NS_PER_DAY = 86_400_000_000_000
 _NS_PER_SEC = 1_000_000_000
 _NOON = 12 * 3600
 
@@ -73,7 +68,7 @@ def flagship_day_partials(
         .select(
             "user_id",
             "event_id",
-            F.expr(f"CAST(ts div {_NS_PER_DAY} AS INT)").alias("day"),
+            F.expr(f"CAST(ts div {NS_PER_DAY} AS INT)").alias("day"),
             (
                 F.expr(f"CAST((ts div {_NS_PER_SEC}) % 86400 AS INT)")
                 - F.lit(_NOON)
@@ -137,11 +132,11 @@ def merge_flagship_partials(partials: DataFrame) -> DataFrame:
 
 
 def q_flagship_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events, customer, nation = _t(
+    events, customer, nation = load_testdata(
         spark, sf_dir, "events", "customer", "nation"
     )
     max_day = events.agg(
-        F.expr(f"MAX(CAST(ts div {_NS_PER_DAY} AS INT))").alias("max_day")
+        F.expr(f"MAX(CAST(ts div {NS_PER_DAY} AS INT))").alias("max_day")
     )
     # Range restriction on the RAW fact scan, before the window/join
     # work — the predicate a date-partitioned lake prunes on.
@@ -149,7 +144,7 @@ def q_flagship_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.crossJoin(F.broadcast(max_day))
         .filter(
             F.expr(
-                f"CAST(ts div {_NS_PER_DAY} AS INT)"
+                f"CAST(ts div {NS_PER_DAY} AS INT)"
                 f" >= max_day - {FLAGSHIP_RANGE_DAYS - 1}"
             )
         )
@@ -171,17 +166,17 @@ def _flagship_incremental_sql() -> str:
     z_max = f"((300.0 - {avg}) / {std})"
     return f"""
 WITH maxd AS (
-  SELECT MAX(CAST(epoch_ns(ts) // {_NS_PER_DAY} AS INT)) AS max_day
+  SELECT MAX(CAST(epoch_ns(ts) // {NS_PER_DAY} AS INT)) AS max_day
   FROM events
 ),
 pings AS (
   SELECT user_id, event_id,
-         CAST(epoch_ns(ts) // {_NS_PER_DAY} AS INT) AS day,
+         CAST(epoch_ns(ts) // {NS_PER_DAY} AS INT) AS day,
          CAST((epoch_ns(ts) // {_NS_PER_SEC}) % 86400 AS INT) - {_NOON}
            AS diff
   FROM events, maxd
   WHERE event_type IN ('view', 'click')
-    AND CAST(epoch_ns(ts) // {_NS_PER_DAY} AS INT)
+    AND CAST(epoch_ns(ts) // {NS_PER_DAY} AS INT)
         >= max_day - {FLAGSHIP_RANGE_DAYS - 1}
 ),
 band AS (SELECT * FROM pings WHERE diff BETWEEN -3600 AND 3600),
@@ -221,10 +216,10 @@ FROM merged
 """
 
 
-EXT25_QUERIES = {
+QUERIES = {
     "flagship_incremental": q_flagship_incremental,
 }
 
-EXT25_ORACLE_SQL = {
+ORACLE_SQL = {
     "flagship_incremental": _flagship_incremental_sql(),
 }

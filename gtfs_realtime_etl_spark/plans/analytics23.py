@@ -75,11 +75,6 @@ DEDUP_INC_THRESHOLD = 0.35
 DEDUP_INC_BATCHES = 4
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
 def dedup_incremental_pairs(
     documents: DataFrame,
     n_batches: int = DEDUP_INC_BATCHES,
@@ -148,7 +143,7 @@ def dedup_incremental_pairs(
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     return dedup_incremental_pairs(documents)
 
 
@@ -196,10 +191,10 @@ FROM scored WHERE j >= {DEDUP_INC_THRESHOLD}
 """
 
 
-EXT26_QUERIES = {
+QUERIES = {
     "dedup_incremental": q_dedup_incremental,
 }
 
-EXT26_ORACLE_SQL = {
+ORACLE_SQL = {
     "dedup_incremental": _dedup_incremental_sql(),
 }

@@ -28,15 +28,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_staged
+from gtfs_realtime_etl_spark.functions.exprs import _d
+from gtfs_realtime_etl_spark.functions.stats import (
+    portable_int_log2_sql,
+    portable_int_log2_staged,
+)
 from gtfs_realtime_etl_spark.functions.text import tokens
-from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
+from gtfs_realtime_etl_spark.operators.kmeans import kmeans_assignments, kmeans_fit
+from gtfs_realtime_etl_spark.plans.base import SQL_TOKS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +57,7 @@ def _word_ngrams(toks: Column, n: int) -> Column:
 
 
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     grams = documents.select(
         "doc_id",
         F.explode(F.array_distinct(_word_ngrams(tokens(F.col("text")), NOVELTY_N))).alias(
@@ -113,7 +113,7 @@ GROUP BY g.doc_id
 
 
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select("doc_id", tokens(F.col("text")).alias("t"))
     bg = toks.select(
         "doc_id", F.explode(_word_ngrams(F.col("t"), 2)).alias("bigram")
@@ -184,8 +184,6 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bigram_lm_score_sql() -> str:
-    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_sql
-
     return f"""
 WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 bg AS (
@@ -271,7 +269,6 @@ def _dist_to(vec_sql: str, centroid: list[float]) -> Column:
     640 unrolled terms, duplicated per consumer by CollapseProject,
     cost more in analysis/codegen than interpreted HOF eval costs on a
     2000-row corpus."""
-    from gtfs_realtime_etl_spark.functions.exprs import _d
 
     carr = "array(" + ", ".join(_d(c) for c in centroid) + ")"
     return F.expr(
@@ -283,7 +280,7 @@ def _dist_to(vec_sql: str, centroid: list[float]) -> Column:
 
 
 def q_embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     centroids = _collect_centroids(embeddings)
     labels = sorted(centroids)
     emb = embeddings.select(
@@ -379,12 +376,7 @@ KM_SCALE = 8
 
 
 def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.kmeans import (
-        kmeans_assignments,
-        kmeans_fit,
-    )
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     cents = kmeans_fit(embeddings, k=KM_K, iterations=KM_ITER, scale=KM_SCALE)
     counts = (
         kmeans_assignments(embeddings, cents)
@@ -475,14 +467,14 @@ LEFT JOIN counts n USING (cell_id)
 Q_KMEANS_CENTROIDS_SQL = _kmeans_centroids_sql()
 
 
-EXT5_QUERIES = {
+QUERIES = {
     "ngram_novelty": q_ngram_novelty,
     "bigram_lm_score": q_bigram_lm_score,
     "embedding_silhouette": q_embedding_silhouette,
     "kmeans_centroids": q_kmeans_centroids,
 }
 
-EXT5_ORACLE_SQL = {
+ORACLE_SQL = {
     "ngram_novelty": Q_NGRAM_NOVELTY_SQL,
     "bigram_lm_score": Q_BIGRAM_LM_SCORE_SQL,
     "embedding_silhouette": Q_EMBEDDING_SILHOUETTE_SQL,

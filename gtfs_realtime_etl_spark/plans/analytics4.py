@@ -37,17 +37,19 @@ from gtfs_realtime_etl_spark.functions.hashing import (
     sql_minhash_sig,
     sql_shingle_hashes,
 )
-from gtfs_realtime_etl_spark.functions.text import char_shingles
+from gtfs_realtime_etl_spark.functions.stats import (
+    portable_int_log2_sql,
+    portable_int_log2_staged,
+)
+from gtfs_realtime_etl_spark.functions.text import (
+    AZ_LOWER,
+    AZ_UPPER,
+    char_shingles,
+    tokens,
+)
+from gtfs_realtime_etl_spark.functions.vector import cosine_similarity
+from gtfs_realtime_etl_spark.plans.base import SQL_TOKS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-_AZ_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_AZ_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +78,7 @@ _DEC = "decimal(30,12)"
 
 
 def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = load_testdata(spark, sf_dir, "embeddings")
     e = emb.select(F.col("embedding").cast("array<double>").alias("v"))
     xi = e.select("v", F.posexplode("v").alias("i0", "xi"))
     up = xi.select(
@@ -160,7 +162,7 @@ STD_ROUND = 6
 
 
 def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = load_testdata(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id",
         F.posexplode(
@@ -244,7 +246,7 @@ MJE_TOL = 0.30
 
 
 def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     kern = minhash_text_kernel(MJE_NUM_HASHES, MJE_SHINGLE_K)
     n_tasks = spark.sparkContext.defaultParallelism
     folded = documents.select(
@@ -252,7 +254,7 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_chars",
         F.expr(f"n_chars div {MJE_LEN_BUCKET}").alias("len_bucket"),
-        F.translate(F.col("text"), _AZ_UPPER, _AZ_LOWER).alias("_t"),
+        F.translate(F.col("text"), AZ_UPPER, AZ_LOWER).alias("_t"),
         kern(F.col("text")).alias("sig"),
     ).repartition(n_tasks, "source", "len_bucket")
     docs = folded.select(
@@ -307,7 +309,7 @@ WITH docs AS (
          {sig} AS sig,
          list_distinct(list_transform(
            range(1, GREATEST(length(text) - {MJE_SHINGLE_K - 1}, 1) + 1),
-           i -> substr(translate(text, '{_AZ_UPPER}', '{_AZ_LOWER}'), i, {MJE_SHINGLE_K}))) AS shingles
+           i -> substr(translate(text, '{AZ_UPPER}', '{AZ_LOWER}'), i, {MJE_SHINGLE_K}))) AS shingles
   FROM documents
 )
 SELECT doc_a, doc_b, jaccard, est, abs_err, abs_err <= {MJE_TOL} AS within_tol
@@ -356,7 +358,7 @@ QPROF_EPS = 2.0 / QPROF_ACCURACY
 
 
 def q_approx_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     ps = ", ".join(f"{p}D" for p in QPROF_PS)
     lo = ", ".join(f"{max(p - QPROF_EPS, 0.0)}D" for p in QPROF_PS)
     hi = ", ".join(f"{min(p + QPROF_EPS, 1.0)}D" for p in QPROF_PS)
@@ -439,9 +441,7 @@ def _window_pair_array(t, window: int):
 
 
 def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.text import tokens
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select(tokens(F.col("text")).alias("t"))
     unis = toks.select(F.explode("t").alias("w")).groupBy("w").agg(
         F.count(F.lit(1)).alias("c")
@@ -472,10 +472,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inline instances made plan compile, not data, a visible cost of
     # this query (the round-11 feature_mi finding); arithmetic is
     # bit-identical.
-    from gtfs_realtime_etl_spark.functions.stats import (
-        portable_int_log2_staged,
-    )
-
     lgd = portable_int_log2_staged(
         pair_counts.join(ux, "x")
         .join(uy, "y")
@@ -507,9 +503,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _token_pmi_sql() -> str:
-    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_sql
-    from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
-
     pair_arrays = ", ".join(
         f"list_transform(range(1, GREATEST(len(t) - {d}, 0) + 1), "
         f"i -> concat(LEAST(t[i], t[i + {d}]), ' ', GREATEST(t[i], t[i + {d}])))"
@@ -578,9 +571,7 @@ HN_ANCHORS = 64
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.vector import cosine_similarity
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     emb = embeddings.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
@@ -836,9 +827,7 @@ BPE_TOPK = 50
 
 
 def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.text import tokens
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     words = (
         documents.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
@@ -880,15 +869,13 @@ LIMIT {BPE_TOPK}
 
 
 def _bpe_sql() -> str:
-    from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
-
     return Q_BPE_MERGE_PAIRS_SQL.replace("{toks}", SQL_TOKS)
 
 
 Q_BPE_MERGE_PAIRS_SQL = _bpe_sql()
 
 
-EXT6_QUERIES = {
+QUERIES = {
     "approx_quantile_profile": q_approx_quantile_profile,
     "token_pmi": q_token_pmi,
     "hard_negatives": q_hard_negatives,
@@ -899,7 +886,7 @@ EXT6_QUERIES = {
     "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
 }
 
-EXT6_ORACLE_SQL = {
+ORACLE_SQL = {
     "approx_quantile_profile": Q_APPROX_QUANTILE_PROFILE_SQL,
     "token_pmi": Q_TOKEN_PMI_SQL,
     "hard_negatives": Q_HARD_NEGATIVES_SQL,

@@ -30,20 +30,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.hashing import MOD, token_hash64_column
+from gtfs_realtime_etl_spark.functions.hashing import (
+    MOD,
+    sql_token_hash64,
+    token_hash64_column,
+)
 from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
 from gtfs_realtime_etl_spark.functions.text import tokens
+from gtfs_realtime_etl_spark.functions.vector import cosine_similarity
+from gtfs_realtime_etl_spark.operators.similarity import (
+    pq_adc_topk,
+    pq_codebook_from_ids,
+)
 from gtfs_realtime_etl_spark.operators.sketches import mg_summary
-from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
+from gtfs_realtime_etl_spark.plans.base import (
+    FOLD_SUM,
+    Q_ANN_COSINE_TOPK_SQL,
+    Q_ANN_IVF_TOPK_SQL,
+    Q_ANN_LSH_TOPK_SQL,
+    SQL_TOKS,
+    TOP_K,
+    q_ann_cosine_topk,
+    q_ann_ivf_topk,
+    q_ann_lsh_topk,
+)
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +85,7 @@ HH_TOPK = 40
 
 
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select(F.explode(tokens(F.col("text"))).alias("token"))
     # One groupBy yields BOTH sketch outputs (the per-token estimates
     # and the global decrement scalar D, which lands in the NULL-token
@@ -156,7 +170,7 @@ WS_PER_SOURCE = 5
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     u = (
         F.pmod(token_hash64_column(F.col("doc_id").cast("string")), F.lit(MOD))
         + F.lit(1)
@@ -189,8 +203,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source", "rn")
     )
 
-
-from gtfs_realtime_etl_spark.functions.hashing import sql_token_hash64  # noqa: E402
 
 Q_WEIGHTED_SAMPLE_SQL = f"""
 WITH keyed AS (
@@ -232,7 +244,7 @@ _ZDEC = "decimal(30,15)"
 
 
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     counts = (
         documents.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -335,7 +347,7 @@ MAD_CONSISTENCY = 1.4826
 
 
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     ev = events.select("event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
@@ -419,9 +431,7 @@ RRF_TOPK = 20
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.vector import cosine_similarity
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
@@ -524,13 +534,7 @@ PQ_CODEBOOK_IDS = tuple(range(1, PQ_K + 1))  # vec_id 0 is the query
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_codebook_from_ids,
-    )
-    from gtfs_realtime_etl_spark.plans.queries import TOP_K  # circular at import
-
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     codebook = pq_codebook_from_ids(embeddings, list(PQ_CODEBOOK_IDS), PQ_M)
     q = embeddings.filter(F.col("vec_id") == 0).select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
@@ -550,13 +554,12 @@ def _ann_pq_sql() -> str:
     argmin encoding, the query's ADC tables, and the ranked ADC sums
     entirely in SQL — every float op in the same seeded-fold order as
     the Spark plan and the driver-side table build."""
-    from gtfs_realtime_etl_spark.plans.queries import _FOLD_SUM, TOP_K
 
     d_sub = 64 // PQ_M
 
     def l2sq(vec_elem: str) -> str:
         term = f"({vec_elem} - w.w[j]) * ({vec_elem} - w.w[j])"
-        return _FOLD_SUM.format(
+        return FOLD_SUM.format(
             terms=f"list_transform(range(1, {d_sub} + 1), j -> {term})"
         )
 
@@ -619,15 +622,6 @@ FROM ranked WHERE rank <= {TOP_K}
 
 
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Runtime import: plans.queries imports this bank at its module
-    # bottom, so a module-level import here would be circular.
-    from gtfs_realtime_etl_spark.plans.queries import (
-        TOP_K,
-        q_ann_cosine_topk,
-        q_ann_ivf_topk,
-        q_ann_lsh_topk,
-    )
-
     # Pin ALL FOUR rankings as eager TOP_K-row checkpoints,
     # materialized CONCURRENTLY (Spark schedules jobs submitted from
     # separate driver threads in parallel; the four rankers share no
@@ -676,16 +670,6 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_sql() -> str:
-    # Import at EXT8 build time: plans.queries defines the three ANN
-    # oracles BEFORE it imports this bank, so the partially-initialized
-    # module already carries them (same pattern as _bpe_sql).
-    from gtfs_realtime_etl_spark.plans.queries import (
-        Q_ANN_COSINE_TOPK_SQL,
-        Q_ANN_IVF_TOPK_SQL,
-        Q_ANN_LSH_TOPK_SQL,
-        TOP_K,
-    )
-
     def one(method: str, sql: str) -> str:
         return f"""
 SELECT '{method}' AS method, {TOP_K} AS k,
@@ -705,7 +689,7 @@ JOIN ({sql.strip()}) ap ON ex.vec_id = ap.vec_id
     )
 
 
-EXT8_QUERIES = {
+QUERIES = {
     "ann_pq_topk": q_ann_pq_topk,
     "ann_recall_report": q_ann_recall_report,
     "heavy_hitters": q_heavy_hitters,
@@ -715,7 +699,7 @@ EXT8_QUERIES = {
     "rrf_fusion": q_rrf_fusion,
 }
 
-EXT8_ORACLE_SQL = {
+ORACLE_SQL = {
     "ann_pq_topk": _ann_pq_sql(),
     "ann_recall_report": _ann_recall_sql(),
     "heavy_hitters": Q_HEAVY_HITTERS_SQL,

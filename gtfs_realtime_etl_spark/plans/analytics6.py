@@ -32,25 +32,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.functions.stats import (
+    portable_int_log2_sql,
+    portable_int_log2_staged,
+)
+from gtfs_realtime_etl_spark.functions.text import tokens
 from gtfs_realtime_etl_spark.operators.bpe import (
     _symbols,
     apply_merges,
     bpe_train,
     word_dictionary,
 )
-from gtfs_realtime_etl_spark.plans.analytics import SQL_TOKS
+from gtfs_realtime_etl_spark.operators.diff import snapshot_diff
+from gtfs_realtime_etl_spark.plans.base import (
+    Q_DEDUP_NGRAM_JACCARD_SQL,
+    Q_MINHASH_LSH_PAIRS_SQL,
+    Q_SIMHASH_PAIRS_SQL,
+    SQL_TOKS,
+    q_dedup_ngram_jaccard,
+    q_minhash_lsh_pairs,
+    q_simhash_pairs,
+)
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 BPE_MERGES = 8
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     merges = bpe_train(documents, n_merges=BPE_MERGES)
     return spark.createDataFrame(
         [
@@ -62,7 +71,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     merges = bpe_train(documents, n_merges=BPE_MERGES)
     encoded = word_dictionary(documents).select(
         apply_merges(F.col("s"), merges).alias("s"), "c"
@@ -149,7 +158,7 @@ K_ANON_BAND = 1000
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = load_testdata(spark, sf_dir, "customer")
     classes = (
         customer.select(
             "c_nationkey",
@@ -213,7 +222,7 @@ L_DIV_L = 2
 
 
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_testdata(spark, sf_dir, "customer", "orders")
     qi = customer.select(
         "c_custkey",
         "c_nationkey",
@@ -291,10 +300,7 @@ _BM_DEC = "decimal(30,15)"
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_staged
-    from gtfs_realtime_etl_spark.functions.text import tokens
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     # NO token explode, NO token-stream shuffle: dl and the |Q| term
     # frequencies are per-doc HOF projections over the tokens array
     # (size / size∘filter — array traversals, not exchanges), and ALL
@@ -379,8 +385,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_sql() -> str:
-    from gtfs_realtime_etl_spark.functions.stats import portable_int_log2_sql
-
     terms = ", ".join(f"'{t}'" for t in BM25_QUERY)
     lg_n = portable_int_log2_sql("2 * n_docs + 2", "bn")
     lg_d = portable_int_log2_sql("2 * df + 1", "bd")
@@ -443,14 +447,6 @@ _DEDUP_METHOD_PAIRS = (
 
 
 def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Late imports: plans.queries defines these three entries BEFORE it
-    # imports this bank (same pattern as ann_recall_report).
-    from gtfs_realtime_etl_spark.plans.queries import (
-        q_dedup_ngram_jaccard,
-        q_minhash_lsh_pairs,
-        q_simhash_pairs,
-    )
-
     ng = q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.lit("ngram").alias("m"), F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
@@ -524,12 +520,6 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_agreement_sql() -> str:
-    from gtfs_realtime_etl_spark.plans.queries import (
-        Q_DEDUP_NGRAM_JACCARD_SQL,
-        Q_MINHASH_LSH_PAIRS_SQL,
-        Q_SIMHASH_PAIRS_SQL,
-    )
-
     seed = ", ".join(f"('{a}', '{b}')" for a, b in _DEDUP_METHOD_PAIRS)
     return f"""
 WITH ng AS ({Q_DEDUP_NGRAM_JACCARD_SQL.strip()}),
@@ -596,7 +586,7 @@ def _chk_agg(df: DataFrame, name: str, canonical) -> DataFrame:
 
 
 def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders, documents = _t(
+    customer, orders, documents = load_testdata(
         spark, sf_dir, "customer", "orders", "documents"
     )
     cust = _chk_agg(
@@ -681,7 +671,7 @@ Q_TABLE_CHECKSUM_SQL = (
 def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c"))
     # bit_length bucket: length(bin(c)) - 1 == floor(log2 c), monotone.
     bucketed = counts.withColumn(
@@ -784,9 +774,7 @@ _DIFF_KEY_OFFSET = 10_000_000_000
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.diff import snapshot_diff
-
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     kept = base.where(F.col("o_orderkey") % _DIFF_DEL != 0)
     mutated = kept.withColumn(
@@ -906,7 +894,7 @@ def _cm_sketch(counts: DataFrame, key: str) -> DataFrame:
 
 
 def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, events = _t(spark, sf_dir, "orders", "events")
+    orders, events = load_testdata(spark, sf_dir, "orders", "events")
     ca = orders.groupBy(F.col("o_custkey").alias("k")).agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -1031,7 +1019,7 @@ def _bloom_positions(df: DataFrame, key: str) -> DataFrame:
 
 
 def q_bloom_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_testdata(spark, sf_dir, "customer", "orders")
     build = customer.where(
         F.col("c_mktsegment") == BLOOM_SEGMENT
     ).select(F.col("c_custkey").alias("k"))
@@ -1129,7 +1117,7 @@ FROM flags
 Q_BLOOM_PRUNE_STATS_SQL = _bloom_sql()
 
 
-EXT9_QUERIES = {
+QUERIES = {
     "bpe_train": q_bpe_train,
     "bpe_encode_stats": q_bpe_encode_stats,
     "k_anonymity": q_k_anonymity,
@@ -1143,7 +1131,7 @@ EXT9_QUERIES = {
     "bloom_prune_stats": q_bloom_prune_stats,
 }
 
-EXT9_ORACLE_SQL = {
+ORACLE_SQL = {
     "bpe_train": Q_BPE_TRAIN_SQL,
     "bpe_encode_stats": Q_BPE_ENCODE_STATS_SQL,
     "k_anonymity": Q_K_ANONYMITY_SQL,

@@ -47,17 +47,9 @@ from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
-from gtfs_realtime_etl_spark.plans.analytics import (
-    _NS_PER_DAY,
-    _NS_PER_HOUR,
-    SQL_TOKS,
-)
+from gtfs_realtime_etl_spark.functions.text import tokens
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY, NS_PER_HOUR, SQL_TOKS
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +77,7 @@ def _skyline_prune(df: DataFrame, part_col: str) -> DataFrame:
 
 
 def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     pts = orders.groupBy("o_totalprice", "o_orderdate").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.min("o_orderkey").alias("min_orderkey"),
@@ -221,10 +213,12 @@ def _mi_pair(df: DataFrame, x: str, y: str, pair_name: str) -> DataFrame:
 
 
 def q_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, lineitem, events = _t(spark, sf_dir, "orders", "lineitem", "events")
+    orders, lineitem, events = load_testdata(
+        spark, sf_dir, "orders", "lineitem", "events"
+    )
     ev = events.select(
         "event_type",
-        F.expr(f"(ts % {_NS_PER_DAY}) div {_NS_PER_HOUR}").alias("hour"),
+        F.expr(f"(ts % {NS_PER_DAY}) div {NS_PER_HOUR}").alias("hour"),
     )
     return (
         _mi_pair(orders, "o_orderpriority", "o_orderstatus", "priority_status")
@@ -293,7 +287,7 @@ SELECT pair, n_rows, k_x, k_y, log2n_micro, mi_sum_micro, hx_sum_micro,
 
 def _feature_mi_sql() -> str:
     ev = (
-        f"(SELECT event_type, (epoch_ns(ts) % {_NS_PER_DAY}) // {_NS_PER_HOUR}"
+        f"(SELECT event_type, (epoch_ns(ts) % {NS_PER_DAY}) // {NS_PER_HOUR}"
         " AS hour FROM events)"
     )
     parts = [
@@ -333,7 +327,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     this shape on the same data.  Item frequencies and the basket
     count are catalog-/scalar-sized side outputs (broadcast; the 1-row
     basket total is the SCALAR_BNLJ_OK pattern)."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     li = lineitem.select(
         F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
     )
@@ -425,9 +419,7 @@ PHRASE = ("slow", "hash", "batch")
 
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.functions.text import tokens
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     m = len(PHRASE)
     arr = tokens(F.col("text"))
     d = documents.select("doc_id", "source", arr.alias("t"))
@@ -485,14 +477,14 @@ FROM hits WHERE len(pos) > 0
 Q_PHRASE_SEARCH_SQL = _phrase_search_sql()
 
 
-EXT10_QUERIES = {
+QUERIES = {
     "skyline_pareto": q_skyline_pareto,
     "feature_mi": q_feature_mi,
     "basket_rules": q_basket_rules,
     "phrase_search": q_phrase_search,
 }
 
-EXT10_ORACLE_SQL = {
+ORACLE_SQL = {
     "skyline_pareto": Q_SKYLINE_PARETO_SQL,
     "feature_mi": Q_FEATURE_MI_SQL,
     "basket_rules": Q_BASKET_RULES_SQL,

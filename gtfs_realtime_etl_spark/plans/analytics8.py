@@ -53,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.exprs import lit_double_matrix
-
 from gtfs_realtime_etl_spark.functions.stats import (
     portable_int_log2_sql,
     portable_int_log2_staged,
@@ -62,12 +61,8 @@ from gtfs_realtime_etl_spark.plans.analytics7 import _lg_micro_sql
 from gtfs_realtime_etl_spark.plans.graph import _KNN_CTES, _knn_edges
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
+
 _DEC = "decimal(30,12)"
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +81,7 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n1·n2)⌋`` are BIGINT-safe while ``n1·n2 < 2^63`` (~3·10⁹ rows per
     side per type); past that, lift the products to DECIMAL — the
     arithmetic is unchanged."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     ev = events.select(
         "event_type",
         "value",
@@ -185,7 +180,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     past janino's 64 KB method limit (interpreted-fallback ERROR in
     the logs); the staged form's named intermediates keep the
     projection small enough to stay in codegen."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     binned = orders.select(
         F.least(
             F.floor(F.col("o_totalprice") / PSI_BIN_WIDTH), F.lit(PSI_MAX_BIN)
@@ -344,7 +339,7 @@ def link_candidates(und: DataFrame) -> DataFrame:
 
 
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     und = (
         _knn_edges(embeddings)
         .select(F.least("s", "d").alias("lo"), F.greatest("s", "d").alias("hi"))
@@ -426,7 +421,7 @@ RP_SIGNS = _rp_signs()
 
 
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = load_testdata(spark, sf_dir, "embeddings")
     signs_lit = lit_double_matrix(RP_SIGNS)
     x = emb.select(
         "vec_id",
@@ -476,14 +471,14 @@ GROUP BY vec_id, j
 """
 
 
-EXT11_QUERIES = {
+QUERIES = {
     "ks_drift": q_ks_drift,
     "psi_drift": q_psi_drift,
     "link_prediction": q_link_prediction,
     "random_projection": q_random_projection,
 }
 
-EXT11_ORACLE_SQL = {
+ORACLE_SQL = {
     "ks_drift": Q_KS_DRIFT_SQL,
     "psi_drift": Q_PSI_DRIFT_SQL,
     "link_prediction": Q_LINK_PREDICTION_SQL,

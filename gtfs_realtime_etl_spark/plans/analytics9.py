@@ -72,31 +72,25 @@ from gtfs_realtime_etl_spark.functions.stats import (
 )
 from gtfs_realtime_etl_spark.functions.text import char_shingles
 from gtfs_realtime_etl_spark.plans.analytics7 import _lg_micro_sql
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
 # cusum_changepoint
 # ---------------------------------------------------------------------------
 
-_NS_PER_DAY = 86_400_000_000_000
-
 
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact CUSUM change-point per event type (module doc)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     daily = (
         events.select(
             "event_type",
             # Integer `div`, never float division: ts ~1.7e18 ns loses
             # ulp-level precision as a double, which could flip a row
             # sitting on a day boundary.
-            F.expr(f"ts div {_NS_PER_DAY}L").alias("day"),
+            F.expr(f"ts div {NS_PER_DAY}L").alias("day"),
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -147,7 +141,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_CUSUM_CHANGEPOINT_SQL = f"""
 WITH daily AS (
-  SELECT event_type, epoch_ns(ts) // {_NS_PER_DAY} AS day,
+  SELECT event_type, epoch_ns(ts) // {NS_PER_DAY} AS day,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ),
@@ -195,7 +189,7 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see the body comment) — the former inline Horner chains pushed
     the projection past janino's method limit and dominated plan
     construction."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     bins = (
         lineitem.select(
             F.floor("l_quantity").cast("long").alias("thr"),
@@ -368,7 +362,7 @@ def q_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     (module doc).  Sufficient statistics are decimal-exact; the Cramer
     solve runs on doubles cast from those sums with the same
     expression order as the oracle."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     x1 = F.col("l_quantity").cast(_DEC_QTY)
     x2 = F.col("l_discount").cast(_DEC_DISC)
     y = F.col("l_extendedprice").cast(_DEC_MONEY)
@@ -525,7 +519,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order vs lexicographic layout zone-map statistics (module
     doc).  One scan computes both codes; each layout is one small
     group-by over its bucket key."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     xb = F.least(
         F.floor(F.col("o_totalprice") / Z_PRICE_STEP).cast("long"),
         F.lit(255).cast("long"),
@@ -616,7 +610,7 @@ def q_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, term) world behind an anti-join every round: 28 s bench /
     75 s cold at sf0.1.  Collects per round: the 1-row argmax and the
     picked doc's term array (the covered-set update)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     # Per-doc dedup happens ROW-SIDE (array_distinct, no explode): the
     # persisted table is doc-grain — one row per doc with its distinct
     # k-gram array — a pure narrow map over the scan, never shuffled.
@@ -744,7 +738,7 @@ def _greedy_coverage_sql() -> str:
 Q_GREEDY_COVERAGE_SQL = _greedy_coverage_sql()
 
 
-EXT12_QUERIES = {
+QUERIES = {
     "cusum_changepoint": q_cusum_changepoint,
     "decision_stump": q_decision_stump,
     "ols_regression": q_ols_regression,
@@ -752,7 +746,7 @@ EXT12_QUERIES = {
     "greedy_coverage": q_greedy_coverage,
 }
 
-EXT12_ORACLE_SQL = {
+ORACLE_SQL = {
     "cusum_changepoint": Q_CUSUM_CHANGEPOINT_SQL,
     "decision_stump": Q_DECISION_STUMP_SQL,
     "ols_regression": Q_OLS_REGRESSION_SQL,

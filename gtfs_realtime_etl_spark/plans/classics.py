@@ -23,7 +23,7 @@ for the business question:
 - ``promo_share``        (Q14) conditional-aggregate ratio in one pass.
 
 Cross-engine determinism rules are the same as the other banks
-(``plans.queries`` docstring): DECIMAL(18,2) sums for anything
+(``plans.base`` docstring): DECIMAL(18,2) sums for anything
 accumulated, IEEE-double division only on identically-computed
 operands, integer tie-breaks on every ORDER BY/LIMIT cut, and
 aggregate aliases identical between the DataFrame and the oracle SQL.
@@ -46,28 +46,12 @@ equivalent surface.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.operators.asof import asof_join
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY, REVENUE_SQL, revenue
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-def _rev() -> Column:
-    # Lazy: Column construction needs an active SparkContext.
-    return F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)")
-    )
-
-
-_REV_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(18,2)) "
-    "* (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +70,9 @@ Q2_MAX_SIZE = 10
 
 
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, supplier, lineitem = _t(spark, sf_dir, "part", "supplier", "lineitem")
+    part, supplier, lineitem = load_testdata(
+        spark, sf_dir, "part", "supplier", "lineitem"
+    )
     small_parts = part.filter(
         (F.col("p_type") == Q2_TYPE) & (F.col("p_size") <= Q2_MAX_SIZE)
     )
@@ -161,7 +147,7 @@ Q13_EXCLUDE_PRIORITY = "1-URGENT"
 
 
 def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_testdata(spark, sf_dir, "customer", "orders")
     per_cust = (
         customer.join(
             orders.filter(F.col("o_orderpriority") != Q13_EXCLUDE_PRIORITY),
@@ -212,7 +198,7 @@ Q17_FRACTION = 0.2
 
 
 def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, lineitem = _t(spark, sf_dir, "part", "lineitem")
+    part, lineitem = load_testdata(spark, sf_dir, "part", "lineitem")
     small = part.filter(F.col("p_type") == Q17_TYPE).select("p_partkey")
     li = lineitem.join(
         F.broadcast(small), F.col("l_partkey") == F.col("p_partkey")
@@ -267,7 +253,7 @@ Q18_MIN_QTY = 300
 
 
 def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders, lineitem = _t(
+    customer, orders, lineitem = load_testdata(
         spark, sf_dir, "customer", "orders", "lineitem"
     )
     big = (
@@ -329,7 +315,7 @@ Q21_LATE_DAYS = 60
 
 
 def q_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier, orders, lineitem = _t(
+    supplier, orders, lineitem = load_testdata(
         spark, sf_dir, "supplier", "orders", "lineitem"
     )
     final_orders = orders.filter(F.col("o_orderstatus") == "F").select(
@@ -419,7 +405,7 @@ Q22_IDLE_SINCE = "2000-01-01"
 
 
 def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_testdata(spark, sf_dir, "customer", "orders")
     avg_bal = customer.filter(F.col("c_acctbal") > 0).agg(
         (
             F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
@@ -474,13 +460,13 @@ Q15_END = "1998-04-01"
 
 
 def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier, lineitem = _t(spark, sf_dir, "supplier", "lineitem")
+    supplier, lineitem = load_testdata(spark, sf_dir, "supplier", "lineitem")
     rev = (
         lineitem.filter(
             (F.col("l_shipdate") >= Q15_START) & (F.col("l_shipdate") < Q15_END)
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(_rev()).alias("total_rev_dec"))
+        .agg(F.sum(revenue()).alias("total_rev_dec"))
     )
     max_rev = rev.agg(F.max("total_rev_dec").alias("max_rev_dec"))
     return (
@@ -501,7 +487,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_TOP_SUPPLIER_SQL = f"""
 WITH rev AS (
-  SELECT l_suppkey, SUM({_REV_SQL}) AS total_rev_dec
+  SELECT l_suppkey, SUM({REVENUE_SQL}) AS total_rev_dec
   FROM lineitem
   WHERE l_shipdate >= '{Q15_START}' AND l_shipdate < '{Q15_END}'
   GROUP BY l_suppkey
@@ -521,7 +507,9 @@ ORDER BY s_suppkey
 # ---------------------------------------------------------------------------
 
 def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, supplier, lineitem = _t(spark, sf_dir, "part", "supplier", "lineitem")
+    part, supplier, lineitem = load_testdata(
+        spark, sf_dir, "part", "supplier", "lineitem"
+    )
     excluded = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         lineitem.join(
@@ -574,7 +562,7 @@ Q11_MEAN_MULTIPLE = 1.3
 
 
 def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     per_part = lineitem.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("val_dec")
     )
@@ -620,7 +608,7 @@ Q14_MONTH_END = "1997-07-01"
 
 
 def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, lineitem = _t(spark, sf_dir, "part", "lineitem")
+    part, lineitem = load_testdata(spark, sf_dir, "part", "lineitem")
     return (
         lineitem.filter(
             (F.col("l_shipdate") >= Q14_MONTH_START)
@@ -631,9 +619,9 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0).cast("decimal(18,2)")))
+            F.sum(F.when(F.col("p_type") == "PROMO", revenue()).otherwise(F.lit(0).cast("decimal(18,2)")))
             .alias("promo_dec"),
-            F.sum(_rev()).alias("total_dec"),
+            F.sum(revenue()).alias("total_dec"),
         )
         .select(
             (
@@ -648,13 +636,13 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_PROMO_SHARE_SQL = f"""
-SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_REV_SQL}
+SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {REVENUE_SQL}
                              ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-             / CAST(SUM({_REV_SQL}) AS DOUBLE) AS promo_share_pct,
-       CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_REV_SQL}
+             / CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS promo_share_pct,
+       CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {REVENUE_SQL}
                      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
          AS promo_revenue,
-       CAST(SUM({_REV_SQL}) AS DOUBLE) AS total_revenue
+       CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS total_revenue
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= '{Q14_MONTH_START}' AND l_shipdate < '{Q14_MONTH_END}'
 """
@@ -670,7 +658,7 @@ WHERE l_shipdate >= '{Q14_MONTH_START}' AND l_shipdate < '{Q14_MONTH_END}'
 # ---------------------------------------------------------------------------
 
 def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, supplier, part, orders, lineitem = _t(
+    customer, supplier, part, orders, lineitem = load_testdata(
         spark, sf_dir, "customer", "supplier", "part", "orders", "lineitem"
     )
 
@@ -723,7 +711,7 @@ FROM orders WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey
 # ---------------------------------------------------------------------------
 
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
         events.select(
@@ -802,7 +790,7 @@ RECON_P2_START, RECON_P2_END = "1997-07-01", "1998-01-01"
 
 
 def q_period_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
+    orders, lineitem = load_testdata(spark, sf_dir, "orders", "lineitem")
     li = lineitem.join(
         orders.select("o_orderkey", "o_custkey", "o_orderdate"),
         F.col("l_orderkey") == F.col("o_orderkey"),
@@ -814,7 +802,7 @@ def q_period_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("o_orderdate") >= start) & (F.col("o_orderdate") < end)
             )
             .groupBy(F.col("o_custkey").alias(f"{out}_custkey"))
-            .agg(F.sum(_rev()).alias(f"{out}_rev_dec"))
+            .agg(F.sum(revenue()).alias(f"{out}_rev_dec"))
         )
 
     h1 = period(RECON_P1_START, RECON_P1_END, "h1")
@@ -847,7 +835,7 @@ def q_period_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_PERIOD_RECONCILIATION_SQL = f"""
 WITH li AS (
-  SELECT o_custkey, o_orderdate, {_REV_SQL} AS rev
+  SELECT o_custkey, o_orderdate, {REVENUE_SQL} AS rev
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 ),
 h1 AS (
@@ -890,9 +878,7 @@ ORDER BY segment
 # ---------------------------------------------------------------------------
 
 def q_point_in_time_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.asof import asof_join
-
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("purchase_value")
     )
@@ -960,7 +946,7 @@ ORDER BY state
 # ---------------------------------------------------------------------------
 
 def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_testdata(spark, sf_dir, "orders")
     o = orders.select(
         F.year("o_orderdate").alias("order_year"),
         F.col("o_orderpriority").alias("priority"),
@@ -1013,11 +999,9 @@ GROUP BY GROUPING SETS (
 # all-integer epoch-day math.
 # ---------------------------------------------------------------------------
 
-NS_PER_DAY = 86_400_000_000_000
-
 
 def q_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_testdata(spark, sf_dir, "events")
     days = (
         events.select(
             "user_id", F.expr(f"ts div {NS_PER_DAY}").alias("day")
@@ -1070,7 +1054,7 @@ GROUP BY user_id
 """
 
 
-EXT3_QUERIES = {
+QUERIES = {
     "min_cost_supplier": q_min_cost_supplier,
     "order_count_distribution": q_order_count_distribution,
     "small_qty_revenue": q_small_qty_revenue,
@@ -1089,7 +1073,7 @@ EXT3_QUERIES = {
     "activity_islands": q_activity_islands,
 }
 
-EXT3_ORACLE_SQL = {
+ORACLE_SQL = {
     "min_cost_supplier": Q_MIN_COST_SUPPLIER_SQL,
     "order_count_distribution": Q_ORDER_COUNT_DISTRIBUTION_SQL,
     "small_qty_revenue": Q_SMALL_QTY_REVENUE_SQL,

@@ -26,27 +26,11 @@ revenue aggregate in the registry.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.plans.base import REVENUE_SQL, revenue
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
-
-
-def _rev() -> Column:
-    return F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)")
-    )
-
-
-_REV_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(18,2)) "
-    "* (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +45,7 @@ Q4_START, Q4_END = "1996-01-01", "1996-07-01"
 
 
 def q_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
+    orders, lineitem = load_testdata(spark, sf_dir, "orders", "lineitem")
     o = orders.where(
         (F.col("o_orderdate") >= Q4_START) & (F.col("o_orderdate") < Q4_END)
     )
@@ -101,7 +85,7 @@ Q6_QTY_CAP = 24
 
 
 def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_testdata(spark, sf_dir, "lineitem")
     disc_rev = F.col("l_extendedprice").cast("decimal(18,2)") * F.col(
         "l_discount"
     ).cast("decimal(18,2)")
@@ -139,7 +123,7 @@ Q7_NATION_A, Q7_NATION_B = "NATION_1", "NATION_2"
 
 
 def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, orders, customer, supplier, nation = _t(
+    lineitem, orders, customer, supplier, nation = load_testdata(
         spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
     )
     n1 = nation.select(
@@ -169,7 +153,7 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
-        .agg(F.sum(_rev()).cast("double").alias("revenue"))
+        .agg(F.sum(revenue()).cast("double").alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -180,7 +164,7 @@ SELECT supp_nation, cust_nation, l_year,
 FROM (
   SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
          CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-         {_REV_SQL} AS volume
+         {REVENUE_SQL} AS volume
   FROM lineitem
   JOIN orders   ON l_orderkey = o_orderkey
   JOIN supplier ON l_suppkey = s_suppkey
@@ -209,7 +193,7 @@ Q8_NATION = "NATION_3"
 
 
 def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, orders, customer, supplier, nation, region, part = _t(
+    lineitem, orders, customer, supplier, nation, region, part = load_testdata(
         spark, sf_dir,
         "lineitem", "orders", "customer", "supplier", "nation", "region", "part",
     )
@@ -237,7 +221,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("s_nk"))
     )
-    vol = _rev()
+    vol = revenue()
     by_year = df.groupBy(F.year("o_orderdate").alias("o_year")).agg(
         F.sum(F.when(F.col("supp_nation") == Q8_NATION, vol)).alias("nat"),
         F.sum(vol).alias("tot"),
@@ -250,7 +234,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_MARKET_SHARE_SQL = f"""
 WITH vols AS (
   SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-         {_REV_SQL} AS volume,
+         {REVENUE_SQL} AS volume,
          sn.n_name AS supp_nation
   FROM lineitem
   JOIN part     ON l_partkey = p_partkey AND p_type = '{Q8_TYPE}'
@@ -282,7 +266,7 @@ Q9_PATTERN = "%red%"
 
 
 def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, supplier, nation, part = _t(
+    lineitem, supplier, nation, part = load_testdata(
         spark, sf_dir, "lineitem", "supplier", "nation", "part"
     )
     df = (
@@ -297,7 +281,7 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.groupBy(
             F.col("n_name").alias("nation"), F.year("l_shipdate").alias("o_year")
         )
-        .agg(F.sum(_rev()).cast("double").alias("sum_profit"))
+        .agg(F.sum(revenue()).cast("double").alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 
@@ -305,7 +289,7 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_PRODUCT_PROFIT_SQL = f"""
 SELECT n_name AS nation,
        CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS o_year,
-       CAST(SUM({_REV_SQL}) AS DOUBLE) AS sum_profit
+       CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS sum_profit
 FROM lineitem
 JOIN part     ON l_partkey = p_partkey AND p_name LIKE '{Q9_PATTERN}'
 JOIN supplier ON l_suppkey = s_suppkey
@@ -326,7 +310,7 @@ Q12_HIGH = ("1-URGENT", "2-HIGH")
 
 
 def q_priority_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, orders = _t(spark, sf_dir, "lineitem", "orders")
+    lineitem, orders = load_testdata(spark, sf_dir, "lineitem", "orders")
     df = lineitem.where(
         (F.col("l_shipdate") >= Q12_START) & (F.col("l_shipdate") < Q12_END)
     ).join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -371,7 +355,7 @@ Q19_BRACKETS = (
 
 
 def q_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, part = _t(spark, sf_dir, "lineitem", "part")
+    lineitem, part = load_testdata(spark, sf_dir, "lineitem", "part")
     df = lineitem.join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     )
@@ -383,7 +367,7 @@ def q_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(qlo, qhi)
         )
         pred = b if pred is None else (pred | b)
-    return df.where(pred).agg(F.sum(_rev()).cast("double").alias("revenue"))
+    return df.where(pred).agg(F.sum(revenue()).cast("double").alias("revenue"))
 
 
 def _q19_sql() -> str:
@@ -393,7 +377,7 @@ def _q19_sql() -> str:
         for b, slo, shi, qlo, qhi in Q19_BRACKETS
     )
     return f"""
-SELECT CAST(SUM({_REV_SQL}) AS DOUBLE) AS revenue
+SELECT CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS revenue
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE {brackets}
 """
@@ -415,7 +399,9 @@ Q20_QTY = 45.0
 
 
 def q_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem, supplier, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
+    lineitem, supplier, part = load_testdata(
+        spark, sf_dir, "lineitem", "supplier", "part"
+    )
     shipped = (
         lineitem.where(
             (F.col("l_shipdate") >= Q20_START) & (F.col("l_shipdate") < Q20_END)
@@ -452,7 +438,7 @@ ORDER BY s_name
 """
 
 
-EXT7_QUERIES = {
+QUERIES = {
     "priority_check": q_priority_check,
     "forecast_revenue": q_forecast_revenue,
     "volume_shipping": q_volume_shipping,
@@ -463,7 +449,7 @@ EXT7_QUERIES = {
     "promo_suppliers": q_promo_suppliers,
 }
 
-EXT7_ORACLE_SQL = {
+ORACLE_SQL = {
     "priority_check": Q_PRIORITY_CHECK_SQL,
     "forecast_revenue": Q_FORECAST_REVENUE_SQL,
     "volume_shipping": Q_VOLUME_SHIPPING_SQL,

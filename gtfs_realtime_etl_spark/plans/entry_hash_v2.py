@@ -26,7 +26,10 @@ depth), hashing:
 Residual blindness (documented, accepted): class attributes, closures
 created at runtime, dict/list module constants (unhashable reprs are
 included via repr too, but insertion order could differ across
-versions), and anything reached only through dynamic dispatch.
+versions), and anything reached only through dynamic dispatch.  A
+callee imported inside a function body would be invisible too, since
+the walk reads module globals; ``tests/test_layering.py`` bars such
+imports in ``plans/``, ``functions/`` and ``operators/``.
 
 This module is STANDALONE (stdlib only — no pyspark, no package
 imports) and lives inside the package so installed / packaged

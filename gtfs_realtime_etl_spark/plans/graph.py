@@ -31,14 +31,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.hashing import sql_shingle_hashes
+from gtfs_realtime_etl_spark.functions.hashing import (
+    sql_shingle_hashes,
+    winnow_profile_kernel,
+)
+from gtfs_realtime_etl_spark.operators.clusters import connected_components
+from gtfs_realtime_etl_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    jaccard_pairs,
+    winnow_candidates,
+)
 from gtfs_realtime_etl_spark.operators.pagerank import pagerank
+from gtfs_realtime_etl_spark.plans.base import COS_DOT, COS_NORM_A, COS_NORM_B
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_testdata(spark, sf_dir, tables=tuple(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +161,7 @@ def _knn_edges(embeddings: DataFrame) -> DataFrame:
 
 
 def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     ranks = pagerank(
         _knn_edges(embeddings),
         iterations=PR_ITERATIONS,
@@ -171,22 +176,15 @@ def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Oracle: the same cosine left-folds as Q_EMBEDDING_NEARDUP_SQL, then
 # the power iteration unrolled into PR_ITERATIONS chained CTEs.
-_FOLD_SUM = "list_reduce(list_prepend(0.0, {terms}), (acc, x) -> acc + x)"
-_COS_DOT = _FOLD_SUM.format(
-    terms="list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * b.vec[i])"
-)
-_COS_NORM_A = "sqrt(" + _FOLD_SUM.format(terms="list_transform(a.vec, v -> v * v)") + ")"
-_COS_NORM_B = "sqrt(" + _FOLD_SUM.format(terms="list_transform(b.vec, v -> v * v)") + ")"
-
-
+#
 #: Shared oracle prefix: the engine-exact kNN edge set (emb / pairs /
 #: knn CTEs) — consumed by both the PageRank and the triangle-count
 #: oracles so the two entries verify against the SAME graph text.
 _KNN_CTES = f"""emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS s, b.vec_id AS d,
-         ROUND((CASE WHEN {_COS_NORM_A} * {_COS_NORM_B} > 0
-                    THEN {_COS_DOT} / ({_COS_NORM_A} * {_COS_NORM_B})
+         ROUND((CASE WHEN {COS_NORM_A} * {COS_NORM_B} > 0
+                    THEN {COS_DOT} / ({COS_NORM_A} * {COS_NORM_B})
                     ELSE 0.0 END) * 1e6, 0) / 1e6 AS cosine
   FROM emb a JOIN emb b ON a.label = b.label AND a.vec_id <> b.vec_id
 ),
@@ -256,9 +254,7 @@ def q_winnow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel does shingles + stride-view window minima in one numpy
     # pass — pinned bit-identical to a pure-Python reference by
     # tests/test_winnow.py and to the DuckDB oracle below.
-    from gtfs_realtime_etl_spark.functions.hashing import winnow_profile_kernel
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     prof = winnow_profile_kernel(WINNOW_K, WINNOW_W)
     return (
         documents.select("doc_id", prof(F.col("text")).alias("p"))
@@ -328,13 +324,7 @@ def _winnow_corpus(documents: DataFrame) -> DataFrame:
 
 
 def q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gtfs_realtime_etl_spark.operators.clusters import connected_components
-    from gtfs_realtime_etl_spark.operators.dedup import (
-        jaccard_pairs,
-        winnow_candidates,
-    )
-
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_testdata(spark, sf_dir, "documents")
     corpus = _winnow_corpus(documents)
     cand = winnow_candidates(
         corpus, shingle_k=WINNOW_K, window=WINNOW_W, min_shared=WD_MIN_SHARED
@@ -355,8 +345,6 @@ def q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _winnow_dedup_sql() -> str:
-    from gtfs_realtime_etl_spark.operators.dedup import DEFAULT_MAX_BUCKET
-
     core = " || ".join(
         f"md5('g{j}-' || CAST(doc_id // {WD_GROUP_SIZE} AS VARCHAR))"
         for j in range(WD_CORE_CHUNKS)
@@ -438,7 +426,7 @@ Q_WINNOW_DEDUP_SQL = _winnow_dedup_sql()
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_testdata(spark, sf_dir, "embeddings")
     # Canonical undirected edges; checkpoint keeps the expensive kNN
     # lineage (pair join + top-k window) from re-running per consumer
     # (degree agg + three join legs read it).
@@ -544,14 +532,14 @@ LEFT JOIN n3 ON n1.label = n3.label
 """
 
 
-EXT4_QUERIES = {
+QUERIES = {
     "pagerank_knn": q_pagerank_knn,
     "winnow_profile": q_winnow_profile,
     "winnow_dedup": q_winnow_dedup,
     "triangle_count": q_triangle_count,
 }
 
-EXT4_ORACLE_SQL = {
+ORACLE_SQL = {
     "pagerank_knn": Q_PAGERANK_KNN_SQL,
     "winnow_profile": Q_WINNOW_PROFILE_SQL,
     "winnow_dedup": Q_WINNOW_DEDUP_SQL,

@@ -22,10 +22,9 @@ TABLES = (
 )
 
 
-def load_testdata(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    if "events" in tables:
+def load_testdata(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """The named tables of ``sf_dir``, as frames in the order named."""
+    if "events" in names:
         # Older testdata drops wrote events.ts as parquet TIMESTAMP(NANOS),
         # which Spark's vectorized reader rejects; this flag reads that
         # layout as a raw nanoseconds bigint.  Newer drops use
@@ -52,8 +51,8 @@ def load_testdata(
     # consumers widen at the point of use via saturate_scan below.
     heavy = {"documents", "embeddings"}
     parallelism = spark.sparkContext.defaultParallelism
-    out = {}
-    for t in tables:
+    out = []
+    for t in names:
         df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
         if t == "events":
             df = _normalize_event_ts(df)
@@ -64,7 +63,7 @@ def load_testdata(
                 n_files = 0
             if n_files < parallelism:
                 df = df.repartition(parallelism)
-        out[t] = df
+        out.append(df)
     return out
 
 

@@ -46,7 +46,7 @@ def _rank_auc(scores: np.ndarray, labels: np.ndarray) -> float:
 def test_auc_matches_rank_formulation(spark):
     rows = q_auc_score(spark, SF_CORRECTNESS).collect()
     li = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))["lineitem"]
+        load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
         .select("l_linestatus", "l_quantity", "l_returnflag")
         .toPandas()
     )
@@ -66,7 +66,7 @@ def test_auc_matches_rank_formulation(spark):
 def test_chi2_matches_float_computation(spark):
     rows = q_chi2_independence(spark, SF_CORRECTNESS).collect()
     od = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("orders",))["orders"]
+        load_testdata(spark, SF_CORRECTNESS, "orders")[0]
         .groupBy("o_orderpriority", "o_orderstatus")
         .count()
         .collect()
@@ -105,7 +105,7 @@ def test_benford_distribution_shape(spark):
         assert r.dev_ppm == abs(r.freq_ppm - r.benford_ppm)
         assert r.tvd_ppm == sum(x.dev_ppm for x in rows) // 2
     # independent first-digit recount on the raw table
-    od = load_testdata(spark, SF_CORRECTNESS, tables=("orders",))["orders"]
+    od = load_testdata(spark, SF_CORRECTNESS, "orders")[0]
     prices = od.select("o_totalprice").toPandas()["o_totalprice"].to_numpy()
     cents = np.floor(prices * 100 + 0.5).astype(np.int64)
     first = np.array([int(str(c)[0]) for c in cents[cents > 0]])
@@ -116,7 +116,7 @@ def test_benford_distribution_shape(spark):
 
 def test_autocorrelation_matches_numpy(spark):
     rows = q_autocorrelation(spark, SF_CORRECTNESS).collect()
-    ev = load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+    ev = load_testdata(spark, SF_CORRECTNESS, "events")[0]
     daily = (
         ev.select("event_type", F.expr("ts div 86400000000000L").alias("day"))
         .groupBy("event_type", "day")
@@ -144,9 +144,7 @@ def test_mahalanobis_matches_numpy(spark):
     d2s = [r.d2_micro for r in rows]
     assert d2s == sorted(d2s, reverse=True)
     assert all(d >= 0 for d in d2s)
-    emb = load_testdata(spark, SF_CORRECTNESS, tables=("embeddings",))[
-        "embeddings"
-    ]
+    emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
     pdf = emb.select("vec_id", "embedding").toPandas()
     xq = np.array(
         [

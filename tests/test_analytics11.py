@@ -29,9 +29,7 @@ def test_graph_bfs_matches_python_bfs(spark):
     """The level histogram must equal a driver-side BFS over the same
     (engine-built) edge set, and the per-level counts must partition
     the node universe."""
-    emb = load_testdata(spark, SF_CORRECTNESS, tables=("embeddings",))[
-        "embeddings"
-    ]
+    emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
     edges = _knn_edges(emb).collect()
     adj: dict[int, set[int]] = {}
     for e in edges:
@@ -67,7 +65,7 @@ def test_event_trigrams_counts(spark):
     assert len(rows) <= TRI_TOPK
     keys = [(-r.cnt, r.trigram) for r in rows]
     assert keys == sorted(keys)
-    ev = load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+    ev = load_testdata(spark, SF_CORRECTNESS, "events")[0]
     per_user = ev.groupBy("user_id").count().collect()
     total_tris = sum(max(r["count"] - 2, 0) for r in per_user)
     # the top page can't exceed the corpus trigram total
@@ -80,7 +78,7 @@ def test_calibration_bins_partition_and_monotone_means(spark):
         q_calibration_bins(spark, SF_CORRECTNESS).collect(),
         key=lambda r: r.bin,
     )
-    li = load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))["lineitem"]
+    li = load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
     n = li.count()
     n_pos = li.filter(F.col("l_returnflag") == "R").count()
     assert sum(r.n for r in rows) == n
@@ -105,7 +103,7 @@ def test_hazard_table_risk_set_telescopes(spark):
     for a, b in zip(rows, rows[1:]):
         assert a.n_i == b.n_i + a.d_i
         assert a.surviving == b.n_i
-    li = load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))["lineitem"]
+    li = load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
     assert rows[0].n_i == li.count()
     assert rows[-1].n_i == rows[-1].d_i
     for r in rows:

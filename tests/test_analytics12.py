@@ -37,9 +37,7 @@ _FOLD = str.maketrans(
 
 def _docs(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("documents",))[
-            "documents"
-        ]
+        load_testdata(spark, SF_CORRECTNESS, "documents")[0]
         .select("doc_id", "text", "lang")
         .collect()
     )
@@ -109,9 +107,7 @@ def test_shingle_hash64_kernel_matches_python_reference(spark):
         shingle_hash64_set_kernel,
     )
 
-    docs = load_testdata(spark, SF_CORRECTNESS, tables=("documents",))[
-        "documents"
-    ]
+    docs = load_testdata(spark, SF_CORRECTNESS, "documents")[0]
     rows = docs.select(
         "text", shingle_hash64_set_kernel(SETSIM_K)(F.col("text")).alias("k")
     ).collect()
@@ -151,9 +147,7 @@ def test_setsim_join_matches_bruteforce(spark):
 def test_kmv_theorems_and_replica(spark):
     """merge_consistent must hold by theorem, within_bound by
     measurement; kth/m/est must equal the hashlib replica."""
-    events = load_testdata(spark, SF_CORRECTNESS, tables=("events",))[
-        "events"
-    ].select("event_type", "user_id").collect()
+    events = load_testdata(spark, SF_CORRECTNESS, "events")[0].select("event_type", "user_id").collect()
     by_type = defaultdict(set)
     exact = defaultdict(set)
     for r in events:

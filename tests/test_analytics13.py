@@ -27,7 +27,7 @@ from tests.conftest import SF_CORRECTNESS
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("event_id", "ts", "user_id", "event_type", "value")
         .collect()
     )
@@ -107,7 +107,7 @@ def _ntile(items: list, k: int) -> dict:
 
 def test_rfm_segments_matches_python_replica(spark):
     orders = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("orders",))["orders"]
+        load_testdata(spark, SF_CORRECTNESS, "orders")[0]
         .select("o_custkey", "o_orderdate", "o_totalprice")
         .collect()
     )

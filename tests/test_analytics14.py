@@ -17,14 +17,13 @@ from gtfs_realtime_etl_spark.plans.analytics14 import (
     DECAY_HALFLIFE_NS,
     DECAY_SHIFT,
     DECAY_TOPN,
-    _NS_PER_DAY,
-    _NS_PER_HOUR,
     q_conformal_intervals,
     q_containment_join,
     q_cuped_adjustment,
     q_decayed_topk,
     q_grid_hotspots,
 )
+from gtfs_realtime_etl_spark.plans.base import NS_PER_DAY, NS_PER_HOUR
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 from tests.conftest import SF_CORRECTNESS
 from tests.test_analytics12 import _shingle_hash_set
@@ -32,7 +31,7 @@ from tests.test_analytics12 import _shingle_hash_set
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("event_id", "ts", "user_id", "event_type", "value")
         .collect()
     )
@@ -91,7 +90,7 @@ def test_cuped_adjustment_matches_python_replica(spark):
 def test_conformal_intervals_matches_python_replica(spark):
     evs = _events(spark)
     rows = [
-        (r.event_id, r.user_id, _cents(r.value), (r.ts % _NS_PER_DAY) // _NS_PER_HOUR)
+        (r.event_id, r.user_id, _cents(r.value), (r.ts % NS_PER_DAY) // NS_PER_HOUR)
         for r in evs
     ]
     train = [(h, c) for _, u, c, h in rows if u % 3 == 0]
@@ -151,7 +150,7 @@ def test_grid_hotspots_matches_python_replica(spark):
     evs = _events(spark)
     cells: Counter = Counter()
     for r in evs:
-        cells[((r.ts // _NS_PER_DAY + 4) % 7, (r.ts % _NS_PER_DAY) // _NS_PER_HOUR)] += 1
+        cells[((r.ts // NS_PER_DAY + 4) % 7, (r.ts % NS_PER_DAY) // NS_PER_HOUR)] += 1
     expected = {}
     for (d, h), n in cells.items():
         mx = max(
@@ -206,9 +205,7 @@ def test_containment_join_matches_bruteforce(spark):
     """The prefix/positional-filtered containment join must equal the
     quadratic directional ground truth EXACTLY — losslessness."""
     docs = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("documents",))[
-            "documents"
-        ]
+        load_testdata(spark, SF_CORRECTNESS, "documents")[0]
         .select("doc_id", "text")
         .collect()
     )

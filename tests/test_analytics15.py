@@ -18,7 +18,7 @@ from tests.conftest import SF_CORRECTNESS
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("user_id", "event_type", "value")
         .collect()
     )
@@ -84,19 +84,19 @@ def test_audience_overlap_matches_python_replica(spark):
 
 
 def test_hhi_concentration_matches_python_replica(spark):
-    tabs = load_testdata(
-        spark, SF_CORRECTNESS, tables=("lineitem", "supplier", "nation")
+    lineitem, supplier, nation = load_testdata(
+        spark, SF_CORRECTNESS, "lineitem", "supplier", "nation"
     )
-    li = tabs["lineitem"].select(
+    li = lineitem.select(
         "l_suppkey", "l_extendedprice", "l_discount"
     ).collect()
     supp = {
         r.s_suppkey: r.s_nationkey
-        for r in tabs["supplier"].select("s_suppkey", "s_nationkey").collect()
+        for r in supplier.select("s_suppkey", "s_nationkey").collect()
     }
     nname = {
         r.n_nationkey: r.n_name
-        for r in tabs["nation"].select("n_nationkey", "n_name").collect()
+        for r in nation.select("n_nationkey", "n_name").collect()
     }
     per_supp: dict = defaultdict(int)
     for r in li:

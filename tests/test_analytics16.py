@@ -20,7 +20,7 @@ from tests.test_analytics12 import _h40
 
 def test_bootstrap_ci_matches_python_replica(spark):
     evs = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("event_id", "event_type", "value")
         .collect()
     )

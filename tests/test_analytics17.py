@@ -24,7 +24,7 @@ from tests.conftest import SF_CORRECTNESS
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("user_id", "event_id", "event_type", "ts", "value")
         .collect()
     )
@@ -36,9 +36,7 @@ def _cents(value: float) -> int:
 
 def test_apriori_triples_matches_python_replica(spark):
     li = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))[
-            "lineitem"
-        ]
+        load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
         .select("l_orderkey", "l_partkey")
         .collect()
     )

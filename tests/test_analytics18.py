@@ -31,7 +31,7 @@ def _cents(value: float) -> int:
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("user_id", "event_id", "event_type", "ts", "value")
         .collect()
     )
@@ -63,13 +63,11 @@ def test_spark_signed_div_truncates(spark):
 
 
 def test_lorenz_gini_matches_python_replica(spark):
-    tabs = load_testdata(
-        spark, SF_CORRECTNESS, tables=("orders", "customer")
-    )
-    orders = tabs["orders"].select("o_custkey", "o_totalprice").collect()
+    orders, customer = load_testdata(spark, SF_CORRECTNESS, "orders", "customer")
+    orders = orders.select("o_custkey", "o_totalprice").collect()
     segs = {
         r.c_custkey: r.c_mktsegment
-        for r in tabs["customer"].select("c_custkey", "c_mktsegment").collect()
+        for r in customer.select("c_custkey", "c_mktsegment").collect()
     }
     rev: dict = defaultdict(int)
     for r in orders:

@@ -35,7 +35,7 @@ def _lg_micro(n: int) -> int:
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("user_id", "event_id", "event_type", "ts", "value")
         .collect()
     )
@@ -152,9 +152,7 @@ def test_markov_entropy_rate_matches_python_replica(spark):
 
 def test_degree_assortativity_matches_python_replica(spark):
     li = (
-        load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))[
-            "lineitem"
-        ]
+        load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
         .select("l_orderkey", "l_partkey")
         .collect()
     )

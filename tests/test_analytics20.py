@@ -24,7 +24,7 @@ def _cents(value: float) -> int:
 
 def _events(spark):
     return (
-        load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+        load_testdata(spark, SF_CORRECTNESS, "events")[0]
         .select("user_id", "event_id", "event_type", "ts", "value")
         .collect()
     )

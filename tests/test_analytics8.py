@@ -54,9 +54,7 @@ def test_link_prediction_excludes_existing_edges(spark):
     from gtfs_realtime_etl_spark.plans.graph import _knn_edges
     from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-    emb = load_testdata(spark, SF_CORRECTNESS, tables=("embeddings",))[
-        "embeddings"
-    ]
+    emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
     und = {
         (r.lo, r.hi)
         for r in _knn_edges(emb)
@@ -113,9 +111,7 @@ def test_random_projection_matches_numpy(spark):
 
     from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-    emb = load_testdata(spark, SF_CORRECTNESS, tables=("embeddings",))[
-        "embeddings"
-    ]
+    emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
     vecs = {
         r.vec_id: np.asarray(r.embedding, dtype=np.float64)
         for r in emb.limit(2000).collect()

@@ -25,7 +25,7 @@ def test_cusum_bounds_and_day_range(spark):
     change-point day must be one of the type's observed days."""
     rows = q_cusum_changepoint(spark, SF_CORRECTNESS).collect()
     assert len(rows) == 5
-    ev = load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+    ev = load_testdata(spark, SF_CORRECTNESS, "events")[0]
     days = {
         (r.event_type, r.day)
         for r in ev.select(
@@ -45,7 +45,7 @@ def test_decision_stump_gain_nonnegative_and_counts(spark):
     split's information gain is non-negative (micro-bit quantization
     cannot push the argmax below the trivial split)."""
     rows = q_decision_stump(spark, SF_CORRECTNESS).collect()
-    li = load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))["lineitem"]
+    li = load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
     n = li.count()
     n_pos = li.filter(F.col("l_returnflag") == "R").count()
     best = [r for r in rows if r.is_best]
@@ -61,7 +61,7 @@ def test_ols_matches_numpy_lstsq(spark):
     same data to ~1e-6 (the decimal-exact sums remove any accumulation
     order effect; this pins the algebra itself)."""
     row = q_ols_regression(spark, SF_CORRECTNESS).collect()[0]
-    li = load_testdata(spark, SF_CORRECTNESS, tables=("lineitem",))["lineitem"]
+    li = load_testdata(spark, SF_CORRECTNESS, "lineitem")[0]
     pdf = li.select("l_quantity", "l_discount", "l_extendedprice").toPandas()
     x = np.column_stack(
         [np.ones(len(pdf)), pdf["l_quantity"], pdf["l_discount"]]

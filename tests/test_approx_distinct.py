@@ -21,7 +21,7 @@ def test_exact_twins_and_bound_booleans(spark):
             spark, SF_CORRECTNESS
         ).collect()
     }
-    events = load_testdata(spark, SF_CORRECTNESS, tables=("events",))["events"]
+    events = load_testdata(spark, SF_CORRECTNESS, "events")[0]
     exact = {
         r["event_type"]: (r["u"], r["v"])
         for r in events.groupBy("event_type")

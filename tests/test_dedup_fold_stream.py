@@ -47,7 +47,7 @@ def _rows(df):
 
 def _docs(spark):
     return (
-        load_testdata(spark, SF_SMOKE, tables=("documents",))["documents"]
+        load_testdata(spark, SF_SMOKE, "documents")[0]
         .select("doc_id", "text")
     )
 

@@ -36,7 +36,7 @@ def _rows(df):
 
 
 def _documents(spark):
-    return load_testdata(spark, SF_SMOKE, tables=("documents",))["documents"]
+    return load_testdata(spark, SF_SMOKE, "documents")[0]
 
 
 def test_batch_jobs_merge_to_one_shot_result(spark, tmp_path):

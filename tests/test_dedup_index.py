@@ -19,9 +19,7 @@ KW = dict(num_hashes=32, bands=8, shingle_k=5)
 
 
 def _docs(spark):
-    return load_testdata(spark, SF_CORRECTNESS, tables=("documents",))[
-        "documents"
-    ].select("doc_id", "text")
+    return load_testdata(spark, SF_CORRECTNESS, "documents")[0].select("doc_id", "text")
 
 
 def _pairs(df):

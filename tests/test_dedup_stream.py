@@ -21,7 +21,7 @@ SCHEMA = StructType(
 
 def _doc_rows(spark):
     return (
-        load_testdata(spark, SF_SMOKE, tables=("documents",))["documents"]
+        load_testdata(spark, SF_SMOKE, "documents")[0]
         .select("doc_id", "text")
         .orderBy("doc_id")
         .collect()

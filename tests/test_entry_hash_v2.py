@@ -216,3 +216,28 @@ def test_kernel_edit_fronts_entry_in_live_rotation(tmp_path, monkeypatch):
     finally:
         q.QUERIES.pop(name, None)
         q.ORACLE_SQL.pop(name, None)
+
+
+def _reached(name: str) -> set[str]:
+    from gtfs_realtime_etl_spark.plans.queries import QUERIES
+
+    out: dict[str, str] = {}
+    _walk(QUERIES[name], 0, set(), out)
+    return set(out)
+
+
+def test_walk_reaches_kernel_of_ann_pq_topk():
+    """``q_ann_pq_topk`` calls ``pq_adc_topk``; an edit to that kernel
+    must change the entry's hash."""
+    assert (
+        "gtfs_realtime_etl_spark.operators.similarity.pq_adc_topk"
+        in _reached("ann_pq_topk")
+    )
+
+
+def test_walk_reaches_entries_composed_by_dedup_agreement():
+    """``dedup_agreement`` runs three other registry entries; an edit to
+    one of them (here ``q_minhash_lsh_pairs``) must change its hash."""
+    assert any(
+        key.endswith(".q_minhash_lsh_pairs") for key in _reached("dedup_agreement")
+    )

@@ -28,10 +28,9 @@ def _rows(df):
 
 
 def test_per_day_jobs_merge_to_one_shot_result(spark, tmp_path):
-    tabs = load_testdata(
-        spark, SF_SMOKE, tables=("events", "customer", "nation")
+    events, customer, nation = load_testdata(
+        spark, SF_SMOKE, "events", "customer", "nation"
     )
-    events, customer, nation = tabs["events"], tabs["customer"], tabs["nation"]
 
     max_day = events.agg(
         F.expr(f"MAX(CAST(ts div {_NS_PER_DAY} AS INT))")
@@ -67,8 +66,7 @@ def test_per_day_jobs_merge_to_one_shot_result(spark, tmp_path):
 
 
 def test_day_predicate_prunes_partitions(spark, tmp_path):
-    tabs = load_testdata(spark, SF_SMOKE, tables=("events",))
-    events = tabs["events"]
+    (events,) = load_testdata(spark, SF_SMOKE, "events")
     lake = str(tmp_path / "events_by_day")
     events.withColumn(
         "pday", F.expr(f"CAST(ts div {_NS_PER_DAY} AS INT)")
@@ -105,10 +103,9 @@ def test_merge_is_slicing_invariant(spark):
     """Merging (day-sliced partials) == merging (single fold of the
     whole range): the monoid property the incremental contract rests
     on, checked in-plan without the lake detour."""
-    tabs = load_testdata(
-        spark, SF_SMOKE, tables=("events", "customer", "nation")
+    events, customer, nation = load_testdata(
+        spark, SF_SMOKE, "events", "customer", "nation"
     )
-    events, customer, nation = tabs["events"], tabs["customer"], tabs["nation"]
     max_day = events.agg(
         F.expr(f"MAX(CAST(ts div {_NS_PER_DAY} AS INT))")
     ).collect()[0][0]
@@ -136,14 +133,11 @@ def test_full_range_incremental_equals_flagship_anchor(spark):
     dedup grain is identical ((user, day)), diff is an int so the
     BIGINT partial moments equal flagship's decimal(18,2) sums
     exactly, and the finalize op order is the same."""
-    from gtfs_realtime_etl_spark.plans.queries import (
-        q_flagship_punctuality,
-    )
+    from gtfs_realtime_etl_spark.plans.base import q_flagship_punctuality
 
-    tabs = load_testdata(
-        spark, SF_SMOKE, tables=("events", "customer", "nation")
+    events, customer, nation = load_testdata(
+        spark, SF_SMOKE, "events", "customer", "nation"
     )
-    events, customer, nation = tabs["events"], tabs["customer"], tabs["nation"]
     full = merge_flagship_partials(
         flagship_day_partials(events, customer, nation)
     ).drop("n_days")

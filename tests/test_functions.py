@@ -158,7 +158,7 @@ def test_lang_id_kernel_matches_column(spark):
     the oracle; the corpus has no NULL text."""
     import duckdb
 
-    from gtfs_realtime_etl_spark.plans.queries import (
+    from gtfs_realtime_etl_spark.plans.base import (
         _ARGMAX_CASES,
         _GREATEST,
         _LANGS,
@@ -215,7 +215,7 @@ def test_doc_fingerprint_kernel_matches_oracle(spark):
     import duckdb
 
     from gtfs_realtime_etl_spark.functions.hashing import doc_fingerprint_kernel
-    from gtfs_realtime_etl_spark.plans.queries import Q_DOC_FINGERPRINT_SQL
+    from gtfs_realtime_etl_spark.plans.base import Q_DOC_FINGERPRINT_SQL
     from gtfs_realtime_etl_spark.testing import compare_to_oracle
     from tests.conftest import SF_CORRECTNESS
 

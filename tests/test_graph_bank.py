@@ -56,7 +56,7 @@ def test_knn_edges_out_degree_exactly_k(spark):
     """Every node emits exactly KNN_K edges (label blocks are larger
     than K at every sf) — the no-dangling guarantee pagerank_knn relies
     on — and edges stay within label blocks."""
-    emb = load_testdata(spark, SF_SMOKE, tables=("embeddings",))["embeddings"]
+    emb = load_testdata(spark, SF_SMOKE, "embeddings")[0]
     edges = _knn_edges(emb)
     degs = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     assert degs.filter(F.col("deg") != KNN_K).count() == 0
@@ -129,7 +129,7 @@ def test_knn_edges_kernel_oracle_parity(spark):
     from tests.conftest import SF_CORRECTNESS
 
     for sf_dir in (SF_SMOKE, SF_CORRECTNESS):
-        emb = load_testdata(spark, sf_dir, tables=("embeddings",))["embeddings"]
+        emb = load_testdata(spark, sf_dir, "embeddings")[0]
         kernel = Counter((r.s, r.d) for r in _knn_edges(emb).collect())
         oracle = run_oracle(f"WITH {_KNN_CTES} SELECT s, d FROM knn", sf_dir)
         assert kernel == Counter(zip(oracle["s"], oracle["d"])), sf_dir

@@ -1,11 +1,14 @@
-"""Layering guards, both AST scans of the source.
+"""Layering guards, all AST scans of the source.
 
 - The engine's lower layers (functions, operators, sources, streaming)
   must not import the query registry layer (plans).  Plans compose
   operators; an import the other way round ties a reusable operator or
   stream to one registry bank.
 - Every def in functions/ and operators/ must have a caller outside
-  tests/: the library keeps one form per capability."""
+  tests/: the library keeps one form per capability.
+- No def in plans/, functions/ or operators/ imports a package module:
+  the registry's source hash follows module globals, so a
+  function-local import hides its callee from that hash."""
 
 from __future__ import annotations
 
@@ -102,3 +105,33 @@ def test_functions_and_operators_have_non_test_callers():
         and node.name not in referenced
     ]
     assert not offenders, offenders
+
+
+HASHED_LAYERS = ("plans", "functions", "operators")
+
+
+def test_no_function_local_package_imports():
+    """Package imports sit at module level in the layers the registry's
+    source hash walks (``plans/entry_hash_v2.py`` follows each entry's
+    module globals): an import inside a def is invisible to that walk,
+    so a change to the callee would leave the entry's hash unchanged."""
+    offenders = set()
+    for layer in HASHED_LAYERS:
+        for path in sorted((PKG_DIR / layer).rglob("*.py")):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Import):
+                        names = [alias.name for alias in node.names]
+                    elif isinstance(node, ast.ImportFrom):
+                        names = ["." * node.level + (node.module or "")]
+                    else:
+                        continue
+                    offenders.update(
+                        f"{path.relative_to(PKG_DIR)}:{node.lineno} imports {name}"
+                        for name in names
+                        if name.startswith((PKG, "."))
+                    )
+    assert not offenders, sorted(offenders)

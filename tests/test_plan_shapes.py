@@ -49,14 +49,14 @@ def test_minhash_verify_joins_are_broadcast(spark):
     the heavy hash-set arrays would be shuffled and duplicated).
 
     Inspects the operator every MinHash registry entry builds its pair
-    set with (plans/queries.py::_minhash_verified_pairs)."""
+    set with (plans/base.py::_minhash_verified_pairs)."""
     import contextlib
     import io
 
     from gtfs_realtime_etl_spark.operators.dedup import minhash_lsh_dedup
     from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-    docs = load_testdata(spark, SF_CORRECTNESS, tables=("documents",))["documents"]
+    docs = load_testdata(spark, SF_CORRECTNESS, "documents")[0]
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         minhash_lsh_dedup(docs).explain("formatted")
@@ -127,7 +127,7 @@ def test_brute_force_topk_no_single_partition_sort(spark):
     from gtfs_realtime_etl_spark.operators.similarity import brute_force_topk
     from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
-    emb = load_testdata(spark, SF_CORRECTNESS, tables=("embeddings",))["embeddings"]
+    emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
     q = emb.filter("vec_id = 0").select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
     )

@@ -78,11 +78,9 @@ def test_auc_and_hazard_replication_invariance(spark):
     )
     orig_load = td.load_testdata
 
-    def patched(spark_, sf_dir_, tables=("lineitem",)):
-        tabs = dict(orig_load(spark_, sf_dir_, tables=tables))
-        if "lineitem" in tabs:
-            tabs["lineitem"] = big_li
-        return tabs
+    def patched(spark_, sf_dir_, *names):
+        tabs = orig_load(spark_, sf_dir_, *names)
+        return [big_li if n == "lineitem" else df for n, df in zip(names, tabs)]
 
     td_patch = patched
     import gtfs_realtime_etl_spark.plans.analytics10 as a10

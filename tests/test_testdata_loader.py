@@ -45,7 +45,7 @@ def test_both_physical_types_normalize_to_same_nanos(spark, twin_dirs):
     d_us, d_ns, micros = twin_dirs
     out = {}
     for label, d in (("us", d_us), ("ns", d_ns)):
-        df = load_testdata(spark, d, tables=("events",))["events"]
+        df = load_testdata(spark, d, "events")[0]
         assert dict(df.dtypes)["ts"] == "bigint", label
         out[label] = {r.event_id: r.ts for r in df.select("event_id", "ts").collect()}
     assert out["us"] == out["ns"]
@@ -57,7 +57,7 @@ def test_normalization_matches_duckdb_epoch_ns(spark, twin_dirs):
     import duckdb
 
     d_us, _, _ = twin_dirs
-    df = load_testdata(spark, d_us, tables=("events",))["events"]
+    df = load_testdata(spark, d_us, "events")[0]
     got = {r.event_id: r.ts for r in df.select("event_id", "ts").collect()}
     con = duckdb.connect()
     exp = dict(
@@ -93,7 +93,7 @@ def test_ltz_annotated_parquet_normalizes_tz_independently(spark, twin_dirs):
     )
     pq.write_table(tbl, f"{d_ltz}/events.parquet")
 
-    df = load_testdata(spark, d_ltz, tables=("events",))["events"]
+    df = load_testdata(spark, d_ltz, "events")[0]
     assert dict(df.dtypes)["ts"] == "bigint"
     got = {r.event_id: r.ts for r in df.select("event_id", "ts").collect()}
     for i, us in enumerate(micros):
