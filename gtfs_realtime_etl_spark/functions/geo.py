@@ -13,9 +13,12 @@ Design notes for scale:
 - ``ST_DWithin`` on unprojected CRS84 coordinates is planar Euclidean
   *degree* distance in DuckDB-spatial; we reproduce exactly that (not
   haversine) for parity.
-- WKB construction needs IEEE-754 little-endian byte encoding which the
-  Spark expression language cannot express; it is an Arrow-batched
-  pandas_udf used only on the (cold) write/export path.
+- WKB construction is native Column ops too: ``reflect`` reads each
+  double's IEEE-754 bits through ``Double.doubleToRawLongBits``, and
+  string ops reorder them little-endian.  Ingest enrichment and the
+  flagship's stop geometry both call it, so neither plan has a Python
+  boundary.  Only the read-side inverse, ``wkb_point_lonlat`` (migration
+  of reference-shaped lakes), is a pandas_udf.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     StructField,
     StructType,
@@ -124,22 +126,22 @@ def bbox_struct(lon: Column, lat: Column) -> Column:
     )
 
 
-@F.pandas_udf(BinaryType())
-def _point_wkb_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    # 21-byte little-endian WKB point: 0x01, uint32 type=1, float64 x, float64 y.
-    pack = struct.Struct("<BIdd").pack
-    out = [
-        None if x is None or y is None or pd.isna(x) or pd.isna(y) else pack(1, 1, x, y)
-        for x, y in zip(lon, lat)
-    ]
-    return pd.Series(out)
+def _le_hex_bits(x: Column) -> Column:
+    """Hex of a double's IEEE-754 bits, least significant byte first;
+    NULL for a NULL or NaN value (``reflect`` must never see a NULL: it
+    cannot pass one to a primitive parameter)."""
+    bits = F.reflect(F.lit("java.lang.Double"), F.lit("doubleToRawLongBits"), x)
+    be = F.lpad(F.hex(bits.cast("long")), 16, "0")
+    le = F.concat(*[F.substring(be, pos, 2) for pos in range(15, 0, -2)])
+    return F.when(x.isNotNull() & ~F.isnan(x), le)
 
 
 def point_wkb(lon: Column, lat: Column) -> Column:
     """WKB point (lon, lat) — byte-identical to the reference's geoarrow
-    ``as_wkb`` output (handler.py:131-141).  pandas_udf: IEEE-754 byte
-    packing is not expressible in the JVM expression language."""
-    return _point_wkb_udf(lon, lat)
+    ``as_wkb`` output (handler.py:131-141): 0x01 (little-endian), uint32
+    type 1, float64 x, float64 y.  NULL when either coordinate is NULL
+    or NaN."""
+    return F.unhex(F.concat(F.lit("0101000000"), _le_hex_bits(lon), _le_hex_bits(lat)))
 
 
 # StructType object, not a DDL string: string return types are parsed
@@ -151,13 +153,11 @@ _WKB_POINT_STRUCT = StructType(
 
 @F.pandas_udf(_WKB_POINT_STRUCT)
 def _wkb_point_lonlat_udf(wkb: pd.Series) -> pd.DataFrame:
-    # Inverse of _point_wkb_udf: parse a WKB point back to (lon, lat).
+    # Inverse of point_wkb: parse a WKB point back to (lon, lat).
     # Accepts either byte order (byte 0: 1=little, 0=big) — the engine
     # writes little-endian, but external GeoParquet writers may not.
     # Geometry type must be Point (1); anything else decodes to null
     # rather than garbage coordinates.
-    import struct as _struct
-
     lons: list[float | None] = []
     lats: list[float | None] = []
     for b in wkb:
@@ -166,7 +166,7 @@ def _wkb_point_lonlat_udf(wkb: pd.Series) -> pd.DataFrame:
             lats.append(None)
             continue
         endian = "<" if b[0] == 1 else ">"
-        gtype, x, y = _struct.unpack(endian + "Idd", b[1:])
+        gtype, x, y = struct.unpack(endian + "Idd", b[1:])
         if gtype != 1:
             lons.append(None)
             lats.append(None)
@@ -181,8 +181,7 @@ def wkb_point_lonlat(wkb: Column) -> Column:
     inverse of :func:`point_wkb`, for ingesting lakes written by the
     reference's GeoParquet writer, which DROPS the lat/lon columns and
     keeps only the geometry (etl/runtime/handler.py:131-142).  Arrow-
-    batched pandas_udf for the same reason as the writer: IEEE-754 byte
-    reinterpretation is not expressible as JVM Column ops."""
+    batched pandas_udf: it runs only when such a lake is migrated."""
     return _wkb_point_lonlat_udf(wkb)
 
 

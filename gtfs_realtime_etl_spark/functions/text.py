@@ -146,16 +146,15 @@ def lang_id_kernel():
 
     Matches the entry's DuckDB oracle
     (``plans/base.py::Q_LANG_ID_SQL``): ASCII-only case folding,
-    split on ``\\s+`` with ASCII semantics, empty tokens dropped,
-    per-language stopword-hit counts, argmax with earliest language
-    (sorted order) winning ties, 'und' on zero hits.  Two inputs differ
-    from the oracle, and the corpus holds neither: NULL text maps to
-    'und' here and to NULL in the oracle, and ``re.ASCII``'s ``\\s``
-    (Java's [ \\t\\n\\x0B\\f\\r]) splits on \\x0B where RE2's does not.
+    split on RE2's ``\\s+`` (``[\\t\\n\\f\\r ]+``: no \\x0B, unlike
+    Python's and Java's ``\\s``), empty tokens dropped, per-language
+    stopword-hit counts, argmax with earliest language (sorted order)
+    winning ties, 'und' on zero hits.  NULL text maps to 'und' here and
+    to NULL in the oracle; the corpus holds none.
     A Column form costs four interpreted ``filter`` passes over the
     token array per row; this does one Python set-membership pass per
     token."""
-    ws = re.compile(r"\s+", re.ASCII)
+    ws = re.compile(r"[\t\n\f\r ]+")
     langs = sorted(STOPWORDS)
     sets = [frozenset(STOPWORDS[lang]) for lang in langs]
     fold = str.maketrans(AZ_UPPER, AZ_LOWER)

@@ -31,8 +31,8 @@ from gtfs_realtime_etl_spark.sources.lake import with_partition_cols
 def enrich_positions(raw: DataFrame) -> DataFrame:
     """Pure transform: VEHICLE_POSITIONS_RAW schema in, lake schema out.
 
-    Entirely narrow — no shuffle, stays in one whole-stage-codegen span
-    (apart from the Arrow-batched WKB udf).
+    Entirely narrow — no shuffle and no Python node; the WKB geometry is
+    native Column ops too.
     """
     lat, lon = F.col("latitude"), F.col("longitude")
     df = (

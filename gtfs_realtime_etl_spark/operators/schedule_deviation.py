@@ -29,6 +29,13 @@ Physical-plan notes (100 TB design):
 - The only shuffle joining the fact table is the hash/SMJ on ``trip_id``
   (locations ⨝ schedule); the spatial predicate stays a residual join
   condition on that equi key, so no cross product ever materializes.
+- Each ping's local time of day is computed once, in the location-side
+  projection before the join.  The band filter is pushed into the
+  join's residual, which is then ``dwithin`` plus an integer band on
+  ``ping_secs − arrival_secs``: no time-zone field extraction per
+  candidate pair.
+- The stop geometry is native Column ops (functions/geo.py::point_wkb),
+  so the plan has no Python boundary.
 - The window and the final aggregate both key on subsets of the join
   output; at 100 TB the dominant cost is the single trip_id shuffle of
   the fact side.
@@ -122,7 +129,14 @@ def schedule_deviation(
     )
 
     # Fact ⋈ schedule: equi on trip_id, ST_DWithin as residual condition.
-    loc = locations.select("trip_id", "timestamp", "longitude", "latitude")
+    # Each ping's local time of day is computed once, before the join, so
+    # the band check on every candidate pair is an integer subtraction.
+    loc = locations.select(
+        "trip_id",
+        seconds_of_day(F.col("timestamp")).alias("ping_secs"),
+        "longitude",
+        "latitude",
+    )
     matched = loc.join(
         sched,
         (loc["trip_id"] == sched["trip_id"])
@@ -138,7 +152,7 @@ def schedule_deviation(
         "route_short_name",
         "stop_sequence",
         "arrival_time",
-        (seconds_of_day(loc["timestamp"]) - F.col("arrival_secs")).alias("diff"),
+        (F.col("ping_secs") - F.col("arrival_secs")).alias("diff"),
         "stop_id",
         "stop_lon",
         "stop_lat",

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.text import bigrams, tokens
+from gtfs_realtime_etl_spark.functions.text import tokens
 from gtfs_realtime_etl_spark.operators.cdc import merge_upsert
 from gtfs_realtime_etl_spark.operators.incremental import (
     finalize,

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import (
-    MOD,
     minhash_text_kernel,
     sql_minhash_sig,
     sql_shingle_hashes,

@@ -1998,9 +1998,6 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     a trivially small sort.  Tie-break (count desc, bigram asc) is
     identical at both levels, so the result matches the naive form and
     the oracle's single window exactly."""
-    from pyspark.sql.window import Window
-
-
     (documents,) = load_testdata(spark, sf_dir, "documents")
     toks = documents.select(
         "lang", tokens(F.col("text")).alias("_toks")

@@ -4,6 +4,7 @@ oracles (known geohash vectors, stdlib erf, struct-packed WKB)."""
 from __future__ import annotations
 
 import math
+import random
 import struct
 
 import pytest
@@ -72,10 +73,35 @@ def test_norm_cdf_sql_matches_spark(spark):
         assert srow[i] == pytest.approx(dv, abs=1e-14)
 
 
+def _wkb_edge_doubles() -> list[float]:
+    """±0, ±inf, the extreme and subnormal magnitudes, every power of
+    two a double can hold, and random bit patterns (NaNs excluded)."""
+    specials = [0.0, -0.0, math.inf, -math.inf, 5e-324, -5e-324,
+                2.2250738585072009e-308, 2.2250738585072014e-308,
+                1.7976931348623157e308, -1.7976931348623157e308, -79.38, 43.65]
+    powers = [math.ldexp(1.0, e) for e in range(-1074, 1024)]
+    rng = random.Random(7)
+    bits = (struct.unpack("<d", rng.getrandbits(64).to_bytes(8, "little"))[0]
+            for _ in range(4000))
+    return specials + powers + [-p for p in powers] + [b for b in bits if b == b]
+
+
 def test_point_wkb_bytes(spark):
-    df = spark.createDataFrame([(-79.38, 43.65)], "lon double, lat double")
-    (got,) = df.select(point_wkb(F.col("lon"), F.col("lat")).alias("w")).collect()
-    assert bytes(got.w) == struct.pack("<BIdd", 1, 1, -79.38, 43.65)
+    """Byte-exact against a struct-packed little-endian WKB point, and
+    NULL when either coordinate is NaN or NULL."""
+    xs = _wkb_edge_doubles()
+    ys = xs[1:] + xs[:1]
+    nan = float("nan")
+    null_rows = [(nan, 1.0), (1.0, nan), (None, 1.0), (1.0, None), (nan, nan)]
+    rows = [(i, x, y) for i, (x, y) in enumerate([*zip(xs, ys), *null_rows])]
+    df = spark.createDataFrame(rows, "i long, lon double, lat double")
+    got = {
+        r.i: r.w
+        for r in df.select("i", point_wkb(F.col("lon"), F.col("lat")).alias("w")).collect()
+    }
+    for i, x, y in rows[: len(xs)]:
+        assert bytes(got[i]) == struct.pack("<BIdd", 1, 1, x, y), (x, y)
+    assert [got[i] for i, _, _ in rows[len(xs):]] == [None] * len(null_rows)
 
 
 def test_wkb_point_lonlat_roundtrip(spark):
@@ -153,9 +179,9 @@ def test_token_count(spark):
 def test_lang_id_kernel_matches_column(spark):
     """The Arrow lang-ID kernel (the ``lang_id`` entry's hot path)
     agrees with the oracle's per-document DuckDB CASE on adversarial
-    inputs: ties, zero hits, mixed case, tabs/newlines, empties,
-    non-ASCII.  NULL text maps to 'und' in the kernel and to NULL in
-    the oracle; the corpus has no NULL text."""
+    inputs: ties, zero hits, mixed case, tabs/newlines, a vertical tab,
+    empties, non-ASCII.  NULL text maps to 'und' in the kernel and to
+    NULL in the oracle; the corpus has no NULL text."""
     import duckdb
 
     from gtfs_realtime_etl_spark.plans.base import (
@@ -178,6 +204,7 @@ def test_lang_id_kernel_matches_column(spark):
         None,
         "das ist nicht von zu der die und ein mit",
         "café déjà vu the the",       # non-ASCII chars present
+        "a\x0bthe",                   # \x0B is not RE2 whitespace: one token
     ]
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -203,6 +230,7 @@ def test_lang_id_kernel_matches_column(spark):
     assert got == want
     assert got[texts.index("de la")] == "es"
     assert got[texts.index("und the")] == "de"
+    assert got[texts.index("a\x0bthe")] == "und"
 
 
 def test_doc_fingerprint_kernel_matches_oracle(spark):

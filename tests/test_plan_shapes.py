@@ -292,3 +292,60 @@ def test_quality_resample_is_projection_plus_agg(spark):
     p = plan_of(spark, "quality_resample")
     assert count(p, r"\(\d+\) Exchange") <= 2, p
     assert count(p, r"Join") == 0, p
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return re.findall(r"(?:ArrowEvalPython|BatchEvalPython)\w*", plan)
+
+
+@pytest.fixture(scope="module")
+def gtfs_raw(spark, tmp_path_factory):
+    from gtfs_realtime_etl_spark.schemas import VEHICLE_POSITIONS_RAW
+    from tests.gtfs_fixtures import generate
+
+    fx = generate(str(tmp_path_factory.mktemp("gtfs_plan")))
+    return fx, spark.createDataFrame(fx.raw_positions, schema=VEHICLE_POSITIONS_RAW)
+
+
+def test_enrich_positions_has_no_python(spark, gtfs_raw):
+    """Ingest enrichment, WKB geometry included, is native Column ops:
+    every micro-batch stays in the JVM."""
+    from gtfs_realtime_etl_spark.operators.ingest import enrich_positions
+
+    plan = enrich_positions(gtfs_raw[1])._jdf.queryExecution().executedPlan().toString()
+    assert _python_nodes(plan) == [], plan
+
+
+def test_flagship_fact_join_is_cheap_per_pair(spark, gtfs_raw, tmp_path):
+    """The flagship's executed plan has no Python node, and its fact
+    join's residual (dwithin plus the pushed band filter) does no
+    time-zone field extraction: each ping's time of day is computed
+    once, before the join, not once per candidate pair."""
+    from gtfs_realtime_etl_spark.operators.ingest import enrich_positions
+    from gtfs_realtime_etl_spark.operators.schedule_deviation import (
+        schedule_deviation,
+        stop_reliability,
+    )
+    from gtfs_realtime_etl_spark.sources.gtfs_static import load_gtfs_static
+    from gtfs_realtime_etl_spark.sources.lake import (
+        read_locations,
+        write_locations_batch,
+    )
+
+    fx, raw = gtfs_raw
+    lake = str(tmp_path / "lake")
+    write_locations_batch(enrich_positions(raw), lake)
+    tabs = load_gtfs_static(spark, fx.gtfs_dir)
+    df = stop_reliability(
+        schedule_deviation(
+            read_locations(spark, lake),
+            tabs["routes"], tabs["trips"], tabs["stops"], tabs["stop_times"],
+        )
+    )
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _python_nodes(plan) == [], plan
+    # the fact join is the one whose residual carries dwithin's SQRT
+    fact_joins = [l for l in plan.splitlines() if "Join" in l and "SQRT(" in l]
+    assert fact_joins, plan
+    assert not [l for l in fact_joins if "hour(" in l], fact_joins
