@@ -5,9 +5,10 @@ API key + header, IANA timezone, poll cadence, destination bucket per
 agency (reference ``etl/infrastructure/config.py:11-38``, consumed by
 ``deploy.sh:4-8`` and read back inside the lambda from env,
 ``etl/runtime/handler.py``).  This module replicates that deployment
-story without pydantic (not in the container): one stdlib dataclass, an
-env loader with the same field names, and helpers that wire the config
-into the session factory, the HTTP poller, and the streaming ingest.
+story without pydantic: one stdlib dataclass, an env loader with the
+same field names, and helpers that wire the config into the session
+factory and the HTTP streaming ingest (one configured GET per
+micro-batch through the ``gtfs_rt`` source, into the agency's lake).
 
 Two cities = two env prefixes = two ``AgencyConfig``s driving two
 independent pipelines in the same process (or two jobs on a cluster).
@@ -86,33 +87,30 @@ class AgencyConfig:
         kwargs.setdefault("timezone", self.timezone)
         return get_spark(**kwargs)
 
-    def poll_once(self, out_dir: str, **kwargs) -> str:
-        """One configured feed fetch into the file-stream inbox."""
-        from gtfs_realtime_etl_spark.sources.poller import poll_feed_once
-
-        if not self.veh_position_url:
-            raise ValueError("veh_position_url is not configured")
-        kwargs.setdefault("headers", self.request_headers())
-        return poll_feed_once(self.veh_position_url, out_dir, **kwargs)
-
     def start_ingest(
         self,
         spark: SparkSession,
-        feed_dir: str,
+        spool_dir: str,
         checkpoint_dir: str,
-        available_now: bool = False,
+        max_ticks: int | None = None,
     ):
-        """Start this agency's file-stream ingest into its lake root at
-        its configured cadence."""
-        from gtfs_realtime_etl_spark.streaming.ingest import start_feed_file_stream
+        """Start this agency's HTTP ingest: GET the configured URL with
+        the API-key header every ``schedule_seconds``, spool each
+        payload under ``spool_dir``, and append to the lake root.
+        ``max_ticks`` bounds the poll (None polls forever)."""
+        from gtfs_realtime_etl_spark.streaming.ingest import start_feed_http_stream
 
+        if not self.veh_position_url:
+            raise ValueError("veh_position_url is not configured")
         if not self.lake_root:
             raise ValueError("lake_root (DESTINATION_BUCKET) is not configured")
-        return start_feed_file_stream(
+        return start_feed_http_stream(
             spark,
-            feed_dir=feed_dir,
+            url=self.veh_position_url,
+            spool_dir=spool_dir,
             lake_root=self.lake_root,
             checkpoint_dir=checkpoint_dir,
             trigger_seconds=self.schedule_seconds,
-            available_now=available_now,
+            max_ticks=max_ticks,
+            headers=self.request_headers(),
         )

@@ -1,16 +1,14 @@
 """Readers and writers: GTFS static CSV, the partitioned lake, the
-GTFS-RT protobuf feed (+ quarantine channel), GeoParquet footer interop,
-the driver-side HTTP poller, and the testdata star schema."""
+GTFS-RT protobuf wire codec (+ quarantine channel), the native
+``gtfs_rt`` HTTP streaming source, GeoParquet footer interop, and the
+testdata star schema."""
 
 from gtfs_realtime_etl_spark.sources.geoparquet import geo_metadata, stamp_geoparquet
 from gtfs_realtime_etl_spark.sources.gtfs_rt import (
     decode_feed_frames,
-    decode_feed_frames_auto,
-    decode_feed_frames_protobuf,
     encode_feed,
     parse_feed,
     quarantine_feed_frames,
-    spark_protobuf_available,
 )
 from gtfs_realtime_etl_spark.sources.gtfs_static import load_gtfs_static
 from gtfs_realtime_etl_spark.sources.lake import (
@@ -19,25 +17,19 @@ from gtfs_realtime_etl_spark.sources.lake import (
     read_locations,
     write_locations_batch,
 )
-from gtfs_realtime_etl_spark.sources.poller import poll_feed, poll_feed_once
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
 __all__ = [
     "day_slice",
     "day_slice_arrow",
     "decode_feed_frames",
-    "decode_feed_frames_auto",
-    "decode_feed_frames_protobuf",
     "encode_feed",
     "geo_metadata",
     "load_gtfs_static",
     "load_testdata",
     "parse_feed",
-    "poll_feed",
-    "poll_feed_once",
     "quarantine_feed_frames",
     "read_locations",
-    "spark_protobuf_available",
     "stamp_geoparquet",
     "write_locations_batch",
 ]

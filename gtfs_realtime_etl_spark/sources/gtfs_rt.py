@@ -1,12 +1,13 @@
 """GTFS-Realtime feed decoding: protobuf bytes → position rows.
 
 The reference parses feeds with the generated ``gtfs_realtime_pb2``
-bindings (/root/reference/etl/runtime/handler.py:54-78).  Spark's
-``from_protobuf`` needs a compiled descriptor file and ``protoc`` is not
-available here, so the engine carries a minimal, dependency-free decoder
-for the (public, stable) GTFS-Realtime wire format — just the fields the
-reference extracts — run through Arrow-batched ``mapInPandas``: one
-feed payload in, N flattened vehicle rows out.
+bindings (reference ``etl/runtime/handler.py:54-78``).  The engine has
+one decoder, and it runs on every platform: a minimal, dependency-free
+codec for the (public, stable) GTFS-Realtime wire format — just the
+fields the reference extracts, so no protobuf library, compiled
+descriptor or spark-protobuf connector jar is needed — run through
+Arrow-batched ``mapInPandas``: one feed payload in, N flattened vehicle
+rows out.
 
 Wire-format facts used (all from the public protobuf encoding spec and
 the public gtfs-realtime.proto):
@@ -180,32 +181,28 @@ def try_parse_feed(payload: bytes) -> tuple[list[dict] | None, str | None]:
         return None, f"{type(exc).__name__}: {exc}"
 
 
-def decode_feed_frames(
-    frames: DataFrame, payload_col: str = "payload", on_error: str = "skip"
-) -> DataFrame:
-    """DataFrame of feed payloads (binary) → flattened position rows.
+def decode_feed_frames(frames: DataFrame) -> DataFrame:
+    """DataFrame of feed payloads (binary ``payload``) → flattened
+    position rows.
 
     Arrow-batched mapInPandas: each feed blob fans out to its vehicle
     rows; partitioning of the payload frames is preserved (narrow op).
 
-    ``on_error="skip"`` (default) drops undecodable payloads so one
-    poisonous blob cannot fail the task (and with it the whole streaming
-    query); pair with :func:`quarantine_feed_frames` to capture them.
-    ``on_error="raise"`` propagates — the strict mode for tests.
+    Undecodable payloads are dropped so one poisonous blob cannot fail
+    the task (and with it the whole streaming query); pair with
+    :func:`quarantine_feed_frames` to capture them.
     """
     cols = [f.name for f in VEHICLE_POSITIONS_RAW.fields]
 
     def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[dict] = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 if payload is None:
                     continue
                 recs, err = try_parse_feed(bytes(payload))
                 if err is None:
                     rows.extend(recs)
-                elif on_error == "raise":
-                    raise ValueError(f"undecodable feed payload: {err}")
             out = pd.DataFrame(rows, columns=cols)
             for c in ("latitude", "longitude", "bearing", "speed"):
                 out[c] = out[c].astype("float64")
@@ -215,9 +212,7 @@ def decode_feed_frames(
     return frames.mapInPandas(decode, schema=VEHICLE_POSITIONS_RAW)
 
 
-def quarantine_feed_frames(
-    frames: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def quarantine_feed_frames(frames: DataFrame) -> DataFrame:
     """The bad-record side channel: payloads :func:`parse_feed` rejects,
     with the failure reason (DLQ analog, construct.py:186).  Works batch
     or streaming; narrow, column-pruned to the payload column."""
@@ -225,7 +220,7 @@ def quarantine_feed_frames(
     def sift(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             bad: list[tuple[bytes, str]] = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 if payload is None:
                     bad.append((None, "null payload"))
                     continue
@@ -234,110 +229,7 @@ def quarantine_feed_frames(
                     bad.append((bytes(payload), err))
             yield pd.DataFrame(bad, columns=["payload", "reason"])
 
-    return frames.select(payload_col).mapInPandas(sift, schema=QUARANTINE_SCHEMA)
-
-
-# --- standard from_protobuf path (optional; SURVEY §2.1 S2) ----------------
-
-
-def spark_protobuf_available(spark) -> bool:
-    """True when the ``spark-protobuf`` connector classes are on the JVM
-    classpath (they ship as a separate module jar; absent in this
-    container — the hand-rolled codec below is the always-available
-    fallback)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def decode_feed_frames_protobuf(
-    frames: DataFrame,
-    descriptor_path: str,
-    payload_col: str = "payload",
-    message_name: str = "transit_realtime.FeedMessage",
-    on_error: str = "skip",
-) -> DataFrame:
-    """Standard-path twin of :func:`decode_feed_frames`: Spark's
-    ``from_protobuf`` with a user-supplied compiled descriptor set
-    (``protoc --descriptor_set_out --include_imports gtfs-realtime.proto``),
-    flattened to the same VEHICLE_POSITIONS_RAW rows the reference
-    extracts with its generated bindings (handler.py:54-78).
-
-    Use when the spark-protobuf module jar and a real descriptor are
-    deployed; raises a clear error (naming the fallback) when the
-    connector is absent.  The flatten decodes the REAL direction_id —
-    same documented deviation from the reference's handler.py:65 bug as
-    the hand-rolled codec.
-
-    ``on_error`` matches the wire codec's contract so the two paths stay
-    interchangeable on BAD payloads too, not just good ones:
-    ``"skip"`` maps to ``from_protobuf``'s PERMISSIVE mode (malformed
-    payload → null struct, filtered out here), ``"raise"`` to FAILFAST.
-    """
-    from pyspark.sql import functions as F
-
-    spark = frames.sparkSession
-    if not spark_protobuf_available(spark):
-        raise RuntimeError(
-            "spark-protobuf connector jar is not on the classpath; use "
-            "decode_feed_frames() (dependency-free wire codec) or deploy "
-            "org.apache.spark:spark-protobuf_2.13"
-        )
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    if on_error not in ("skip", "raise"):
-        raise ValueError(f"on_error must be 'skip' or 'raise', got {on_error!r}")
-    mode = "PERMISSIVE" if on_error == "skip" else "FAILFAST"
-    feed = frames.select(
-        from_protobuf(
-            F.col(payload_col),
-            message_name,
-            descFilePath=descriptor_path,
-            options={"mode": mode},
-        ).alias("feed")
-    )
-    if on_error == "skip":
-        # PERMISSIVE nulls the whole struct on malformed bytes — drop
-        # those rows, mirroring the wire codec's skip behavior
-        feed = feed.filter(F.col("feed").isNotNull())
-    v = F.col("e.vehicle")
-    return (
-        feed.select(F.explode("feed.entity").alias("e"))
-        .filter(v.isNotNull())
-        .select(
-            v.getField("trip").getField("trip_id").alias("trip_id"),
-            v.getField("trip").getField("route_id").alias("route_id"),
-            v.getField("trip").getField("direction_id").cast("string").alias("direction_id"),
-            v.getField("vehicle").getField("id").alias("vehicle_id"),
-            v.getField("position").getField("latitude").cast("double").alias("latitude"),
-            v.getField("position").getField("longitude").cast("double").alias("longitude"),
-            v.getField("position").getField("bearing").cast("double").alias("bearing"),
-            v.getField("position").getField("speed").cast("double").alias("speed"),
-            v.getField("timestamp").cast("long").alias("timestamp"),
-        )
-    )
-
-
-def decode_feed_frames_auto(
-    frames: DataFrame,
-    descriptor_path: str | None = None,
-    payload_col: str = "payload",
-    on_error: str = "skip",
-) -> DataFrame:
-    """Feature-gated dispatch: the standard ``from_protobuf`` path when a
-    descriptor is configured AND the connector is deployed, else the
-    dependency-free wire codec.  Identical output schema either way, and
-    ``on_error`` is honored on BOTH paths (skip → PERMISSIVE+filter,
-    raise → FAILFAST on the protobuf side)."""
-    if descriptor_path and spark_protobuf_available(frames.sparkSession):
-        return decode_feed_frames_protobuf(
-            frames, descriptor_path, payload_col, on_error=on_error
-        )
-    return decode_feed_frames(frames, payload_col, on_error)
+    return frames.select("payload").mapInPandas(sift, schema=QUARANTINE_SCHEMA)
 
 
 # --- test/bench-side encoder (synthetic feeds; public wire format) ---------

@@ -2,15 +2,16 @@
 DataSource API).
 
 The reference polls the agency endpoint with an HTTP GET inside a
-lambda on an EventBridge/Step Functions cadence
-(/root/reference/etl/runtime/handler.py:43-54 with the sub-minute loop
-of etl/infrastructure/construct.py:26-110).  The idiomatic Spark form
+lambda on an EventBridge/Step Functions cadence (reference
+``etl/runtime/handler.py:43-54`` with the sub-minute loop of
+``etl/infrastructure/construct.py:26-110``).  The idiomatic Spark form
 of that poll loop is a first-class streaming source: this module
 implements ``readStream.format("gtfs_rt")`` via PySpark 4's
-``DataSource`` / ``SimpleDataSourceStreamReader`` API, replacing the
-driver-side file bridge (``sources/poller.py`` + binaryFile stream)
-with one engine-managed source whose offsets live in the streaming
-checkpoint.
+``DataSource`` / ``SimpleDataSourceStreamReader`` API — one
+engine-managed source whose offsets live in the streaming checkpoint.
+``GtfsRtStreamReader._fetch`` is the engine's only HTTP fetch;
+``config.py::AgencyConfig.start_ingest`` drives it with an agency's
+URL, API-key header and cadence.
 
 Semantics:
 

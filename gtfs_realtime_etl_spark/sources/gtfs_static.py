@@ -2,11 +2,10 @@
 
 The reference loads trips/stops/routes/shapes/stop_times from CSV with
 inferred schemas plus a ``stop_id``-forced-VARCHAR override
-(/root/reference/notebooks/schedule_deviation.ipynb:264-280).  We pin
+(reference ``notebooks/schedule_deviation.ipynb:264-280``).  We pin
 explicit schemas (schemas.py) — inference costs an extra pass and can
-flip types between feeds; pinning is the 100 TB-safe default.  An
-``infer=True`` escape hatch reproduces the reference behavior, including
-the VARCHAR override.
+flip types between feeds; pinned, ``stop_id`` is a string everywhere,
+which is what the reference's override achieves.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.schemas import GTFS_STATIC_SCHEMAS
 
@@ -23,7 +21,6 @@ def load_gtfs_static(
     spark: SparkSession,
     gtfs_dir: str,
     tables: tuple[str, ...] = ("routes", "trips", "stops", "stop_times", "shapes"),
-    infer: bool = False,
 ) -> dict[str, DataFrame]:
     """Load GTFS static CSVs (``{gtfs_dir}/{table}.txt``) as DataFrames.
 
@@ -31,17 +28,9 @@ def load_gtfs_static(
     (stops ~11k, routes ~tens; stop_times is the big one at ~4.3M rows
     for TTC) — join-side broadcast decisions are left to AQE/Catalyst.
     """
-    out: dict[str, DataFrame] = {}
-    for t in tables:
-        path = os.path.join(gtfs_dir, f"{t}.txt")
-        reader = spark.read.option("header", True)
-        if infer:
-            df = reader.option("inferSchema", True).csv(path)
-            # Reference parity: stop_id is forced VARCHAR in stops and
-            # stop_times (ipynb:267-271, 279-280).
-            if "stop_id" in df.columns:
-                df = df.withColumn("stop_id", F.col("stop_id").cast("string"))
-        else:
-            df = reader.schema(GTFS_STATIC_SCHEMAS[t]).csv(path)
-        out[t] = df
-    return out
+    return {
+        t: spark.read.option("header", True)
+        .schema(GTFS_STATIC_SCHEMAS[t])
+        .csv(os.path.join(gtfs_dir, f"{t}.txt"))
+        for t in tables
+    }

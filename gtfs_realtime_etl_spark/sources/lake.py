@@ -15,11 +15,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE
 
 PARTITION_COLS = ("year", "month", "day")
+
+#: Raw-zone codec (hot per-tick appends); the compacted zone uses zstd.
+RAW_COMPRESSION = "snappy"
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -41,14 +43,7 @@ def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     )
 
 
-def write_locations_batch(
-    df: DataFrame,
-    root: str,
-    mode: str = "append",
-    compression: str = "snappy",
-    max_records_per_file: int | None = None,
-    geoparquet: bool = False,
-) -> None:
+def write_locations_batch(df: DataFrame, root: str, geoparquet: bool = False) -> None:
     """Append one micro-batch (or any enriched positions DataFrame) to the
     hive-partitioned lake.  Raw zone uses snappy (hot tier, reference
     parity handler.py:150); the compacted zone uses zstd (see
@@ -76,11 +71,9 @@ def write_locations_batch(
         before = {
             f for d in part_dirs for f in _glob.glob(_os.path.join(d, "*.parquet"))
         }
-    writer = df.write.mode(mode).partitionBy(*PARTITION_COLS)
-    writer = writer.option("compression", compression)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(root)
+    df.write.mode("append").partitionBy(*PARTITION_COLS).option(
+        "compression", RAW_COMPRESSION
+    ).parquet(root)
     if geoparquet and "geometry" in df.columns:
         from gtfs_realtime_etl_spark.sources.geoparquet import (
             stamp_geoparquet_files,
@@ -89,12 +82,10 @@ def write_locations_batch(
         after = {
             f for d in part_dirs for f in _glob.glob(_os.path.join(d, "*.parquet"))
         }
-        stamp_geoparquet_files(sorted(after - before), compression=compression)
+        stamp_geoparquet_files(sorted(after - before), compression=RAW_COMPRESSION)
 
 
-def read_locations(
-    spark: SparkSession, root: str, schema: StructType | None = LOCATIONS_LAKE
-) -> DataFrame:
+def read_locations(spark: SparkSession, root: str) -> DataFrame:
     """Read the whole lake as one logical table (reference: DuckDB
     ``read_parquet('…/year=*/month=*/day=*/*.parquet',
     hive_partitioning=true)``, schedule_deviation.ipynb:489-490).
@@ -105,12 +96,8 @@ def read_locations(
     evolved/corrupt file cannot silently change the table shape, and
     no inference listing pass runs over a 100 TB lake.  The reference
     needed a unified-schema workaround for exactly this drift
-    (compaction/runtime/handler.py:86-102).  ``schema=None`` restores
-    inference (parity/debug mode)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(root)
+    (compaction/runtime/handler.py:86-102)."""
+    return spark.read.schema(LOCATIONS_LAKE).parquet(root)
 
 
 def read_reference_lake(spark: SparkSession, root: str) -> DataFrame:
@@ -186,32 +173,3 @@ def day_slice_arrow(
     Driver-side by design: a day slice is the human-scale end of the
     funnel, not a distributed stage."""
     return day_slice(spark, root, year, month, day, columns).toArrow()
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: tuple[str, ...],
-    num_buckets: int = 32,
-    sort_cols: tuple[str, ...] | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) parquet table.
-
-    The 100 TB co-location play: two tables bucketed the same way on
-    their join key join WITHOUT any exchange — each bucket pair joins
-    locally, so the recurring per-query shuffle of a hot fact⋈fact join
-    is paid ONCE at write time.  Same mechanism serves keyed aggs.
-    Bucketing requires the table catalog (``saveAsTable``): bucket
-    metadata lives in the catalog, not the files; ``path`` makes it an
-    external table at that location.  Pinned by
-    tests/test_plan_shapes.py::test_bucketed_join_is_shuffle_free.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(name)
-

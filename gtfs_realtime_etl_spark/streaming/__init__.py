@@ -1,4 +1,4 @@
-"""Structured Streaming ingest (Kafka / rate / file sources), lake
+"""Structured Streaming ingest (Kafka / HTTP / file sources), lake
 maintenance (compaction), stateful operators, and watermarked windows."""
 
 from gtfs_realtime_etl_spark.streaming.compaction import (
@@ -10,11 +10,10 @@ from gtfs_realtime_etl_spark.streaming.joins import interval_join
 from gtfs_realtime_etl_spark.streaming.ingest import (
     feed_pipeline,
     kafka_feed_frames,
-    rate_feed_frames,
     start_feed_file_stream,
+    start_feed_http_stream,
     start_feed_kafka_stream,
     start_feed_quarantine_stream,
-    start_feed_rate_stream,
 )
 from gtfs_realtime_etl_spark.streaming.stateful import (
     streaming_sessionize,
@@ -30,11 +29,10 @@ __all__ = [
     "feed_pipeline",
     "interval_join",
     "kafka_feed_frames",
-    "rate_feed_frames",
     "start_feed_file_stream",
+    "start_feed_http_stream",
     "start_feed_kafka_stream",
     "start_feed_quarantine_stream",
-    "start_feed_rate_stream",
     "streaming_sessionize",
     "streaming_vehicle_state",
     "windowed_counts",

@@ -23,6 +23,8 @@ from pyspark.sql import SparkSession
 
 #: Reference row-group band (compaction/runtime/handler.py:105-107).
 MAX_RECORDS_PER_FILE = 122_880
+#: Compacted-zone codec (cold tier; the raw zone appends snappy).
+COMPRESSION = "zstd"
 
 
 def dates_in_range(
@@ -63,14 +65,12 @@ def compact_partition(
     year: int,
     month: int,
     day: int | None = None,
-    target_files: int = 1,
-    compression: str = "zstd",
-    max_records_per_file: int = MAX_RECORDS_PER_FILE,
-    sort_col: str | None = "timestamp",
     geoparquet: bool = False,
 ) -> int:
     """Rewrite one partition (day, or whole month when ``day`` is None)
-    from the raw zone into the compacted zone.  Returns rows written.
+    from the raw zone into the compacted zone: one zstd file per
+    partition (more only past ``MAX_RECORDS_PER_FILE`` rows), sorted by
+    ``timestamp``.  Returns rows written.
 
     Partition-scoped read → partition pruning keeps this O(partition),
     never O(lake).  The rewrite itself is shuffle-free: coalesce only
@@ -86,20 +86,20 @@ def compact_partition(
         part += f"/day={day}"
     src = f"{source_root}/{part}"
     df = spark.read.parquet(src)
-    if sort_col and sort_col in df.columns:
-        df = df.sortWithinPartitions(sort_col)
+    if "timestamp" in df.columns:
+        df = df.sortWithinPartitions("timestamp")
     n = df.count()
     (
-        df.coalesce(target_files)
+        df.coalesce(1)
         .write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_records_per_file))
+        .option("compression", COMPRESSION)
+        .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
         .parquet(f"{target_root}/{part}")
     )
     if geoparquet and "geometry" in df.columns:
         from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet
 
-        stamp_geoparquet(f"{target_root}/{part}", compression=compression)
+        stamp_geoparquet(f"{target_root}/{part}", compression=COMPRESSION)
     return n
 
 
@@ -112,7 +112,6 @@ def compact_partitions(
     timezone: str = "America/Toronto",
     include_current: bool = False,
     now: dt.datetime | None = None,
-    target_files: int = 1,
 ) -> dict[str, int]:
     """The scheduled job body: compact the last N closed day/month
     partitions (daily 01:00 / monthly day-1 crons in the reference,
@@ -121,15 +120,7 @@ def compact_partitions(
     for d in dates_in_range(duration, timezone, period, include_current, now):
         day = d.day if period == "day" else None
         try:
-            n = compact_partition(
-                spark,
-                source_root,
-                target_root,
-                d.year,
-                d.month,
-                day,
-                target_files=target_files,
-            )
+            n = compact_partition(spark, source_root, target_root, d.year, d.month, day)
         except Exception as e:  # partition may not exist yet — skip like the reference
             if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
                 continue

@@ -21,8 +21,8 @@ shingle-Jaccard, so the finalized pair set equals the one-shot
 ``minhash_lsh_dedup`` under any micro-batch slicing, even when bucket
 caps bind.
 
-Idempotency (effectively-once under batch retry, the house pattern of
-``streaming/ingest.py``): a batch-id commit marker skips a whole-batch
+Idempotency (effectively-once under batch retry): the batch-commit
+step of ``streaming/ingest.py::once_per_batch`` skips a whole-batch
 redelivery.  A crash BETWEEN an append and the marker re-runs the
 batch, so each step is retry-safe on its own:
 
@@ -64,6 +64,7 @@ from gtfs_realtime_etl_spark.operators.dedup import (
     lsh_band_rows,
     probe_index,
 )
+from gtfs_realtime_etl_spark.streaming.ingest import once_per_batch, start_with_trigger
 
 _INDEX_COLS = ("doc_id", "band_id", "band_key")
 
@@ -80,20 +81,11 @@ def make_dedup_fold_sink(
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ):
     """foreachBatch function: probe the batch against the standing
-    index, append candidates + band rows."""
+    index, append candidates + band rows (once per batch id, markers
+    under ``<checkpoint>/fold_commits/``)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{checkpoint_dir}/fold_commits/{batch_id}"
-        )
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):  # retried batch: already processed
-            return
-
         # Pin the batch rows (streaming-tagged plans can't re-execute);
         # micro-batch-sized by construction.
         batch = batch_df.localCheckpoint(eager=True)
@@ -106,7 +98,10 @@ def make_dedup_fold_sink(
             shingle_k=shingle_k,
         )
 
-        index_exists = fs.exists(jvm.org.apache.hadoop.fs.Path(index_root))
+        index_path = spark._jvm.org.apache.hadoop.fs.Path(index_root)
+        index_exists = index_path.getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        ).exists(index_path)
         index_rows = None
         if index_exists:
             # batch_id != current: a retry after a partial index append
@@ -131,10 +126,7 @@ def make_dedup_fold_sink(
             sigs = sigs.join(stored, ["doc_id", "band_id"], "left_anti")
         sigs.write.partitionBy("batch_id").mode("append").parquet(index_root)
 
-        fs.mkdirs(marker.getParent())
-        fs.create(marker, True).close()
-
-    return sink
+    return once_per_batch(f"{checkpoint_dir}/fold_commits", fold)
 
 
 def start_dedup_fold_stream(
@@ -156,11 +148,7 @@ def start_dedup_fold_stream(
             )
         )
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_with_trigger(writer, trigger_seconds, available_now)
 
 
 def finalize_fold(

@@ -14,31 +14,35 @@ parquet append) onto the native Spark construct:
   handler.py:82-84.
 - Checkpointing gives at-least-once delivery — strictly stronger than
   the reference's at-most-once (retries disabled, DLQ on failure) — and
-  the batch-id commit log in :func:`make_idempotent_lake_sink` upgrades
+  the batch-id commit log of :func:`once_per_batch` upgrades
   the lake append to effectively-once under batch retry.
 - Beyond-reference hardening (flagged in SURVEY §2.7 T5): optional
   event-time watermark + dropDuplicates on (vehicle_id, timestamp).
 
-Three interchangeable frame sources feed the same pipeline:
+One pipeline, fed by three frame sources (each yields ``payload
+binary``, one FeedMessage per row):
 
 - :func:`kafka_feed_frames` — the production path (BASELINE approach:
   "Structured Streaming + Kafka/Kinesis source"): one feed payload per
   Kafka record value.
-- :func:`rate_feed_frames` — broker-free stand-in: the built-in ``rate``
-  source drives a stream-static join against a payload table, emitting
-  real FeedMessage bytes at a controlled cadence (the containerized test
-  path for the Kafka shape).
+- :func:`start_feed_http_stream` — the reference's poll loop as the
+  native ``gtfs_rt`` source (sources/gtfs_rt_source.py): one HTTP GET
+  per micro-batch, spooled for replay.
 - the ``binaryFile`` stream in :func:`start_feed_file_stream` — one
-  payload per file, the shape the reference's poller writes to S3.
+  payload per file, the shape the reference's fetch lands in S3.
+
+The lake sink here and the fold sink of ``streaming/dedup_fold.py``
+commit through :func:`once_per_batch`; they and the quarantine stream
+start through :func:`start_with_trigger`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from gtfs_realtime_etl_spark.operators.ingest import enrich_positions
 from gtfs_realtime_etl_spark.sources.gtfs_rt import (
@@ -77,8 +81,7 @@ def kafka_feed_frames(
     Requires the Kafka connector on the classpath
     (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark
     version>``); without it ``load()`` raises "Failed to find data
-    source: kafka" — see :func:`rate_feed_frames` for the broker-free
-    twin used in tests.
+    source: kafka".
     """
     return (
         spark.readStream.format("kafka")
@@ -90,66 +93,62 @@ def kafka_feed_frames(
     )
 
 
-def rate_feed_frames(
-    spark: SparkSession,
-    payloads: Sequence[bytes],
-    rows_per_second: int = 10,
-) -> DataFrame:
-    """Kafka-shaped feed frames without a broker: the built-in ``rate``
-    source emits a monotonically increasing ``value``, which indexes
-    (mod n, broadcast stream-static join) into a static table of real
-    FeedMessage payloads.  Same schema as :func:`kafka_feed_frames`
-    (``payload binary``), so everything downstream is identical.
+def once_per_batch(
+    marker_dir: str, body: Callable[[DataFrame, int], None]
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function that runs ``body`` at most once per batch
+    id, made idempotent under batch RETRY via a batch-id commit log.
+
+    Structured Streaming's contract is at-least-once for foreachBatch: a
+    failure between the body's writes and the checkpoint commit
+    re-delivers the SAME (batch_id, data) on restart.  The step skips an
+    empty batch (handler.py:82-84), skips a batch whose marker
+    ``<marker_dir>/<batch_id>`` exists, runs ``body``, then creates the
+    marker — written through the Hadoop FileSystem API so any scheme
+    the checkpoint supports works.  The unguarded window shrinks to a
+    crash BETWEEN the body's completion and marker creation
+    (milliseconds); closing it entirely needs a transactional table
+    format (Delta/Iceberg), where the batch id rides in the table's own
+    commit log.
     """
-    table = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "idx long, payload binary",
-    )
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-        .withColumn("idx", F.col("value") % F.lit(len(payloads)))
-    )
-    return rate.join(F.broadcast(table), "idx").select("payload")
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        marker = spark._jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/{batch_id}")
+        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(marker):  # retried batch: already fully applied
+            return
+        body(batch_df, batch_id)
+        fs.mkdirs(marker.getParent())
+        fs.create(marker, True).close()
+
+    return sink
+
+
+def start_with_trigger(
+    writer: DataStreamWriter, trigger_seconds: int, available_now: bool
+) -> StreamingQuery:
+    """The one trigger rule: ``available_now`` drains the backlog and
+    stops (the testable mode); otherwise a micro-batch every
+    ``trigger_seconds`` (the reference's poll cadence)."""
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
 
 
 def make_idempotent_lake_sink(
     lake_root: str, checkpoint_dir: str, geoparquet: bool = False
 ):
     """foreachBatch function appending into the hive-partitioned lake,
-    made idempotent under batch RETRY via a batch-id commit log.
-
-    Structured Streaming's contract is at-least-once for foreachBatch: a
-    failure between the append and the checkpoint commit re-delivers the
-    SAME (batch_id, data) on restart.  The sink records each completed
-    batch id as a marker file under ``<checkpoint>/lake_commits/`` —
-    written through the Hadoop FileSystem API so any scheme the
-    checkpoint supports works — and skips batch ids already present, so
-    a re-delivered batch cannot double-append.  The unguarded window
-    shrinks to a crash BETWEEN append completion and marker creation
-    (milliseconds); closing it entirely needs a transactional table
-    format (Delta/Iceberg), where the batch id rides in the table's own
-    commit log.  Also keeps the empty-batch short-circuit
-    (handler.py:82-84).
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # empty-batch short-circuit (handler.py:82-84)
-            return
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{checkpoint_dir}/lake_commits/{batch_id}"
-        )
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):  # retried batch: already fully appended
-            return
-        write_locations_batch(batch_df, lake_root, geoparquet=geoparquet)
-        fs.mkdirs(marker.getParent())
-        fs.create(marker, True).close()
-
-    return sink
+    once per batch id (markers under ``<checkpoint>/lake_commits/``)."""
+    return once_per_batch(
+        f"{checkpoint_dir}/lake_commits",
+        lambda batch_df, _: write_locations_batch(
+            batch_df, lake_root, geoparquet=geoparquet
+        ),
+    )
 
 
 def _start_lake_sink(
@@ -162,20 +161,15 @@ def _start_lake_sink(
 ) -> StreamingQuery:
     """Common tail of every ingest stream: idempotent foreachBatch append
     into the hive-partitioned lake."""
-    sink = make_idempotent_lake_sink(lake_root, checkpoint_dir, geoparquet)
     writer = (
         enriched.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+        .foreachBatch(make_idempotent_lake_sink(lake_root, checkpoint_dir, geoparquet))
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_with_trigger(writer, trigger_seconds, available_now)
 
 
-def _file_frames(spark: SparkSession, feed_dir: str) -> DataFrame:
+def _feed_files(spark: SparkSession, feed_dir: str) -> DataFrame:
     return (
         spark.readStream.format("binaryFile")
         # streaming sources need the schema up front (binaryFile's is fixed)
@@ -183,7 +177,6 @@ def _file_frames(spark: SparkSession, feed_dir: str) -> DataFrame:
             "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
         )
         .load(feed_dir)
-        .select(F.col("content").alias("payload"))
     )
 
 
@@ -205,7 +198,8 @@ def start_feed_file_stream(
     payloads are skipped here; run :func:`start_feed_quarantine_stream`
     on the same directory to capture them (DLQ analog).
     """
-    enriched = feed_pipeline(_file_frames(spark, feed_dir), dedup=dedup)
+    frames = _feed_files(spark, feed_dir).select(F.col("content").alias("payload"))
+    enriched = feed_pipeline(frames, dedup=dedup)
     return _start_lake_sink(
         enriched, lake_root, checkpoint_dir, trigger_seconds, available_now,
         geoparquet=geoparquet,
@@ -246,14 +240,7 @@ def start_feed_quarantine_stream(
     mirrors the reference's 15-minute DLQ event-age bound (see
     :func:`with_max_event_age`); pass ``None`` to quarantine
     regardless of age."""
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
-        )
-        .load(feed_dir)
-    )
-    raw = with_max_event_age(raw, max_event_age_minutes)
+    raw = with_max_event_age(_feed_files(spark, feed_dir), max_event_age_minutes)
     bad = quarantine_feed_frames(raw.select(F.col("content").alias("payload")))
     writer = (
         bad.writeStream.format("parquet")
@@ -261,11 +248,7 @@ def start_feed_quarantine_stream(
         .option("path", quarantine_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_with_trigger(writer, trigger_seconds, available_now)
 
 
 def start_feed_kafka_stream(
@@ -326,22 +309,4 @@ def start_feed_http_stream(
     return _start_lake_sink(
         enriched, lake_root, checkpoint_dir, trigger_seconds,
         available_now=False, geoparquet=geoparquet,
-    )
-
-
-def start_feed_rate_stream(
-    spark: SparkSession,
-    payloads: Sequence[bytes],
-    lake_root: str,
-    checkpoint_dir: str,
-    rows_per_second: int = 10,
-    trigger_seconds: int = 1,
-    dedup: bool = True,
-) -> StreamingQuery:
-    """Broker-free twin of :func:`start_feed_kafka_stream` for tests and
-    local soak runs: same pipeline, rate-driven payload replay."""
-    frames = rate_feed_frames(spark, payloads, rows_per_second)
-    enriched = feed_pipeline(frames, dedup=dedup)
-    return _start_lake_sink(
-        enriched, lake_root, checkpoint_dir, trigger_seconds, available_now=False
     )

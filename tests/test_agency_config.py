@@ -1,15 +1,23 @@
 """Per-agency env-driven configuration (reference ETLSettings parity:
 etl/infrastructure/config.py:11-38 — feed URL, API key + header, IANA
 timezone, cadence, destination bucket per agency; deploy.sh:4-8 shows
-two cities deployed from two env files)."""
+two cities deployed from two env files).  Ingest runs over HTTP against
+local feed endpoints."""
 
 from __future__ import annotations
 
-import os
+import http.server
+import threading
+import time
+
+import pytest
 
 from gtfs_realtime_etl_spark.config import AgencyConfig
 from gtfs_realtime_etl_spark.schemas import VEHICLE_POSITIONS_RAW
+from gtfs_realtime_etl_spark.sources.gtfs_rt import encode_feed
 from gtfs_realtime_etl_spark.sources.lake import read_locations
+
+N_TICKS = 3
 
 TWO_CITY_ENV = {
     # city 1: Edmonton-shaped (reference defaults)
@@ -99,83 +107,101 @@ def test_two_city_pipelines_from_env(spark, tmp_path, monkeypatch):
     assert yyz_lake.filter("route_id = 'r1'").count() == 5
 
 
-def test_poll_once_uses_configured_headers(tmp_path, monkeypatch):
-    """The configured API key header reaches the HTTP request and the
-    payload lands atomically in the inbox (handler.py:43-54 parity)."""
-    import gtfs_realtime_etl_spark.sources.poller as poller_mod
-
-    seen = {}
-
-    class FakeResp:
-        def read(self):
-            return b"\x0a\x00"
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    def fake_urlopen(req, timeout=None):
-        seen["headers"] = dict(req.header_items())
-        seen["url"] = req.full_url
-        return FakeResp()
-
-    monkeypatch.setattr(poller_mod.urllib.request, "urlopen", fake_urlopen)
-
-    env = dict(TWO_CITY_ENV)
-    env["YYZ_DESTINATION_BUCKET"] = str(tmp_path / "lake")
-    cfg = AgencyConfig.from_env(prefix="YYZ_", env=env)
-    out = cfg.poll_once(str(tmp_path / "inbox"))
-    assert os.path.exists(out) and open(out, "rb").read() == b"\x0a\x00"
-    assert seen["url"] == cfg.veh_position_url
-    assert {k.lower(): v for k, v in seen["headers"].items()}["x-api-key"] == "sekrit"
-
-
-def test_two_city_ingest_through_config(spark, tmp_path):
-    """The full deployment loop from env alone: AgencyConfig → fetch
-    (stubbed payloads in the inbox) → cfg.start_ingest (file stream at
-    the configured cadence, availableNow drain) → each city's lake —
-    isolated lakes, enriched schema, correct partitioning."""
-    from gtfs_realtime_etl_spark.sources.gtfs_rt import encode_feed
-
-    env = dict(TWO_CITY_ENV)
-    env["YEG_DESTINATION_BUCKET"] = str(tmp_path / "yeg_lake")
-    env["YYZ_DESTINATION_BUCKET"] = str(tmp_path / "yyz_lake")
-    cities = [AgencyConfig.from_env(prefix=p, env=env) for p in ("YEG_", "YYZ_")]
-
+@pytest.fixture()
+def city_feeds():
+    """One local feed endpoint per city (YEG, YYZ): the n-th GET returns
+    tick n's FeedMessage (the last tick repeats), and every request's
+    headers are recorded."""
     base_ts = 1_709_650_800  # 2024-03-05
-    for i, cfg in enumerate(cities):
-        inbox = tmp_path / f"inbox{i}"
-        inbox.mkdir()
-        for tick in range(3):
-            records = [
-                {
-                    "trip_id": f"t{i}{tick}{j}",
-                    "route_id": f"r{i}",
-                    "vehicle_id": f"veh{i}{j}",
-                    "latitude": 53.5 + i,
-                    "longitude": -113.5 - i,
-                    "timestamp": base_ts + tick * 60 + j,
-                }
-                for j in range(4)
-            ]
-            (inbox / f"feed_{tick:04d}.pb").write_bytes(encode_feed(records))
-        q = cfg.start_ingest(
-            spark,
-            feed_dir=str(inbox),
-            checkpoint_dir=str(tmp_path / f"ckpt{i}"),
-            available_now=True,
-        )
-        q.awaitTermination(120)
+    feeds, servers = [], []
+    for i in range(2):
+        payloads = [
+            encode_feed(
+                [
+                    {
+                        "trip_id": f"t{i}{tick}{j}",
+                        "route_id": f"r{i}",
+                        "vehicle_id": f"veh{i}{j}",
+                        "latitude": 53.5 + i,
+                        "longitude": -113.5 - i,
+                        "timestamp": base_ts + tick * 60 + j,
+                    }
+                    for j in range(4)
+                ]
+            )
+            for tick in range(N_TICKS)
+        ]
+        seen: list[dict[str, str]] = []
 
-    from gtfs_realtime_etl_spark.sources.lake import read_locations
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def do_GET(self, payloads=payloads, seen=seen):
+                seen.append({k.lower(): v for k, v in self.headers.items()})
+                body = payloads[min(len(seen), len(payloads)) - 1]
+                self.send_response(200)
+                self.send_header("Content-Type", "application/x-protobuf")
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *a):  # quiet
+                pass
+
+        srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        servers.append(srv)
+        feeds.append((f"http://127.0.0.1:{srv.server_address[1]}/vp.pb", seen))
+    yield feeds
+    for srv in servers:
+        srv.shutdown()
+
+
+def test_two_city_ingest_through_config(spark, tmp_path, city_feeds):
+    """The full deployment loop from env alone: AgencyConfig →
+    cfg.start_ingest (one configured GET per micro-batch through the
+    ``gtfs_rt`` source, at the configured cadence) → each city's lake:
+    the API-key header reaches only the keyed city's endpoint, and the
+    lakes are isolated, enriched and partitioned."""
+    env = dict(TWO_CITY_ENV)
+    for prefix, (url, _) in zip(("YEG_", "YYZ_"), city_feeds):
+        env[f"{prefix}VEH_POSITION_URL"] = url
+        env[f"{prefix}SCHEDULE_SECONDS"] = "1"
+        env[f"{prefix}DESTINATION_BUCKET"] = str(tmp_path / f"{prefix}lake")
+    cities = [AgencyConfig.from_env(prefix=p, env=env) for p in ("YEG_", "YYZ_")]
+    assert [c.schedule_seconds for c in cities] == [1, 1]
+
+    expected = 4 * N_TICKS
+    queries = [
+        cfg.start_ingest(
+            spark,
+            spool_dir=str(tmp_path / f"spool{i}"),
+            checkpoint_dir=str(tmp_path / f"ckpt{i}"),
+            max_ticks=N_TICKS,
+        )
+        for i, cfg in enumerate(cities)
+    ]
+    try:
+        deadline = time.time() + 180
+        while time.time() < deadline:
+            try:
+                counts = [read_locations(spark, c.lake_root).count() for c in cities]
+            except Exception:  # a lake dir not created yet
+                counts = [0, 0]
+            if min(counts) >= expected:
+                break
+            time.sleep(1)
+    finally:
+        for q in queries:
+            q.stop()
+
+    (_, yeg_seen), (_, yyz_seen) = city_feeds
+    assert len(yeg_seen) == len(yyz_seen) == N_TICKS  # max_ticks bounds the poll
+    assert all(h.get("x-api-key") == "sekrit" for h in yyz_seen)
+    assert not any("x-api-key" in h for h in yeg_seen)
 
     for i, cfg in enumerate(cities):
         lake = read_locations(spark, cfg.lake_root)
-        assert lake.count() == 12, cfg.name
-        assert lake.filter(f"route_id = 'r{i}'").count() == 12  # isolation
+        assert lake.count() == expected, cfg.name
+        assert lake.filter(f"route_id = 'r{i}'").count() == expected  # isolation
         assert {"geohash", "geometry", "bbox", "year", "month", "day"} <= set(
             lake.columns
         )
-        assert lake.filter("year = 2024 AND month = 3").count() == 12
+        assert lake.filter("year = 2024 AND month = 3").count() == expected

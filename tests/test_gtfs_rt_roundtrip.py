@@ -82,48 +82,3 @@ def test_arbitrary_bytes_never_crash_try_parse(blob):
     regression the DLQ channel exists to prevent."""
     recs, err = try_parse_feed(blob)
     assert (recs is None) != (err is None)
-
-
-def test_protobuf_path_gating(spark):
-    """S2 standard path: when the spark-protobuf connector is deployed,
-    decode_feed_frames_protobuf runs the same ingest assertions as the
-    wire codec; here (no connector jar in the container) the gate must
-    report unavailable, the explicit call must raise the clear error
-    naming the fallback, and the auto dispatch must fall back to the
-    codec with identical output."""
-    import pytest
-
-    from gtfs_realtime_etl_spark.sources.gtfs_rt import (
-        decode_feed_frames,
-        decode_feed_frames_auto,
-        decode_feed_frames_protobuf,
-        spark_protobuf_available,
-    )
-
-    records = [
-        {
-            "trip_id": "t1",
-            "route_id": "r1",
-            "direction_id": "0",
-            "vehicle_id": "v1",
-            "latitude": 53.5,
-            "longitude": -113.5,
-            "bearing": 90.0,
-            "speed": 11.5,
-            "timestamp": 1_709_600_000,
-        }
-    ]
-    payload = encode_feed(records)
-    frames = spark.createDataFrame([(payload,)], "payload binary")
-
-    if spark_protobuf_available(spark):
-        pytest.skip("connector present: covered by the positive-path suite")
-
-    with pytest.raises(RuntimeError, match="decode_feed_frames"):
-        decode_feed_frames_protobuf(frames, "/nonexistent/gtfs_rt.desc")
-
-    # auto path falls back to the wire codec, byte-identical rows
-    via_auto = decode_feed_frames_auto(frames, descriptor_path=None).collect()
-    via_codec = decode_feed_frames(frames).collect()
-    assert via_auto == via_codec
-    assert via_auto[0].trip_id == "t1" and via_auto[0].timestamp == 1_709_600_000

@@ -141,46 +141,6 @@ def test_brute_force_topk_no_single_partition_sort(spark):
     assert sum(1 for i in aggs if i > win) >= 2, tree
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-bucketed tables joined on the bucket key must produce ZERO
-    exchanges: the join runs bucket-pair-local.  This is the write-once
-    co-location that replaces the recurring fact⋈fact shuffle at
-    100 TB."""
-    from pyspark.sql import functions as F
-
-    from gtfs_realtime_etl_spark.sources.lake import write_bucketed_table
-
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("user_id"), (F.col("id") % 7).alias("v1")
-    )
-    right = spark.range(0, 10_000).select(
-        F.col("id").alias("user_id"), (F.col("id") % 11).alias("v2")
-    )
-    write_bucketed_table(
-        left, "bkt_left", ("user_id",), num_buckets=8,
-        sort_cols=("user_id",), path=str(tmp_path / "bkt_left"),
-    )
-    write_bucketed_table(
-        right, "bkt_right", ("user_id",), num_buckets=8,
-        sort_cols=("user_id",), path=str(tmp_path / "bkt_right"),
-    )
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_left").join(spark.table("bkt_right"), "user_id")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        p = buf.getvalue()
-        assert count(p, r"\(\d+\) Exchange") == 0, p
-        assert count(p, r"\(\d+\) SortMergeJoin") == 1, p
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
 @pytest.mark.parametrize(
     "name", ["dedup_exact", "agg_pricing", "monthly_revenue", "rollup_revenue"]
 )

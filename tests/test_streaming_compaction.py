@@ -15,13 +15,13 @@ from gtfs_realtime_etl_spark.sources.gtfs_rt import (
 )
 from gtfs_realtime_etl_spark.streaming.compaction import (
     compact_partition,
+    compact_partitions,
     dates_in_range,
 )
 from gtfs_realtime_etl_spark.streaming.ingest import (
     kafka_feed_frames,
     start_feed_file_stream,
     start_feed_quarantine_stream,
-    start_feed_rate_stream,
 )
 
 
@@ -74,6 +74,10 @@ def test_stream_ingest_to_lake(spark, tmp_path):
         (feed_dir / f"feed_{tick:04d}.pb").write_bytes(
             encode_feed(_mk_records(tick, per_tick))
         )
+    # a replayed fetch: tick 0's payload again under another file name
+    (feed_dir / "feed_0000_replay.pb").write_bytes(
+        encode_feed(_mk_records(0, per_tick))
+    )
 
     lake_root = str(tmp_path / "lake")
     q = start_feed_file_stream(
@@ -87,8 +91,10 @@ def test_stream_ingest_to_lake(spark, tmp_path):
     q.awaitTermination(120)
 
     lake = spark.read.parquet(lake_root)
-    # distinct (vehicle, ts) rows survive the dropDuplicates hardening
+    # each (vehicle, ts) lands once despite the replayed payload — the
+    # watermark + dropDuplicates hardening
     assert lake.count() == n_ticks * per_tick
+    assert lake.select("vehicle_id", "timestamp").distinct().count() == lake.count()
     cols = set(lake.columns)
     assert {"trip_id", "geohash", "geometry", "bbox", "year", "month", "day"} <= cols
     assert lake.filter("year = 2024 AND month = 3 AND day = 5").count() == lake.count()
@@ -181,45 +187,6 @@ def test_corrupt_payload_quarantined_batch_succeeds(spark, tmp_path):
     assert bytes(bad["payload"].iloc[0]) == corrupt
 
 
-def test_kafka_shaped_rate_stream_to_lake(spark, tmp_path):
-    """End-to-end through the Kafka-shaped source twin: rate-driven
-    payload replay → decode → enrich → dedup → partitioned lake, same
-    assertions as the file-stream test."""
-    import time
-
-    n_ticks, per_tick = 4, 5
-    payloads = [encode_feed(_mk_records(t, per_tick)) for t in range(n_ticks)]
-    lake_root = str(tmp_path / "lake")
-    q = start_feed_rate_stream(
-        spark,
-        payloads,
-        lake_root,
-        str(tmp_path / "ckpt"),
-        rows_per_second=20,
-        trigger_seconds=1,
-    )
-    try:
-        expected = n_ticks * per_tick
-        deadline = time.time() + 120
-        count = 0
-        while time.time() < deadline:
-            try:
-                count = spark.read.parquet(lake_root).count()
-            except Exception:  # lake not created yet
-                count = 0
-            if count >= expected:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    # every distinct (vehicle, ts) lands exactly once despite payload
-    # replay — the watermark+dropDuplicates hardening
-    lake = spark.read.parquet(lake_root)
-    assert lake.count() == expected
-    assert {"trip_id", "geohash", "year", "month", "day"} <= set(lake.columns)
-    assert lake.filter("year = 2024 AND month = 3 AND day = 5").count() == expected
-
-
 def test_kafka_source_shape(spark):
     """kafka_feed_frames builds the production source; without the
     connector jar the failure is Spark's missing-data-source error (not
@@ -248,7 +215,7 @@ def test_compaction_conserves_rows(spark, tmp_path):
 
     compacted_root = str(tmp_path / "compacted")
     n = compact_partition(
-        spark, raw_root, compacted_root, 2024, 3, 5, target_files=1
+        spark, raw_root, compacted_root, 2024, 3, 5
     )
     raw_count = spark.read.parquet(raw_root).count()
     comp_count = spark.read.parquet(compacted_root).count()
@@ -278,7 +245,7 @@ def test_compaction_stamps_geoparquet_footer(spark, tmp_path):
 
     compacted = str(tmp_path / "compacted")
     n = compact_partition(
-        spark, raw_root, compacted, 2024, 3, 5, target_files=1, geoparquet=True
+        spark, raw_root, compacted, 2024, 3, 5, geoparquet=True
     )
     files = glob.glob(
         os.path.join(compacted, "year=2024/month=3/day=5", "*.parquet")
@@ -342,6 +309,8 @@ def test_lake_sink_batch_retry_is_noop(spark, tmp_path):
 
     sink(batch, 0)
     assert spark.read.parquet(lake_root).count() == 5
+    # the commit marker the benchmark's freshness metric reads
+    assert os.path.exists(os.path.join(ckpt, "lake_commits", "0"))
     sink(batch, 0)  # retry of a committed batch: no-op
     assert spark.read.parquet(lake_root).count() == 5
     sink(batch, 1)  # new batch id: appends
@@ -412,6 +381,41 @@ def test_pinned_lake_schema_survives_drift(spark, tmp_path):
     # the rogue file's rows surface with nulls, not a changed schema
     assert lake.count() == 6
     assert lake.filter("vehicle_id IS NULL").count() == 1
+
+
+def test_compact_partitions_job(spark, tmp_path):
+    """The scheduled job body at a fixed ``now``: the present day is
+    compacted with its rows conserved, the absent day is skipped
+    (PATH_NOT_FOUND), keys are ``YYYY-MM-DD``; a ``period="month"``
+    run compacts the whole month under a ``YYYY-MM`` key."""
+    import datetime as dt
+
+    feed_dir = tmp_path / "feeds"
+    feed_dir.mkdir()
+    for tick in range(3):
+        (feed_dir / f"feed_{tick}.pb").write_bytes(encode_feed(_mk_records(tick, 5)))
+    raw_root = str(tmp_path / "raw")
+    q = start_feed_file_stream(
+        spark, str(feed_dir), raw_root, str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    raw_count = spark.read.parquet(raw_root).count()
+    assert raw_count == 15  # all on 2024-03-05; 2024-03-04 is absent
+
+    now = dt.datetime(2024, 3, 6, 1, 0)
+    daily = str(tmp_path / "daily")
+    written = compact_partitions(spark, raw_root, daily, duration=2, now=now)
+    assert written == {"2024-03-05": raw_count}
+    assert spark.read.parquet(daily).count() == raw_count
+    assert not os.path.exists(os.path.join(daily, "year=2024/month=3/day=4"))
+
+    monthly = str(tmp_path / "monthly")
+    written = compact_partitions(
+        spark, raw_root, monthly, period="month", now=dt.datetime(2024, 4, 2, 1, 0)
+    )
+    assert written == {"2024-03": raw_count}
+    files = glob.glob(os.path.join(monthly, "year=2024/month=3", "*.parquet"))
+    assert len(files) == 1
 
 
 def test_dates_in_range():
