@@ -7,6 +7,8 @@ local feed endpoints."""
 from __future__ import annotations
 
 import http.server
+import json
+import os
 import threading
 import time
 
@@ -14,7 +16,8 @@ import pytest
 
 from gtfs_realtime_etl_spark.config import AgencyConfig
 from gtfs_realtime_etl_spark.schemas import VEHICLE_POSITIONS_RAW
-from gtfs_realtime_etl_spark.sources.gtfs_rt import encode_feed
+from gtfs_realtime_etl_spark.sources.gtfs_rt import encode_feed, parse_feed
+from gtfs_realtime_etl_spark.sources.gtfs_rt_source import GtfsRtStreamReader
 from gtfs_realtime_etl_spark.sources.lake import read_locations
 
 N_TICKS = 3
@@ -152,6 +155,35 @@ def city_feeds():
     yield feeds
     for srv in servers:
         srv.shutdown()
+
+
+def test_poll_once_uses_configured_headers(tmp_path, city_feeds):
+    """One poll of the ``gtfs_rt`` reader with the options
+    ``start_ingest`` passes it: the configured API key header reaches the
+    HTTP request and the payload lands atomically in the spool
+    (handler.py:43-54 parity)."""
+    _, (url, seen) = city_feeds
+    env = dict(TWO_CITY_ENV)
+    env["YYZ_VEH_POSITION_URL"] = url
+    cfg = AgencyConfig.from_env(prefix="YYZ_", env=env)
+
+    spool = tmp_path / "spool"
+    reader = GtfsRtStreamReader(
+        {
+            "url": cfg.veh_position_url,
+            "spool_dir": str(spool),
+            "headers": json.dumps(cfg.request_headers()),
+        }
+    )
+    rows, end = reader.read(reader.initialOffset())
+    ((_, payload),) = list(rows)
+    assert end == {"tick": 1}
+    assert len(parse_feed(payload)) == 4
+
+    (name,) = os.listdir(spool)  # no torn .tmp left behind
+    assert name.endswith(".pb")
+    assert (spool / name).read_bytes() == payload
+    assert len(seen) == 1 and seen[0]["x-api-key"] == "sekrit"
 
 
 def test_two_city_ingest_through_config(spark, tmp_path, city_feeds):
