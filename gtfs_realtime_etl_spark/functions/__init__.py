@@ -1,78 +1,11 @@
-"""Scalar/column function library.
+"""Scalar/column function library (``geo``, ``time``, ``stats``,
+``text``, ``vector``, ``hashing``, ``exprs``).
 
-Everything here is a pure ``Column -> Column`` expression builder.  The
-rule (SURVEY.md §4.3): native Column ops first — they stay inside
-whole-stage codegen — and Arrow-batched ``pandas_udf`` only where the JVM
-expression language genuinely can't express the computation (IEEE-754
-byte encoding for WKB).
+The rule (SURVEY.md §4.3): native Column ops first, so the expression
+stays inside whole-stage codegen, WKB encoding included
+(``geo.point_wkb``); an Arrow-batched ``pandas_udf`` (``*_kernel``) only
+where the JVM expression language cannot state the computation, as for
+the polynomial shingle, MinHash and SimHash signatures.
+
+Import each name from the module that defines it.
 """
-
-from gtfs_realtime_etl_spark.functions.geo import (
-    bbox_struct,
-    dwithin,
-    euclid_degree_dist,
-    geohash_encode,
-    hex_wkb,
-    point_wkb,
-)
-from gtfs_realtime_etl_spark.functions.stats import norm_cdf, reliability, z_score
-from gtfs_realtime_etl_spark.functions.time import (
-    NOT_PAST_MIDNIGHT,
-    gtfs_time_to_secs,
-    seconds_of_day,
-    to_zoned_ts,
-)
-from gtfs_realtime_etl_spark.functions.text import (
-    char_shingles,
-    digit_ratio,
-    punct_ratio,
-    token_count,
-    tokens,
-    upper_ratio,
-    whitespace_ratio,
-)
-from gtfs_realtime_etl_spark.functions.vector import (
-    cosine_similarity,
-    dot,
-    l2_norm,
-    normalize,
-)
-
-__all__ = [
-    "NOT_PAST_MIDNIGHT",
-    "bbox_struct",
-    "char_shingles",
-    "cosine_similarity",
-    "digit_ratio",
-    "dot",
-    "dwithin",
-    "euclid_degree_dist",
-    "geohash_encode",
-    "gtfs_time_to_secs",
-    "hex_wkb",
-    "l2_norm",
-    "norm_cdf",
-    "normalize",
-    "point_wkb",
-    "punct_ratio",
-    "reliability",
-    "seconds_of_day",
-    "to_zoned_ts",
-    "token_count",
-    "tokens",
-    "upper_ratio",
-    "whitespace_ratio",
-    "z_score",
-]
-
-from gtfs_realtime_etl_spark.functions.hashing import (  # noqa: E402
-    minhash_text_kernel,
-    shingle_hash_kernel,
-    simhash_tokens_kernel,
-)
-
-__all__ += [
-    "minhash_text_kernel",
-    "shingle_hash_kernel",
-    "simhash_tokens_kernel",
-]

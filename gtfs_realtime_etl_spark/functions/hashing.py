@@ -133,27 +133,10 @@ def _poly_hash_rows(mat: np.ndarray, base: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def shingle_hash_kernel(k: int = 5):
-    """pandas_udf: text → array<bigint> of per-window polynomial hashes
-    (base BASE_A).  DuckDB emitter: :func:`sql_shingle_hashes`."""
-    pow_vec = _pow_vec(BASE_A, k)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _kernel(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            out.append(_shingle_hashes_np(_char_codes(_ascii_lower(t)), k, pow_vec))
-        return pd.Series(out)
-
-    return _kernel
-
-
 def shingle_hash_set_kernel(k: int = 5):
-    """pandas_udf: text → SORTED DISTINCT window hashes (the exact-Jaccard
-    comparison sets)."""
+    """pandas_udf: text → SORTED DISTINCT window hashes (base BASE_A; the
+    exact-Jaccard comparison sets).  DuckDB emitter:
+    ``list_sort(list_distinct(`` :func:`sql_shingle_hashes` ``))``."""
     pow_vec = _pow_vec(BASE_A, k)
 
     @F.pandas_udf(ArrayType(LongType()))

@@ -46,18 +46,6 @@ def norm_cdf(x: Column) -> Column:
     return F.lit(0.5) * (F.lit(1.0) + erf_z)
 
 
-def z_score(x: Column, mean: Column, std: Column) -> Column:
-    return (x - mean) / std
-
-
-def reliability(mean: Column, std: Column, lo: float = -60.0, hi: float = 300.0) -> Column:
-    """P(deviation ∈ [lo, hi]) under the fitted normal — the reference's
-    stop-reliability metric (defaults: 1 min early … 5 min late)."""
-    return norm_cdf(z_score(F.lit(hi), mean, std)) - norm_cdf(
-        z_score(F.lit(lo), mean, std)
-    )
-
-
 # ANSI-SQL rendering of the same approximation, for DuckDB oracle parity.
 NORM_CDF_SQL_TEMPLATE = (
     "(0.5 * (1.0 + CASE WHEN ({x}) * {inv_sqrt2} < 0 THEN -1 ELSE 1 END * "

@@ -80,16 +80,6 @@ def digit_ratio(text: Column) -> Column:
     return _ratio(F.length(text) - F.length(stripped), F.length(text))
 
 
-def upper_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[A-Z]", "")
-    return _ratio(F.length(text) - F.length(stripped), F.length(text))
-
-
-def whitespace_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"\s", "")
-    return _ratio(F.length(text) - F.length(stripped), F.length(text))
-
-
 #: PII-shaped patterns, deliberately written in the regex subset Java
 #: (Spark) and RE2 (DuckDB) interpret identically: character classes,
 #: bounded repetition, \b word boundaries — no backrefs, no lookaround.

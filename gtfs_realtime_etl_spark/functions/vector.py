@@ -43,11 +43,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def normalize(a: Column) -> Column:
-    """L2-normalize an array column (zero vectors pass through)."""
-    n = l2_norm(a)
-    return F.when(n > 0, F.transform(a, lambda v: v.cast("double") / n)).otherwise(
-        F.transform(a, lambda v: v.cast("double"))
-    )

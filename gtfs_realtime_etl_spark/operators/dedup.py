@@ -62,7 +62,7 @@ from gtfs_realtime_etl_spark.functions.hashing import (
     simhash_tokens_kernel,
     winnow_fingerprints_kernel,
 )
-from gtfs_realtime_etl_spark.functions.text import tokens
+from gtfs_realtime_etl_spark.functions.text import AZ_LOWER, AZ_UPPER, tokens
 
 #: Buckets larger than this are dropped from candidate generation: a
 #: bucket of b docs explodes into b(b-1)/2 pairs, and pathological
@@ -75,26 +75,22 @@ DEFAULT_MAX_BUCKET = 1000
 def normalized_text(text: Column) -> Column:
     """Whitespace-collapsed, ASCII-case-folded canonical form for
     hashing (engine-portable; see functions/hashing.py)."""
-    return F.translate(
-        F.trim(F.regexp_replace(text, r"\s+", " ")),
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-        "abcdefghijklmnopqrstuvwxyz",
-    )
+    return F.translate(F.trim(F.regexp_replace(text, r"\s+", " ")), AZ_UPPER, AZ_LOWER)
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup via content-digest groupBy.
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup via content-digest groupBy over ``doc_id, text``.
 
     Returns one row per distinct content: ``content_hash,
-    survivor_<id>, n_copies``.  Single shuffle, keyed on the digest —
+    survivor_doc_id, n_copies``.  Single shuffle, keyed on the digest —
     the only strategy that is safe to run on the full 100 TB corpus
     without candidate generation.
     """
     return (
-        docs.withColumn("content_hash", F.md5(normalized_text(F.col(text_col))))
+        docs.withColumn("content_hash", F.md5(normalized_text(F.col("text"))))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias(f"survivor_{id_col}"),
+            F.min("doc_id").alias("survivor_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )

@@ -16,9 +16,9 @@ full-outer shuffle join on the key classifies every row:
 - both sides, hashes equal   → ``unchanged``
 
 At 100 TB both sides hash-partition on the same key, so the join is
-the minimal single exchange; bucketed/sorted copies of both snapshots
-would eliminate even that (sources/lake.py write_bucketed).  The
-column values never travel — only key + 60-bit hash.
+the minimal single exchange; both snapshots written as bucketed
+tables on the key (``DataFrameWriter.bucketBy``) would eliminate even
+that.  The column values never travel — only key + 60-bit hash.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@
 table from a pre-existing label column; this operator LEARNS the cells
 when no label exists — the production path for an unlabeled corpus.
 Output shape is identical (``cell_id int, centroid array<double>``), so
-``assign_cells`` / ``ivf_topk`` consume it unchanged.
+``ivf_topk`` consumes it unchanged.
 
 Determinism contract (the whole point — an external engine can replay
 the fit round for round):
@@ -79,7 +79,7 @@ def kmeans_fit(
     scale: int = 8,
 ) -> list:
     """Fit ``k`` centroids; returns ``[{cell_id, centroid}]`` rows
-    (the collected form ``ivf_topk``/``assign_cells`` accept directly).
+    (the collected form ``ivf_topk`` accepts directly).
     See module docstring for the determinism contract."""
     emb = embeddings.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("v")

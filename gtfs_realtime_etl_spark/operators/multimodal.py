@@ -22,30 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-#: Media row schema: payload + typed metadata.  ``n_bytes`` (the payload
-#: size) is PERSISTED METADATA stamped at ingest/synthesis: profiling
-#: queries aggregate it instead of ``length(payload)``, so a stats scan
-#: over a 100 TB media lake prunes the binary column entirely.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("modality", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -100,90 +81,6 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
             )
 
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-def resize_media(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize plumbing: payload binary → payload binary with updated
-    width/height metadata, via Arrow-batched mapInPandas (same schema in
-    and out, so it composes anywhere in a media pipeline).
-
-    STUB transform (no PIL in this container): the "resized" payload is
-    a deterministic byte subsampling with stride ceil(max(w,h)/max_side)
-    — shape-faithful (output length shrinks by the stride, metadata
-    scales exactly as a real resize would), so tests exercise real batch
-    plumbing and the codec swap-in point is one function.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            new_payload, new_w, new_h = [], [], []
-            for p, w, h in zip(pdf["payload"], pdf["width"], pdf["height"]):
-                # NULL metadata stays NULL ("unknown dimension" must not
-                # become "0 pixels"); unknown dims resize with stride 1.
-                w = None if pd.isna(w) else int(w)
-                h = None if pd.isna(h) else int(h)
-                side = max(w or 0, h or 0)
-                stride = max((side + max_side - 1) // max_side, 1)
-                new_payload.append(None if p is None else bytes(p)[::stride])
-                new_w.append(None if w is None else max(w // stride, 1))
-                new_h.append(None if h is None else max(h // stride, 1))
-            out["payload"] = new_payload
-            # n_bytes metadata tracks the rewritten payload
-            out["n_bytes"] = pd.array(
-                [None if p is None else len(p) for p in new_payload], dtype="Int64"
-            )
-            out["width"] = pd.array(new_w, dtype="Int32")
-            out["height"] = pd.array(new_h, dtype="Int32")
-            yield out
-
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
-
-
-#: Rows produced by frame sampling: one row per sampled frame.
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_index", IntegerType()),
-        StructField("frame_ms", IntegerType()),
-        StructField("frame_payload", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 16
-) -> DataFrame:
-    """Frame-sampling plumbing for video rows: one input row fans out to
-    ≤ ``max_frames`` frame rows at a fixed cadence — the 1→N mapInPandas
-    shape a real ffmpeg-backed sampler uses (and the row-explosion the
-    Arrow batch size cap protects against).
-
-    STUB decode: frame bytes are deterministic equal-length slices of
-    the payload; a real deployment swaps the slicer for a demuxer.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if p is None or dur is None or int(dur) <= 0:
-                    continue
-                p = bytes(p)
-                n = min(max(int(dur) // every_ms, 1), max_frames)
-                step = max(len(p) // n, 1)
-                for i in range(n):
-                    rows.append(
-                        (int(mid), i, i * every_ms, p[i * step : (i + 1) * step])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_index", "frame_ms", "frame_payload"],
-            )
-
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
 def media_stats(media: DataFrame) -> DataFrame:

@@ -83,9 +83,6 @@ def schedule_deviation(
     trips: DataFrame,
     stops: DataFrame,
     stop_times: DataFrame,
-    radius: float = DWITHIN_RADIUS,
-    band: tuple[int, int] = BAND,
-    route_types: tuple[int, ...] = ROUTE_TYPES,
     with_web_mercator: bool = False,
     skew_safe: bool = False,
 ) -> DataFrame:
@@ -108,7 +105,7 @@ def schedule_deviation(
     # trip_id partitioning then fuses into the fact join's stage —
     # costing two extra shuffles and blocking AQE skew handling there.
     dims = F.broadcast(
-        F.broadcast(routes.filter(F.col("route_type").isin(*route_types)))
+        F.broadcast(routes.filter(F.col("route_type").isin(*ROUTE_TYPES)))
         .join(F.broadcast(trips), "route_id")
     )
     sched = (
@@ -145,7 +142,7 @@ def schedule_deviation(
             loc["latitude"],
             sched["stop_lon"],
             sched["stop_lat"],
-            radius,
+            DWITHIN_RADIUS,
         ),
     ).select(
         sched["trip_id"],
@@ -159,7 +156,7 @@ def schedule_deviation(
     )
 
     # Band filter BEFORE the window (cell-11 subquery nesting).
-    banded = matched.filter(F.col("diff").between(*band))
+    banded = matched.filter(F.col("diff").between(*BAND))
     if skew_safe:
         # Break the join->window stage fusion (see module docstring):
         # the full window key spreads a hot trip over its stop events
@@ -208,12 +205,10 @@ def _z(edge: float) -> Column:
     )
 
 
-def stop_reliability(
-    deviation: DataFrame,
-    window: tuple[float, float] = RELIABILITY_WINDOW,
-) -> DataFrame:
-    """Cell-14 parity, in-plan: dropna → z-scores → Φ(z_max)−Φ(z_min)."""
-    lo, hi = window
+def stop_reliability(deviation: DataFrame) -> DataFrame:
+    """Cell-14 parity, in-plan: dropna → z-scores → Φ(z_max)−Φ(z_min)
+    over :data:`RELIABILITY_WINDOW`."""
+    lo, hi = RELIABILITY_WINDOW
     out = deviation.na.drop(subset=["avg_diff", "stddev_diff"])
     return (
         out.withColumn("z_min", _z(lo))

@@ -8,8 +8,8 @@ Data-efficient learning at web-scale through semantic deduplication"):
    ``operators/similarity.py::centroids_from_labels`` — any k-means
    table with the same (cell_id, centroid) shape drops in);
 2. assign every vector to its nearest centroid as a PURE PROJECTION
-   (``assign_cells`` — no shuffle; the centroid table is broadcast-
-   class by definition);
+   (``similarity._assign_cells_rows`` — no shuffle; the centroid
+   table is broadcast-class by definition);
 3. within each cell only, compute pairwise cosine similarity —
    the cell partitioning is what makes this subquadratic: pairs are
    O(sum cell_size^2), never O(corpus^2);

@@ -1,11 +1,11 @@
 """Similarity search over embedding columns (``array<float|double>``).
 
-Three paths, mirroring what a 100 TB ANN pipeline needs:
+The exact baseline is the ``ann_cosine_topk`` registry entry
+(plans/base.py): broadcast the query vector, cosine via JVM
+higher-order functions, a global top-k.  The scale paths here rank
+per query with the salted two-phase top-k (:func:`_two_phase_topk` —
+no single-task sort, no Python):
 
-- :func:`brute_force_topk` — the exact baseline: broadcast the query
-  vectors, compute cosine with JVM higher-order functions, per-query
-  top-k via the salted two-phase rank (:func:`_two_phase_topk` — no
-  single-task sort, no Python).
 - :func:`lsh_bucketed_topk` — data-independent scale path:
   random-hyperplane LSH signs bucket both sides; only same-bucket pairs
   are scored.  Probes neighboring buckets by flipping each sign bit
@@ -88,35 +88,6 @@ def _two_phase_topk(
     return out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    ``query`` is expected to be small (broadcast side).  For a single
-    query the plan is scan → narrow map → top-k; for q queries the cost
-    is q·n dot products — use :func:`lsh_bucketed_topk` when q·n gets
-    large.
-    """
-    passthrough = [c for c in embeddings.columns if c != vec_col]
-    emb = embeddings.withColumn("_vec", F.col(vec_col).cast("array<double>"))
-    q = query.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qvec")
-    )
-    scored = emb.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        *passthrough,
-        cosine_similarity(F.col("_vec"), F.col("_qvec")).alias("cosine"),
-    )
-    return _two_phase_topk(scored, k, query_id_col, id_col)
-
-
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
@@ -187,23 +158,14 @@ def _centroid_rows(centroids: "DataFrame | list") -> list:
     return sorted(rows, key=lambda r: r["cell_id"])
 
 
-def assign_cells(
-    embeddings: DataFrame,
-    centroids: "DataFrame | list",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest-centroid cell id per vector, as a PURE PROJECTION.
+def _assign_cells_rows(embeddings: DataFrame, cents: list, vec_col: str) -> DataFrame:
+    """Nearest-centroid cell id per vector, as a PURE PROJECTION over an
+    already-collected centroid list (:func:`_centroid_rows`).
 
     A coarse quantizer is tiny by definition, so the centroid table is
     collected to the driver (same cost class as a broadcast) and the
     argmin becomes a narrow Column expression — no shuffle, no join, no
-    aggregation; assignment scales linearly with the corpus scan.  Ties
-    break on cell_id via lexicographic struct ordering (deterministic)."""
-    return _assign_cells_rows(embeddings, _centroid_rows(centroids), vec_col)
-
-
-def _assign_cells_rows(embeddings: DataFrame, cents: list, vec_col: str) -> DataFrame:
-    """Projection-only argmin over an already-collected centroid list.
+    aggregation; assignment scales linearly with the corpus scan.
 
     The expression is SQL-PARSED, not Column-built (round-12): the
     k-struct Column form issued hundreds of py4j commands per call and

@@ -1,5 +1,2 @@
-"""Query plans: the driver-facing registry of implemented operators."""
-
-from gtfs_realtime_etl_spark.plans.queries import ORACLE_SQL, QUERIES, flagship
-
-__all__ = ["ORACLE_SQL", "QUERIES", "flagship"]
+"""Query plans: the driver-facing registry of implemented operators
+(``plans.queries``: ``QUERIES``, ``ORACLE_SQL``, ``flagship``)."""

@@ -60,6 +60,7 @@ from gtfs_realtime_etl_spark.operators.clusters import (
 from gtfs_realtime_etl_spark.operators.decontam import contamination_pairs
 from gtfs_realtime_etl_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
+    exact_dedup,
     minhash_lsh_dedup,
     simhash_dedup,
 )
@@ -593,17 +594,7 @@ WHERE count > 1
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    norm = F.translate(
-        F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), AZ_UPPER, AZ_LOWER
-    )
-    return (
-        documents.withColumn("content_hash", F.md5(norm))
-        .groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("survivor_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
+    return exact_dedup(documents)
 
 
 Q_DEDUP_EXACT_SQL = """

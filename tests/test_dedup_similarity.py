@@ -1,5 +1,5 @@
 """Dedup + similarity operators: planted near-duplicates must be found;
-LSH recall is checked against the brute-force exact baseline."""
+IVF and LSH recall is checked against an exact numpy cosine top-k."""
 
 from __future__ import annotations
 
@@ -17,8 +17,8 @@ from gtfs_realtime_etl_spark.operators.dedup import (
     simhash_dedup,
 )
 from gtfs_realtime_etl_spark.operators.similarity import (
-    assign_cells,
-    brute_force_topk,
+    _assign_cells_rows,
+    _centroid_rows,
     centroids_from_labels,
     ivf_topk,
     lsh_bucketed_topk,
@@ -154,12 +154,33 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
 
 
-def test_brute_force_topk_is_same_cluster(vectors):
-    q = vectors.filter("vec_id = 0").select(
+def _query0(vectors):
+    return vectors.filter("vec_id = 0").select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = brute_force_topk(vectors.filter("vec_id != 0"), q, k=10).toPandas()
-    assert len(top) == 10
+
+
+def _exact_topk(vectors, k=10):
+    """Exact cosine top-k of vector 0 among the others, in numpy:
+    cosine desc, then vec_id asc."""
+    pdf = vectors.toPandas()
+    mat = np.stack(pdf["embedding"].to_numpy())
+    ids = pdf["vec_id"].to_numpy()
+    q = mat[ids == 0][0]
+    mat, ids = mat[ids != 0], ids[ids != 0]
+    cos = mat @ q / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
+    return ids[np.lexsort((ids, -cos))[:k]].tolist()
+
+
+def test_brute_force_topk_is_same_cluster(vectors):
+    """With every cell probed, ``ivf_topk`` scans the whole corpus, so
+    its top-k is the exact one: the numpy reference's ids in order, all
+    from the query's own cluster, cosine non-increasing."""
+    cents = centroids_from_labels(vectors, label_col="label", dim=64)
+    top = ivf_topk(
+        vectors.filter("vec_id != 0"), _query0(vectors), cents, k=10, nprobe=3
+    ).toPandas()
+    assert top["vec_id"].tolist() == _exact_topk(vectors)
     assert (top["label"] == 0).all()  # same cluster as query
     assert top["cosine"].is_monotonic_decreasing
 
@@ -170,29 +191,26 @@ def test_ivf_assignment_and_recall(vectors):
     (the query's neighbors all live in its cell)."""
     cents = centroids_from_labels(vectors, label_col="label", dim=64)
     assert cents.count() == 3
-    assigned = assign_cells(vectors, cents).toPandas()
+    assigned = _assign_cells_rows(
+        vectors, _centroid_rows(cents), "embedding"
+    ).toPandas()
     acc = (assigned["cell_id"] == assigned["label"]).mean()
     assert acc > 0.95, f"cell assignment accuracy {acc}"
 
-    q = vectors.filter("vec_id = 0").select(
-        F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
-    )
     others = vectors.filter("vec_id != 0")
-    exact = set(brute_force_topk(others, q, k=10).toPandas()["vec_id"])
+    exact = set(_exact_topk(vectors))
     approx = set(
-        ivf_topk(others, q, cents, k=10, nprobe=1).toPandas()["vec_id"]
+        ivf_topk(others, _query0(vectors), cents, k=10, nprobe=1).toPandas()["vec_id"]
     )
     assert len(exact & approx) / 10 >= 0.9
 
 
 def test_lsh_recall_vs_brute_force(vectors):
-    q = vectors.filter("vec_id = 0").select(
-        F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
-    )
     others = vectors.filter("vec_id != 0")
-    exact = set(brute_force_topk(others, q, k=10).toPandas()["vec_id"])
+    exact = set(_exact_topk(vectors))
     approx = set(
-        lsh_bucketed_topk(others, q, k=10, n_planes=8, dim=64).toPandas()["vec_id"]
+        lsh_bucketed_topk(others, _query0(vectors), k=10, n_planes=8, dim=64)
+        .toPandas()["vec_id"]
     )
     recall = len(exact & approx) / 10
     assert recall >= 0.7, f"LSH recall too low: {recall}"

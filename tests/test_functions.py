@@ -10,17 +10,14 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions import (
-    geohash_encode,
+from gtfs_realtime_etl_spark.functions.geo import geohash_encode, point_wkb
+from gtfs_realtime_etl_spark.functions.stats import norm_cdf, norm_cdf_sql
+from gtfs_realtime_etl_spark.functions.text import lang_id_kernel, token_count
+from gtfs_realtime_etl_spark.functions.time import (
+    NOT_PAST_MIDNIGHT,
     gtfs_time_to_secs,
-    norm_cdf,
-    point_wkb,
     seconds_of_day,
-    token_count,
 )
-from gtfs_realtime_etl_spark.functions.stats import norm_cdf_sql
-from gtfs_realtime_etl_spark.functions.text import lang_id_kernel
-from gtfs_realtime_etl_spark.functions.time import NOT_PAST_MIDNIGHT
 
 # Known geohash vectors (classic public test points).
 GEOHASH_CASES = [

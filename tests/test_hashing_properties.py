@@ -4,8 +4,8 @@ The numpy kernels use vectorization tricks (sliding-window matrix
 products, right-aligned zero padding, chunked modular dots) whose
 equivalence to the plain polynomial fold is exactly what could silently
 break — hypothesis hammers them against naive references; a curated
-tricky corpus then checks the Spark forms (the Arrow shingle kernel and
-the Column token hash) against the DuckDB SQL emitters on the full
+tricky corpus then checks the Spark forms (the Arrow shingle-set kernel
+and the Column token hash) against the DuckDB SQL emitters on the full
 engine path.
 """
 
@@ -104,13 +104,15 @@ TRICKY = [
 
 @pytest.mark.parametrize("k", [3, 5])
 def test_shingle_kernel_and_token_hash_equal_duckdb(spark, k):
-    """Full-path equivalence on the tricky corpus: Arrow shingle
-    kernel == DuckDB SQL emitter, and the Column token hash
-    (token_hash64_column) == DuckDB token hash, on every document."""
+    """Full-path equivalence on the tricky corpus: the Arrow shingle-set
+    kernel == ``list_sort(list_distinct(...))`` over the DuckDB SQL
+    emitter (the pairing the decontamination oracle relies on), and the
+    Column token hash (token_hash64_column) == DuckDB token hash, on
+    every document."""
     from pyspark.sql import functions as F
 
     from gtfs_realtime_etl_spark.functions.hashing import (
-        shingle_hash_kernel,
+        shingle_hash_set_kernel,
         token_hash64_column,
     )
     from gtfs_realtime_etl_spark.functions.text import tokens
@@ -121,7 +123,7 @@ def test_shingle_kernel_and_token_hash_equal_duckdb(spark, k):
     rows = (
         df.select(
             "doc_id",
-            shingle_hash_kernel(k)(F.col("text")).alias("kern"),
+            shingle_hash_set_kernel(k)(F.col("text")).alias("kern"),
             F.transform(tokens(F.col("text")), token_hash64_column).alias("tok64"),
         )
         .orderBy("doc_id")
@@ -140,7 +142,7 @@ def test_shingle_kernel_and_token_hash_equal_duckdb(spark, k):
     duck = {
         i: (sh, tk)
         for i, sh, tk in con.sql(
-            f"""SELECT doc_id, {sql_shingle_hashes('text', k)},
+            f"""SELECT doc_id, list_sort(list_distinct({sql_shingle_hashes('text', k)})),
             list_transform(list_filter(string_split_regex(
                 translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
                           'abcdefghijklmnopqrstuvwxyz'), '\\s+'),

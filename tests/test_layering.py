@@ -5,7 +5,10 @@
   operators; an import the other way round ties a reusable operator or
   stream to one registry bank.
 - Every def in functions/ and operators/ must have a caller outside
-  tests/: the library keeps one form per capability.
+  tests/ and outside package ``__init__`` files: the library keeps one
+  form per capability.
+- A package ``__init__`` imports nothing: each name has one home, its
+  defining module, and callers import it from there.
 - No def in plans/, functions/ or operators/ imports a package module:
   the registry's source hash follows module globals, so a
   function-local import hides its callee from that hash."""
@@ -78,13 +81,14 @@ def test_functions_and_operators_have_non_test_callers():
     """One form per capability: every top-level def and class in
     ``functions/`` and ``operators/`` is used inside its own module or
     referenced from a module outside ``tests/`` (a package ``__init__``
-    re-export counts). A def only tests call is a second form of
-    something the engine does another way; delete it or route the
+    re-export does not count). A def only tests call is a second form
+    of something the engine does another way; delete it or route the
     engine through it."""
     sources = {
         path: ast.parse(path.read_text(), filename=str(path))
         for path in sorted(REPO_DIR.rglob("*.py"))
         if "tests" not in path.relative_to(REPO_DIR).parts
+        and path.name != "__init__.py"
     }
     checked = [
         path
@@ -103,6 +107,19 @@ def test_functions_and_operators_have_non_test_callers():
         for node in sources[path].body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
         and node.name not in referenced
+    ]
+    assert not offenders, offenders
+
+
+def test_package_inits_import_nothing():
+    """No re-export facades: a package ``__init__`` holds its docstring
+    (and, at the top level, ``__version__``) but no import, so every
+    name is imported from the module that defines it."""
+    offenders = [
+        f"{path.relative_to(PKG_DIR)}:{node.lineno}"
+        for path in sorted(PKG_DIR.rglob("__init__.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, (ast.Import, ast.ImportFrom))
     ]
     assert not offenders, offenders
 

@@ -1,16 +1,12 @@
-"""Multimodal column plumbing: schema-faithful decode/resize/frame ops
-over binary payloads (stub codecs; the Spark-side batching, schemas,
-and fan-out shapes are the real thing under test)."""
+"""Multimodal column plumbing: feature extraction and metadata-only
+profiling over binary payloads (stub codecs; the Spark-side batching,
+schemas and scan pruning are the real thing under test)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.operators.multimodal import (
     extract_features,
     media_stats,
-    resize_media,
-    sample_frames,
     synthesize_media,
 )
 
@@ -31,41 +27,6 @@ def test_extract_features_histogram_sums_to_one(spark):
         assert len(row["feature"]) == 16
         assert abs(sum(row["feature"]) - 1.0) < 1e-9  # histogram over all bytes
         assert row["n_bytes"] > 0
-
-
-def test_resize_media_scales_metadata_and_payload(spark):
-    media = _media(spark)
-    small = resize_media(media, max_side=64)
-    out = small.toPandas().set_index("media_id")
-    orig = media.toPandas().set_index("media_id")
-    assert list(small.columns) == list(media.columns)  # composable: same schema
-    for mid, row in out.iterrows():
-        w, h = orig.loc[mid, "width"], orig.loc[mid, "height"]
-        stride = max((max(w, h) + 63) // 64, 1)
-        assert row["width"] == max(w // stride, 1)
-        assert max(row["width"], row["height"]) <= 64 + 1
-        assert len(row["payload"]) == len(bytes(orig.loc[mid, "payload"])[::stride])
-    # idempotent composition: resizing the resized table is a no-op-ish
-    again = resize_media(small, max_side=64).count()
-    assert again == 20
-
-
-def test_sample_frames_fan_out_bounded(spark):
-    media = _media(spark, n=30, modality="video")
-    frames = sample_frames(media, every_ms=1000, max_frames=8)
-    pdf = frames.toPandas()
-    per = pdf.groupby("media_id").size()
-    assert (per <= 8).all()
-    durations = _media(spark, n=30, modality="video").select(
-        "media_id", "duration_ms"
-    ).toPandas().set_index("media_id")["duration_ms"]
-    # zero-duration rows produce no frames; others >= 1
-    for mid, dur in durations.items():
-        expected = 0 if dur <= 0 else min(max(dur // 1000, 1), 8)
-        assert per.get(mid, 0) == expected
-    # frame timestamps follow the cadence
-    assert (pdf["frame_ms"] == pdf["frame_index"] * 1000).all()
-    assert pdf["frame_payload"].map(len).gt(0).all()
 
 
 def test_media_stats_prunes_payload(spark, tmp_path):

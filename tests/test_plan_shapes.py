@@ -117,14 +117,15 @@ def test_ann_final_rank_is_two_phase(spark, name):
 
 
 def test_brute_force_topk_no_single_partition_sort(spark):
-    """Library form of the exact baseline: salted two-phase rank, never
-    a bare window over the whole scored corpus."""
+    """The library's per-query rank (here on the LSH scale path):
+    salted two-phase rank, never a bare window over the whole scored
+    corpus."""
     import contextlib
     import io
 
     from pyspark.sql import functions as F
 
-    from gtfs_realtime_etl_spark.operators.similarity import brute_force_topk
+    from gtfs_realtime_etl_spark.operators.similarity import lsh_bucketed_topk
     from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 
     emb = load_testdata(spark, SF_CORRECTNESS, "embeddings")[0]
@@ -133,7 +134,7 @@ def test_brute_force_topk_no_single_partition_sort(spark):
     )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        brute_force_topk(emb.filter("vec_id != 0"), q, k=5).explain("formatted")
+        lsh_bucketed_topk(emb.filter("vec_id != 0"), q, k=5).explain("formatted")
     tree = buf.getvalue().split("\n\n")[0]
     lines = tree.splitlines()
     win = min(i for i, l in enumerate(lines) if "Window" in l)

@@ -1,62 +1,8 @@
-"""Skew utilities: salted join/agg must be result-identical to their
-plain counterparts while splitting hot keys across partitions."""
+"""Skew handling on the flagship's one fact shuffle: AQE's skew-join
+split, which ``schedule_deviation(skew_safe=True)`` makes reachable
+(opt-in scale smoke; see operators/schedule_deviation.py)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from gtfs_realtime_etl_spark.operators.skew import salted_distinct_agg, salted_join
-
-
-def _skewed(spark):
-    # 5,000 rows on one hot key + a tail of 50 cold keys
-    hot = [(1, i) for i in range(5000)]
-    cold = [(k, k * 100) for k in range(2, 52)]
-    return spark.createDataFrame(hot + cold, "k long, v long")
-
-
-def test_salted_join_matches_plain_join(spark):
-    large = _skewed(spark)
-    small = spark.createDataFrame(
-        [(1, "hot"), (2, "cold2"), (99, "absent")], "k long, name string"
-    )
-    plain = large.join(small, ["k"], "inner").orderBy("k", "v").collect()
-    salted = salted_join(large, small, ["k"], salt=8).orderBy("k", "v").collect()
-    assert salted == plain
-    # left join keeps unmatched rows too
-    plain_l = large.join(small, ["k"], "left").count()
-    assert salted_join(large, small, ["k"], salt=8, how="left").count() == plain_l
-
-
-def test_salted_join_spreads_hot_key(spark):
-    large = _skewed(spark)
-    salts = (
-        large.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in large.columns]), F.lit(8)),
-        )
-        .filter("k = 1")
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert salts == 8  # hot key fans out over every salt bucket
-
-
-def test_salted_distinct_agg_matches_plain(spark):
-    df = _skewed(spark)
-    plain = {
-        r["k"]: sorted(r["vals"])
-        for r in df.groupBy("k")
-        .agg(F.collect_set("v").alias("vals"))
-        .collect()
-    }
-    salted = {
-        r["k"]: list(r["values"])
-        for r in salted_distinct_agg(df, "k", "v", salt=8).collect()
-    }
-    assert salted == plain
-
 
 import os
 
