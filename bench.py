@@ -9,8 +9,8 @@ every output column, no driver materialization cost).
 Steady-state method (round-8 fix for the 3-7x in-suite median inflation
 the round-7 judge measured against fresh-session isolated runs):
 
-- The SparkSession is RECYCLED every $SPARK_GRAFT_BENCH_SESSION_EVERY
-  queries (default 25): stop + rebuild + re-run the warmups.  The JVM
+- The SparkSession is RECYCLED every ``SESSION_EVERY`` (25) queries:
+  stop + rebuild + re-run the warmups.  The JVM
   survives a context restart (codegen caches, parquet readers, page
   cache stay warm — rebuild costs a few seconds), but ALL accumulated
   engine state — block-manager entries from localCheckpoints, shuffle
@@ -39,7 +39,7 @@ the round-7 judge measured against fresh-session isolated runs):
   the heap, growing each full GC with suite progress.
 - Round-13 additions (all additive to the JSON contract): the suite
   WAITS for a quiet window when the starting canary reads slow
-  (SPARK_GRAFT_BENCH_CANARY_RETRIES / _WAIT — the round-12 driver run
+  (``CANARY_RETRIES`` / ``CANARY_WAIT_S`` — the round-12 driver run
   spent its whole budget timing a self-flagged stall phase); the JSON
   line carries "canary_ratio" (canary_before / canary_ref) so a
   comparison tool can gate on phase without re-deriving it; and the
@@ -63,6 +63,12 @@ from pyspark.sql.types import LongType
 
 from gtfs_realtime_etl_spark.plans.queries import QUERIES
 from gtfs_realtime_etl_spark.session import get_spark, spark_graft_cpus
+
+#: Queries per SparkSession before it is rebuilt.
+SESSION_EVERY = 25
+#: Re-probes of a slow starting canary, and the wait before each.
+CANARY_RETRIES = 2
+CANARY_WAIT_S = 120.0
 
 
 def _build_session(sf_dir: str):
@@ -143,7 +149,6 @@ def main() -> None:
         n_runs = 4 if _cpus >= 24 else 2
     else:
         n_runs = max(int(_runs_env), 1)
-    session_every = int(os.environ.get("SPARK_GRAFT_BENCH_SESSION_EVERY", "25"))
     # GC policy (round-9 made it per query group after the judge
     # root-caused ngram_novelty degrading 6.9 -> 113.9 s across its own
     # runs with GC every 5th group; round-10 made it per RUN after
@@ -203,25 +208,22 @@ def main() -> None:
     # 8.89 = 1.78x the quiet ref) and every comparison built on it was
     # noise.  The canary data to detect that exists BEFORE the suite
     # runs — so use it: when the starting canary reads slow, wait and
-    # re-probe up to SPARK_GRAFT_BENCH_CANARY_RETRIES times (default 2,
-    # SPARK_GRAFT_BENCH_CANARY_WAIT seconds apart, default 120) instead
+    # re-probe up to CANARY_RETRIES times, CANARY_WAIT_S apart, instead
     # of spending ~30 min of timings on a box the artifact would
     # self-flag as invalid.  If the box never quiets, the suite still
     # runs (the driver needs SOME artifact) with slow_box stamped as
     # before; every probe attempt is recorded in BENCH_FULL.json.
-    canary_retries = int(os.environ.get("SPARK_GRAFT_BENCH_CANARY_RETRIES", "2"))
-    canary_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CANARY_WAIT", "120"))
     canary_before = _canary(spark)
     canary_attempts = [canary_before]
-    for _ in range(canary_retries):
+    for _ in range(CANARY_RETRIES):
         if not canary_before or canary_before <= 1.3 * canary_ref:
             break
         print(
             f"bench: canary_before {canary_before} > 1.3x ref {canary_ref}; "
-            f"waiting {canary_wait:.0f}s for a quiet window",
+            f"waiting {CANARY_WAIT_S:.0f}s for a quiet window",
             file=sys.stderr,
         )
-        time.sleep(canary_wait)
+        time.sleep(CANARY_WAIT_S)
         canary_before = _canary(spark)
         canary_attempts.append(canary_before)
     best: dict[str, float] = {}
@@ -230,7 +232,7 @@ def main() -> None:
     first_pass: dict[str, float] = {}
     repaired: list[str] = []
     for i, (name, fn) in enumerate(QUERIES.items()):
-        if session_every and i and i % session_every == 0:
+        if i and i % SESSION_EVERY == 0:
             spark.stop()
             spark = _build_session(sf_dir)
         times = []
@@ -309,7 +311,7 @@ def main() -> None:
                 "canary_before_attempts": canary_attempts,
                 "sf": sf,
                 "n_runs": n_runs,
-                "session_every": session_every,
+                "session_every": SESSION_EVERY,
                 "gc_per_run": True,
                 **totals,
             },
@@ -321,7 +323,7 @@ def main() -> None:
         "metric": (
             f"registry-suite wall time over {len(med)} queries (sum of "
             f"per-query median of {n_runs} runs, noop sink, session "
-            f"recycled every {session_every} queries; per-query "
+            f"recycled every {SESSION_EVERY} queries; per-query "
             f"detail in BENCH_FULL.json)"
         ),
         "value": totals["median_total"],

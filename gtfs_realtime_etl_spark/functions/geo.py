@@ -36,15 +36,19 @@ from pyspark.sql.types import (
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
+#: Geohash length the lake stores (the reference's ``geohash`` column).
+GEOHASH_PRECISION = 7
 
-def geohash_encode(lat: Column, lon: Column, precision: int = 7) -> Column:
-    """Geohash of (lat, lon) at the given precision, as native Column ops.
+
+def geohash_encode(lat: Column, lon: Column) -> Column:
+    """Geohash of (lat, lon) at :data:`GEOHASH_PRECISION`, as native
+    Column ops.
 
     Classic geohash: quantize lon/lat into ``ceil(5p/2)`` / ``floor(5p/2)``
     bit integers, bit-interleave (lon first), emit 5-bit groups as base32.
     Matches ``pygeohash.encode`` (reference write path, handler.py:118-127).
     """
-    nbits = 5 * precision
+    nbits = 5 * GEOHASH_PRECISION
     lon_bits = (nbits + 1) // 2
     lat_bits = nbits // 2
 
@@ -73,10 +77,10 @@ def geohash_encode(lat: Column, lon: Column, precision: int = 7) -> Column:
     chars = [
         F.substring(
             F.lit(_BASE32),
-            F.shiftright(combined, 5 * (precision - 1 - i)).bitwiseAND(F.lit(31)) + 1,
+            F.shiftright(combined, 5 * (GEOHASH_PRECISION - 1 - i)).bitwiseAND(F.lit(31)) + 1,
             1,
         )
-        for i in range(precision)
+        for i in range(GEOHASH_PRECISION)
     ]
     return F.concat(*chars)
 

@@ -95,13 +95,17 @@ def pii_count(text: Column, kind: str) -> Column:
     return F.regexp_count(text, F.lit(PII_PATTERNS[kind]))
 
 
-def redact_pii(text: Column, token: str = "[PII]") -> Column:
+#: What :func:`redact_pii` writes in place of each PII match.
+PII_TOKEN = "[PII]"
+
+
+def redact_pii(text: Column) -> Column:
     """Scrub every PII pattern occurrence (training corpora must not
     memorize contact strings).  Chained JVM-side regexp_replace —
     replace-all semantics on both engines."""
     out = text
     for pat in PII_PATTERNS.values():
-        out = F.regexp_replace(out, pat, token)
+        out = F.regexp_replace(out, pat, PII_TOKEN)
     return out
 
 
@@ -111,11 +115,11 @@ def sql_pii_count(text_expr: str, kind: str) -> str:
     return f"length(regexp_extract_all({text_expr}, '{pat}'))"
 
 
-def sql_redact_pii(text_expr: str, token: str = "[PII]") -> str:
+def sql_redact_pii(text_expr: str) -> str:
     """DuckDB twin of :func:`redact_pii` (global replace flag)."""
     out = text_expr
     for pat in PII_PATTERNS.values():
-        out = f"regexp_replace({out}, '{pat.replace(chr(39), chr(39)*2)}', '{token}', 'g')"
+        out = f"regexp_replace({out}, '{pat.replace(chr(39), chr(39)*2)}', '{PII_TOKEN}', 'g')"
     return out
 
 

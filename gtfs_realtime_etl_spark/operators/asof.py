@@ -30,20 +30,22 @@ from pyspark.sql import functions as F
 _SIDE = "__asof_side"
 _PAYLOAD = "__asof_payload"
 
+#: The event-time column of both sides.
+TS_COL = "ts"
+
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: list[str] | str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     direction: str = "backward",
     tolerance: int | float | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
-    """Left as-of join: every ``left`` row, plus the temporally closest
-    ``right`` row per key (``backward``: latest right.ts <= left.ts;
-    ``forward``: earliest right.ts >= left.ts), or NULLs when none.
+    """Left as-of join on the :data:`TS_COL` event time: every ``left``
+    row, plus the temporally closest ``right`` row per key
+    (``backward``: latest right.ts <= left.ts; ``forward``: earliest
+    right.ts >= left.ts), or NULLs when none.  A right column whose
+    name the left side also has comes out suffixed ``_right``.
 
     Timestamp columns must be mutually comparable and support
     subtraction (numeric epoch values or timestamps).  ``tolerance``
@@ -59,14 +61,14 @@ def asof_join(
     # the right side, so last(ignorenulls) always grabs a whole row).
     r = right.select(
         *keys,
-        F.col(right_ts).alias("__t"),
+        F.col(TS_COL).alias("__t"),
         F.lit(0).alias(_SIDE),
         F.struct(*[F.col(c) for c in right_payload]).alias(_PAYLOAD),
         *[F.lit(None).alias(f"__l_{c}") for c in left.columns],
     )
     l = left.select(
         *keys,
-        F.col(left_ts).alias("__t"),
+        F.col(TS_COL).alias("__t"),
         F.lit(1).alias(_SIDE),
         F.lit(None).cast(r.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
         *[F.col(c).alias(f"__l_{c}") for c in left.columns],
@@ -89,10 +91,10 @@ def asof_join(
     )
 
     out = carried.filter(F.col(_SIDE) == 1)
-    matched_ts = F.col(f"{_PAYLOAD}.{right_ts}") if right_ts in right_payload else None
+    matched_ts = F.col(f"{_PAYLOAD}.{TS_COL}") if TS_COL in right_payload else None
     if tolerance is not None:
         if matched_ts is None:
-            raise ValueError("tolerance requires right_ts in the right payload")
+            raise ValueError(f"tolerance requires {TS_COL} in the right payload")
         gap = (
             (F.col("__t") - matched_ts)
             if direction == "backward"
@@ -107,7 +109,7 @@ def asof_join(
         *[F.col(f"__l_{c}").alias(c) for c in left.columns],
         *[
             F.col(f"{_PAYLOAD}.{c}").alias(
-                f"{c}{suffix}" if c in left.columns else c
+                f"{c}_right" if c in left.columns else c
             )
             for c in right_payload
         ],

@@ -20,21 +20,19 @@ from gtfs_realtime_etl_spark.functions.text import tokens
 
 def chunk_documents(
     documents: DataFrame,
-    text_col: str = "text",
     chunk_size: int = 32,
     stride: int = 24,
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """One row per (doc, chunk): ``chunk_id`` (0-based), ``chunk_text``
+    """One row per (doc, chunk) of the ``text`` column: ``doc_id``,
+    ``chunk_id`` (0-based), ``chunk_text``
     (tokens re-joined with single spaces), ``n_toks`` (<= chunk_size;
     the final chunk may be short).  Docs with zero tokens produce no
     chunks.  ``stride < chunk_size`` gives overlapping chunks."""
     if stride <= 0 or chunk_size <= 0:
         raise ValueError("chunk_size and stride must be positive")
-    keep = keep_cols if keep_cols is not None else ["doc_id"]
-    toks: Column = tokens(F.col(text_col))
+    toks: Column = tokens(F.col("text"))
     d = (
-        documents.select(*keep, toks.alias("_toks"))
+        documents.select("doc_id", toks.alias("_toks"))
         .where(F.size("_toks") > 0)
         .withColumn("_n", F.size("_toks").cast("bigint"))
     )
@@ -54,7 +52,7 @@ def chunk_documents(
         chunk_size,
     )
     return d.select(
-        *keep,
+        "doc_id",
         "chunk_id",
         F.concat_ws(" ", piece).alias("chunk_text"),
         F.size(piece).alias("n_toks"),

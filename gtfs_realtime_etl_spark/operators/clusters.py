@@ -46,19 +46,18 @@ DRIVER_MAX_EDGES = 5_000_000
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iter: int = 50,
     driver_max_edges: int | None = DRIVER_MAX_EDGES,
 ) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``pairs``;
-    cluster_id is the minimum node id reachable through the pair graph."""
+    """(node, cluster_id) for every node appearing in ``pairs``
+    ``(id_a, id_b)``; cluster_id is the minimum node id reachable
+    through the pair graph."""
     # Materialize the edge set ONCE: every iteration joins against it,
     # and without this the full upstream pair pipeline (e.g. the MinHash
     # kernel + LSH + verification) would re-execute per round.
     edges = (
-        pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        .union(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
+        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
+        .union(pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -141,18 +140,13 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(labels, schema)
 
 
-def resolve_duplicates(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def resolve_duplicates(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Drop every non-survivor (min-id survives per cluster): the corpus
-    anti-joined against nodes whose component label differs from their
-    own id.  Untouched docs (no near-dup pair) pass through."""
-    comp = connected_components(pairs, id_a, id_b)
+    anti-joined on ``doc_id`` against nodes whose component label
+    differs from their own id.  Untouched docs (no near-dup pair) pass
+    through."""
+    comp = connected_components(pairs)
     losers = comp.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return docs.join(losers, id_col, "left_anti")
+    return docs.join(losers, "doc_id", "left_anti")

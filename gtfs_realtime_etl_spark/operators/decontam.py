@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import shingle_hash_set_kernel
-from gtfs_realtime_etl_spark.operators.dedup import _saturate
+from gtfs_realtime_etl_spark.operators.dedup import ID_COL, TEXT_COL, _saturate
 
 #: Stop-shingle cap: hashes present in more train docs than this are
 #: too common to signal contamination and would dominate the join.
@@ -43,8 +43,6 @@ DEFAULT_MAX_DOC_FREQ = 1000
 def contamination_pairs(
     train: DataFrame,
     test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 8,
     containment: float = 0.5,
     max_doc_freq: int = DEFAULT_MAX_DOC_FREQ,
@@ -59,7 +57,7 @@ def contamination_pairs(
     # legs (the broadcast hash filter below + the match join), and a
     # lazy checkpoint keeps its kernel from re-running per leg.
     te_h = (
-        test.select(F.col(id_col).alias("test_id"), kernel(F.col(text_col)).alias("sh"))
+        test.select(F.col(ID_COL).alias("test_id"), kernel(F.col(TEXT_COL)).alias("sh"))
         .select("test_id", F.size("sh").alias("n_test"), F.explode("sh").alias("h"))
         .localCheckpoint(eager=False)
     )
@@ -79,7 +77,7 @@ def contamination_pairs(
     n_tasks = train.sparkSession.sparkContext.defaultParallelism
     tr_h = (
         _saturate(train)
-        .select(F.col(id_col).alias("train_id"), kernel(F.col(text_col)).alias("sh"))
+        .select(F.col(ID_COL).alias("train_id"), kernel(F.col(TEXT_COL)).alias("sh"))
         .select("train_id", F.explode("sh").alias("h"))
         .join(F.broadcast(te_h.select("h").distinct()), "h", "left_semi")
         .repartition(n_tasks, F.col("h"))

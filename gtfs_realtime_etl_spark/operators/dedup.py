@@ -71,6 +71,10 @@ from gtfs_realtime_etl_spark.functions.text import AZ_LOWER, AZ_UPPER, tokens
 #: oracle SQL applies the identical cap.
 DEFAULT_MAX_BUCKET = 1000
 
+#: The corpus columns every operator here reads.
+TEXT_COL = "text"
+ID_COL = "doc_id"
+
 
 def normalized_text(text: Column) -> Column:
     """Whitespace-collapsed, ASCII-case-folded canonical form for
@@ -87,10 +91,10 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     without candidate generation.
     """
     return (
-        docs.withColumn("content_hash", F.md5(normalized_text(F.col("text"))))
+        docs.withColumn("content_hash", F.md5(normalized_text(F.col(TEXT_COL))))
         .groupBy("content_hash")
         .agg(
-            F.min("doc_id").alias("survivor_doc_id"),
+            F.min(ID_COL).alias("survivor_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -141,8 +145,6 @@ def _pair_explode(rows_col: str, fields) -> Column:
 
 def lsh_band_rows(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
@@ -156,15 +158,12 @@ def lsh_band_rows(
     rows computed batch by batch equal rows computed over the corpus."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-    # Alias only to rename: a same-name alias changes nothing but still
-    # takes an expression id, which reorders some downstream plans.
-    ids = F.col(id_col) if id_col == "doc_id" else F.col(id_col).alias("doc_id")
     sig = _saturate(docs).select(
-        ids,
-        minhash_text_kernel(num_hashes, shingle_k)(F.col(text_col)).alias("sig"),
+        F.col(ID_COL),
+        minhash_text_kernel(num_hashes, shingle_k)(F.col(TEXT_COL)).alias("sig"),
     )
     return sig.select(
-        "doc_id",
+        ID_COL,
         F.posexplode(
             F.array(
                 *[
@@ -178,8 +177,6 @@ def lsh_band_rows(
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
@@ -192,10 +189,10 @@ def minhash_lsh_candidates(
     band explode) → shuffle once on (band_id, band_key) → per-bucket
     pair explosion → distinct pairs.
     """
-    banded = lsh_band_rows(docs, text_col, id_col, num_hashes, bands, shingle_k)
+    banded = lsh_band_rows(docs, num_hashes, bands, shingle_k)
     buckets = (
         banded.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .agg(F.sort_array(F.collect_list(ID_COL)).alias("ids"))
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
     )
     pair = _pair_explode("ids", lambda x, y: [x.alias("id_a"), y.alias("id_b")])
@@ -209,8 +206,6 @@ def minhash_lsh_candidates(
 def jaccard_pairs(
     docs: DataFrame,
     candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 5,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -235,15 +230,15 @@ def jaccard_pairs(
     # building the DataFrame stays side-effect free.
     candidates = candidates.localCheckpoint(eager=False)
     involved = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .union(candidates.select(F.col("id_b").alias(id_col)))
+        candidates.select(F.col("id_a").alias(ID_COL))
+        .union(candidates.select(F.col("id_b").alias(ID_COL)))
         .distinct()
     )
     sh = F.broadcast(
-        docs.join(involved, id_col, "left_semi")
+        docs.join(involved, ID_COL, "left_semi")
         .select(
-            F.col(id_col),
-            shingle_hash_set_kernel(shingle_k)(F.col(text_col)).alias("sh"),
+            F.col(ID_COL),
+            shingle_hash_set_kernel(shingle_k)(F.col(TEXT_COL)).alias("sh"),
         )
         .localCheckpoint(eager=False)
     )
@@ -259,9 +254,9 @@ def jaccard_pairs(
     candidates = candidates.repartition(n_tasks, F.col("id_a"), F.col("id_b"))
     out = (
         candidates.join(
-            sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+            sh.select(F.col(ID_COL).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
         )
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        .join(sh.select(F.col(ID_COL).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -274,8 +269,6 @@ def jaccard_pairs(
 
 def minhash_lsh_dedup(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
@@ -287,10 +280,8 @@ def minhash_lsh_dedup(
     Duplicate-cluster resolution lives in
     :func:`gtfs_realtime_etl_spark.operators.clusters.connected_components`.
     """
-    cands = minhash_lsh_candidates(
-        docs, text_col, id_col, num_hashes, bands, shingle_k, max_bucket
-    )
-    return jaccard_pairs(docs, cands, text_col, id_col, shingle_k, threshold)
+    cands = minhash_lsh_candidates(docs, num_hashes, bands, shingle_k, max_bucket)
+    return jaccard_pairs(docs, cands, shingle_k, threshold)
 
 
 def probe_index(
@@ -368,8 +359,6 @@ def finalize_dedup_candidates(
 
 def simhash_dedup(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hamming_threshold: int = 3,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
@@ -392,8 +381,8 @@ def simhash_dedup(
     bands = hamming_threshold + 1
     seg_bits = H64_BITS // bands  # trailing bits spill into the last segment
     sh = _saturate(docs).select(
-        F.col(id_col),
-        simhash_tokens_kernel()(tokens(F.col(text_col))).alias("simhash"),
+        F.col(ID_COL),
+        simhash_tokens_kernel()(tokens(F.col(TEXT_COL))).alias("simhash"),
     )
     segments = []
     for i in range(bands):
@@ -405,7 +394,7 @@ def simhash_dedup(
             )
         )
     banded = sh.select(
-        id_col,
+        ID_COL,
         "simhash",
         F.posexplode(F.array(*segments)).alias("band_id", "segment"),
     )
@@ -413,7 +402,7 @@ def simhash_dedup(
         banded.groupBy("band_id", "segment")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "simhash"))
+                F.collect_list(F.struct(F.col(ID_COL).alias("id"), "simhash"))
             ).alias("rows")
         )
         .filter((F.size("rows") > 1) & (F.size("rows") <= max_bucket))
@@ -436,8 +425,6 @@ def simhash_dedup(
 
 def winnow_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 5,
     window: int = 4,
     min_shared: int = 2,
@@ -462,13 +449,13 @@ def winnow_candidates(
     family complementing MinHash (whole-doc set similarity) and SimHash
     (weighted profile similarity).  The oracle replays the same
     polynomial hashes in SQL."""
-    fp_col = winnow_fingerprints_kernel(shingle_k, window)(F.col(text_col))
+    fp_col = winnow_fingerprints_kernel(shingle_k, window)(F.col(TEXT_COL))
     fps = _saturate(docs).select(
-        F.col(id_col), F.explode(fp_col).alias("fp")
+        F.col(ID_COL), F.explode(fp_col).alias("fp")
     )
     buckets = (
         fps.groupBy("fp")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list(ID_COL)).alias("ids"))
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
     )
     pair = _pair_explode("ids", lambda x, y: [x.alias("id_a"), y.alias("id_b")])

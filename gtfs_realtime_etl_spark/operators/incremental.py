@@ -36,10 +36,10 @@ def partial_aggregate(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str,
-    scale: int = 2,
 ) -> DataFrame:
-    """Fold ``df`` into partial aggregate state per ``group_cols``."""
-    dec = F.col(value_col).cast(f"decimal(18,{scale})")
+    """Fold ``df`` into partial aggregate state per ``group_cols``
+    (the sum exact at two decimal places)."""
+    dec = F.col(value_col).cast("decimal(18,2)")
     return df.groupBy(*group_cols).agg(
         F.count(value_col).alias("_n"),
         F.sum(dec).alias("_sum"),
@@ -50,7 +50,7 @@ def partial_aggregate(
 
 def merge_partials(parts: Sequence[DataFrame]) -> DataFrame:
     """Merge partial-state frames (all from :func:`partial_aggregate`
-    with the same grouping/scale).  Associative and commutative: any
+    with the same grouping).  Associative and commutative: any
     slicing of the underlying rows yields the identical merged state."""
     if not parts:
         raise ValueError("merge_partials needs at least one input")
@@ -70,18 +70,15 @@ def merge_partials(parts: Sequence[DataFrame]) -> DataFrame:
     )
 
 
-def finalize(state: DataFrame, prefix: str = "") -> DataFrame:
+def finalize(state: DataFrame) -> DataFrame:
     """Presentation view of a partial state: count, exact sum (as
     double), min/max, and the derived mean."""
     group_cols = [c for c in state.columns if c not in STATE_COLS]
-    p = prefix
     return state.select(
         *group_cols,
-        F.col("_n").alias(f"{p}n"),
-        F.col("_sum").cast("double").alias(f"{p}sum"),
-        F.col("_min").alias(f"{p}min"),
-        F.col("_max").alias(f"{p}max"),
-        (F.col("_sum").cast("double") / F.col("_n").cast("double")).alias(
-            f"{p}avg"
-        ),
+        F.col("_n").alias("n"),
+        F.col("_sum").cast("double").alias("sum"),
+        F.col("_min").alias("min"),
+        F.col("_max").alias("max"),
+        (F.col("_sum").cast("double") / F.col("_n").cast("double")).alias("avg"),
     )

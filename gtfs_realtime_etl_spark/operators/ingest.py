@@ -37,8 +37,8 @@ def enrich_positions(raw: DataFrame) -> DataFrame:
     lat, lon = F.col("latitude"), F.col("longitude")
     df = (
         raw.withColumn("timestamp", to_zoned_ts(F.col("timestamp")))
-        .withColumn("geohash", geohash_encode(lat, lon, precision=7))
+        .withColumn("geohash", geohash_encode(lat, lon))
         .withColumn("bbox", bbox_struct(lon, lat))
         .withColumn("geometry", point_wkb(lon, lat))
     )
-    return with_partition_cols(df, "timestamp")
+    return with_partition_cols(df)

@@ -32,7 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.operators.similarity import _assign_cells_rows
+from gtfs_realtime_etl_spark.operators.similarity import (
+    ID_COL,
+    VEC_COL,
+    _assign_cells_rows,
+)
 
 
 def _update_centroids(
@@ -74,15 +78,13 @@ def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
     iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 8,
 ) -> list:
     """Fit ``k`` centroids; returns ``[{cell_id, centroid}]`` rows
     (the collected form ``ivf_topk`` accepts directly).
     See module docstring for the determinism contract."""
     emb = embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col(ID_COL).alias("_id"), F.col(VEC_COL).cast("array<double>").alias("v")
     )
     init = emb.orderBy("_id").limit(k).collect()
     cents = [
@@ -102,14 +104,9 @@ def kmeans_fit(
     return cents
 
 
-def kmeans_assignments(
-    embeddings: DataFrame,
-    cents: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assignments(embeddings: DataFrame, cents: list) -> DataFrame:
     """(id, cell_id) under a fitted centroid list — one projection."""
     emb = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+        F.col(ID_COL), F.col(VEC_COL).cast("array<double>").alias("v")
     )
-    return _assign_cells_rows(emb, cents, "v").select(id_col, "cell_id")
+    return _assign_cells_rows(emb, cents, "v").select(ID_COL, "cell_id")

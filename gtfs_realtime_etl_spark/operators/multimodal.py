@@ -39,7 +39,11 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _fake_decode(payload: bytes, dim: int = 16) -> np.ndarray:
+#: Length of every feature vector.
+FEATURE_DIM = 16
+
+
+def _fake_decode(payload: bytes) -> np.ndarray:
     """STUB codec: deterministic feature from payload bytes.
 
     Real deployments replace this with PIL/librosa/ffmpeg decode; the
@@ -47,9 +51,9 @@ def _fake_decode(payload: bytes, dim: int = 16) -> np.ndarray:
     byte-histogram stands in.  Deterministic: same payload → same vector.
     """
     if payload is None or len(payload) == 0:
-        return np.zeros(dim)
+        return np.zeros(FEATURE_DIM)
     arr = np.frombuffer(payload, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
+    hist, _ = np.histogram(arr, bins=FEATURE_DIM, range=(0, 256))
     return hist / max(len(arr), 1)
 
 
@@ -61,14 +65,14 @@ DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {
 }
 
 
-def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
-    """payload binary → fixed-dim feature vector via Arrow-batched
+def extract_features(media: DataFrame) -> DataFrame:
+    """payload binary → :data:`FEATURE_DIM` feature vector via Arrow-batched
     mapInPandas.  Narrow; batch size bounded by Arrow settings."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats = [
-                DECODERS.get(m, _fake_decode)(p, dim).tolist()
+                DECODERS.get(m, _fake_decode)(p).tolist()
                 for m, p in zip(pdf["modality"], pdf["payload"])
             ]
             yield pd.DataFrame(

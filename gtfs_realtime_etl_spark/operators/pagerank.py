@@ -34,14 +34,12 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 15,
     damping: float = 0.85,
-    src: str = "s",
-    dst: str = "d",
     dangling: str = "collect",
     materialize_edges: bool = True,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` rounds; ranks sum to 1.
 
-    ``edges`` are directed (src -> dst); duplicate edges count as
+    ``edges`` are directed (s -> d); duplicate edges count as
     parallel edges (weight = multiplicity / out-degree).
 
     SIDE EFFECT: with ``materialize_edges=True`` (default) the call
@@ -81,7 +79,7 @@ def pagerank(
     # materialize_edges=False — see docstring for the eager-job and
     # executor-loss caveats): nodes, out-degrees, and the
     # degree-annotated edge table all derive from it.
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select("s", "d")
     if materialize_edges:
         e = e.localCheckpoint(eager=True)
     nodes = e.select(F.col("s").alias("node")).unionAll(

@@ -36,24 +36,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.vector import dot, l2_norm
-from gtfs_realtime_etl_spark.operators.similarity import _assign_cells_rows
+from gtfs_realtime_etl_spark.operators.similarity import (
+    ID_COL,
+    VEC_COL,
+    _assign_cells_rows,
+)
+
+#: Shuffle partitions of the within-cell pair join, pinned per cell
+#: against AQE byte-based coalescing.
+PAIR_PARTITIONS = 32
 
 
-def _cell_pairs(
-    assigned: DataFrame,
-    id_col: str,
-    vec_col: str,
-    pair_partitions: int,
-) -> DataFrame:
+def _cell_pairs(assigned: DataFrame) -> DataFrame:
     """Within-cell (a_id < b_id) pairs with round-to-6-digits cosine."""
     emb = (
         assigned.select(
-            F.col(id_col).alias("vid"),
+            F.col(ID_COL).alias("vid"),
             "cell_id",
-            F.col(vec_col).cast("array<double>").alias("vec"),
+            F.col(VEC_COL).cast("array<double>").alias("vec"),
         )
         .withColumn("norm", l2_norm(F.col("vec")))
-        .repartition(pair_partitions, "cell_id")
+        .repartition(PAIR_PARTITIONS, "cell_id")
     )
     a, b = emb.alias("a"), emb.alias("b")
     denom = F.col("a.norm") * F.col("b.norm")
@@ -80,17 +83,11 @@ def _cell_pairs(
     )
 
 
-def _drops_from_assigned(
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    pair_partitions: int,
-) -> DataFrame:
-    pairs = _cell_pairs(assigned, id_col, vec_col, pair_partitions)
+def _drops_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
+    pairs = _cell_pairs(assigned)
     return (
         pairs.where(F.col("cosine") >= F.lit(threshold))
-        .select("cell_id", F.col("b_id").alias(id_col))
+        .select("cell_id", F.col("b_id").alias(ID_COL))
         .distinct()
     )
 
@@ -99,9 +96,6 @@ def semdedup_profile(
     embeddings: DataFrame,
     centroids: DataFrame | list,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pair_partitions: int = 32,
 ) -> DataFrame:
     """Per-cell dedup report: total vectors, survivors, drops, and the
     smallest surviving id.  Collects the centroid table ONCE (callers
@@ -116,18 +110,16 @@ def semdedup_profile(
         cents = sorted(centroids, key=lambda r: r["cell_id"])
     else:
         cents = sorted(centroids.collect(), key=lambda r: r["cell_id"])
-    assigned = _assign_cells_rows(embeddings, cents, vec_col).localCheckpoint(
+    assigned = _assign_cells_rows(embeddings, cents, VEC_COL).localCheckpoint(
         eager=True
     )
-    drops = _drops_from_assigned(
-        assigned, threshold, id_col, vec_col, pair_partitions
-    ).select(id_col)
-    slim = assigned.select(id_col, "cell_id")
-    survivors = slim.join(drops, id_col, "left_anti")
+    drops = _drops_from_assigned(assigned, threshold).select(ID_COL)
+    slim = assigned.select(ID_COL, "cell_id")
+    survivors = slim.join(drops, ID_COL, "left_anti")
     totals = slim.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_vecs"))
     kept = survivors.groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
-        F.min(id_col).alias("min_kept_id"),
+        F.min(ID_COL).alias("min_kept_id"),
     )
     return totals.join(kept, "cell_id", "left").select(
         "cell_id",

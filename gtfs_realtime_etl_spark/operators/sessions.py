@@ -18,22 +18,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: The per-user key and event-time column sessions are cut on.
+KEY_COL = "user_id"
+TS_COL = "ts"
+
 
 def sessionize(
     events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
+    ts_col: str = TS_COL,
     gap: int | float = 1800,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Add a ``session_id`` column (1-based per key, in time order).
+    """Add a ``session_id`` column (1-based per :data:`KEY_COL`, in time
+    order).
 
     ``ts_col`` must be numeric (epoch seconds/ns) or timestamp with
     subtractable semantics; ``gap`` is in the same unit as the
     difference.  ``order_cols`` break timestamp ties deterministically.
     """
     order = [F.asc(ts_col)] + [F.asc(c) for c in (order_cols or [])]
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy(KEY_COL).orderBy(*order)
     prev_ts: Column = F.lag(ts_col).over(w)
     is_new = (
         prev_ts.isNull() | ((F.col(ts_col) - prev_ts) > F.lit(gap))
@@ -44,15 +48,13 @@ def sessionize(
 
 def session_stats(
     events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
     gap: int | float = 1800,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """One row per (key, session): event count, start ts, duration."""
-    s = sessionize(events, key_col, ts_col, gap, order_cols)
-    return s.groupBy(key_col, "session_id").agg(
+    s = sessionize(events, gap=gap, order_cols=order_cols)
+    return s.groupBy(KEY_COL, "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        (F.max(ts_col) - F.min(ts_col)).alias("duration"),
+        F.min(TS_COL).alias("session_start"),
+        (F.max(TS_COL) - F.min(TS_COL)).alias("duration"),
     )

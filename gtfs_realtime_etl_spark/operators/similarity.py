@@ -9,7 +9,7 @@ no single-task sort, no Python):
 - :func:`lsh_bucketed_topk` — data-independent scale path:
   random-hyperplane LSH signs bucket both sides; only same-bucket pairs
   are scored.  Probes neighboring buckets by flipping each sign bit
-  once (multi-probe), so recall degrades gracefully.
+  once, so recall degrades gracefully.
 - :func:`ivf_topk` — data-dependent scale path (inverted-file index):
   a small coarse-quantizer centroid table partitions the corpus into
   cells; the query scans only the ``nprobe`` nearest cells.  Centroids
@@ -20,6 +20,9 @@ no single-task sort, no Python):
 
 Hyperplanes/centroids are deterministic so results are reproducible
 across runs and cluster sizes (and oracle-checkable).
+
+Every operator reads the corpus as (:data:`ID_COL`, :data:`VEC_COL`)
+and the queries as (:data:`QUERY_ID_COL`, :data:`QUERY_VEC_COL`).
 """
 
 from __future__ import annotations
@@ -36,12 +39,18 @@ from gtfs_realtime_etl_spark.functions.vector import cosine_similarity, dot
 #: same result; it only bounds per-bucket state — raise with volume.
 TOPK_SALT = 32
 
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+QUERY_ID_COL = "query_id"
+QUERY_VEC_COL = "qvec"
+
+#: Decimal places of the per-label centroid means.
+CENTROID_SCALE = 8
+
 
 def _two_phase_topk(
     scored: DataFrame,
     k: int,
-    query_id_col: str,
-    id_col: str,
     score_col: str = "cosine",
     dedup: bool = False,
 ) -> DataFrame:
@@ -51,7 +60,7 @@ def _two_phase_topk(
     scored rows of one query through ONE task's sort (for a single
     query vector: the entire corpus — a 100×-scale killer).  Phase 1
     salts rows into :data:`TOPK_SALT` buckets per query on the unique
-    ``id_col`` and keeps each bucket's local top-k (a global top-k
+    :data:`ID_COL` and keeps each bucket's local top-k (a global top-k
     member is necessarily in its own bucket's top-k); phase 2 ranks the
     ≤ TOPK_SALT·k survivors per query — a trivially small sort.  The
     tie-break (score desc, id asc) is identical at both levels, so the
@@ -62,29 +71,29 @@ def _two_phase_topk(
     one row per matching probe) into the phase-1 aggregate via
     ``collect_set`` — no extra dropDuplicates shuffle.
     """
-    others = [c for c in scored.columns if c not in (query_id_col, id_col, score_col)]
+    others = [c for c in scored.columns if c not in (QUERY_ID_COL, ID_COL, score_col)]
     # Struct sorts asc by (-score, id) = (score desc, id asc) — the
     # exact final order; score round-trips through double negation.
     entry = F.struct(
         (-F.col(score_col)).alias("_neg"),
-        F.col(id_col).alias("_id"),
+        F.col(ID_COL).alias("_id"),
         *[F.col(c).alias(c) for c in others],
     )
     coll = F.collect_set(entry) if dedup else F.collect_list(entry)
     survivors = (
-        scored.withColumn("_salt", F.pmod(F.hash(F.col(id_col)), F.lit(TOPK_SALT)))
-        .groupBy(query_id_col, "_salt")
+        scored.withColumn("_salt", F.pmod(F.hash(F.col(ID_COL)), F.lit(TOPK_SALT)))
+        .groupBy(QUERY_ID_COL, "_salt")
         .agg(F.slice(F.sort_array(coll), 1, k).alias("_cand"))
-        .select(query_id_col, F.explode("_cand").alias("_c"))
+        .select(QUERY_ID_COL, F.explode("_cand").alias("_c"))
     )
     restored = {
-        query_id_col: F.col(query_id_col),
-        id_col: F.col("_c._id").alias(id_col),
+        QUERY_ID_COL: F.col(QUERY_ID_COL),
+        ID_COL: F.col("_c._id").alias(ID_COL),
         score_col: (-F.col("_c._neg")).alias(score_col),
         **{c: F.col(f"_c.{c}").alias(c) for c in others},
     }
     out = survivors.select(*[restored[c] for c in scored.columns])
-    w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.asc(id_col))
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(F.desc(score_col), F.asc(ID_COL))
     return out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
@@ -104,21 +113,16 @@ def lsh_signature(vec: Column, planes: np.ndarray) -> Column:
     return sig
 
 
-def centroids_from_labels(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 8,
-) -> DataFrame:
-    """Coarse-quantizer centroids: the per-``label_col`` mean vector,
-    decimal-accumulated per dimension and rounded to ``scale`` — the
-    same cross-engine-exact arithmetic as the embedding_centroids
-    query, so an oracle can rebuild the identical table.  Returns
-    (cell_id, centroid array<double>)."""
+def centroids_from_labels(embeddings: DataFrame, dim: int = 64) -> DataFrame:
+    """Coarse-quantizer centroids: the per-``label`` mean vector,
+    decimal-accumulated per dimension and rounded to
+    :data:`CENTROID_SCALE` places — the same cross-engine-exact
+    arithmetic as the embedding_centroids query, so an oracle can
+    rebuild the identical table.  Returns (cell_id, centroid
+    array<double>)."""
     exploded = embeddings.select(
-        F.col(label_col).alias("cell_id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")),
+        F.col("label").alias("cell_id"),
+        F.posexplode(F.col(VEC_COL).cast("array<double>")),
     ).select("cell_id", (F.col("pos") + 1).alias("dim"), F.col("col").alias("val"))
     per_dim = exploded.groupBy("cell_id", "dim").agg(
         # Engine-exact ROUND (mult-form; see tests/test_engine_round.py).
@@ -128,10 +132,10 @@ def centroids_from_labels(
                     F.sum(F.col("val").cast("decimal(20,10)")).cast("double")
                     / F.count(F.lit(1)).cast("double")
                 )
-                * F.lit(float(10**scale)),
+                * F.lit(float(10**CENTROID_SCALE)),
                 0,
             )
-            / F.lit(float(10**scale))
+            / F.lit(float(10**CENTROID_SCALE))
         ).alias("cval")
     )
     return per_dim.groupBy("cell_id").agg(
@@ -202,10 +206,6 @@ def ivf_topk(
     centroids: DataFrame | list,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
 ) -> DataFrame:
     """IVF approximate top-k: score only vectors whose cell is among the
     query's ``nprobe`` nearest centroids.
@@ -227,12 +227,12 @@ def ivf_topk(
         [(r["cell_id"], [float(v) for v in r["centroid"]]) for r in cents],
         "cell_id int, centroid array<double>",
     )
-    assigned = _assign_cells_rows(embeddings, cents, vec_col)
-    emb = assigned.withColumn("_vec", F.col(vec_col).cast("array<double>"))
+    assigned = _assign_cells_rows(embeddings, cents, VEC_COL)
+    emb = assigned.withColumn("_vec", F.col(VEC_COL).cast("array<double>"))
 
     q = query.select(
-        F.col(query_id_col),
-        F.col(query_vec_col).cast("array<double>").alias("_qvec"),
+        F.col(QUERY_ID_COL),
+        F.col(QUERY_VEC_COL).cast("array<double>").alias("_qvec"),
     )
     qcells = (
         q.crossJoin(F.broadcast(cent_local))
@@ -240,31 +240,29 @@ def ivf_topk(
         .withColumn(
             "_rank",
             F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy("_dist", "cell_id")
+                Window.partitionBy(QUERY_ID_COL).orderBy("_dist", "cell_id")
             ),
         )
         .filter(F.col("_rank") <= nprobe)
-        .select(query_id_col, "_qvec", "cell_id")
+        .select(QUERY_ID_COL, "_qvec", "cell_id")
     )
 
-    passthrough = [c for c in embeddings.columns if c != vec_col]
+    passthrough = [c for c in embeddings.columns if c != VEC_COL]
     scored = emb.join(F.broadcast(qcells), "cell_id").select(
-        query_id_col,
+        QUERY_ID_COL,
         *passthrough,
         cosine_similarity(F.col("_vec"), F.col("_qvec")).alias("cosine"),
     )
-    return _two_phase_topk(scored, k, query_id_col, id_col)
+    return _two_phase_topk(scored, k)
 
 
-def dim_min_max(
-    embeddings: DataFrame, vec_col: str = "embedding", dim: int = 64
-) -> tuple[list, list]:
+def dim_min_max(embeddings: DataFrame, dim: int = 64) -> tuple[list, list]:
     """Per-dimension (min, max) over the corpus — the scalar-quantizer
     calibration table.  MIN/MAX are order-independent (exact doubles,
     identical on any engine or partitioning), and at 64 dims the result
     is broadcast-class, so it collects like a centroid table."""
     exploded = embeddings.select(
-        F.posexplode(F.col(vec_col).cast("array<double>"))
+        F.posexplode(F.col(VEC_COL).cast("array<double>"))
     ).select(F.col("pos").alias("dim"), F.col("col").alias("val"))
     rows = (
         exploded.groupBy("dim")
@@ -281,12 +279,11 @@ def quantize_embeddings(
     embeddings: DataFrame,
     mins: list,
     maxs: list,
-    vec_col: str = "embedding",
-    out_col: str = "qvec",
     levels: int = 255,
 ) -> DataFrame:
-    """Uint8 scalar quantization: ``q_i = round((x_i − min_i) /
-    (max_i − min_i) · levels)`` per dimension — an ``array<int>`` in
+    """Uint8 scalar quantization into a ``qvec`` column: ``q_i =
+    round((x_i − min_i) / (max_i − min_i) · levels)`` per dimension — an
+    ``array<int>`` in
     [0, levels] that stores a 64-dim float64 vector in 64 bytes (8×
     smaller), the standard storage tier under an IVF index.  Pure
     Column math (transform over the literal calibration arrays); a
@@ -304,7 +301,7 @@ def quantize_embeddings(
         )
 
     return embeddings.withColumn(
-        out_col, F.transform(F.col(vec_col).cast("array<double>"), q)
+        "qvec", F.transform(F.col(VEC_COL).cast("array<double>"), q)
     )
 
 
@@ -330,50 +327,44 @@ def lsh_bucketed_topk(
     k: int = 10,
     n_planes: int = 12,
     dim: int = 64,
-    multi_probe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: score only vectors sharing an LSH bucket with
-    the query (or, with multi-probe, a bucket at hamming distance 1).
+    the query or in a bucket at hamming distance 1 from it (multi-probe).
 
     Bucket count is 2^n_planes; expected bucket size n/2^n_planes keeps
     per-bucket work tiny at scale, and the bucket join is one shuffle
     keyed on the signature.
     """
     planes = _hyperplanes(dim, n_planes, seed)
-    passthrough = [c for c in embeddings.columns if c != vec_col]
+    passthrough = [c for c in embeddings.columns if c != VEC_COL]
     emb = embeddings.withColumn(
-        "_vec", F.col(vec_col).cast("array<double>")
+        "_vec", F.col(VEC_COL).cast("array<double>")
     ).withColumn("bucket", lsh_signature(F.col("_vec"), planes))
 
     q = query.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qvec")
+        F.col(QUERY_ID_COL), F.col(QUERY_VEC_COL).cast("array<double>").alias("_qvec")
     ).withColumn("qbucket", lsh_signature(F.col("_qvec"), planes))
-    if multi_probe:
-        # Probe the exact bucket plus every 1-bit-flip neighbor.
-        probes = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << i)).cast("long")
-                for i in range(n_planes)
-            ],
-        )
-        q = q.select(query_id_col, "_qvec", F.explode(probes).alias("qbucket"))
+    # Probe the exact bucket plus every 1-bit-flip neighbor.
+    probes = F.array(
+        F.col("qbucket"),
+        *[
+            F.col("qbucket").bitwiseXOR(F.lit(1 << i)).cast("long")
+            for i in range(n_planes)
+        ],
+    )
+    q = q.select(QUERY_ID_COL, "_qvec", F.explode(probes).alias("qbucket"))
 
     scored = emb.join(
         F.broadcast(q), emb["bucket"] == q["qbucket"]
     ).select(
-        query_id_col,
+        QUERY_ID_COL,
         *passthrough,
         cosine_similarity(F.col("_vec"), F.col("_qvec")).alias("cosine"),
     )
     # dedup=True: multi-probe emits one identical row per matching
     # probe; collect_set folds them inside the phase-1 aggregate.
-    return _two_phase_topk(scored, k, query_id_col, id_col, dedup=True)
+    return _two_phase_topk(scored, k, dedup=True)
 
 
 # ---------------------------------------------------------------------------
@@ -395,8 +386,6 @@ def pq_codebook_from_ids(
     embeddings: DataFrame,
     ids: "list[int]",
     n_subspaces: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> "list[list[list[float]]]":
     """Deterministic sampled PQ codebook: ``codebook[m][c]`` is subvector
     ``m`` of the vector whose id is the c-th smallest in ``ids``.
@@ -410,8 +399,8 @@ def pq_codebook_from_ids(
     """
     rows = {
         r[0]: [float(v) for v in r[1]]
-        for r in embeddings.filter(F.col(id_col).isin([int(i) for i in ids]))
-        .select(id_col, vec_col)
+        for r in embeddings.filter(F.col(ID_COL).isin([int(i) for i in ids]))
+        .select(ID_COL, VEC_COL)
         .collect()
     }
     missing = sorted(set(int(i) for i in ids) - set(rows))
@@ -433,10 +422,6 @@ def pq_adc_topk(
     query: DataFrame,
     codebook: "list[list[list[float]]]",
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
 ) -> DataFrame:
     """PQ/ADC approximate top-k: rank by the asymmetric distance
     ``sum_m l2sq(q_m, codebook[m][code(v, m)])`` — the query stays
@@ -467,7 +452,7 @@ def pq_adc_topk(
     """
     d_sub = len(codebook[0][0])
     qrows = query.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_q")
+        F.col(QUERY_ID_COL), F.col(QUERY_VEC_COL).cast("array<double>").alias("_q")
     ).collect()
 
     def l2sq_py(a: "list[float]", b: "list[float]") -> float:
@@ -476,14 +461,14 @@ def pq_adc_topk(
             acc = acc + (x - y) * (x - y)
         return acc
 
-    passthrough = [c for c in embeddings.columns if c != vec_col]
+    passthrough = [c for c in embeddings.columns if c != VEC_COL]
     # ADC lookup tables: qdist[m][c] = l2sq(q_m, codebook[m][c]).
     qtables = []
     for qr in qrows:
         qv = [float(v) for v in qr["_q"]]
         qtables.append(
             (
-                qr[query_id_col],
+                qr[QUERY_ID_COL],
                 [
                     [l2sq_py(qv[m * d_sub : (m + 1) * d_sub], cw) for cw in subbook]
                     for m, subbook in enumerate(codebook)
@@ -491,12 +476,10 @@ def pq_adc_topk(
             )
         )
 
-    scored = _pq_adc_scores_kernel(
-        embeddings, qtables, codebook, query, query_id_col, vec_col, passthrough
-    )
-    topk = _two_phase_topk(scored, k, query_id_col, id_col, score_col="_negd")
+    scored = _pq_adc_scores_kernel(embeddings, qtables, codebook, query, passthrough)
+    topk = _two_phase_topk(scored, k, score_col="_negd")
     return topk.select(
-        query_id_col,
+        QUERY_ID_COL,
         *passthrough,
         (-F.col("_negd")).alias("adc_dist"),
         "rank",
@@ -508,8 +491,6 @@ def _pq_adc_scores_kernel(
     qtables: "list[tuple[object, list[list[float]]]]",
     codebook: "list[list[list[float]]]",
     query: DataFrame,
-    query_id_col: str,
-    vec_col: str,
     passthrough: "list[str]",
 ) -> DataFrame:
     """Corpus-side PQ scoring as a vectorized Arrow kernel: one numpy
@@ -525,9 +506,9 @@ def _pq_adc_scores_kernel(
     n_sub, n_code, d_sub = books.shape
     tables = [(qid, np.asarray(qd, dtype=np.float64)) for qid, qd in qtables]
     emb_fields = {f.name: f for f in embeddings.schema.fields}
-    qid_field = next(f for f in query.schema.fields if f.name == query_id_col)
+    qid_field = next(f for f in query.schema.fields if f.name == QUERY_ID_COL)
     out_schema = StructType(
-        [StructField(query_id_col, qid_field.dataType, True)]
+        [StructField(QUERY_ID_COL, qid_field.dataType, True)]
         + [emb_fields[c] for c in passthrough]
         + [StructField("_negd", DoubleType(), True)]
     )
@@ -537,7 +518,7 @@ def _pq_adc_scores_kernel(
             if pdf.empty:
                 continue
             mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf[VEC_COL]]
             )
             n = mat.shape[0]
             codes = np.empty((n_sub, n), dtype=np.int64)
@@ -555,11 +536,11 @@ def _pq_adc_scores_kernel(
                 for m in range(n_sub):
                     dist = dist + qd[m][codes[m]]
                 blk = base.copy()
-                blk.insert(0, query_id_col, qid)
+                blk.insert(0, QUERY_ID_COL, qid)
                 blk["_negd"] = -dist
                 blocks.append(blk)
             yield pd.concat(blocks, ignore_index=True) if len(blocks) > 1 else blocks[0]
 
-    return embeddings.select(*passthrough, vec_col).mapInPandas(
+    return embeddings.select(*passthrough, VEC_COL).mapInPandas(
         score, schema=out_schema
     )

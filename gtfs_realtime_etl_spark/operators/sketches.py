@@ -56,10 +56,9 @@ def _mg_merge(counts: dict, capacity: int) -> tuple[dict, int]:
 
 def mg_partials(
     tokens: DataFrame,
-    token_col: str = "token",
     capacity: int = DEFAULT_CAPACITY,
 ) -> DataFrame:
-    """Per-partition Misra-Gries partials over ``tokens[token_col]``.
+    """Per-partition Misra-Gries partials over ``tokens["token"]``.
 
     Output schema ``(token string, est long, dec long)``: survivor rows
     carry (token, est, 0); ONE sentinel row per partition carries
@@ -76,7 +75,7 @@ def mg_partials(
             if pdf.empty:
                 continue
             seen = True
-            for tok, c in pdf[token_col].value_counts().items():
+            for tok, c in pdf["token"].value_counts().items():
                 counts[tok] = counts.get(tok, 0) + int(c)
             counts, s = _mg_merge(counts, capacity)
             dec_total += s
@@ -91,14 +90,13 @@ def mg_partials(
             }
         )
 
-    return tokens.select(F.col(token_col).alias("token")).mapInPandas(
+    return tokens.select("token").mapInPandas(
         fold, schema="token string, est long, dec long"
     )
 
 
 def mg_summary(
     tokens: DataFrame,
-    token_col: str = "token",
     capacity: int = DEFAULT_CAPACITY,
 ) -> DataFrame:
     """Merged global sketch as ONE grouped ``(token, est, d)`` frame:
@@ -109,7 +107,7 @@ def mg_summary(
     One aggregate yields both, so a consumer that reads the estimates
     and D from it scans ``tokens`` once."""
     return (
-        mg_partials(tokens, token_col, capacity)
+        mg_partials(tokens, capacity)
         .groupBy("token")
         .agg(F.sum("est").alias("est"), F.sum("dec").alias("d"))
     )

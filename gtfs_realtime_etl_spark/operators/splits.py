@@ -38,6 +38,10 @@ from gtfs_realtime_etl_spark.functions.hashing import (
 SPLIT_A = 1_103_515_245
 SPLIT_B = 12_345
 
+#: The record id and group key the samplers read.
+ID_COL = "doc_id"
+GROUP_COL = "source"
+
 
 def split_slot(id_col: Column) -> Column:
     """Uniform deterministic slot in [0, MOD) from a bigint id.
@@ -61,7 +65,7 @@ def sql_split_slot(id_expr: str) -> str:
 def split_assign(
     df: DataFrame,
     splits: dict[str, float],
-    id_col: str = "doc_id",
+    id_col: str = ID_COL,
     out_col: str = "split",
 ) -> DataFrame:
     """Append a ``split`` label column assigning each row to one of
@@ -96,11 +100,7 @@ def sql_split_assign(id_expr: str, splits: dict[str, float]) -> str:
     return f"CASE {' '.join(whens)} ELSE '{list(splits)[-1]}' END"
 
 
-def stratified_sample(
-    df: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stratified_sample(df: DataFrame, fraction: float) -> DataFrame:
     """Deterministic ~``fraction`` subsample: a row is kept iff its hash
     slot falls below ``fraction * MOD`` — membership is a property of
     the id, not of partitioning, executor count, or evaluation order
@@ -108,7 +108,7 @@ def stratified_sample(
     strict subset of the 10% sample."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(split_slot(F.col(id_col)) < F.lit(int(fraction * MOD)))
+    return df.filter(split_slot(F.col(ID_COL)) < F.lit(int(fraction * MOD)))
 
 
 def sql_stratified_sample_pred(id_expr: str, fraction: float) -> str:
@@ -119,8 +119,6 @@ def sql_stratified_sample_pred(id_expr: str, fraction: float) -> str:
 def mixture_sample(
     df: DataFrame,
     fractions: dict[str, float],
-    group_col: str = "source",
-    id_col: str = "doc_id",
     default: float = 0.0,
 ) -> DataFrame:
     """Deterministic DATA-MIXING resample: keep each row iff its hash
@@ -136,13 +134,13 @@ def mixture_sample(
             raise ValueError(f"fraction for {g!r} must be in [0, 1], got {frac}")
     bound = None
     for g, frac in fractions.items():
-        cond = F.col(group_col) == F.lit(g)
+        cond = F.col(GROUP_COL) == F.lit(g)
         b = F.lit(int(frac * MOD))
         bound = F.when(cond, b) if bound is None else bound.when(cond, b)
     bound = (
         F.lit(int(default * MOD)) if bound is None else bound.otherwise(F.lit(int(default * MOD)))
     )
-    return df.filter(split_slot(F.col(id_col)) < bound)
+    return df.filter(split_slot(F.col(ID_COL)) < bound)
 
 
 def sql_mixture_sample_pred(
@@ -163,12 +161,7 @@ def sql_mixture_sample_pred(
 CAP_SALT = 16
 
 
-def cap_per_group(
-    df: DataFrame,
-    k: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cap_per_group(df: DataFrame, k: int) -> DataFrame:
     """Deterministic per-group cap: keep at most ``k`` rows per group,
     chosen by hash-slot order (slot asc, id asc) — the "max N docs per
     domain" step of web-corpus curation.  Membership is a property of
@@ -185,18 +178,18 @@ def cap_per_group(
 
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    slot = split_slot(F.col(id_col))
+    slot = split_slot(F.col(ID_COL))
     salted = df.withColumn("_slot", slot).withColumn(
         "_salt", F.pmod(F.col("_slot"), F.lit(CAP_SALT))
     )
-    w_local = Window.partitionBy(group_col, "_salt").orderBy(
-        F.asc("_slot"), F.asc(id_col)
+    w_local = Window.partitionBy(GROUP_COL, "_salt").orderBy(
+        F.asc("_slot"), F.asc(ID_COL)
     )
     survivors = salted.withColumn(
         "_rn", F.row_number().over(w_local)
     ).filter(F.col("_rn") <= k)
-    w_final = Window.partitionBy(group_col).orderBy(
-        F.asc("_slot"), F.asc(id_col)
+    w_final = Window.partitionBy(GROUP_COL).orderBy(
+        F.asc("_slot"), F.asc(ID_COL)
     )
     return (
         survivors.withColumn("_rk", F.row_number().over(w_final))
@@ -241,12 +234,7 @@ def sql_group_hash_mixed(group_expr: str) -> str:
     return f"((({r} * {r} + {r}) % {m} + {m}) % {m})"
 
 
-def group_split_assign(
-    df: DataFrame,
-    splits: dict[str, float],
-    group_col: str = "source",
-    out_col: str = "split",
-) -> DataFrame:
+def group_split_assign(df: DataFrame, splits: dict[str, float]) -> DataFrame:
     """Group-aware split assignment: every row of a group lands in the
     SAME split, because the slot is hashed from the group key (mixed —
     see :func:`group_hash_mixed`), not the row id.  This is the leakage
@@ -260,9 +248,6 @@ def group_split_assign(
     """
     tmp = "_group_hash64"
     out = split_assign(
-        df.withColumn(tmp, group_hash_mixed(F.col(group_col))),
-        splits,
-        id_col=tmp,
-        out_col=out_col,
+        df.withColumn(tmp, group_hash_mixed(F.col(GROUP_COL))), splits, id_col=tmp
     )
     return out.drop(tmp)

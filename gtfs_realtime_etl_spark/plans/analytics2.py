@@ -81,7 +81,7 @@ COACT_BUCKET_NS = 1_800_000_000_000  # 30 min
 def _sessions(events: DataFrame) -> DataFrame:
     e = events.select("user_id", "ts", "event_id")
     s = sessionize(
-        e, key_col="user_id", ts_col="ts", gap=SESSION_GAP_NS, order_cols=["event_id"]
+        e, gap=SESSION_GAP_NS, order_cols=["event_id"]
     )
     return s.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
@@ -1008,7 +1008,7 @@ GROUP_SPLITS = {"train": 0.7, "val": 0.15, "test": 0.15}
 
 def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    d = group_split_assign(documents, GROUP_SPLITS, group_col="source")
+    d = group_split_assign(documents, GROUP_SPLITS)
     leaked = (
         d.groupBy("source")
         .agg(F.count_distinct("split").alias("k"))
@@ -1188,7 +1188,6 @@ def _shuffle_key(doc_id: Column, epoch: Column) -> Column:
 def epoch_shuffle_positions(
     documents: DataFrame,
     n_epochs: int = SHUFFLE_EPOCHS,
-    n_buckets: int = EPOCH_SHUFFLE_BUCKETS,
 ) -> DataFrame:
     """Deterministic per-epoch shuffle positions for any frame with a
     ``doc_id`` column — the two-level range rank described above,
@@ -1210,7 +1209,7 @@ def epoch_shuffle_positions(
     # Two-level range rank (see block comment above): contiguous
     # fixed-width key buckets sort in parallel; prefix offsets come from
     # a broadcast-sized per-bucket count.
-    width = (MOD + n_buckets - 1) // n_buckets
+    width = (MOD + EPOCH_SHUFFLE_BUCKETS - 1) // EPOCH_SHUFFLE_BUCKETS
     keyed = keyed.withColumn("bucket", (F.col("k") / F.lit(width)).cast("int"))
     local = keyed.withColumn(
         "local_pos",

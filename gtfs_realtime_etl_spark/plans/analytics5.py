@@ -91,7 +91,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the global decrement scalar D, which lands in the NULL-token
     # group) — the shared aggregate exchange is reused at runtime, so
     # the sketch side scans the corpus exactly once.
-    grouped = mg_summary(toks, "token", HH_CAPACITY)
+    grouped = mg_summary(toks, HH_CAPACITY)
     est = grouped.where(F.col("token").isNotNull()).select("token", "est")
     # The exact twin also scans the corpus once: N rides off the
     # (already vocabulary-sized) count frame, not a second corpus pass.

@@ -110,38 +110,38 @@ def dsum_sql(x: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({x} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
-def dsumsq(col: Column, scale: int = 2) -> Column:
-    d = col.cast(f"decimal(18,{scale})")
+def dsumsq(col: Column) -> Column:
+    d = col.cast("decimal(18,2)")
     return F.sum(d * d).cast("double")
 
 
-def dsumsq_sql(x: str, scale: int = 2) -> str:
-    d = f"CAST({x} AS DECIMAL(18,{scale}))"
+def dsumsq_sql(x: str) -> str:
+    d = f"CAST({x} AS DECIMAL(18,2))"
     return f"CAST(SUM({d} * {d}) AS DOUBLE)"
 
 
-def davg(col: Column, scale: int = 2) -> Column:
-    return dsum(col, scale) / F.count(col).cast("double")
+def davg(col: Column) -> Column:
+    return dsum(col) / F.count(col).cast("double")
 
 
-def davg_sql(x: str, scale: int = 2) -> str:
-    return f"({dsum_sql(x, scale)} / CAST(COUNT({x}) AS DOUBLE))"
+def davg_sql(x: str) -> str:
+    return f"({dsum_sql(x)} / CAST(COUNT({x}) AS DOUBLE))"
 
 
-def dstddev(col: Column, scale: int = 2) -> Column:
+def dstddev(col: Column) -> Column:
     """Sample stddev from exact decimal moments (deterministic across
     engines); NULL for n<2, clamped at 0 against negative round-off."""
     n = F.count(col).cast("double")
-    s1 = dsum(col, scale)
-    s2 = dsumsq(col, scale)
+    s1 = dsum(col)
+    s2 = dsumsq(col)
     var = (s2 - (s1 * s1) / n) / (n - F.lit(1.0))
     return F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(None))
 
 
-def dstddev_sql(x: str, scale: int = 2) -> str:
+def dstddev_sql(x: str) -> str:
     n = f"CAST(COUNT({x}) AS DOUBLE)"
-    s1 = dsum_sql(x, scale)
-    s2 = dsumsq_sql(x, scale)
+    s1 = dsum_sql(x)
+    s2 = dsumsq_sql(x)
     var = f"(({s2} - ({s1} * {s1}) / {n}) / ({n} - 1.0))"
     return f"(CASE WHEN {n} > 1 THEN SQRT(GREATEST({var}, 0.0)) ELSE NULL END)"
 
@@ -537,8 +537,8 @@ def q_flagship_punctuality(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("n_name")
         .agg(
             F.count("diff").alias("count"),
-            davg(F.col("diff"), 2).alias("avg_diff"),
-            dstddev(F.col("diff"), 2).alias("stddev_diff"),
+            davg(F.col("diff")).alias("avg_diff"),
+            dstddev(F.col("diff")).alias("stddev_diff"),
         )
         .filter(F.col("count") > 1)
     )
@@ -1115,7 +1115,7 @@ SESSION_GAP_NS = 1_800 * 1_000_000_000  # 30 min
 def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_testdata(spark, sf_dir, "events")
     stats = session_stats(
-        events, key_col="user_id", ts_col="ts", gap=SESSION_GAP_NS,
+        events, gap=SESSION_GAP_NS,
         order_cols=["event_id"],
     )
     return stats.select(
@@ -1384,10 +1384,7 @@ def q_asof_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"), "user_id", "ts"
     )
     clicks = events.filter(F.col("event_type") == "click").select("user_id", "ts")
-    joined = asof_join(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        direction="backward",
-    )
+    joined = asof_join(purchases, clicks, on="user_id", direction="backward")
     return joined.select(
         "purchase_id",
         "user_id",
@@ -1430,8 +1427,6 @@ def q_asof_next_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases,
         clicks,
         on="user_id",
-        left_ts="ts",
-        right_ts="ts",
         direction="forward",
         tolerance=ASOF_TOL_NS,
     )
@@ -2064,8 +2059,6 @@ PACK_BUDGET = 2048
 
 
 def q_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     (documents,) = load_testdata(spark, sf_dir, "documents")
     n_tok = F.size(tokens(F.col("text")))
     w = (
@@ -2504,7 +2497,7 @@ Q_ANN_IVF_TOPK_SQL = _ann_ivf_sql()
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
     media = synthesize_media(spark, documents, modality="image")
-    feats = extract_features(media, dim=16)
+    feats = extract_features(media)
     return feats.select(
         "media_id",
         "modality",

@@ -891,10 +891,7 @@ def q_point_in_time_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    joined = asof_join(
-        purchases, states, on="user_id", left_ts="ts", right_ts="ts",
-        direction="backward",
-    )
+    joined = asof_join(purchases, states, on="user_id", direction="backward")
     return (
         joined.select(
             F.coalesce(F.col("state"), F.lit("none")).alias("state"),

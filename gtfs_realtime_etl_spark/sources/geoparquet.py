@@ -32,14 +32,15 @@ _CRS84 = {
     "id": {"authority": "OGC", "code": "CRS84"},
 }
 
+#: The lake's WKB point column and its bbox covering struct column.
+GEOMETRY_COL = "geometry"
+BBOX_COL = "bbox"
 
-def geo_metadata(
-    geometry_col: str = "geometry",
-    bbox_col: str | None = "bbox",
-    bbox: list[float] | None = None,
-) -> dict:
-    """The ``geo`` footer value (GeoParquet 1.1.0) for a WKB point
-    column with an optional bbox covering column."""
+
+def geo_metadata(bbox: list[float] | None = None) -> dict:
+    """The ``geo`` footer value (GeoParquet 1.1.0) for the WKB point
+    column :data:`GEOMETRY_COL` with its :data:`BBOX_COL` covering
+    column."""
     column: dict = {
         "encoding": "WKB",
         "geometry_types": ["Point"],
@@ -47,28 +48,22 @@ def geo_metadata(
     }
     if bbox is not None:
         column["bbox"] = bbox
-    if bbox_col is not None:
-        column["covering"] = {
-            "bbox": {
-                "xmin": [bbox_col, "xmin"],
-                "ymin": [bbox_col, "ymin"],
-                "xmax": [bbox_col, "xmax"],
-                "ymax": [bbox_col, "ymax"],
-            }
+    column["covering"] = {
+        "bbox": {
+            "xmin": [BBOX_COL, "xmin"],
+            "ymin": [BBOX_COL, "ymin"],
+            "xmax": [BBOX_COL, "xmax"],
+            "ymax": [BBOX_COL, "ymax"],
         }
+    }
     return {
         "version": "1.1.0",
-        "primary_column": geometry_col,
-        "columns": {geometry_col: column},
+        "primary_column": GEOMETRY_COL,
+        "columns": {GEOMETRY_COL: column},
     }
 
 
-def stamp_geoparquet(
-    path: str,
-    geometry_col: str = "geometry",
-    bbox_col: str | None = "bbox",
-    compression: str = "zstd",
-) -> int:
+def stamp_geoparquet(path: str, compression: str = "zstd") -> int:
     """Attach the ``geo`` footer metadata to every parquet file under
     ``path`` (recursively; hive partition dirs welcome).  Returns the
     number of files stamped.  Each file's dataset-level bbox is computed
@@ -81,15 +76,10 @@ def stamp_geoparquet(
     files = sorted(
         glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
-    return stamp_geoparquet_files(files, geometry_col, bbox_col, compression)
+    return stamp_geoparquet_files(files, compression)
 
 
-def stamp_geoparquet_files(
-    files: list[str],
-    geometry_col: str = "geometry",
-    bbox_col: str | None = "bbox",
-    compression: str = "zstd",
-) -> int:
+def stamp_geoparquet_files(files: list[str], compression: str = "zstd") -> int:
     """Stamp an explicit file list (the per-tick raw-zone path: only the
     files a micro-batch just appended, never the whole lake)."""
     import pyarrow.compute as pc  # local import: cold path
@@ -98,8 +88,8 @@ def stamp_geoparquet_files(
     for f in files:
         table = pq.read_table(f)
         bbox = None
-        if bbox_col is not None and bbox_col in table.column_names:
-            col = table.column(bbox_col)
+        if BBOX_COL in table.column_names:
+            col = table.column(BBOX_COL)
             bbox = [
                 pc.min(pc.struct_field(col, "xmin")).as_py(),
                 pc.min(pc.struct_field(col, "ymin")).as_py(),
@@ -107,9 +97,7 @@ def stamp_geoparquet_files(
                 pc.max(pc.struct_field(col, "ymax")).as_py(),
             ]
         meta = dict(table.schema.metadata or {})
-        meta[b"geo"] = json.dumps(
-            geo_metadata(geometry_col, bbox_col, bbox)
-        ).encode()
+        meta[b"geo"] = json.dumps(geo_metadata(bbox)).encode()
         table = table.replace_schema_metadata(meta)
         # Write-aside + atomic rename: a crash mid-rewrite must never
         # leave the ONLY copy of a compacted file truncated.

@@ -24,9 +24,9 @@ PARTITION_COLS = ("year", "month", "day")
 RAW_COMPRESSION = "snappy"
 
 
-def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
+def with_partition_cols(df: DataFrame) -> DataFrame:
     """Derive year/month/day partition columns from the (session-tz)
-    event timestamp.
+    event ``timestamp``.
 
     NB the reference derives partition keys from *wall-clock* time at
     write (``datetime.now``, handler.py:158) — event-time vs
@@ -35,7 +35,7 @@ def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     (late data lands in the right partition); the skew-faithful mode is
     a caller passing its own year/month/day columns.
     """
-    ts = F.col(ts_col)
+    ts = F.col("timestamp")
     return (
         df.withColumn("year", F.year(ts))
         .withColumn("month", F.month(ts))

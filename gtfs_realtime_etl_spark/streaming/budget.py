@@ -53,15 +53,12 @@ _BUDGET_STATE = StructType([StructField("used", LongType())])
 def streaming_token_budget(
     docs: DataFrame,
     budget_tokens: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """Apply a per-source token budget to a streaming document frame.
 
-    ``docs`` needs ``source_col``, ``id_col`` and ``tokens_col``
-    columns.  Returns the accepted rows with the source's running total
-    at acceptance time."""
+    ``docs`` needs ``source``, ``doc_id`` and ``n_tokens`` columns.
+    Returns the accepted rows with the source's running total at
+    acceptance time."""
     budget = int(budget_tokens)
 
     def fn(
@@ -95,9 +92,9 @@ def streaming_token_budget(
             )
 
     keyed = docs.select(
-        F.col(source_col).cast("string").alias("source"),
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
+        F.col("source").cast("string").alias("source"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
     ).groupBy("source")
     return keyed.applyInPandasWithState(
         fn,

@@ -111,14 +111,14 @@ def _fold(
     return out, s_pos, s_neg, n_seen
 
 
-def _quantize(
-    df: DataFrame, key_col: str, ts_col: str, id_col: str, value_col: str
-) -> DataFrame:
+def _quantize(df: DataFrame) -> DataFrame:
+    """Key each ``event_type`` row by (``ts``, ``event_id``) with its
+    ``value`` in micro-units."""
     return df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).cast("long").alias("ts"),
-        F.col(id_col).cast("long").alias("row_id"),
-        F.floor(F.col(value_col).cast("double") * 1_000_000 + F.lit(0.5))
+        F.col("event_type").cast("string").alias("key"),
+        F.col("ts").cast("long").alias("ts"),
+        F.col("event_id").cast("long").alias("row_id"),
+        F.floor(F.col("value").cast("double") * 1_000_000 + F.lit(0.5))
         .cast("long")
         .alias("x_micro"),
     )
@@ -129,10 +129,6 @@ def streaming_cusum(
     mu_micro: int,
     slack_micro: int,
     threshold_micro: int,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Per-key streaming CUSUM alarms (module doc)."""
     mu, k, h = int(mu_micro), int(slack_micro), int(threshold_micro)
@@ -150,7 +146,7 @@ def streaming_cusum(
         if out["ts"]:
             yield pd.DataFrame({"key": key_val, **out})
 
-    keyed = _quantize(stream, key_col, ts_col, id_col, value_col).groupBy("key")
+    keyed = _quantize(stream).groupBy("key")
     return keyed.applyInPandasWithState(
         fn,
         outputStructType=CUSUM_OUT_SCHEMA,
@@ -165,10 +161,6 @@ def cusum_scan_batch(
     mu_micro: int,
     slack_micro: int,
     threshold_micro: int,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Batch twin: the identical fold over an at-rest frame."""
     mu, k, h = int(mu_micro), int(slack_micro), int(threshold_micro)
@@ -178,8 +170,4 @@ def cusum_scan_batch(
         out, *_ = _fold(pdf, 0, 0, 0, mu, k, h)
         return pd.DataFrame({"key": key_val, **out})
 
-    return (
-        _quantize(df, key_col, ts_col, id_col, value_col)
-        .groupBy("key")
-        .applyInPandas(fn, schema=CUSUM_OUT_SCHEMA)
-    )
+    return _quantize(df).groupBy("key").applyInPandas(fn, schema=CUSUM_OUT_SCHEMA)

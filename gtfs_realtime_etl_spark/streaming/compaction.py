@@ -29,24 +29,21 @@ COMPRESSION = "zstd"
 
 def dates_in_range(
     duration: int,
-    timezone: str = "America/Toronto",
+    timezone: str,
     period: str = "day",
-    include_current: bool = False,
     now: dt.datetime | None = None,
 ) -> list[dt.date]:
-    """Enumerate the last ``duration`` days/months in the agency tz
-    (reference driver semantics, handler.py:150-167)."""
+    """Enumerate the last ``duration`` closed days/months (the current
+    one excluded) in the agency's ``timezone`` (reference driver
+    semantics, handler.py:150-167)."""
     now = now or dt.datetime.now(ZoneInfo(timezone))
     today = now.date()
     out: list[dt.date] = []
     if period == "day":
-        start = 0 if include_current else 1
-        for i in range(start, duration + start):
+        for i in range(1, duration + 1):
             out.append(today - dt.timedelta(days=i))
     elif period == "month":
-        year, month = today.year, today.month
-        if not include_current:
-            month -= 1
+        year, month = today.year, today.month - 1
         for _ in range(duration):
             if month < 1:
                 month += 12
@@ -107,17 +104,17 @@ def compact_partitions(
     spark: SparkSession,
     source_root: str,
     target_root: str,
+    timezone: str,
     duration: int = 1,
     period: str = "day",
-    timezone: str = "America/Toronto",
-    include_current: bool = False,
     now: dt.datetime | None = None,
 ) -> dict[str, int]:
     """The scheduled job body: compact the last N closed day/month
-    partitions (daily 01:00 / monthly day-1 crons in the reference,
+    partitions, dated in the agency's ``timezone`` (daily 01:00 /
+    monthly day-1 crons in the reference,
     compaction/infrastructure/construct.py:102-140)."""
     written: dict[str, int] = {}
-    for d in dates_in_range(duration, timezone, period, include_current, now):
+    for d in dates_in_range(duration, timezone, period, now):
         day = d.day if period == "day" else None
         try:
             n = compact_partition(spark, source_root, target_root, d.year, d.month, day)

@@ -73,11 +73,6 @@ def make_dedup_fold_sink(
     index_root: str,
     cand_root: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 5,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ):
     """foreachBatch function: probe the batch against the standing
@@ -89,14 +84,7 @@ def make_dedup_fold_sink(
         # Pin the batch rows (streaming-tagged plans can't re-execute);
         # micro-batch-sized by construction.
         batch = batch_df.localCheckpoint(eager=True)
-        new_rows = lsh_band_rows(
-            batch,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-        )
+        new_rows = lsh_band_rows(batch)
 
         index_path = spark._jvm.org.apache.hadoop.fs.Path(index_root)
         index_exists = index_path.getFileSystem(
@@ -135,20 +123,18 @@ def start_dedup_fold_stream(
     cand_root: str,
     checkpoint_dir: str,
     available_now: bool = False,
-    trigger_seconds: int = 30,
-    **fold_kwargs,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> StreamingQuery:
-    """Attach the fold sink to a streaming document source."""
+    """Attach the fold sink to a streaming document source (a 30 s
+    processing-time trigger unless ``available_now``)."""
     writer = (
         docs_stream.writeStream.outputMode("append")
         .option("checkpointLocation", f"{checkpoint_dir}/engine")
         .foreachBatch(
-            make_dedup_fold_sink(
-                index_root, cand_root, checkpoint_dir, **fold_kwargs
-            )
+            make_dedup_fold_sink(index_root, cand_root, checkpoint_dir, max_bucket)
         )
     )
-    return start_with_trigger(writer, trigger_seconds, available_now)
+    return start_with_trigger(writer, 30, available_now)
 
 
 def finalize_fold(
@@ -157,12 +143,11 @@ def finalize_fold(
     index_root: str,
     cand_root: str,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    shingle_k: int = 5,
-    threshold: float = 0.35,
 ) -> DataFrame:
     """The merge step: accumulated candidates re-filtered against FINAL
     bucket sizes, then exact shingle-Jaccard verification — the same
-    terminal as ``plans/analytics23.py::dedup_incremental_pairs``, so
+    terminal (5-shingles, Jaccard >= 0.35) as
+    ``plans/analytics23.py::dedup_incremental_pairs``, so
     the result is row-identical to the one-shot under any bucket cap
     and any micro-batch slicing."""
     kept = finalize_dedup_candidates(
@@ -170,9 +155,7 @@ def finalize_fold(
         spark.read.parquet(index_root).select(*_INDEX_COLS),
         max_bucket,
     )
-    verified = jaccard_pairs(
-        documents, kept, shingle_k=shingle_k, threshold=threshold
-    )
+    verified = jaccard_pairs(documents, kept, threshold=0.35)
     return verified.select(
         "id_a",
         "id_b",

@@ -41,10 +41,12 @@ from pyspark.sql import functions as F
 
 _DEC = "decimal(30,12)"
 
+#: The monitored metric column.
+VALUE_COL = "value"
+
 
 def baseline_stats(
     reference: DataFrame,
-    value_col: str = "value",
     group_col: str | None = None,
 ) -> DataFrame:
     """Frozen per-group (μ, σ) from a reference corpus — decimal-exact
@@ -52,9 +54,9 @@ def baseline_stats(
     (group?, mu, sigma)."""
     keys = [group_col] if group_col else []
     agg = reference.groupBy(*keys).agg(
-        F.count(value_col).alias("n"),
-        F.sum(F.col(value_col).cast(_DEC)).alias("s"),
-        F.sum((F.col(value_col) * F.col(value_col)).cast(_DEC)).alias("s2"),
+        F.count(VALUE_COL).alias("n"),
+        F.sum(F.col(VALUE_COL).cast(_DEC)).alias("s"),
+        F.sum((F.col(VALUE_COL) * F.col(VALUE_COL)).cast(_DEC)).alias("s2"),
     )
     nd = F.col("n").cast("double")
     mu = F.col("s").cast("double") / nd
@@ -68,23 +70,21 @@ def baseline_stats(
 def feature_drift(
     events: DataFrame,
     baseline: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
     group_col: str | None = None,
     window: str = "5 minutes",
     watermark: str = "10 minutes",
-    z_threshold: float = 4.0,
 ) -> DataFrame:
-    """Windowed drift scores vs the frozen baseline.  Streaming inputs
-    get the watermark; batch inputs run the identical aggregation (the
-    backfill twin).  Output: (window, group?, n, mean, z, drifted)."""
+    """Windowed drift scores of ``events`` (event time ``ts``) vs the
+    frozen baseline.  Streaming inputs get the watermark; batch inputs
+    run the identical aggregation (the backfill twin).  Output:
+    (window, group?, n, mean, z, drifted), drifted when |z| > 4."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+        src = events.withWatermark("ts", watermark)
     keys = [group_col] if group_col else []
-    agg = src.groupBy(F.window(ts_col, window).alias("window"), *keys).agg(
-        F.count(value_col).alias("n"),
-        F.avg(value_col).alias("mean"),
+    agg = src.groupBy(F.window("ts", window).alias("window"), *keys).agg(
+        F.count(VALUE_COL).alias("n"),
+        F.avg(VALUE_COL).alias("mean"),
     )
     joined = (
         agg.join(F.broadcast(baseline), keys) if keys
@@ -99,5 +99,5 @@ def feature_drift(
         "n",
         "mean",
         z.alias("z"),
-        (F.abs(z) > F.lit(float(z_threshold))).alias("drifted"),
+        (F.abs(z) > F.lit(4.0)).alias("drifted"),
     )

@@ -26,9 +26,8 @@ def enrich_stream(
     static: DataFrame,
     on: list[str] | str,
     how: str = "left",
-    broadcast_static: bool = True,
 ) -> DataFrame:
-    """Join a streaming DataFrame against a static dimension.
+    """Join a streaming DataFrame against a broadcast static dimension.
 
     ``how`` is restricted to the stream-static-legal joins where the
     stream side is preserved (inner / left / left_semi / left_anti) —
@@ -36,5 +35,4 @@ def enrich_stream(
     legal = {"inner", "left", "left_outer", "left_semi", "left_anti"}
     if how not in legal:
         raise ValueError(f"stream-static join type must be one of {sorted(legal)}")
-    dim = F.broadcast(static) if broadcast_static else static
-    return stream.join(dim, on, how)
+    return stream.join(F.broadcast(static), on, how)

@@ -73,14 +73,12 @@ _HH_STATE = StructType(
 
 def streaming_heavy_hitters(
     tokens: DataFrame,
-    group_col: str = "source",
-    token_col: str = "token",
     capacity: int = DEFAULT_CAPACITY,
     emit_k: int = 10,
 ) -> DataFrame:
     """Per-group streaming Misra-Gries top-``emit_k`` snapshots.
 
-    ``tokens`` needs ``group_col`` and ``token_col``.  Every micro-batch
+    ``tokens`` needs ``source`` and ``token`` columns.  Every micro-batch
     emits each updated group's current top estimates with the
     theorem-backed upper bound ``est_upper = est + dec_total``."""
     cap = int(capacity)
@@ -121,8 +119,8 @@ def streaming_heavy_hitters(
         )
 
     keyed = tokens.select(
-        F.col(group_col).cast("string").alias("group"),
-        F.col(token_col).cast("string").alias("token"),
+        F.col("source").cast("string").alias("group"),
+        F.col("token").cast("string").alias("token"),
     ).groupBy("group")
     return keyed.applyInPandasWithState(
         fn,

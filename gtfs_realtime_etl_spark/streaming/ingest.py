@@ -16,15 +16,16 @@ parquet append) onto the native Spark construct:
   the reference's at-most-once (retries disabled, DLQ on failure) — and
   the batch-id commit log of :func:`once_per_batch` upgrades
   the lake append to effectively-once under batch retry.
-- Beyond-reference hardening (flagged in SURVEY §2.7 T5): optional
-  event-time watermark + dropDuplicates on (vehicle_id, timestamp).
+- Beyond-reference hardening (flagged in SURVEY §2.7 T5): every path
+  drops repeated (vehicle_id, timestamp) reports, behind an event-time
+  watermark when streaming.
 
 One pipeline, fed by three frame sources (each yields ``payload
 binary``, one FeedMessage per row):
 
 - :func:`kafka_feed_frames` — the production path (BASELINE approach:
   "Structured Streaming + Kafka/Kinesis source"): one feed payload per
-  Kafka record value.
+  Kafka record value, from the latest offsets.
 - :func:`start_feed_http_stream` — the reference's poll loop as the
   native ``gtfs_rt`` source (sources/gtfs_rt_source.py): one HTTP GET
   per micro-batch, spooled for replay.
@@ -57,26 +58,23 @@ from gtfs_realtime_etl_spark.sources.lake import write_locations_batch
 DEDUP_WATERMARK = "10 minutes"
 
 
-def feed_pipeline(frames: DataFrame, dedup: bool = True) -> DataFrame:
-    """payload frames → enriched position rows (works batch or stream)."""
+def feed_pipeline(frames: DataFrame) -> DataFrame:
+    """payload frames → enriched position rows, one per (vehicle_id,
+    timestamp) (works batch or stream)."""
     positions = decode_feed_frames(frames)
     enriched = enrich_positions(positions)
-    if dedup:
-        if enriched.isStreaming:
-            enriched = enriched.withWatermark("timestamp", DEDUP_WATERMARK)
-        enriched = enriched.dropDuplicates(["vehicle_id", "timestamp"])
-    return enriched
+    if enriched.isStreaming:
+        enriched = enriched.withWatermark("timestamp", DEDUP_WATERMARK)
+    return enriched.dropDuplicates(["vehicle_id", "timestamp"])
 
 
 def kafka_feed_frames(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
+    spark: SparkSession, bootstrap_servers: str, topic: str
 ) -> DataFrame:
-    """Feed frames from a Kafka topic — one protobuf FeedMessage per
-    record value (the production source; replaces the reference's
-    EventBridge/SFN poll loop, construct.py:26-110,188-221).
+    """Feed frames from a Kafka topic, starting at its latest offsets —
+    one protobuf FeedMessage per record value (the production source;
+    replaces the reference's EventBridge/SFN poll loop,
+    construct.py:26-110,188-221).
 
     Requires the Kafka connector on the classpath
     (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark
@@ -87,7 +85,7 @@ def kafka_feed_frames(
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "latest")
         .load()
         .select(F.col("value").alias("payload"))
     )
@@ -186,7 +184,6 @@ def start_feed_file_stream(
     lake_root: str,
     checkpoint_dir: str,
     trigger_seconds: int = 30,
-    dedup: bool = True,
     available_now: bool = False,
     geoparquet: bool = False,
 ) -> StreamingQuery:
@@ -199,7 +196,7 @@ def start_feed_file_stream(
     on the same directory to capture them (DLQ analog).
     """
     frames = _feed_files(spark, feed_dir).select(F.col("content").alias("payload"))
-    enriched = feed_pipeline(frames, dedup=dedup)
+    enriched = feed_pipeline(frames)
     return _start_lake_sink(
         enriched, lake_root, checkpoint_dir, trigger_seconds, available_now,
         geoparquet=geoparquet,
@@ -257,16 +254,12 @@ def start_feed_kafka_stream(
     topic: str,
     lake_root: str,
     checkpoint_dir: str,
-    trigger_seconds: int = 30,
-    dedup: bool = True,
-    starting_offsets: str = "latest",
 ) -> StreamingQuery:
     """Kafka topic → decode → enrich → partitioned lake (the BASELINE
-    production shape)."""
-    frames = kafka_feed_frames(spark, bootstrap_servers, topic, starting_offsets)
-    enriched = feed_pipeline(frames, dedup=dedup)
+    production shape), a micro-batch every 30 s."""
+    frames = kafka_feed_frames(spark, bootstrap_servers, topic)
     return _start_lake_sink(
-        enriched, lake_root, checkpoint_dir, trigger_seconds, available_now=False
+        feed_pipeline(frames), lake_root, checkpoint_dir, 30, available_now=False
     )
 
 
@@ -277,8 +270,6 @@ def start_feed_http_stream(
     lake_root: str,
     checkpoint_dir: str,
     trigger_seconds: int = 30,
-    dedup: bool = True,
-    geoparquet: bool = False,
     max_ticks: int | None = None,
     headers: dict[str, str] | None = None,
 ) -> StreamingQuery:
@@ -305,8 +296,7 @@ def start_feed_http_stream(
 
         reader = reader.option("headers", _json.dumps(headers))
     frames = reader.load().select("payload")
-    enriched = feed_pipeline(frames, dedup=dedup)
     return _start_lake_sink(
-        enriched, lake_root, checkpoint_dir, trigger_seconds,
-        available_now=False, geoparquet=geoparquet,
+        feed_pipeline(frames), lake_root, checkpoint_dir, trigger_seconds,
+        available_now=False,
     )

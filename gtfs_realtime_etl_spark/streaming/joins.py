@@ -24,18 +24,15 @@ def interval_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    lower_seconds: int = 0,
-    upper_seconds: int = 3600,
-    watermark: str = "1 hour",
-    how: str = "inner",
 ) -> DataFrame:
-    """Rows of ``left`` joined to ``right`` rows with the same ``on`` key
-    whose event time lies in ``[left_ts + lower, left_ts + upper]``
-    seconds.  Timestamp columns must be TimestampType.
+    """Rows of ``left`` inner-joined to ``right`` rows with the same
+    ``on`` key whose event time lies in ``[left_ts, left_ts + 1 hour]``.
+    Timestamp columns must be TimestampType.
 
-    Streaming inputs get watermarks on both sides (required by Spark for
-    state eviction in stream-stream joins); batch inputs run the same
-    condition directly.  Column names are suffixed ``_l`` / ``_r``.
+    Streaming inputs get 1-hour watermarks on both sides (required by
+    Spark for state eviction in stream-stream joins); batch inputs run
+    the same condition directly.  Column names are suffixed ``_l`` /
+    ``_r``.
     """
     l = left.select(
         F.col(on).alias("_k"), *[F.col(c).alias(f"{c}_l") for c in left.columns if c != on]
@@ -45,15 +42,15 @@ def interval_join(
     )
     lt, rt = f"{left_ts}_l", f"{right_ts}_r"
     if left.isStreaming:
-        l = l.withWatermark(lt, watermark)
+        l = l.withWatermark(lt, "1 hour")
     if right.isStreaming:
-        r = r.withWatermark(rt, watermark)
+        r = r.withWatermark(rt, "1 hour")
     cond = (
         (l["_k"] == r["_kr"])
-        & (r[rt] >= l[lt] + F.expr(f"INTERVAL {lower_seconds} SECONDS"))
-        & (r[rt] <= l[lt] + F.expr(f"INTERVAL {upper_seconds} SECONDS"))
+        & (r[rt] >= l[lt])
+        & (r[rt] <= l[lt] + F.expr("INTERVAL 1 HOUR"))
     )
-    return l.join(r, cond, how).select(
+    return l.join(r, cond, "inner").select(
         F.col("_k").alias(on),
         *[c for c in l.columns if c not in ("_k",)],
         *[c for c in r.columns if c not in ("_kr",)],

@@ -72,19 +72,17 @@ def _close(key: str, start: int, last: int, n: int) -> pd.DataFrame:
 
 def streaming_sessionize(
     events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts_sec",
     gap_seconds: int = 1800,
-    watermark: str = "30 minutes",
     idle_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Gap-based session windows over a stream; emits closed sessions.
+    """Gap-based session windows per ``user_id`` over a stream; emits
+    closed sessions.
 
     ``events`` must be a streaming DataFrame with an event-time
-    timestamp column ``event_time`` (used for the watermark) and an
-    epoch-seconds ``ts_col``.  Sessions close when an event for the key
-    arrives more than ``gap_seconds`` later, or when the processing-time
-    timeout fires for an idle key (idle > gap).  ``idle_timeout_ms``
+    timestamp column ``event_time`` (used for a 30-minute watermark)
+    and an epoch-seconds ``ts_sec``.  Sessions close when an event for
+    the key arrives more than ``gap_seconds`` later, or when the
+    processing-time timeout fires for an idle key (idle > gap).  ``idle_timeout_ms``
     overrides the timeout (default ``gap_seconds * 1000``); tests pin it
     high so slow micro-batches can't close open sessions early.
     """
@@ -100,7 +98,7 @@ def streaming_sessionize(
             yield _close(k, start, last, n)
             return
 
-        ts = sorted(int(t) for pdf in pdfs for t in pdf[ts_col])
+        ts = sorted(int(t) for pdf in pdfs for t in pdf["ts_sec"])
         if state.exists:
             start, last, n = state.get
         else:
@@ -119,8 +117,8 @@ def streaming_sessionize(
             yield pd.concat(out, ignore_index=True)
 
     keyed = (
-        events.withColumn("key", F.col(key_col).cast("string"))
-        .withWatermark("event_time", watermark)
+        events.withColumn("key", F.col("user_id").cast("string"))
+        .withWatermark("event_time", "30 minutes")
         .groupBy("key")
     )
     return keyed.applyInPandasWithState(
@@ -150,14 +148,11 @@ _VEHICLE_STATE = StructType(
 )
 
 
-def streaming_vehicle_state(
-    positions: DataFrame,
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def streaming_vehicle_state(positions: DataFrame) -> DataFrame:
     """Latest-state-per-vehicle across micro-batches (streaming W1).
 
     Input needs ``vehicle_id``, ``trip_id``, ``ts_sec`` (epoch s) and an
-    ``event_time`` timestamp for the watermark.  Emits one row per
+    ``event_time`` timestamp for a 10-minute watermark.  Emits one row per
     vehicle per micro-batch in which its state advanced, carrying the
     lifetime update count — the operator state a fleet monitor needs,
     kept at O(fleet size).
@@ -191,7 +186,7 @@ def streaming_vehicle_state(
 
     keyed = (
         positions.withColumn("vehicle_id", F.col("vehicle_id").cast("string"))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "10 minutes")
         .groupBy("vehicle_id")
     )
     return keyed.applyInPandasWithState(

@@ -40,6 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gtfs_realtime_etl_spark.operators.cdc import merge_upsert
 
+#: Committed versions the sink retains; older ones are collected.
+KEEP_VERSIONS = 2
+
 
 def _jpath(spark: SparkSession, path: str):
     jvm = spark._jvm
@@ -76,7 +79,6 @@ def make_upsert_view_sink(
     keys: Sequence[str],
     version_col: str,
     delete_col: str | None = None,
-    keep_versions: int = 2,
 ):
     """foreachBatch function maintaining a keyed snapshot under
     ``root`` from CDC micro-batches.  Idempotent under batch retry;
@@ -112,7 +114,7 @@ def make_upsert_view_sink(
         # GC: drop versions older than the retention window, data first,
         # marker last — a crash mid-GC still leaves the newest commits
         # naming complete snapshots.
-        stale = _committed_ids(spark, root)[:-keep_versions]
+        stale = _committed_ids(spark, root)[:-KEEP_VERSIONS]
         for old in stale:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v_{old}"), True)
             fs.delete(

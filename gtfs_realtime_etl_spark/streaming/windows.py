@@ -2,7 +2,7 @@
 
 The reference has no event-time windowing (each poll tick is an
 independent batch); this is the standard Structured Streaming operator
-a production feed pipeline layers on top: tumbling/sliding event-time
+a production feed pipeline layers on top: tumbling event-time
 windows with a watermark bounding both state size and late-data
 acceptance.  One function serves both modes — in batch it is the
 backfill twin (identical grouping, no watermark), so results are
@@ -17,42 +17,37 @@ partitioned-lake sink.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: The grouping key and the event-time column of a feed's positions.
+KEY_COL = "route_id"
+TS_COL = "timestamp"
 
 
 def windowed_counts(
     events: DataFrame,
-    key_col: str = "route_id",
-    ts_col: str = "timestamp",
-    window: str = "5 minutes",
-    slide: str | None = None,
     watermark: str = "10 minutes",
     agg_col: str | None = None,
 ) -> DataFrame:
-    """Per-(event-time window, key) counts, optionally with a mean over
-    ``agg_col``.  Tumbling windows by default; pass ``slide`` for
-    sliding windows.  Streaming inputs get the watermark (late rows
-    beyond it are dropped and state is evicted); batch inputs run the
-    identical aggregation over everything — the backfill twin."""
+    """Per-(5-minute tumbling event-time window, key) counts, optionally
+    with a mean over ``agg_col``.  Streaming inputs get the watermark
+    (late rows beyond it are dropped and state is evicted); batch inputs
+    run the identical aggregation over everything — the backfill twin."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    win: Column = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
+        src = events.withWatermark(TS_COL, watermark)
+    win = F.window(F.col(TS_COL), "5 minutes")
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if agg_col is not None:
         aggs.append(F.avg(agg_col).alias(f"avg_{agg_col}"))
     return (
-        src.groupBy(win.alias("win"), F.col(key_col))
+        src.groupBy(win.alias("win"), F.col(KEY_COL))
         .agg(*aggs)
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key_col,
+            KEY_COL,
             "n_events",
             *([f"avg_{agg_col}"] if agg_col is not None else []),
         )
@@ -61,8 +56,6 @@ def windowed_counts(
 
 def session_windowed_counts(
     events: DataFrame,
-    key_col: str = "route_id",
-    ts_col: str = "timestamp",
     gap: str = "5 minutes",
     watermark: str = "10 minutes",
 ) -> DataFrame:
@@ -79,16 +72,16 @@ def session_windowed_counts(
     the identical grouping — the backfill twin."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+        src = events.withWatermark(TS_COL, watermark)
     return (
         src.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("win"), F.col(key_col)
+            F.session_window(F.col(TS_COL), gap).alias("win"), F.col(KEY_COL)
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("session_start"),
             F.col("win.end").alias("session_end"),
-            key_col,
+            KEY_COL,
             "n_events",
         )
     )

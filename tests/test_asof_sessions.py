@@ -39,7 +39,7 @@ def _by_qty(df):
     return {r["qty"]: r for r in df.collect()}
 
 def test_asof_backward(quotes, trades):
-    out = asof_join(trades, quotes, on="sym", left_ts="ts", right_ts="ts")
+    out = asof_join(trades, quotes, on="sym")
     assert set(out.columns) == {"sym", "ts", "qty", "ts_right", "px"}
     m = _by_qty(out)
     assert len(m) == 6  # every left row survives
@@ -52,9 +52,7 @@ def test_asof_backward(quotes, trades):
 
 
 def test_asof_forward(quotes, trades):
-    out = asof_join(
-        trades, quotes, on="sym", left_ts="ts", right_ts="ts", direction="forward"
-    )
+    out = asof_join(trades, quotes, on="sym", direction="forward")
     m = _by_qty(out)
     assert m[100]["ts_right"] == 10  # earliest quote at/after ts=5
     assert m[101]["ts_right"] == 20  # inclusive
@@ -64,9 +62,7 @@ def test_asof_forward(quotes, trades):
 
 
 def test_asof_tolerance(quotes, trades):
-    out = asof_join(
-        trades, quotes, on="sym", left_ts="ts", right_ts="ts", tolerance=10
-    )
+    out = asof_join(trades, quotes, on="sym", tolerance=10)
     m = _by_qty(out)
     assert m[102]["ts_right"] == 20  # gap 5 <= 10
     assert m[103]["ts_right"] is None  # gap 59 > 10 → nulled, row kept
@@ -79,13 +75,13 @@ def test_sessionize_gaps(spark):
         (2, 50),  # user 2: one singleton session
     ]
     ev = spark.createDataFrame(rows, "user_id int, ts long")
-    s = sessionize(ev, key_col="user_id", ts_col="ts", gap=1000)
+    s = sessionize(ev, gap=1000)
     got = {(r["user_id"], r["ts"]): r["session_id"] for r in s.collect()}
     assert got[(1, 0)] == 1 and got[(1, 100)] == 1
     assert got[(1, 5000)] == 2 and got[(1, 5100)] == 2
     assert got[(2, 50)] == 1
 
-    stats = session_stats(ev, key_col="user_id", ts_col="ts", gap=1000)
+    stats = session_stats(ev, gap=1000)
     rows = {(r["user_id"], r["session_id"]): r for r in stats.collect()}
     assert rows[(1, 1)]["n_events"] == 2
     assert rows[(1, 1)]["duration"] == 100

@@ -74,7 +74,7 @@ def test_index_scan_reads_no_text(spark, tmp_path):
     history without the text column existing anywhere in its index."""
     index_root = str(tmp_path / "index")
     sink = make_dedup_fold_sink(
-        index_root, str(tmp_path / "cands"), str(tmp_path / "ckpt"), **KW
+        index_root, str(tmp_path / "cands"), str(tmp_path / "ckpt")
     )
     sink(_docs(spark).where(F.col("doc_id") < 100), 0)
     stored = spark.read.parquet(index_root)

@@ -176,7 +176,7 @@ def test_brute_force_topk_is_same_cluster(vectors):
     """With every cell probed, ``ivf_topk`` scans the whole corpus, so
     its top-k is the exact one: the numpy reference's ids in order, all
     from the query's own cluster, cosine non-increasing."""
-    cents = centroids_from_labels(vectors, label_col="label", dim=64)
+    cents = centroids_from_labels(vectors, dim=64)
     top = ivf_topk(
         vectors.filter("vec_id != 0"), _query0(vectors), cents, k=10, nprobe=3
     ).toPandas()
@@ -189,7 +189,7 @@ def test_ivf_assignment_and_recall(vectors):
     """Cluster-generated vectors must assign back to their own cluster's
     centroid, and probing nprobe=1 cell must recover the exact top-k
     (the query's neighbors all live in its cell)."""
-    cents = centroids_from_labels(vectors, label_col="label", dim=64)
+    cents = centroids_from_labels(vectors, dim=64)
     assert cents.count() == 3
     assigned = _assign_cells_rows(
         vectors, _centroid_rows(cents), "embedding"

@@ -13,7 +13,8 @@ from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 from gtfs_realtime_etl_spark.streaming.dedup_fold import make_dedup_fold_sink
 from tests.conftest import SF_SMOKE
 
-KW = dict(num_hashes=32, bands=8, shingle_k=5, max_bucket=100_000)
+#: The fold sink bands each signature into 8 index rows.
+BANDS = 8
 SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("text", StringType())]
 )
@@ -33,7 +34,7 @@ def _sink(tmp_path):
         index_root=str(tmp_path / "index"),
         cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        **KW,
+        max_bucket=100_000,
     )
 
 
@@ -46,7 +47,7 @@ def test_dedup_sink_retry_is_noop(spark, tmp_path):
     sink(batch, 0)
     cands_1 = spark.read.parquet(str(tmp_path / "cands")).count()
     index_1 = spark.read.parquet(str(tmp_path / "index")).count()
-    assert index_1 == len(rows) * KW["bands"]
+    assert index_1 == len(rows) * BANDS
     sink(batch, 0)  # retry
     assert spark.read.parquet(str(tmp_path / "cands")).count() == cands_1
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_1

@@ -5,6 +5,10 @@ lake, asserted against the BATCH pipeline run on the identical raw
 positions (reference: poller handler.py E1 ingest → analysis notebooks
 E3; here both legs share one engine so the comparison is exact).
 
+Every tenth position is fed twice, as a poller re-fetching an
+unchanged feed would; both legs drop repeated (vehicle_id, timestamp)
+reports, the streaming leg through the ingest pipeline's own dedup.
+
 Coordinates are quantized to float32 up front: the GTFS-RT wire format
 carries lat/lon as 32-bit floats (gtfs_rt.py encode_feed), so without
 the quantization the streaming leg would see nudged positions and the
@@ -41,11 +45,15 @@ def legs(spark, tmp_path_factory):
     raw = fx.raw_positions.copy()
     for c in ("latitude", "longitude", "bearing", "speed"):
         raw[c] = raw[c].astype(np.float32).astype(float)
+    raw = pd.concat([raw, raw.iloc[::10]], ignore_index=True)
 
-    # Batch leg: enrich -> lake (the cell-8 batch path).
+    # Batch leg: enrich -> dedup -> lake (the cell-8 batch path).
     batch_lake = str(base / "batch_lake")
     raw_df = spark.createDataFrame(raw, schema=VEHICLE_POSITIONS_RAW)
-    write_locations_batch(enrich_positions(raw_df), batch_lake)
+    enriched = enrich_positions(raw_df)
+    deduped = enriched.dropDuplicates(["vehicle_id", "timestamp"])
+    dedup_dropped = enriched.count() - deduped.count()
+    write_locations_batch(deduped, batch_lake)
 
     # Streaming leg: the same rows as protobuf FeedMessage files (the
     # shape the reference's poller writes), drained availableNow
@@ -66,15 +74,13 @@ def legs(spark, tmp_path_factory):
         stream_lake,
         str(base / "ckpt"),
         available_now=True,
-        # The batch leg lands every row; dedup would drop same
-        # (vehicle_id, timestamp) repeats only on the streaming side.
-        dedup=False,
     )
     q.awaitTermination(300)
     return {
         "fx": fx,
         "batch_lake": batch_lake,
         "stream_lake": stream_lake,
+        "dedup_dropped": dedup_dropped,
     }
 
 
@@ -92,7 +98,9 @@ def _flagship_frame(spark, lake_root: str, gtfs_dir: str):
 
 def test_lakes_hold_identical_rows(spark, legs):
     """E1 parity first: the streaming-landed lake is row-identical to
-    the batch-landed lake (same keys, same coordinates, same layout)."""
+    the batch-landed lake (same keys, same coordinates, same layout),
+    with the fed repeats dropped on both sides."""
+    assert legs["dedup_dropped"] > 0, "the fixture holds no repeats to drop"
     cols = ["trip_id", "vehicle_id", "timestamp", "longitude", "latitude"]
 
     def key_rows(root):

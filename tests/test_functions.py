@@ -37,7 +37,7 @@ def test_geohash_known_values(spark):
     got = [
         r.gh
         for r in df.select(
-            geohash_encode(F.col("lat"), F.col("lon"), 7).alias("gh")
+            geohash_encode(F.col("lat"), F.col("lon")).alias("gh")
         ).collect()
     ]
     assert got == [gh for _, _, gh in GEOHASH_CASES]

@@ -43,8 +43,7 @@ def _clicks_purchases(spark):
 def test_interval_join_batch_semantics(spark):
     clicks, purchases = _clicks_purchases(spark)
     out = interval_join(
-        clicks, purchases, on="user_id", left_ts="ts", right_ts="ts",
-        lower_seconds=0, upper_seconds=3600,
+        clicks, purchases, on="user_id", left_ts="ts", right_ts="ts"
     ).toPandas()
     pairs = sorted(zip(out["tag_l"], out["tag_r"]))
     assert pairs == [("c1", "p1"), ("c3", "p2")]
@@ -58,10 +57,7 @@ def test_interval_join_stream_stream_matches_batch(spark, tmp_path):
     schema = "user_id string, ts timestamp, tag string"
     cs = spark.readStream.schema(schema).json(cdir)
     ps = spark.readStream.schema(schema).json(pdir)
-    out = interval_join(
-        cs, ps, on="user_id", left_ts="ts", right_ts="ts",
-        lower_seconds=0, upper_seconds=3600,
-    )
+    out = interval_join(cs, ps, on="user_id", left_ts="ts", right_ts="ts")
     q = (
         out.writeStream.outputMode("append")
         .format("memory")

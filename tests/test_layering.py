@@ -11,7 +11,12 @@
   defining module, and callers import it from there.
 - No def in plans/, functions/ or operators/ imports a package module:
   the registry's source hash follows module globals, so a
-  function-local import hides its callee from that hash."""
+  function-local import hides its callee from that hash.
+- No def anywhere in the package re-imports a name its module already
+  imports at module level.
+- Every defaulted parameter of a public def in functions/, operators/,
+  sources/, streaming/ and plans/ is set to another value by some call
+  in the repository: a default no caller overrides is a constant."""
 
 from __future__ import annotations
 
@@ -152,3 +157,118 @@ def test_no_function_local_package_imports():
                         if name.startswith((PKG, "."))
                     )
     assert not offenders, sorted(offenders)
+
+
+def _import_names(node: ast.Import | ast.ImportFrom):
+    """The names an import statement binds in its scope."""
+    for alias in node.names:
+        if alias.name != "*":
+            yield alias.asname or alias.name.split(".")[0]
+
+
+def test_no_function_local_reimports():
+    """A def does not re-import a name its module already imports at
+    module level: the local import only shadows the same binding."""
+    offenders = set()
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        fns = [
+            node
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        local = {
+            node
+            for fn in fns
+            for node in ast.walk(fn)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+        }
+        module_level = {
+            name
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom)) and node not in local
+            for name in _import_names(node)
+        }
+        offenders.update(
+            f"{path.relative_to(PKG_DIR)}:{node.lineno} re-imports {name}"
+            for node in local
+            for name in _import_names(node)
+            if name in module_level
+        )
+    assert not offenders, sorted(offenders)
+
+
+DEFAULTED_LAYERS = ("functions", "operators", "sources", "streaming", "plans")
+
+
+def _public_defs(tree: ast.Module):
+    """(def, is_method) for every public top-level def and every public
+    method of a public top-level class."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not node.name.startswith("_"):
+                yield node, False
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for sub in node.body:
+                if isinstance(
+                    sub, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ) and not sub.name.startswith("_"):
+                    yield sub, True
+
+
+def _defaulted_params(fn, is_method: bool):
+    """(position at a call site or None if keyword-only, name, default
+    source text) for each defaulted parameter of ``fn``."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    first = len(positional) - len(args.defaults)
+    shift = 1 if is_method else 0  # ``self`` is not passed at the call
+    for i, (arg, default) in enumerate(
+        zip(positional[first:], args.defaults), start=first
+    ):
+        yield i - shift, arg.arg, ast.unparse(default)
+    for arg, default in zip(args.kwonlyargs, args.kw_defaults):
+        if default is not None:
+            yield None, arg.arg, ast.unparse(default)
+
+
+def _sets(call: ast.Call, position: int | None, name: str, default: str) -> bool:
+    """Whether ``call`` passes parameter ``name`` (at ``position``) a
+    value whose source text differs from ``default``."""
+    for kw in call.keywords:
+        if kw.arg == name and ast.unparse(kw.value) != default:
+            return True
+    if position is None or position >= len(call.args):
+        return False
+    if any(isinstance(a, ast.Starred) for a in call.args[: position + 1]):
+        return False
+    return ast.unparse(call.args[position]) != default
+
+
+def test_defaults_are_set_by_some_caller():
+    """One value, one constant: each defaulted parameter of a public def
+    in the engine's layers is set to another value by at least one call
+    somewhere in the repository (engine, tests, scripts, benchmark).
+    Calls match defs by name, like the caller guard above.  A default
+    that no call overrides is a module constant or an inlined literal;
+    a branch only a non-default value reaches is dead code."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in sorted(REPO_DIR.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                func = node.func
+                if isinstance(func, ast.Name):
+                    calls.setdefault(func.id, []).append(node)
+                elif isinstance(func, ast.Attribute):
+                    calls.setdefault(func.attr, []).append(node)
+    offenders = [
+        f"{path.relative_to(PKG_DIR)}::{fn.name}({name}={default})"
+        for layer in DEFAULTED_LAYERS
+        for path in sorted((PKG_DIR / layer).rglob("*.py"))
+        for fn, is_method in _public_defs(ast.parse(path.read_text()))
+        for position, name, default in _defaulted_params(fn, is_method)
+        if not any(
+            _sets(call, position, name, default) for call in calls.get(fn.name, [])
+        )
+    ]
+    assert not offenders, offenders

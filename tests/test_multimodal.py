@@ -21,7 +21,7 @@ def _media(spark, n=20, modality="image"):
 
 def test_extract_features_histogram_sums_to_one(spark):
     media = _media(spark)
-    feats = extract_features(media, dim=16).toPandas()
+    feats = extract_features(media).toPandas()
     assert len(feats) == 20
     for _, row in feats.iterrows():
         assert len(row["feature"]) == 16

@@ -36,7 +36,7 @@ def _exact(spark, parts):
 @pytest.mark.parametrize("parts", [1, 3, 8])
 def test_mg_bounds_hold_under_any_layout(spark, parts):
     toks = _token_df(spark, parts)
-    grouped = mg_summary(toks, "token", CAP).collect()
+    grouped = mg_summary(toks, CAP).collect()
     est = {r["token"]: r["est"] for r in grouped if r["token"] is not None}
     # The single NULL-token row carries the global decrement mass D.
     (d,) = [r["d"] for r in grouped if r["token"] is None]

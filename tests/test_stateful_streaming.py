@@ -64,7 +64,7 @@ def test_streaming_sessionize_matches_batch(spark, event_stream_dir):
     batch = spark.createDataFrame(
         pd.DataFrame(EVENTS, columns=["user_id", "ts_sec"])
     )
-    s = sessionize(batch, key_col="user_id", ts_col="ts_sec", gap=GAP)
+    s = sessionize(batch, ts_col="ts_sec", gap=GAP)
     agg = (
         s.groupBy("user_id", "session_id")
         .agg(

@@ -61,9 +61,7 @@ def test_streaming_mg_bounds_any_batching(spark, tmp_path, n_slices):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = streaming_heavy_hitters(
-        stream, "source", "token", capacity=CAP, emit_k=EMIT_K
-    )
+    out = streaming_heavy_hitters(stream, capacity=CAP, emit_k=EMIT_K)
     name = f"hh_{n_slices}"
     q = (
         out.writeStream.format("memory")
@@ -110,7 +108,7 @@ def test_state_is_capacity_bounded(spark, tmp_path):
         .parquet(src)
     )
     out = streaming_heavy_hitters(
-        stream, "source", "token", capacity=CAP, emit_k=1000
+        stream, capacity=CAP, emit_k=1000
     )
     q = (
         out.writeStream.format("memory")

@@ -109,9 +109,7 @@ def test_upsert_view_gc_keeps_recent_versions(spark, tmp_path):
     import os
 
     root = str(tmp_path / "view")
-    sink = make_upsert_view_sink(
-        root, keys=["k"], version_col="version", keep_versions=2
-    )
+    sink = make_upsert_view_sink(root, keys=["k"], version_col="version")
     for i in range(4):
         sink(_df(spark, [(1, f"v{i}", i, False)]).drop("deleted"), i)
     dirs = {d for d in os.listdir(root) if d.startswith("v_")}

@@ -462,14 +462,21 @@ def test_compact_partitions_job(spark, tmp_path):
 
     now = dt.datetime(2024, 3, 6, 1, 0)
     daily = str(tmp_path / "daily")
-    written = compact_partitions(spark, raw_root, daily, duration=2, now=now)
+    written = compact_partitions(
+        spark, raw_root, daily, "America/Toronto", duration=2, now=now
+    )
     assert written == {"2024-03-05": raw_count}
     assert spark.read.parquet(daily).count() == raw_count
     assert not os.path.exists(os.path.join(daily, "year=2024/month=3/day=4"))
 
     monthly = str(tmp_path / "monthly")
     written = compact_partitions(
-        spark, raw_root, monthly, period="month", now=dt.datetime(2024, 4, 2, 1, 0)
+        spark,
+        raw_root,
+        monthly,
+        "America/Toronto",
+        period="month",
+        now=dt.datetime(2024, 4, 2, 1, 0),
     )
     assert written == {"2024-03": raw_count}
     files = glob.glob(os.path.join(monthly, "year=2024/month=3", "*.parquet"))
@@ -480,7 +487,7 @@ def test_dates_in_range():
     import datetime as dt
 
     now = dt.datetime(2024, 3, 5, 1, 0)
-    days = dates_in_range(3, period="day", now=now)
+    days = dates_in_range(3, "America/Toronto", period="day", now=now)
     assert days == [dt.date(2024, 3, 4), dt.date(2024, 3, 3), dt.date(2024, 3, 2)]
-    months = dates_in_range(2, period="month", now=now)
+    months = dates_in_range(2, "America/Toronto", period="month", now=now)
     assert months == [dt.date(2024, 2, 1), dt.date(2024, 1, 1)]

@@ -64,9 +64,7 @@ def test_streaming_window_emits_on_watermark_and_drops_late(spark, tmp_path):
             "route_id", "CAST(ts_sec AS TIMESTAMP) AS timestamp", "speed"
         )
     )
-    out = windowed_counts(
-        stream, window="5 minutes", watermark="1 minute", agg_col="speed"
-    )
+    out = windowed_counts(stream, watermark="1 minute", agg_col="speed")
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
