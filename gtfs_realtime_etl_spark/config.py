@@ -16,6 +16,7 @@ independent pipelines in the same process (or two jobs on a cluster).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass, field
 from typing import Mapping
@@ -113,4 +114,29 @@ class AgencyConfig:
             trigger_seconds=self.schedule_seconds,
             max_ticks=max_ticks,
             headers=self.request_headers(),
+        )
+
+    def compact(
+        self,
+        spark: SparkSession,
+        target_root: str,
+        period: str,
+        now: dt.datetime | None = None,
+    ) -> dict[str, int]:
+        """Compact the last closed day (``period="day"``) or month
+        (``"month"``) of this agency's lake into ``target_root``, dated in
+        the agency's time zone: the reference's daily and monthly crons
+        (compaction/infrastructure/construct.py:102-140).  Returns rows
+        written per ``YYYY-MM-DD`` / ``YYYY-MM`` key."""
+        from gtfs_realtime_etl_spark.streaming.compaction import compact_partitions
+
+        if not self.lake_root:
+            raise ValueError("lake_root (DESTINATION_BUCKET) is not configured")
+        return compact_partitions(
+            spark,
+            self.lake_root,
+            target_root,
+            self.timezone,
+            period=period,
+            now=now,
         )

@@ -4,8 +4,8 @@
 ``ORACLE_SQL`` to the DuckDB SQL it must match (see ``plans/base.py``
 for the cross-engine determinism rules).  Both are merged from the
 banks below in this order; each bank's module docstring describes its
-queries.  The dicts keep declaration order; the driver's verification
-order is applied by ``plans/driver_order.py``.
+queries.  The dicts keep declaration order; ``__spark_entry__``
+applies the driver's verification order.
 """
 
 from __future__ import annotations

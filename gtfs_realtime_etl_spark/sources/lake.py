@@ -16,7 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE
+from gtfs_realtime_etl_spark.functions.geo import wkb_point_lonlat
+from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE, REFERENCE_LAKE
+from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet_files
 
 PARTITION_COLS = ("year", "month", "day")
 
@@ -75,10 +77,6 @@ def write_locations_batch(df: DataFrame, root: str, geoparquet: bool = False) ->
         "compression", RAW_COMPRESSION
     ).parquet(root)
     if geoparquet and "geometry" in df.columns:
-        from gtfs_realtime_etl_spark.sources.geoparquet import (
-            stamp_geoparquet_files,
-        )
-
         after = {
             f for d in part_dirs for f in _glob.glob(_os.path.join(d, "*.parquet"))
         }
@@ -120,9 +118,6 @@ def read_reference_lake(spark: SparkSession, root: str) -> DataFrame:
     shuffle, no join; partition pruning on year/month/day is untouched
     because the decode is a per-row projection on top of the pruned
     scan."""
-    from gtfs_realtime_etl_spark.functions.geo import wkb_point_lonlat
-    from gtfs_realtime_etl_spark.schemas import REFERENCE_LAKE
-
     df = spark.read.schema(REFERENCE_LAKE).parquet(root)
     # Single UDF evaluation per row: materialize the struct once, then
     # split it — two independent pt["lat"]/pt["lon"] projections would

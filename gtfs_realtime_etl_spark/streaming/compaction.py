@@ -21,6 +21,8 @@ from zoneinfo import ZoneInfo
 
 from pyspark.sql import SparkSession
 
+from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet
+
 #: Reference row-group band (compaction/runtime/handler.py:105-107).
 MAX_RECORDS_PER_FILE = 122_880
 #: Compacted-zone codec (cold tier; the raw zone appends snappy).
@@ -94,8 +96,6 @@ def compact_partition(
         .parquet(f"{target_root}/{part}")
     )
     if geoparquet and "geometry" in df.columns:
-        from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet
-
         stamp_geoparquet(f"{target_root}/{part}", compression=COMPRESSION)
     return n
 

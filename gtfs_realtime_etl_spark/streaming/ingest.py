@@ -50,6 +50,7 @@ from gtfs_realtime_etl_spark.sources.gtfs_rt import (
     decode_feed_frames,
     quarantine_feed_frames,
 )
+from gtfs_realtime_etl_spark.sources.gtfs_rt_source import register
 from gtfs_realtime_etl_spark.sources.lake import write_locations_batch
 
 
@@ -281,8 +282,6 @@ def start_feed_http_stream(
     the downstream pipeline is byte-identical to the Kafka/file paths.
     ``max_ticks`` bounds the poll (tests/backfills); None polls
     forever at the trigger cadence."""
-    from gtfs_realtime_etl_spark.sources.gtfs_rt_source import register
-
     register(spark)
     reader = (
         spark.readStream.format("gtfs_rt")

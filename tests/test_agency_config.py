@@ -6,6 +6,7 @@ local feed endpoints."""
 
 from __future__ import annotations
 
+import datetime as dt
 import http.server
 import json
 import os
@@ -108,6 +109,43 @@ def test_two_city_pipelines_from_env(spark, tmp_path, monkeypatch):
     # isolation: each city's rows only in its own lake
     assert yeg_lake.filter("route_id = 'r0'").count() == 5
     assert yyz_lake.filter("route_id = 'r1'").count() == 5
+
+
+def test_compact_in_agency_time_zone(spark, tmp_path):
+    """``AgencyConfig.compact`` is the daily cron on the agency's lake: at
+    a fixed ``now`` the last closed day is rewritten with its rows
+    conserved under its ``YYYY-MM-DD`` key; an unset lake root fails."""
+    import pandas as pd
+
+    from gtfs_realtime_etl_spark.operators.ingest import enrich_positions
+    from gtfs_realtime_etl_spark.sources.lake import write_locations_batch
+
+    cfg = AgencyConfig(lake_root=str(tmp_path / "raw"))
+    noon_utc = 1_709_661_600  # 2024-03-05 18:00 UTC, the 5th in the Americas
+    rows = [
+        {
+            "trip_id": f"t{j}",
+            "route_id": "r0",
+            "direction_id": None,
+            "vehicle_id": f"veh{j}",
+            "latitude": 53.5,
+            "longitude": -113.5,
+            "bearing": None,
+            "speed": None,
+            "timestamp": noon_utc + j,
+        }
+        for j in range(6)
+    ]
+    raw = spark.createDataFrame(pd.DataFrame(rows), schema=VEHICLE_POSITIONS_RAW)
+    write_locations_batch(enrich_positions(raw), cfg.lake_root)
+
+    daily = str(tmp_path / "daily")
+    written = cfg.compact(spark, daily, "day", now=dt.datetime(2024, 3, 6, 1, 0))
+    assert written == {"2024-03-05": 6}
+    assert read_locations(spark, daily).count() == 6
+
+    with pytest.raises(ValueError, match="lake_root"):
+        AgencyConfig().compact(spark, daily, "day")
 
 
 @pytest.fixture()

@@ -9,9 +9,9 @@
   form per capability.
 - A package ``__init__`` imports nothing: each name has one home, its
   defining module, and callers import it from there.
-- No def in plans/, functions/ or operators/ imports a package module:
-  the registry's source hash follows module globals, so a
-  function-local import hides its callee from that hash.
+- No def in plans/, functions/, operators/, sources/ or streaming/
+  imports a package module: a function-local import hides a dependency,
+  and any import cycle, until the def first runs.
 - No def anywhere in the package re-imports a name its module already
   imports at module level.
 - Every defaulted parameter of a public def in functions/, operators/,
@@ -129,16 +129,15 @@ def test_package_inits_import_nothing():
     assert not offenders, offenders
 
 
-HASHED_LAYERS = ("plans", "functions", "operators")
+IMPORT_GUARDED_LAYERS = ("plans", *LOWER_LAYERS)
 
 
 def test_no_function_local_package_imports():
-    """Package imports sit at module level in the layers the registry's
-    source hash walks (``plans/entry_hash_v2.py`` follows each entry's
-    module globals): an import inside a def is invisible to that walk,
-    so a change to the callee would leave the entry's hash unchanged."""
+    """Package imports sit at module level in every layer: an import
+    inside a def hides a dependency, and any import cycle, until the def
+    first runs."""
     offenders = set()
-    for layer in HASHED_LAYERS:
+    for layer in IMPORT_GUARDED_LAYERS:
         for path in sorted((PKG_DIR / layer).rglob("*.py")):
             tree = ast.parse(path.read_text(), filename=str(path))
             for fn in ast.walk(tree):

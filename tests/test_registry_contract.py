@@ -4,8 +4,7 @@
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
+from pathlib import Path
 
 import pytest
 
@@ -21,140 +20,69 @@ ROWS_ONLY_BY_DESIGN: set[str] = set()
 
 
 def test_driver_gate_rotation_is_structural():
-    """The external driver verifies only a ~50-entry prefix of the registry
-    per round, so entries without a trustworthy green driver row (never
-    verified, latest-red, or REWRITTEN since their green row per the
-    committed GREEN_MANIFEST hash) MUST lead the dict order; behind them,
-    rows-only greens (hash_match null — value-unverified) precede fully
-    verified greens, each block stalest-first.  Rounds 6 and 7 both lost
-    budget to hand-maintained green lists going stale; the order is
-    derived from the committed CORRECTNESS_r*.json + the live green manifest (GREEN_MANIFEST_V2.json since round 11)
-    artifacts, and this test fails if any green entry ever precedes a
-    needs-verification one in the order the driver reads
-    (``__spark_entry__.queries()``)."""
+    """The external driver verifies only a 50-entry prefix of the
+    registry per round, so in the order it reads
+    (``__spark_entry__.queries()``) no entry whose latest committed
+    CORRECTNESS row is green precedes a red or never-checked one, and
+    the greens follow oldest green round first."""
     import __spark_entry__ as ep
-    from gtfs_realtime_etl_spark.plans.driver_order import _load_driver_green
 
-    # With no entry green at its current source hash the live order has
-    # no green block to check; the rule itself is also tested on
-    # synthetic rows below.
-    green = _load_driver_green()
+    rows = ep._latest_rows()
     keys = list(ep.queries())
-    seen_green = False
-    for k in keys:
-        if k in green:
-            seen_green = True
-        else:
-            assert not seen_green, (
-                f"needs-verification entry {k!r} sits BEHIND a driver-green "
-                "entry — the rotation went stale and the driver budget will "
-                "be re-burned on already-verified queries"
-            )
-    # Green block order: value-unverified (rows-only) first, then fully
-    # verified; stalest-first within each.
-    order = [(green[k][1], green[k][0]) for k in keys if k in green]
-    assert order == sorted(order), (
-        "driver-green entries are not (rows-only-first, stalest-first); "
-        "leftover budget should re-verify the weakest/oldest greens"
+    green = [k for k in keys if rows.get(k, (0, False))[1]]
+    assert keys[len(keys) - len(green) :] == green, (
+        "a red or never-checked entry sits behind a driver-green one; "
+        "the driver's budget would re-check verified entries first"
     )
+    rounds = [rows[k][0] for k in green]
+    assert rounds == sorted(rounds), "greens are not oldest round first"
     assert list(ep.oracle_sql()) == keys, (
         "oracle_sql() order diverged from queries()"
     )
 
 
-def test_driver_gate_order_rule_on_synthetic_rows(monkeypatch):
-    """The ordering rule, whatever the committed artifacts hold: never
-    checked and latest-red entries lead in declaration order, then
-    changed-since-green entries stalest-first, then rows-only greens,
-    then fully verified greens, each stalest-first."""
-    from gtfs_realtime_etl_spark.plans import driver_order
-
-    rows = {  # name -> (round, ok, value-verified)
-        "red": (3, False, False),
-        "changed_r5": (5, True, True),
-        "changed_r2": (2, True, True),
-        "rows_only_r4": (4, True, False),
-        "rows_only_r2": (2, True, False),
-        "full_r1": (1, True, True),
-        "full_r6": (6, True, True),
-    }
-    green = {  # name -> (round, value-verified)
-        "rows_only_r4": (4, False),
-        "rows_only_r2": (2, False),
-        "full_r1": (1, True),
-        "full_r6": (6, True),
-    }
-    monkeypatch.setattr(driver_order, "_driver_rows", lambda: rows)
-    declared = [
-        "full_r6",
-        "full_r1",
-        "rows_only_r4",
-        "rows_only_r2",
-        "changed_r5",
-        "changed_r2",
-        "red",
-        "never",
-    ]
-    order = driver_order._driver_gate_order(dict.fromkeys(declared), green)
-    assert list(order) == [
-        "red",
-        "never",
-        "changed_r2",
-        "changed_r5",
-        "rows_only_r2",
-        "rows_only_r4",
-        "full_r1",
-        "full_r6",
-    ]
-
-
-def test_green_manifest_current_for_green_entries():
-    """Every entry the rotation treats as green must carry a manifest
-    hash equal to its CURRENT source hash — i.e. the committed
-    the live green manifest was regenerated after the last code change to
-    any green entry (scripts/update_green_manifest.py)."""
+def test_driver_gate_order_rule_on_synthetic_rows():
+    """The ordering rule, whatever the committed artifacts hold: red and
+    never-checked entries lead in declaration order, then greens by the
+    round of their latest row, oldest first, declaration order breaking
+    ties."""
     import __spark_entry__ as ep
-    from gtfs_realtime_etl_spark.plans.driver_order import (
-        _entry_src_hash,
-        _load_driver_green,
-        _load_green_manifest,
-    )
 
-    green = _load_driver_green()
-    manifest = _load_green_manifest()
-    if not manifest:
-        pytest.skip("no green manifest (GREEN_MANIFEST_V2.json) to check against")
-    queries, oracles = ep.queries(), ep.oracle_sql()
-    stale = [
-        k
-        for k in green
-        if manifest.get(k) != _entry_src_hash(queries[k], oracles.get(k))
+    rows = {  # name -> (round of the latest row, ok)
+        "green_r5": (5, True),
+        "red": (3, False),
+        "green_r2": (2, True),
+        "tie_b": (4, True),
+        "tie_a": (4, True),
+    }
+    declared = ["green_r5", "tie_b", "red", "green_r2", "never", "tie_a"]
+    assert ep._gate_order(declared, rows) == [
+        "red",
+        "never",
+        "green_r2",
+        "tie_b",
+        "tie_a",
+        "green_r5",
     ]
-    assert stale == [], (
-        f"green entries with stale manifest hashes: {stale[:10]} — "
-        "_load_driver_green should already have excluded these"
-    )
 
 
 def test_registry_import_skips_driver_ordering():
-    """Importing the registry must not pay for the driver-gate order
-    (closure hashing of every entry plus the CORRECTNESS artifact
-    reads): only ``__spark_entry__`` applies it, via
-    ``plans/driver_order.py``."""
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import sys, gtfs_realtime_etl_spark.plans.queries; "
-            "print(sorted(m for m in sys.modules if m.endswith(("
-            "'plans.entry_hash_v2', 'plans.driver_order'))))",
-        ],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert out.stdout.strip() == "[]", out.stdout
+    """The driver's scheduling policy lives only in ``__spark_entry__``:
+    no file of the package reads or names the driver's CORRECTNESS
+    artifacts or a green manifest, so the registry import orders
+    nothing."""
+    pkg = Path(__file__).resolve().parent.parent / "gtfs_realtime_etl_spark"
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in sorted(pkg.rglob("*"))
+        if path.is_file()
+        and path.suffix != ".pyc"
+        and any(
+            word in path.read_text(errors="replace")
+            for word in ("CORRECTNESS_r", "GREEN_MANIFEST")
+        )
+    ]
+    assert offenders == [], offenders
 
 
 def test_every_query_has_an_oracle():
