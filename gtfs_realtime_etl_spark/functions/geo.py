@@ -96,32 +96,6 @@ def dwithin(lon1: Column, lat1: Column, lon2: Column, lat2: Column, radius: floa
     return euclid_degree_dist(lon1, lat1, lon2, lat2) <= F.lit(radius)
 
 
-#: WGS84 spherical radius used by EPSG:3857 (Web Mercator), meters.
-WEB_MERCATOR_R = 6378137.0
-
-
-def to_web_mercator(lon: Column, lat: Column) -> Column:
-    """CRS84 lon/lat degrees → EPSG:3857 (Web Mercator) meters, as a
-    ``struct<x double, y double>`` of pure Column math — absorbs the
-    reference notebook's client-side GeoPandas ``to_crs(3857)`` step
-    (schedule_deviation.ipynb:701-705) into the engine, so the
-    visualization handoff needs no pandas/pyproj at all.
-
-    Standard spherical formulas (the exact EPSG:3857 definition —
-    pyproj agrees to float precision):
-    ``x = R·lon_rad``, ``y = R·ln(tan(π/4 + lat_rad/2))``.
-    Valid for |lat| < 90; the poles map to ±infinity as in any
-    Mercator implementation.
-    """
-    import math
-
-    x = F.radians(lon) * F.lit(WEB_MERCATOR_R)
-    y = F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / F.lit(2.0))) * F.lit(
-        WEB_MERCATOR_R
-    )
-    return F.struct(x.alias("x"), y.alias("y"))
-
-
 def bbox_struct(lon: Column, lat: Column) -> Column:
     """Degenerate per-point bbox covering struct, as written by the
     reference's GeoParquet writer (handler.py:146-152)."""

@@ -7,7 +7,7 @@ list.  This module closes that gap:
 - :func:`connected_components` — size-gated hybrid.  The pair graph is
   the OUTPUT of dedup (similarity-thresholded, bucket-capped), orders
   of magnitude smaller than the corpus; when its edge count fits the
-  driver (``driver_max_edges``) the components run as an exact
+  driver (:data:`DRIVER_MAX_EDGES`) the components run as an exact
   union-find on collected edges — one collect, zero iterative jobs.
   Above the gate, iterative min-label propagation: each iteration is
   one join + one aggregation, both shuffling on the node id; lineage is
@@ -19,7 +19,7 @@ list.  This module closes that gap:
   scheme [Kiveris et al., "Connected Components in MapReduce"] drops in
   here if 100 TB graphs with long chains ever materialize.)  Both paths
   produce identical (node, min-member-id) labels; equivalence is
-  pinned by tests forcing each path.
+  pinned by tests forcing each path (they lower :data:`DRIVER_MAX_EDGES`).
 - :func:`resolve_duplicates` — keep one survivor per cluster (the
   conventional min-id rule): an anti-join of the corpus against the
   non-survivor node set.
@@ -38,17 +38,13 @@ from pyspark.sql import functions as F
 #: collected as TWO Arrow int64 arrays (``toArrow``, no per-row Python
 #: objects) ≈ 80 MB on the driver — broadcast-class, far below any
 #: realistic driver heap; above it, the distributed propagation runs.
-#: Pass ``driver_max_edges=0`` (or ``None``) to skip the gating count
-#: entirely and force the distributed path (callers that KNOW the graph
-#: is large save one Spark action).
 DRIVER_MAX_EDGES = 5_000_000
+#: Propagation rounds before the distributed path gives up (a component
+#: whose min-id eccentricity exceeds it would get wrong labels).
+MAX_ITER = 50
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 50,
-    driver_max_edges: int | None = DRIVER_MAX_EDGES,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``pairs``
     ``(id_a, id_b)``; cluster_id is the minimum node id reachable
     through the pair graph."""
@@ -61,7 +57,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_max_edges and edges.count() <= driver_max_edges:
+    if edges.count() <= DRIVER_MAX_EDGES:
         return _driver_components(edges)
     labels = (
         edges.select(F.col("s").alias("node"))
@@ -71,7 +67,7 @@ def connected_components(
     )
     prev_sum = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         prop = edges.join(labels, edges["d"] == labels["node"]).select(
             F.col("s").alias("node"), "label"
         )
@@ -89,13 +85,11 @@ def connected_components(
         prev_sum = cur_sum
     if not converged:
         # The min label travels one hop per round, so a component whose
-        # min-id eccentricity exceeds max_iter would get silently WRONG
-        # labels (e.g. a 100-link drift chain of near-dups).  Fail loud;
-        # the caller raises max_iter.
+        # min-id eccentricity exceeds MAX_ITER would get silently WRONG
+        # labels (e.g. a 100-link drift chain of near-dups).  Fail loud.
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds — a component's diameter exceeds the iteration budget; "
-            "raise max_iter"
+            f"connected_components did not converge within MAX_ITER={MAX_ITER} "
+            "rounds — a component's diameter exceeds the iteration budget"
         )
     return labels.select("node", F.col("label").alias("cluster_id"))
 

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.hashing import shingle_hash_set_kernel
-from gtfs_realtime_etl_spark.operators.dedup import ID_COL, TEXT_COL, _saturate
+from gtfs_realtime_etl_spark.operators.dedup import ID_COL, TEXT_COL
+from gtfs_realtime_etl_spark.sources.testdata import saturate_scan
 
 #: Stop-shingle cap: hashes present in more train docs than this are
 #: too common to signal contamination and would dominate the join.
@@ -76,7 +77,7 @@ def contamination_pairs(
     #    exchange is reused by the freq aggregate and the match join.
     n_tasks = train.sparkSession.sparkContext.defaultParallelism
     tr_h = (
-        _saturate(train)
+        saturate_scan(train)
         .select(F.col(ID_COL).alias("train_id"), kernel(F.col(TEXT_COL)).alias("sh"))
         .select("train_id", F.explode("sh").alias("h"))
         .join(F.broadcast(te_h.select("h").distinct()), "h", "left_semi")

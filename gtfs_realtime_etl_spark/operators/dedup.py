@@ -24,7 +24,7 @@ batches: each batch's band rows are probed against the standing index
 (:func:`probe_index`: new×index plus new×new) and then appended to it;
 :func:`finalize_dedup_candidates` merges the accumulated candidates.
 The fold equals the one-shot :func:`minhash_lsh_candidates` under any
-batch slicing and any ``max_bucket``:
+batch slicing and any :data:`MAX_BUCKET`:
 
 * a final bucket B = ∪_d B_d emits, across batches, exactly
   { (x, y) : x ∈ B_i, y ∈ B_j, j <= i } = all unordered pairs of B —
@@ -63,13 +63,15 @@ from gtfs_realtime_etl_spark.functions.hashing import (
     winnow_fingerprints_kernel,
 )
 from gtfs_realtime_etl_spark.functions.text import AZ_LOWER, AZ_UPPER, tokens
+from gtfs_realtime_etl_spark.sources.testdata import saturate_scan
 
 #: Buckets larger than this are dropped from candidate generation: a
 #: bucket of b docs explodes into b(b-1)/2 pairs, and pathological
 #: buckets (boilerplate, empty strings) would otherwise dominate the
 #: shuffle.  Standard practice in production near-dedup pipelines; the
-#: oracle SQL applies the identical cap.
-DEFAULT_MAX_BUCKET = 1000
+#: oracle SQL applies the identical cap.  Every operator here reads it at
+#: call time.
+MAX_BUCKET = 1000
 
 #: The corpus columns every operator here reads.
 TEXT_COL = "text"
@@ -98,28 +100,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def _saturate(docs: DataFrame) -> DataFrame:
-    """Ensure the expensive Arrow kernel stage runs on every core: a
-    small corpus (one parquet file → one input split) would otherwise
-    serialize the signature computation on a single task.  No-op when
-    the scan already yields enough splits (the 100 TB case).
-
-    Saturation is decided from ``inputFiles()`` — plan-time metadata
-    that is Spark-Connect-safe — never ``df.rdd`` (which materializes
-    the RDD lineage and is unavailable under Connect).  A file-backed
-    corpus with at least one file per core splits at least that wide; a
-    non-file source (in-memory test frames) reports zero files and gets
-    repartitioned, which is the conservative choice at that size."""
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(docs.inputFiles())
-    except Exception:  # non-file plans on some backends
-        n_files = 0
-    if n_files < target:
-        return docs.repartition(target)
-    return docs
 
 
 def _pair_explode(rows_col: str, fields) -> Column:
@@ -158,7 +138,7 @@ def lsh_band_rows(
     rows computed batch by batch equal rows computed over the corpus."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-    sig = _saturate(docs).select(
+    sig = saturate_scan(docs).select(
         F.col(ID_COL),
         minhash_text_kernel(num_hashes, shingle_k)(F.col(TEXT_COL)).alias("sig"),
     )
@@ -180,7 +160,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on MinHash signatures.
 
@@ -193,7 +172,7 @@ def minhash_lsh_candidates(
     buckets = (
         banded.groupBy("band_id", "band_key")
         .agg(F.sort_array(F.collect_list(ID_COL)).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= MAX_BUCKET))
     )
     pair = _pair_explode("ids", lambda x, y: [x.alias("id_a"), y.alias("id_b")])
     return (
@@ -273,21 +252,19 @@ def minhash_lsh_dedup(
     bands: int = 8,
     shingle_k: int = 5,
     threshold: float = 0.5,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Full near-dedup: LSH candidates → exact Jaccard → verified pairs.
 
     Duplicate-cluster resolution lives in
     :func:`gtfs_realtime_etl_spark.operators.clusters.connected_components`.
     """
-    cands = minhash_lsh_candidates(docs, num_hashes, bands, shingle_k, max_bucket)
+    cands = minhash_lsh_candidates(docs, num_hashes, bands, shingle_k)
     return jaccard_pairs(docs, cands, shingle_k, threshold)
 
 
 def probe_index(
     new_rows: DataFrame,
     index_rows: DataFrame | None,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Candidate pairs contributed by ONE batch: new×index plus
     new×new, bucket-capped on the RUNNING bucket size (index ∪ new).
@@ -304,7 +281,7 @@ def probe_index(
     ok = (
         cumulative.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") <= max_bucket)
+        .filter(F.col("cnt") <= MAX_BUCKET)
         .select(*keys)
     )
     guarded_new = new_rows.join(ok, keys, "left_semi")
@@ -335,7 +312,6 @@ def probe_index(
 def finalize_dedup_candidates(
     all_candidates: DataFrame,
     index_rows: DataFrame,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Merge step: re-filter accumulated candidates against the FINAL
     bucket sizes (SUM-merge monoid over per-batch counts — computed
@@ -347,7 +323,7 @@ def finalize_dedup_candidates(
     final_ok = (
         index_rows.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter((F.col("cnt") >= 2) & (F.col("cnt") <= max_bucket))
+        .filter((F.col("cnt") >= 2) & (F.col("cnt") <= MAX_BUCKET))
         .select(*keys)
     )
     return (
@@ -360,7 +336,6 @@ def finalize_dedup_candidates(
 def simhash_dedup(
     docs: DataFrame,
     hamming_threshold: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ ``hamming_threshold``.
 
@@ -369,18 +344,17 @@ def simhash_dedup(
     by pigeonhole, two hashes within the threshold agree exactly on at
     least one segment, so bucketing per (band_id, segment) finds every
     qualifying pair.  One shuffle on the bucket key; per-bucket pair
-    explosion is bounded by ``max_bucket``; cross-band duplicates are
+    explosion is bounded by :data:`MAX_BUCKET`; cross-band duplicates are
     removed by the final distinct.  Recall is exact by pigeonhole UP TO
-    the bucket cap: a duplicate group larger than ``max_bucket`` (e.g.
+    the bucket cap: a duplicate group larger than :data:`MAX_BUCKET` (e.g.
     >1000 identical boilerplate docs) overflows its buckets in every
     band and contributes NO pairs — deliberately, because its pair
     explosion is quadratic; route such groups through
-    :func:`exact_dedup` (which has no cap) and raise ``max_bucket``
-    only with bounded cluster sizes.
+    :func:`exact_dedup` (which has no cap).
     """
     bands = hamming_threshold + 1
     seg_bits = H64_BITS // bands  # trailing bits spill into the last segment
-    sh = _saturate(docs).select(
+    sh = saturate_scan(docs).select(
         F.col(ID_COL),
         simhash_tokens_kernel()(tokens(F.col(TEXT_COL))).alias("simhash"),
     )
@@ -405,7 +379,7 @@ def simhash_dedup(
                 F.collect_list(F.struct(F.col(ID_COL).alias("id"), "simhash"))
             ).alias("rows")
         )
-        .filter((F.size("rows") > 1) & (F.size("rows") <= max_bucket))
+        .filter((F.size("rows") > 1) & (F.size("rows") <= MAX_BUCKET))
     )
     pair = _pair_explode(
         "rows",
@@ -428,7 +402,6 @@ def winnow_candidates(
     shingle_k: int = 5,
     window: int = 4,
     min_shared: int = 2,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Candidate pairs sharing >= ``min_shared`` winnowing fingerprints
     (id_a < id_b, with the shared-fingerprint count).
@@ -450,13 +423,13 @@ def winnow_candidates(
     (weighted profile similarity).  The oracle replays the same
     polynomial hashes in SQL."""
     fp_col = winnow_fingerprints_kernel(shingle_k, window)(F.col(TEXT_COL))
-    fps = _saturate(docs).select(
+    fps = saturate_scan(docs).select(
         F.col(ID_COL), F.explode(fp_col).alias("fp")
     )
     buckets = (
         fps.groupBy("fp")
         .agg(F.sort_array(F.collect_list(ID_COL)).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= MAX_BUCKET))
     )
     pair = _pair_explode("ids", lambda x, y: [x.alias("id_a"), y.alias("id_b")])
     return (

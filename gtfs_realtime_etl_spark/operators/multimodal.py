@@ -102,17 +102,17 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_media(spark, documents: DataFrame, modality: str = "image") -> DataFrame:
-    """Deterministic fake media table derived from the documents corpus —
-    test/bench input for the plumbing above (no real codecs needed)."""
+def synthesize_media(spark, documents: DataFrame) -> DataFrame:
+    """Deterministic fake image table derived from the documents corpus
+    — test/bench input for the plumbing above (no real codecs needed)."""
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        F.lit(modality).alias("modality"),
+        F.lit("image").alias("modality"),
         F.encode(F.col("text"), "UTF-8").cast("binary").alias("payload"),
         # payload size stamped as metadata at synthesis ("ingest time"),
         # so profiling never needs the binary column
         F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
-        F.lit(f"{modality}/fake").alias("mime"),
+        F.lit("image/fake").alias("mime"),
         (F.col("doc_id") % 640 + 64).cast("int").alias("width"),
         (F.col("doc_id") % 480 + 48).cast("int").alias("height"),
         (F.col("doc_id") % 60000).cast("int").alias("duration_ms"),

@@ -16,9 +16,12 @@ with no out-edges) is redistributed uniformly, keeping the ranks a
 probability distribution (sums to 1), which is also the convergence
 invariant the test asserts.
 
-Lineage control: like the label-propagation loop, each round
-``localCheckpoint``s the new ranks — without it round t's plan embeds
-t joins and Catalyst analysis goes quadratic.  Iteration count is
+Lineage control: the edge list, the node list and the degree-annotated
+edge table are each pinned once with an eager ``localCheckpoint``, so
+the caller's edge lineage runs once, and, like the label-propagation
+loop, each ``dangling="collect"`` round checkpoints the new ranks —
+without the pins round t's plan embeds t joins over the caller's
+lineage and Catalyst analysis goes quadratic.  Iteration count is
 fixed (power iteration converges geometrically at rate ~d); a
 tolerance-based stop would add a driver round-trip per round for no
 asymptotic gain.
@@ -35,33 +38,21 @@ def pagerank(
     iterations: int = 15,
     damping: float = 0.85,
     dangling: str = "collect",
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` rounds; ranks sum to 1.
 
     ``edges`` are directed (s -> d); duplicate edges count as
     parallel edges (weight = multiplicity / out-degree).
 
-    SIDE EFFECT: with ``materialize_edges=True`` (default) the call
-    EAGERLY runs a Spark job to localCheckpoint the edge input before
-    returning — nodes, out-degrees, and the per-round join table all
-    derive from it, and without the pin each would re-run the caller's
-    (possibly expensive) edge-generation lineage, e.g. a k-NN
-    candidate join.  Two caveats: the returned DataFrame is built on
-    localCheckpoint blocks, which are NOT recoverable on executor loss
-    (a preempted executor fails the computation rather than recomputing
-    lineage — acceptable on static local/driver sessions, not on
-    clusters with dynamic allocation); and plan construction is no
-    longer lazy.  Callers with cheap edge lineage or their own
-    persistence should pass ``materialize_edges=False`` (edges are then
-    re-read per derivation; correct either way).  NOTE this flag only
-    removes the up-front edge pins: the per-round rank localCheckpoint
-    below is unconditional (eager under ``dangling="collect"``, lazy
-    under ``dangling="none"`` but still checkpoint-backed once
-    evaluated), so executor loss mid-iteration invalidates checkpoint
-    blocks and fails the fit regardless of ``materialize_edges``.  On
-    preemptible clusters rerun the fit (it is deterministic) or snapshot
-    ranks between rounds with your own ``persist(DISK_ONLY)``.
+    SIDE EFFECT: the call EAGERLY runs Spark jobs to localCheckpoint
+    the edge input before returning — nodes, out-degrees, and the
+    per-round join table all derive from it, and without the pin each
+    would re-run the caller's (possibly expensive) edge-generation
+    lineage, e.g. a k-NN candidate join.  The returned DataFrame is
+    built on localCheckpoint blocks, which are NOT recoverable on
+    executor loss (a preempted executor fails the computation rather
+    than recomputing lineage): on preemptible clusters rerun the fit
+    (it is deterministic).
 
     ``dangling="collect"`` (default) measures the rank mass held by
     nodes without out-edges each round (one driver action per round)
@@ -75,18 +66,16 @@ def pagerank(
     """
     if dangling not in ("collect", "none"):
         raise ValueError(f"dangling must be 'collect' or 'none', got {dangling!r}")
-    # Materialize the edge list ONCE up front (opt-out via
-    # materialize_edges=False — see docstring for the eager-job and
-    # executor-loss caveats): nodes, out-degrees, and the
+    # Materialize the edge list ONCE up front (see the docstring's
+    # executor-loss caveat): nodes, out-degrees, and the
     # degree-annotated edge table all derive from it.
-    e = edges.select("s", "d")
-    if materialize_edges:
-        e = e.localCheckpoint(eager=True)
-    nodes = e.select(F.col("s").alias("node")).unionAll(
-        e.select(F.col("d").alias("node"))
-    ).distinct()
-    if materialize_edges:
-        nodes = nodes.localCheckpoint(eager=True)
+    e = edges.select("s", "d").localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("s").alias("node"))
+        .unionAll(e.select(F.col("d").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
@@ -94,9 +83,7 @@ def pagerank(
     out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # Edges with the source's degree attached — every round joins
     # against this same table.
-    e_deg = e.join(out_deg, "s")
-    if materialize_edges:
-        e_deg = e_deg.localCheckpoint(eager=True)
+    e_deg = e.join(out_deg, "s").localCheckpoint(eager=True)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
@@ -132,18 +119,14 @@ def pagerank(
             # measurement, so an eager checkpoint costs nothing extra
             # and keeps the next round's plan O(1).
             ranks = ranks.localCheckpoint(eager=True)
-        # With dangling="none" the rounds CHAIN in one lazy plan: with
-        # materialize_edges the per-round join table and node list are
-        # already checkpoint leaves, so round t's tree is t chained
+        # With dangling="none" the rounds CHAIN in one lazy plan: the
+        # per-round join table and node list are already checkpoint
+        # leaves, so round t's tree is t chained
         # (join + agg + join) blocks over flat leaves — linear, one
         # Catalyst pass at the caller's single action.  The per-round
         # LAZY localCheckpoint this replaces (round-12) was not free:
         # every call synchronously physical-planned and codegen'd its
         # subtree (~0.2-0.3 s x iterations of driver-side stall) to
         # build the checkpoint RDD, serializing exactly the per-round
-        # barrier the lazy form was meant to avoid.  (The quadratic
-        # Catalyst blowup the old comment feared applies to the
-        # UNMATERIALIZED edge path: there every round re-embeds the
-        # caller's full edge lineage; materialize_edges=False callers
-        # accept that documented trade.)
+        # barrier the lazy form was meant to avoid.
     return ranks

@@ -9,7 +9,7 @@ the interval-join literature) is time bucketing:
 1. replicate each interval to every fixed-width bucket it touches
    (``floor(start/W) .. floor(end/W)``, integer division — ns-scale
    epochs exceed double precision so float math is banned here);
-2. equi-join on ``(keys..., bucket)`` — a plain shuffled hash join,
+2. equi-join on the bucket — a plain shuffled hash join,
    so Catalyst/AQE handle skew and parallelism normally;
 3. keep pairs that truly overlap (the residual predicate);
 4. de-duplicate *without a distinct shuffle*: a pair meeting in k
@@ -18,7 +18,7 @@ the interval-join literature) is time bucketing:
    overlapping pair meets in exactly once.
 
 Replication factor is ``1 + interval_len/W``: pick ``W`` near the
-typical interval length so rows replicate ~2x.  ``max_buckets`` guards
+typical interval length so rows replicate ~2x.  :data:`MAX_BUCKETS` guards
 against a pathological interval exploding into millions of rows (fail
 loud, don't OOM an executor).
 
@@ -32,6 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Most buckets one interval may touch; a wider one fails the job.
+MAX_BUCKETS = 4096
+
 
 def overlap_join(
     left: DataFrame,
@@ -40,17 +43,15 @@ def overlap_join(
     left_bounds: tuple[str, str],
     right_bounds: tuple[str, str],
     bucket_width: int,
-    on: list[str] | None = None,
     residual: Column | None = None,
-    max_buckets: int = 4096,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Join rows whose [start, end] intervals overlap (closed bounds).
 
     ``left_bounds`` / ``right_bounds`` name integer start/end columns
     (epoch ns/us/s — any unit, as long as ``bucket_width`` matches).
-    Column names must be disjoint between the two sides except for
-    ``on`` equi-keys.  ``residual`` adds an extra post-join predicate.
+    Column names must be disjoint between the two sides.  ``residual``
+    adds a post-join predicate, e.g. equality of per-side key columns.
     Zero-length intervals (start == end) participate normally.
 
     ``num_partitions`` pins the pair-join parallelism: interval rows
@@ -62,12 +63,11 @@ def overlap_join(
     """
     ls, le = left_bounds
     rs, re_ = right_bounds
-    on = list(on or [])
 
-    overlap_keys = (set(left.columns) & set(right.columns)) - set(on)
+    overlap_keys = set(left.columns) & set(right.columns)
     if overlap_keys:
         raise ValueError(
-            f"ambiguous non-key columns on both sides: {sorted(overlap_keys)}; "
+            f"ambiguous columns on both sides: {sorted(overlap_keys)}; "
             "rename before joining"
         )
 
@@ -75,11 +75,11 @@ def overlap_join(
         b0 = F.expr(f"CAST({s} DIV {bucket_width} AS BIGINT)")
         b1 = F.expr(f"CAST({e} DIV {bucket_width} AS BIGINT)")
         guard = F.when(
-            b1 - b0 >= F.lit(max_buckets),
+            b1 - b0 >= F.lit(MAX_BUCKETS),
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"overlap_join: interval spans >= {max_buckets} buckets "
+                        f"overlap_join: interval spans >= {MAX_BUCKETS} buckets "
                         f"of width {bucket_width}; raise bucket_width or "
                         "max_buckets ("
                     ),
@@ -95,14 +95,10 @@ def overlap_join(
     lx = buckets(left, ls, le)
     rx = buckets(right, rs, re_).withColumnRenamed("_rj_bucket", "_rj_bucket_r")
     if num_partitions is not None:
-        lx = lx.repartition(num_partitions, *on, "_rj_bucket")
-        rx = rx.repartition(num_partitions, *on, "_rj_bucket_r")
+        lx = lx.repartition(num_partitions, "_rj_bucket")
+        rx = rx.repartition(num_partitions, "_rj_bucket_r")
 
-    cond = lx["_rj_bucket"] == rx["_rj_bucket_r"]
-    for k in on:
-        cond = cond & (lx[k] == rx[k])
-
-    joined = lx.join(rx, cond, "inner")
+    joined = lx.join(rx, lx["_rj_bucket"] == rx["_rj_bucket_r"], "inner")
     overlap = (F.col(ls) <= F.col(re_)) & (F.col(rs) <= F.col(le))
     # Canonical-bucket emission: the first bucket both intervals share
     # is the one containing max(start_a, start_b).
@@ -112,8 +108,4 @@ def overlap_join(
     out = joined.where(overlap & canonical)
     if residual is not None:
         out = out.where(residual)
-    drop = ["_rj_bucket", "_rj_bucket_r"]
-    # `on` keys exist on both sides; keep the left copy only.
-    for k in on:
-        out = out.drop(rx[k])
-    return out.drop(*drop)
+    return out.drop("_rj_bucket", "_rj_bucket_r")

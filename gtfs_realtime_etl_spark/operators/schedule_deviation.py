@@ -58,12 +58,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.geo import (
-    dwithin,
-    hex_wkb,
-    point_wkb,
-    to_web_mercator,
-)
+from gtfs_realtime_etl_spark.functions.geo import dwithin, hex_wkb, point_wkb
 from gtfs_realtime_etl_spark.functions.stats import norm_cdf
 from gtfs_realtime_etl_spark.functions.time import (
     NOT_PAST_MIDNIGHT,
@@ -83,7 +78,6 @@ def schedule_deviation(
     trips: DataFrame,
     stops: DataFrame,
     stop_times: DataFrame,
-    with_web_mercator: bool = False,
     skew_safe: bool = False,
 ) -> DataFrame:
     """Per-stop deviation aggregate (cell-11 parity).
@@ -91,12 +85,8 @@ def schedule_deviation(
     ``locations`` must carry ``trip_id``, ``timestamp`` (session tz),
     ``longitude``, ``latitude``.  Returns one row per (stop_id, stop
     geometry): ``stop_id, count, avg_diff, stddev_diff, geometry``.
-
-    ``with_web_mercator=True`` appends ``mercator_x``/``mercator_y``
-    (EPSG:3857 meters) so the map client consumes projected coordinates
-    directly — the reference notebook reprojects client-side with
-    GeoPandas (schedule_deviation.ipynb:701-705); this closes that last
-    pandas step in-engine.
+    The map client reprojects to Web Mercator itself, as the reference
+    notebook does with GeoPandas (schedule_deviation.ipynb:701-705).
     """
     # Static schedule: routes ⋈ trips ⋈ stop_times ⋈ stops, dims broadcast.
     # The (routes ⋈ trips) product is broadcast EXPLICITLY (not left to
@@ -176,7 +166,11 @@ def schedule_deviation(
     ).orderBy(F.asc("arrival_time"), F.asc(F.abs(F.col("diff"))), F.asc("diff"))
     ranked = banded.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
 
-    out_cols = [
+    return ranked.groupBy("stop_id", "stop_lon", "stop_lat").agg(
+        F.count("diff").alias("count"),
+        F.avg("diff").alias("avg_diff"),
+        F.stddev_samp("diff").alias("stddev_diff"),
+    ).select(
         F.col("stop_id"),
         F.col("stop_lon"),
         F.col("stop_lat"),
@@ -184,15 +178,7 @@ def schedule_deviation(
         F.col("avg_diff"),
         F.col("stddev_diff"),
         hex_wkb(point_wkb(F.col("stop_lon"), F.col("stop_lat"))).alias("geometry"),
-    ]
-    if with_web_mercator:
-        merc = to_web_mercator(F.col("stop_lon"), F.col("stop_lat"))
-        out_cols += [merc["x"].alias("mercator_x"), merc["y"].alias("mercator_y")]
-    return ranked.groupBy("stop_id", "stop_lon", "stop_lat").agg(
-        F.count("diff").alias("count"),
-        F.avg("diff").alias("avg_diff"),
-        F.stddev_samp("diff").alias("stddev_diff"),
-    ).select(*out_cols)
+    )
 
 
 def _z(edge: float) -> Column:

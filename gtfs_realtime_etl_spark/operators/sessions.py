@@ -25,22 +25,21 @@ TS_COL = "ts"
 
 def sessionize(
     events: DataFrame,
-    ts_col: str = TS_COL,
     gap: int | float = 1800,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Add a ``session_id`` column (1-based per :data:`KEY_COL`, in time
     order).
 
-    ``ts_col`` must be numeric (epoch seconds/ns) or timestamp with
+    :data:`TS_COL` must be numeric (epoch seconds/ns) or timestamp with
     subtractable semantics; ``gap`` is in the same unit as the
     difference.  ``order_cols`` break timestamp ties deterministically.
     """
-    order = [F.asc(ts_col)] + [F.asc(c) for c in (order_cols or [])]
+    order = [F.asc(TS_COL)] + [F.asc(c) for c in (order_cols or [])]
     w = Window.partitionBy(KEY_COL).orderBy(*order)
-    prev_ts: Column = F.lag(ts_col).over(w)
+    prev_ts: Column = F.lag(TS_COL).over(w)
     is_new = (
-        prev_ts.isNull() | ((F.col(ts_col) - prev_ts) > F.lit(gap))
+        prev_ts.isNull() | ((F.col(TS_COL) - prev_ts) > F.lit(gap))
     ).cast("int")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return events.withColumn("session_id", F.sum(is_new).over(run))

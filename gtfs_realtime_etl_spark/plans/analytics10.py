@@ -470,8 +470,8 @@ FROM agg
 MAHA_TOPK = 20
 
 
-def mahalanobis_topk(emb: DataFrame, k: int = MAHA_TOPK) -> DataFrame:
-    """Integer-exact diagonal-Mahalanobis top-k over any
+def mahalanobis_topk(emb: DataFrame) -> DataFrame:
+    """Integer-exact diagonal-Mahalanobis top-:data:`MAHA_TOPK` over any
     (vec_id, label, embedding) frame — the ``q_mahalanobis_outliers``
     core, split out so scale smokes can feed replicated corpora."""
     x = emb.select(
@@ -507,14 +507,14 @@ def mahalanobis_topk(emb: DataFrame, k: int = MAHA_TOPK) -> DataFrame:
         .groupBy("vec_id", "label")
         .agg(F.sum("t").alias("d2_micro"))
     )
-    return d2.orderBy(F.desc("d2_micro"), F.asc("vec_id")).limit(k)
+    return d2.orderBy(F.desc("d2_micro"), F.asc("vec_id")).limit(MAHA_TOPK)
 
 
 def q_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 diagonal-Mahalanobis embedding outliers, integer-exact
     (module doc)."""
     (emb,) = load_testdata(spark, sf_dir, "embeddings")
-    return mahalanobis_topk(emb, MAHA_TOPK)
+    return mahalanobis_topk(emb)
 
 
 Q_MAHALANOBIS_OUTLIERS_SQL = f"""

@@ -54,7 +54,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The ×BOOT_B explode + per-row hash below is the heavy map-side
     # class that justifies widening the narrow local scan (round-12
     # interleaved A/B: 3.06 -> 1.37 s; no-op on multi-file inputs).
-    ev = saturate_scan(spark, events).select(
+    ev = saturate_scan(events).select(
         "event_type", "event_id", F.expr(CENTS).alias("cents")
     )
     exact = ev.groupBy("event_type").agg(

@@ -1185,21 +1185,18 @@ def _shuffle_key(doc_id: Column, epoch: Column) -> Column:
     return F.pmod(r * r + r, F.lit(MOD))
 
 
-def epoch_shuffle_positions(
-    documents: DataFrame,
-    n_epochs: int = SHUFFLE_EPOCHS,
-) -> DataFrame:
-    """Deterministic per-epoch shuffle positions for any frame with a
-    ``doc_id`` column — the two-level range rank described above,
-    exposed as a reusable operator (the registry query and the 20×
-    scale smoke both call this)."""
+def epoch_shuffle_positions(documents: DataFrame) -> DataFrame:
+    """Deterministic per-epoch shuffle positions (:data:`SHUFFLE_EPOCHS`
+    epochs) for any frame with a ``doc_id`` column — the two-level range
+    rank described above, exposed as a reusable operator (the registry
+    query and the 20× scale smoke both call this)."""
     # Epoch replication as a pure projection (explode of a literal
     # sequence) — no join of any kind, each task emits its own rows.
     epochs = documents.select(
         "doc_id",
         F.explode(
             F.sequence(
-                F.lit(0).cast("int"), F.lit(n_epochs - 1).cast("int")
+                F.lit(0).cast("int"), F.lit(SHUFFLE_EPOCHS - 1).cast("int")
             )
         ).alias("epoch"),
     )

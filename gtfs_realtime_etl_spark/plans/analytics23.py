@@ -59,7 +59,7 @@ from gtfs_realtime_etl_spark.functions.hashing import (
     sql_shingle_hashes,
 )
 from gtfs_realtime_etl_spark.operators.dedup import (
-    DEFAULT_MAX_BUCKET,
+    MAX_BUCKET,
     finalize_dedup_candidates,
     jaccard_pairs,
     lsh_band_rows,
@@ -75,11 +75,7 @@ DEDUP_INC_THRESHOLD = 0.35
 DEDUP_INC_BATCHES = 4
 
 
-def dedup_incremental_pairs(
-    documents: DataFrame,
-    n_batches: int = DEDUP_INC_BATCHES,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
+def dedup_incremental_pairs(documents: DataFrame) -> DataFrame:
     """The full fold, in one plan: slice the corpus into deterministic
     arrival batches, fold each through :func:`probe_index` against the
     growing banded index, finalize, and verify with exact
@@ -87,8 +83,8 @@ def dedup_incremental_pairs(
 
     The per-batch band rows are staged ONCE, hive-partitioned on the
     batch id (round-12): the in-plan form used to run one staged write
-    per batch — ``n_batches`` signature passes over the corpus and
-    ``n_batches`` write jobs whose per-job overhead dominated the
+    per batch — :data:`DEDUP_INC_BATCHES` signature passes over the
+    corpus and as many write jobs, whose per-job overhead dominated the
     query's sf0.1 cost — but a document's signature depends only on
     its own text, so one pass over the corpus with the arrival slice
     as a partition column produces bit-identical per-batch frames, and
@@ -105,7 +101,7 @@ def dedup_incremental_pairs(
             shingle_k=DEDUP_INC_K,
         ).withColumn(
             "batch",
-            F.pmod(F.col("doc_id"), F.lit(n_batches)).cast("int"),
+            F.pmod(F.col("doc_id"), F.lit(DEDUP_INC_BATCHES)).cast("int"),
         ),
         "dedup_inc_band",
         "batch",
@@ -114,10 +110,10 @@ def dedup_incremental_pairs(
         staged.filter(F.col("batch") == F.lit(d)).select(
             "doc_id", "band_id", "band_key"
         )
-        for d in range(n_batches)
+        for d in range(DEDUP_INC_BATCHES)
     ]
     cand_parts = []
-    for d in range(n_batches):
+    for d in range(DEDUP_INC_BATCHES):
         index_rows = (
             staged.filter(F.col("batch") < F.lit(d)).select(
                 "doc_id", "band_id", "band_key"
@@ -125,10 +121,10 @@ def dedup_incremental_pairs(
             if d
             else None
         )
-        cand_parts.append(probe_index(batches[d], index_rows, max_bucket))
+        cand_parts.append(probe_index(batches[d], index_rows))
     all_candidates = reduce(lambda x, y: x.unionByName(y), cand_parts)
     full_index = staged.select("doc_id", "band_id", "band_key")
-    kept = finalize_dedup_candidates(all_candidates, full_index, max_bucket)
+    kept = finalize_dedup_candidates(all_candidates, full_index)
     verified = jaccard_pairs(
         documents,
         kept,
@@ -168,7 +164,7 @@ banded AS (
 ),
 ok AS (
   SELECT band_id, band_key FROM banded GROUP BY band_id, band_key
-  HAVING COUNT(*) BETWEEN 2 AND {DEFAULT_MAX_BUCKET}
+  HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b

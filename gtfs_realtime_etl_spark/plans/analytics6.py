@@ -43,7 +43,7 @@ from gtfs_realtime_etl_spark.operators.bpe import (
     bpe_train,
     word_dictionary,
 )
-from gtfs_realtime_etl_spark.operators.diff import snapshot_diff
+from gtfs_realtime_etl_spark.operators.diff import row_hash60, snapshot_diff
 from gtfs_realtime_etl_spark.plans.base import (
     Q_DEDUP_NGRAM_JACCARD_SQL,
     Q_MINHASH_LSH_PAIRS_SQL,
@@ -571,12 +571,8 @@ ORDER BY method_a, method_b
 _CHK_MERSENNE61 = (1 << 61) - 1
 
 
-def _row_hash(canonical):
-    return F.conv(F.substring(F.md5(canonical), 1, 15), 16, 10).cast("long")
-
-
 def _chk_agg(df: DataFrame, name: str, canonical) -> DataFrame:
-    return df.select(_row_hash(canonical).alias("h")).agg(
+    return df.select(row_hash60(canonical).alias("h")).agg(
         F.lit(name).alias("table_name"),
         F.count(F.lit(1)).alias("n_rows"),
         F.pmod(F.sum(F.col("h").cast("decimal(38,0)")), F.lit(_CHK_MERSENNE61))

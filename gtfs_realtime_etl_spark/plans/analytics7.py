@@ -321,7 +321,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (indexed transform × suffix slice → flatten), so pair blowup is
     bounded by the basket size the schema itself bounds (a TPC-H order
     holds ≤ 7 lines; an open-world basket column would get the
-    DEFAULT_MAX_BUCKET cap the dedup family uses).  A naive self-join
+    MAX_BUCKET cap the dedup family uses).  A naive self-join
     on the order key shuffles the line table twice and rebuilds the
     same pairs from two sorted probes — measured 9 exchanges vs 5 for
     this shape on the same data.  Item frequencies and the basket

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.exprs import lit_double_matrix
 from gtfs_realtime_etl_spark.functions.stats import (
+    micro_bits,
     portable_int_log2_sql,
     portable_int_log2_staged,
 )
@@ -211,14 +212,11 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
 
-    def _micro(lg):
-        return F.floor(lg * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-
     dl = (
-        _micro(F.col("_lg_c1"))
-        + _micro(F.col("_lg_n2"))
-        - _micro(F.col("_lg_c2"))
-        - _micro(F.col("_lg_n1"))
+        micro_bits(F.col("_lg_c1"))
+        + micro_bits(F.col("_lg_n2"))
+        - micro_bits(F.col("_lg_c2"))
+        - micro_bits(F.col("_lg_n1"))
     )
     diff = F.col("c1").cast("decimal(20,0)") * F.col("n2").cast(
         "decimal(20,0)"

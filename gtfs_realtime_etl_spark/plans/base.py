@@ -59,7 +59,7 @@ from gtfs_realtime_etl_spark.operators.clusters import (
 )
 from gtfs_realtime_etl_spark.operators.decontam import contamination_pairs
 from gtfs_realtime_etl_spark.operators.dedup import (
-    DEFAULT_MAX_BUCKET,
+    MAX_BUCKET,
     exact_dedup,
     minhash_lsh_dedup,
     simhash_dedup,
@@ -1084,7 +1084,7 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Full-table decimal aggregation — the heavy map-side class that
     # justifies widening the narrow local scan (round-12 interleaved
     # A/B: 3.79 -> 1.78 s; no-op on production multi-file inputs).
-    lineitem = saturate_scan(spark, lineitem)
+    lineitem = saturate_scan(lineitem)
     return lineitem.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_items"),
         dsum(F.col("l_quantity")).alias("sum_qty"),
@@ -1231,7 +1231,7 @@ GROUP BY lang
 
 NEARDUP_COSINE = 0.8
 # Pair-join block cap: bounds per-label pair counts at MAX_BLOCK²/2
-# (same discipline as DEFAULT_MAX_BUCKET for MinHash/SimHash buckets).
+# (same discipline as MAX_BUCKET for MinHash/SimHash buckets).
 NEARDUP_MAX_BLOCK = 64
 
 
@@ -1247,7 +1247,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     ).withColumn("norm", l2_norm(F.col("vec")))
     # Deterministic block cap (same discipline as the MinHash/SimHash
-    # DEFAULT_MAX_BUCKET): only the first NEARDUP_MAX_BLOCK vectors per
+    # MAX_BUCKET): only the first NEARDUP_MAX_BLOCK vectors per
     # label (by vec_id) enter the pair join, so a block's pair count is
     # bounded by MAX_BLOCK²/2 no matter how large the label grows —
     # block-quadratic becomes block-bounded.  ``n_overflow`` reports the
@@ -1356,7 +1356,7 @@ FROM agg JOIN counts ON agg.label = counts.label
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    media = synthesize_media(spark, documents, modality="image")
+    media = synthesize_media(spark, documents)
     return media_stats(media)
 
 
@@ -1798,7 +1798,7 @@ banded AS (
 ),
 ok AS (
   SELECT band_id, band_key FROM banded GROUP BY band_id, band_key
-  HAVING COUNT(*) BETWEEN 2 AND {DEFAULT_MAX_BUCKET}
+  HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -2275,7 +2275,7 @@ banded AS (
 ),
 ok AS (
   SELECT band_id, segment FROM banded GROUP BY band_id, segment
-  HAVING COUNT(*) BETWEEN 2 AND {DEFAULT_MAX_BUCKET}
+  HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -2496,7 +2496,7 @@ Q_ANN_IVF_TOPK_SQL = _ann_ivf_sql()
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    media = synthesize_media(spark, documents, modality="image")
+    media = synthesize_media(spark, documents)
     feats = extract_features(media)
     return feats.select(
         "media_id",

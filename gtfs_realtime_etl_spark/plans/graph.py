@@ -37,7 +37,7 @@ from gtfs_realtime_etl_spark.functions.hashing import (
 )
 from gtfs_realtime_etl_spark.operators.clusters import connected_components
 from gtfs_realtime_etl_spark.operators.dedup import (
-    DEFAULT_MAX_BUCKET,
+    MAX_BUCKET,
     jaccard_pairs,
     winnow_candidates,
 )
@@ -370,7 +370,7 @@ w AS (
 fp AS (SELECT doc_id, UNNEST(fps) AS fp FROM w),
 ok AS (
   SELECT fp FROM fp GROUP BY fp
-  HAVING COUNT(*) BETWEEN 2 AND {DEFAULT_MAX_BUCKET}
+  HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
 ),
 cand AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b

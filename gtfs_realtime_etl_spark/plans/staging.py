@@ -66,8 +66,8 @@ def stage_to_tmp_partitioned(
     so consumers that filter on that column read back with partition
     pruning — ONE write job stages what would otherwise be one staged
     write per partition value (round-12: dedup_incremental's per-batch
-    band frames — one signature pass over the corpus instead of
-    ``n_batches`` passes, identical rows)."""
+    band frames — one signature pass over the corpus instead of one
+    per arrival batch, identical rows)."""
     return _stage(df, name, partition_col=partition_col)
 
 

@@ -6,9 +6,10 @@ which embeds the spec'd ``geo`` key-value metadata in the parquet footer
 so external geo readers (GDAL/GeoPandas/DuckDB-spatial) recognize the
 geometry column.  Spark's parquet writer has no hook for custom footer
 key-values, so the engine provides the metadata as a post-pass over
-written files: :func:`stamp_geoparquet` rewrites each footer via pyarrow
-(cheapest as part of the compaction rewrite, which re-encodes files
-anyway).  The geometry bytes themselves are already byte-identical WKB
+written files: :func:`stamp_geoparquet` rewrites each footer via pyarrow.
+Compaction (streaming/compaction.py) runs it on every file it writes,
+since it re-encodes those files anyway; the hot raw zone is never
+stamped.  The geometry bytes themselves are already byte-identical WKB
 (functions/geo.py::point_wkb), so stamped files are valid GeoParquet
 1.1.0 point datasets.
 
@@ -63,28 +64,23 @@ def geo_metadata(bbox: list[float] | None = None) -> dict:
     }
 
 
-def stamp_geoparquet(path: str, compression: str = "zstd") -> int:
+def stamp_geoparquet(path: str, compression: str) -> int:
     """Attach the ``geo`` footer metadata to every parquet file under
-    ``path`` (recursively; hive partition dirs welcome).  Returns the
-    number of files stamped.  Each file's dataset-level bbox is computed
-    from its own bbox covering column when present.
+    ``path`` (recursively; hive partition dirs welcome), rewriting each
+    with ``compression``.  Returns the number of files stamped.  Each
+    file's dataset-level bbox is computed from its own bbox covering
+    column when present.
 
     This is a per-file rewrite (parquet footers are not editable in
-    place) — run it on the compacted zone, whose files are being
-    rewritten anyway, not on the hot raw zone.
+    place), which is why only compaction, whose files are being
+    rewritten anyway, runs it.
     """
-    files = sorted(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    return stamp_geoparquet_files(files, compression)
-
-
-def stamp_geoparquet_files(files: list[str], compression: str = "zstd") -> int:
-    """Stamp an explicit file list (the per-tick raw-zone path: only the
-    files a micro-batch just appended, never the whole lake)."""
     import pyarrow.compute as pc  # local import: cold path
     import pyarrow.parquet as pq
 
+    files = sorted(
+        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    )
     for f in files:
         table = pq.read_table(f)
         bbox = None

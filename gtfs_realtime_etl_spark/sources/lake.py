@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.functions.geo import wkb_point_lonlat
 from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE, REFERENCE_LAKE
-from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet_files
 
 PARTITION_COLS = ("year", "month", "day")
 
@@ -45,42 +44,19 @@ def with_partition_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def write_locations_batch(df: DataFrame, root: str, geoparquet: bool = False) -> None:
+def write_locations_batch(df: DataFrame, root: str) -> None:
     """Append one micro-batch (or any enriched positions DataFrame) to the
     hive-partitioned lake.  Raw zone uses snappy (hot tier, reference
     parity handler.py:150); the compacted zone uses zstd (see
     ``streaming/compaction.py``).
 
-    ``geoparquet=True`` stamps the spec'd ``geo`` footer onto the files
-    THIS call wrote (reference parity: every per-tick file carries the
-    GeoParquet footer, etl/runtime/handler.py:146-154, so external geo
-    readers recognize the raw zone too).  Only the batch's touched
-    partitions are listed — never the lake — and only new files are
-    rewritten; cost is O(tick), paid per micro-batch, so it is opt-in
-    (default off keeps the hot append untouched; the compaction rewrite
-    stamps for free either way)."""
-    if geoparquet and "geometry" in df.columns:
-        import glob as _glob
-        import os as _os
-
-        part_rows = df.select(*PARTITION_COLS).distinct().collect()
-        part_dirs = [
-            _os.path.join(
-                root, f"year={r.year}", f"month={r.month}", f"day={r.day}"
-            )
-            for r in part_rows
-        ]
-        before = {
-            f for d in part_dirs for f in _glob.glob(_os.path.join(d, "*.parquet"))
-        }
+    The append is plain parquet.  The reference stamps the GeoParquet
+    footer on every per-tick file (etl/runtime/handler.py:146-154); here
+    the footer is stamped once, by the compaction rewrite, so the hot
+    append never re-reads or rewrites what it just wrote."""
     df.write.mode("append").partitionBy(*PARTITION_COLS).option(
         "compression", RAW_COMPRESSION
     ).parquet(root)
-    if geoparquet and "geometry" in df.columns:
-        after = {
-            f for d in part_dirs for f in _glob.glob(_os.path.join(d, "*.parquet"))
-        }
-        stamp_geoparquet_files(sorted(after - before), compression=RAW_COMPRESSION)
 
 
 def read_locations(spark: SparkSession, root: str) -> DataFrame:
@@ -133,38 +109,22 @@ def read_reference_lake(spark: SparkSession, root: str) -> DataFrame:
 
 
 def day_slice(
-    spark: SparkSession,
-    root: str,
-    year: int,
-    month: int,
-    day: int,
-    columns: tuple[str, ...] | None = None,
+    spark: SparkSession, root: str, year: int, month: int, day: int
 ) -> DataFrame:
     """One day's partition, pruned at plan time (the reference's
     secondary read path: visualize_locations.ipynb:46-48 reads a single
     ``year=/month=/day=`` glob).  Partition filters on all three keys
-    mean the file index lists exactly that day's files — never the lake.
-    ``columns`` prunes the parquet scan to the visualization columns."""
-    df = read_locations(spark, root).filter(
+    mean the file index lists exactly that day's files — never the lake."""
+    return read_locations(spark, root).filter(
         (F.col("year") == year) & (F.col("month") == month) & (F.col("day") == day)
     )
-    if columns:
-        df = df.select(*columns)
-    return df
 
 
-def day_slice_arrow(
-    spark: SparkSession,
-    root: str,
-    year: int,
-    month: int,
-    day: int,
-    columns: tuple[str, ...] | None = None,
-):
+def day_slice_arrow(spark: SparkSession, root: str, year: int, month: int, day: int):
     """The visualization handoff: one pruned day as a pyarrow Table
     (visualize_locations.ipynb:97-129 hands a day's points to the GPU
     layer as Arrow).  ``DataFrame.toArrow()`` moves the partition
     driver-side in Arrow IPC batches — zero row-at-a-time conversion.
     Driver-side by design: a day slice is the human-scale end of the
     funnel, not a distributed stage."""
-    return day_slice(spark, root, year, month, day, columns).toArrow()
+    return day_slice(spark, root, year, month, day).toArrow()

@@ -50,32 +50,29 @@ def load_testdata(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFra
     # tables therefore stay narrow at the loader; the few proven heavy
     # consumers widen at the point of use via saturate_scan below.
     heavy = {"documents", "embeddings"}
-    parallelism = spark.sparkContext.defaultParallelism
     out = []
     for t in names:
         df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
         if t == "events":
             df = _normalize_event_ts(df)
         if t in heavy:
-            try:
-                n_files = len(df.inputFiles())
-            except Exception:  # non-file plans on some backends
-                n_files = 0
-            if n_files < parallelism:
-                df = df.repartition(parallelism)
+            df = saturate_scan(df)
         out.append(df)
     return out
 
 
-def saturate_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
+def saturate_scan(df: DataFrame) -> DataFrame:
     """Spread a narrow scan across the cluster for a HEAVY map-side
-    consumer (full-table decimal aggregation, ×B expansion explode).
-
-    Same gate as the loader's documents/embeddings widening (the
-    operators/dedup.py::_saturate rule): only when the scan cannot
-    feed the configured parallelism by itself (fewer input files than
+    consumer (per-row Arrow kernels, full-table decimal aggregation,
+    ×B expansion explode): repartition to ``defaultParallelism`` only
+    when the scan cannot feed it by itself (fewer input files than
     cores).  On production multi-file inputs the condition is false
-    and no exchange is inserted.  Apply ONLY where the downstream
+    and no exchange is inserted.
+
+    The gate reads ``inputFiles()`` — plan-time metadata that is
+    Spark-Connect-safe — never ``df.rdd``.  A non-file source (an
+    in-memory frame) reports zero files and is repartitioned, the
+    conservative choice at that size.  Apply ONLY where the downstream
     map work dominates the added exchange + per-stage task overhead —
     round-12 measurement: worth ~2× on rollup-style aggregation and
     the bootstrap ×32 explode, a 3–9× LOSS on multi-stage plans of
@@ -84,7 +81,7 @@ def saturate_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
         n_files = len(df.inputFiles())
     except Exception:  # non-file plans on some backends
         n_files = 0
-    parallelism = spark.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if n_files < parallelism:
         return df.repartition(parallelism)
     return df

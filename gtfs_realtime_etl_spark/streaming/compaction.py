@@ -12,6 +12,11 @@ Spark's file index does discovery; no schema pinning workaround — the
 lake writes uniform schemas.  ``preserve_order`` of the reference is
 upgraded to an explicit ``sortWithinPartitions(timestamp)``, which also
 gives parquet min/max row-group statistics their pruning power.
+
+The compacted files are GeoParquet like the reference's (its writer
+emits the ``geo`` footer, etl/runtime/handler.py:146-152): the rewrite
+stamps the footer onto every file it writes (sources/geoparquet.py).
+The hot raw zone is never stamped.
 """
 
 from __future__ import annotations
@@ -27,6 +32,9 @@ from gtfs_realtime_etl_spark.sources.geoparquet import stamp_geoparquet
 MAX_RECORDS_PER_FILE = 122_880
 #: Compacted-zone codec (cold tier; the raw zone appends snappy).
 COMPRESSION = "zstd"
+#: Closed days/months each scheduled run compacts (the reference's
+#: ``duration``).
+CLOSED_PERIODS = 1
 
 
 def dates_in_range(
@@ -37,8 +45,13 @@ def dates_in_range(
 ) -> list[dt.date]:
     """Enumerate the last ``duration`` closed days/months (the current
     one excluded) in the agency's ``timezone`` (reference driver
-    semantics, handler.py:150-167)."""
-    now = now or dt.datetime.now(ZoneInfo(timezone))
+    semantics, handler.py:150-167).  An aware ``now`` is converted to
+    ``timezone``; a naive one is read as the agency's wall clock."""
+    tz = ZoneInfo(timezone)
+    if now is None:
+        now = dt.datetime.now(tz)
+    elif now.tzinfo is not None:
+        now = now.astimezone(tz)
     today = now.date()
     out: list[dt.date] = []
     if period == "day":
@@ -64,21 +77,16 @@ def compact_partition(
     year: int,
     month: int,
     day: int | None = None,
-    geoparquet: bool = False,
 ) -> int:
     """Rewrite one partition (day, or whole month when ``day`` is None)
     from the raw zone into the compacted zone: one zstd file per
     partition (more only past ``MAX_RECORDS_PER_FILE`` rows), sorted by
-    ``timestamp``.  Returns rows written.
+    ``timestamp``, stamped with the GeoParquet ``geo`` footer when the
+    rows carry a ``geometry`` column.  Returns rows written.
 
     Partition-scoped read → partition pruning keeps this O(partition),
     never O(lake).  The rewrite itself is shuffle-free: coalesce only
     narrows parallelism, and the sort is within partitions.
-
-    ``geoparquet=True`` stamps the spec'd ``geo`` footer metadata on the
-    compacted files (S5 external-reader parity: the reference's writer
-    emits GeoParquet, handler.py:146-152) — done here because the
-    compaction rewrite is the natural place to pay a footer rewrite.
     """
     part = f"year={year}/month={month}"
     if day is not None:
@@ -95,8 +103,8 @@ def compact_partition(
         .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
         .parquet(f"{target_root}/{part}")
     )
-    if geoparquet and "geometry" in df.columns:
-        stamp_geoparquet(f"{target_root}/{part}", compression=COMPRESSION)
+    if "geometry" in df.columns:
+        stamp_geoparquet(f"{target_root}/{part}", COMPRESSION)
     return n
 
 
@@ -105,16 +113,15 @@ def compact_partitions(
     source_root: str,
     target_root: str,
     timezone: str,
-    duration: int = 1,
     period: str = "day",
     now: dt.datetime | None = None,
 ) -> dict[str, int]:
-    """The scheduled job body: compact the last N closed day/month
-    partitions, dated in the agency's ``timezone`` (daily 01:00 /
-    monthly day-1 crons in the reference,
+    """The scheduled job body: compact the last :data:`CLOSED_PERIODS`
+    closed day/month partitions, dated in the agency's ``timezone``
+    (daily 01:00 / monthly day-1 crons in the reference,
     compaction/infrastructure/construct.py:102-140)."""
     written: dict[str, int] = {}
-    for d in dates_in_range(duration, timezone, period, now):
+    for d in dates_in_range(CLOSED_PERIODS, timezone, period, now):
         day = d.day if period == "day" else None
         try:
             n = compact_partition(spark, source_root, target_root, d.year, d.month, day)

@@ -58,7 +58,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gtfs_realtime_etl_spark.operators.dedup import (
-    DEFAULT_MAX_BUCKET,
     finalize_dedup_candidates,
     jaccard_pairs,
     lsh_band_rows,
@@ -67,14 +66,11 @@ from gtfs_realtime_etl_spark.operators.dedup import (
 from gtfs_realtime_etl_spark.streaming.ingest import once_per_batch, start_with_trigger
 
 _INDEX_COLS = ("doc_id", "band_id", "band_key")
+#: Processing-time trigger interval of the fold stream.
+TRIGGER_SECONDS = 30
 
 
-def make_dedup_fold_sink(
-    index_root: str,
-    cand_root: str,
-    checkpoint_dir: str,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-):
+def make_dedup_fold_sink(index_root: str, cand_root: str, checkpoint_dir: str):
     """foreachBatch function: probe the batch against the standing
     index, append candidates + band rows (once per batch id, markers
     under ``<checkpoint>/fold_commits/``)."""
@@ -101,7 +97,7 @@ def make_dedup_fold_sink(
                 .where(F.col("batch_id") != batch_id)
                 .select(*_INDEX_COLS)
             )
-        cands = probe_index(new_rows, index_rows, max_bucket)
+        cands = probe_index(new_rows, index_rows)
         cands.write.mode("append").parquet(cand_root)
 
         sigs = new_rows.withColumn("batch_id", F.lit(batch_id))
@@ -122,19 +118,15 @@ def start_dedup_fold_stream(
     index_root: str,
     cand_root: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> StreamingQuery:
-    """Attach the fold sink to a streaming document source (a 30 s
-    processing-time trigger unless ``available_now``)."""
+    """Attach the fold sink to a streaming document source, a
+    micro-batch every :data:`TRIGGER_SECONDS`."""
     writer = (
         docs_stream.writeStream.outputMode("append")
         .option("checkpointLocation", f"{checkpoint_dir}/engine")
-        .foreachBatch(
-            make_dedup_fold_sink(index_root, cand_root, checkpoint_dir, max_bucket)
-        )
+        .foreachBatch(make_dedup_fold_sink(index_root, cand_root, checkpoint_dir))
     )
-    return start_with_trigger(writer, 30, available_now)
+    return start_with_trigger(writer, TRIGGER_SECONDS, available_now=False)
 
 
 def finalize_fold(
@@ -142,7 +134,6 @@ def finalize_fold(
     documents: DataFrame,
     index_root: str,
     cand_root: str,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """The merge step: accumulated candidates re-filtered against FINAL
     bucket sizes, then exact shingle-Jaccard verification — the same
@@ -153,7 +144,6 @@ def finalize_fold(
     kept = finalize_dedup_candidates(
         spark.read.parquet(cand_root),
         spark.read.parquet(index_root).select(*_INDEX_COLS),
-        max_bucket,
     )
     verified = jaccard_pairs(documents, kept, threshold=0.35)
     return verified.select(

@@ -22,17 +22,10 @@ from pyspark.sql import functions as F
 
 
 def enrich_stream(
-    stream: DataFrame,
-    static: DataFrame,
-    on: list[str] | str,
-    how: str = "left",
+    stream: DataFrame, static: DataFrame, on: list[str] | str
 ) -> DataFrame:
-    """Join a streaming DataFrame against a broadcast static dimension.
-
-    ``how`` is restricted to the stream-static-legal joins where the
-    stream side is preserved (inner / left / left_semi / left_anti) —
-    a right/full join over an unbounded stream is not defined."""
-    legal = {"inner", "left", "left_outer", "left_semi", "left_anti"}
-    if how not in legal:
-        raise ValueError(f"stream-static join type must be one of {sorted(legal)}")
-    return stream.join(F.broadcast(static), on, how)
+    """Left-join a streaming DataFrame against a broadcast static
+    dimension: every stream row is kept, with nulls where the dimension
+    has no match (a right/full join over an unbounded stream is not
+    defined)."""
+    return stream.join(F.broadcast(static), on, "left")

@@ -4,27 +4,27 @@
 A continuously-ingesting corpus wants its frequent-token profile (for
 stopword drift, boilerplate floods, template storms) WITHOUT a
 vocabulary-sized state store: per-token counting state would grow with
-the vocabulary, but a Misra-Gries summary is a FIXED ``capacity``
-counters per group — O(groups x capacity) state forever, no watermark
+the vocabulary, but a Misra-Gries summary is a FIXED :data:`CAPACITY`
+counters per group — O(groups x CAPACITY) state forever, no watermark
 needed, while still guaranteeing
 
     est(t) <= exact(t) <= est(t) + dec_total
 
 for every token the group has ever seen (mergeable-summaries bound,
-dec_total <= N_group/(capacity+1)).
+dec_total <= N_group/(CAPACITY+1)).
 
 Semantics: keyed ``applyInPandasWithState`` (see streaming/budget.py
 for why PySpark 4's transformWithStateInPandas is unavailable in this
 container).  Each micro-batch folds the batch's token counts into the
 group's summary (pre-aggregated with a vectorized value_counts — the
 Python loop touches counters, not token occurrences) and emits the
-group's current top-``emit_k`` snapshot; ``n_seen`` on every row is
+group's current top-:data:`EMIT_K` snapshot; ``n_seen`` on every row is
 the group's lifetime token count, so downstream consumers (and tests)
 can pick the latest snapshot per group without event-time bookkeeping.
 
 Scale shape: one ``groupBy(group)`` exchange per micro-batch — the
 single shuffle any keyed stateful op pays; emitted rows are
-O(groups x emit_k) per batch.
+O(groups x EMIT_K) per batch.
 
 Reference scope: the reference has no streaming-sketch surface; this
 is a driver-mandated LLM-pipeline extension (SURVEY.md §7 step 7).
@@ -61,6 +61,11 @@ HH_OUT_SCHEMA = StructType(
     ]
 )
 
+#: Counters per group summary (the batch sketch's capacity).
+CAPACITY = DEFAULT_CAPACITY
+#: Top estimates each snapshot emits per group.
+EMIT_K = 10
+
 _HH_STATE = StructType(
     [
         StructField("toks", ArrayType(StringType())),
@@ -71,18 +76,15 @@ _HH_STATE = StructType(
 )
 
 
-def streaming_heavy_hitters(
-    tokens: DataFrame,
-    capacity: int = DEFAULT_CAPACITY,
-    emit_k: int = 10,
-) -> DataFrame:
-    """Per-group streaming Misra-Gries top-``emit_k`` snapshots.
+def streaming_heavy_hitters(tokens: DataFrame) -> DataFrame:
+    """Per-group streaming Misra-Gries top-:data:`EMIT_K` snapshots of
+    :data:`CAPACITY`-counter summaries (both read when the stream is
+    built).
 
     ``tokens`` needs ``source`` and ``token`` columns.  Every micro-batch
     emits each updated group's current top estimates with the
     theorem-backed upper bound ``est_upper = est + dec_total``."""
-    cap = int(capacity)
-    k = int(emit_k)
+    cap, k = CAPACITY, EMIT_K
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -57,6 +57,9 @@ from gtfs_realtime_etl_spark.sources.lake import write_locations_batch
 #: How late (event time) a repeated (vehicle_id, timestamp) report may
 #: arrive and still be dropped; also bounds the streaming dedup state.
 DEDUP_WATERMARK = "10 minutes"
+#: The quarantine's processing-time bound on a payload's age: the
+#: reference DLQ's ``maximum_event_age`` (etl/infrastructure/construct.py:196-208).
+MAX_EVENT_AGE_MINUTES = 15
 
 
 def feed_pipeline(frames: DataFrame) -> DataFrame:
@@ -137,16 +140,12 @@ def start_with_trigger(
     return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
 
 
-def make_idempotent_lake_sink(
-    lake_root: str, checkpoint_dir: str, geoparquet: bool = False
-):
+def make_idempotent_lake_sink(lake_root: str, checkpoint_dir: str):
     """foreachBatch function appending into the hive-partitioned lake,
     once per batch id (markers under ``<checkpoint>/lake_commits/``)."""
     return once_per_batch(
         f"{checkpoint_dir}/lake_commits",
-        lambda batch_df, _: write_locations_batch(
-            batch_df, lake_root, geoparquet=geoparquet
-        ),
+        lambda batch_df, _: write_locations_batch(batch_df, lake_root),
     )
 
 
@@ -156,14 +155,13 @@ def _start_lake_sink(
     checkpoint_dir: str,
     trigger_seconds: int,
     available_now: bool,
-    geoparquet: bool = False,
 ) -> StreamingQuery:
     """Common tail of every ingest stream: idempotent foreachBatch append
     into the hive-partitioned lake."""
     writer = (
         enriched.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(make_idempotent_lake_sink(lake_root, checkpoint_dir, geoparquet))
+        .foreachBatch(make_idempotent_lake_sink(lake_root, checkpoint_dir))
     )
     return start_with_trigger(writer, trigger_seconds, available_now)
 
@@ -186,7 +184,6 @@ def start_feed_file_stream(
     checkpoint_dir: str,
     trigger_seconds: int = 30,
     available_now: bool = False,
-    geoparquet: bool = False,
 ) -> StreamingQuery:
     """Stream feed payload files (one protobuf FeedMessage per file —
     the shape the reference's poller writes) into the lake.
@@ -199,22 +196,17 @@ def start_feed_file_stream(
     frames = _feed_files(spark, feed_dir).select(F.col("content").alias("payload"))
     enriched = feed_pipeline(frames)
     return _start_lake_sink(
-        enriched, lake_root, checkpoint_dir, trigger_seconds, available_now,
-        geoparquet=geoparquet,
+        enriched, lake_root, checkpoint_dir, trigger_seconds, available_now
     )
 
 
-def with_max_event_age(frames: DataFrame, minutes: int | None) -> DataFrame:
-    """Drop feed files older than ``minutes`` at processing time — the
-    reference's DLQ ``maximum_event_age=15 min`` bound
-    (etl/infrastructure/construct.py:196-208): a payload that sat
-    unprocessed past the bound is abandoned rather than quarantined
-    forever.  Applies to any binaryFile-shaped frame source (needs the
-    ``modificationTime`` column); ``minutes=None`` disables the bound.
+def with_max_event_age(frames: DataFrame, minutes: int) -> DataFrame:
+    """Drop feed files older than ``minutes`` at processing time: a
+    payload that sat unprocessed past the bound is abandoned rather
+    than quarantined forever.  Applies to any binaryFile-shaped frame
+    source (needs the ``modificationTime`` column).
     ``current_timestamp()`` is fixed per micro-batch, so the cutoff is
     consistent within a batch."""
-    if minutes is None:
-        return frames
     return frames.filter(
         F.col("modificationTime")
         >= F.current_timestamp() - F.expr(f"INTERVAL {int(minutes)} MINUTES")
@@ -228,17 +220,15 @@ def start_feed_quarantine_stream(
     checkpoint_dir: str,
     trigger_seconds: int = 30,
     available_now: bool = False,
-    max_event_age_minutes: int | None = 15,
 ) -> StreamingQuery:
     """Side-channel query: payloads the decoder rejects land in a
     parquet quarantine with their failure reason, while the main ingest
     keeps flowing — the reference's DLQ (construct.py:186) as a second
     reader over the same source (each query has its own checkpoint, so
-    delivery guarantees are independent).  ``max_event_age_minutes``
-    mirrors the reference's 15-minute DLQ event-age bound (see
-    :func:`with_max_event_age`); pass ``None`` to quarantine
-    regardless of age."""
-    raw = with_max_event_age(_feed_files(spark, feed_dir), max_event_age_minutes)
+    delivery guarantees are independent).  Payloads older than
+    :data:`MAX_EVENT_AGE_MINUTES` are abandoned (see
+    :func:`with_max_event_age`)."""
+    raw = with_max_event_age(_feed_files(spark, feed_dir), MAX_EVENT_AGE_MINUTES)
     bad = quarantine_feed_frames(raw.select(F.col("content").alias("payload")))
     writer = (
         bad.writeStream.format("parquet")

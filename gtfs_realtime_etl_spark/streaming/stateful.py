@@ -7,7 +7,7 @@ API so the state machine is explicit and testable:
 
 - :func:`streaming_sessionize` — gap-based session windows per key,
   emitting one row per CLOSED session (a session closes when the gap
-  since its last event exceeds ``gap_seconds``, decided by the event
+  since its last event exceeds :data:`GAP_SECONDS`, decided by the event
   stream itself or by watermark-driven timeout for idle keys).
 - :func:`streaming_vehicle_state` — per-vehicle latest-state tracker
   (the streaming form of the W1 "latest ping wins" dedup): keeps the
@@ -58,6 +58,12 @@ _SESSION_STATE_SCHEMA = StructType(
 )
 
 
+#: Event-time gap (seconds) that closes a session.
+GAP_SECONDS = 1800
+#: Processing time a key may sit idle before its open session closes.
+IDLE_TIMEOUT_MS = 1_800_000
+
+
 def _close(key: str, start: int, last: int, n: int) -> pd.DataFrame:
     return pd.DataFrame(
         {
@@ -70,23 +76,18 @@ def _close(key: str, start: int, last: int, n: int) -> pd.DataFrame:
     )
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
+def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Gap-based session windows per ``user_id`` over a stream; emits
     closed sessions.
 
     ``events`` must be a streaming DataFrame with an event-time
     timestamp column ``event_time`` (used for a 30-minute watermark)
     and an epoch-seconds ``ts_sec``.  Sessions close when an event for
-    the key arrives more than ``gap_seconds`` later, or when the
-    processing-time timeout fires for an idle key (idle > gap).  ``idle_timeout_ms``
-    overrides the timeout (default ``gap_seconds * 1000``); tests pin it
-    high so slow micro-batches can't close open sessions early.
+    the key arrives more than :data:`GAP_SECONDS` later, or when the
+    processing-time timeout (:data:`IDLE_TIMEOUT_MS`) fires for an idle
+    key.  Both are read when the stream is built.
     """
-    timeout_ms = gap_seconds * 1000 if idle_timeout_ms is None else idle_timeout_ms
+    gap_seconds, timeout_ms = GAP_SECONDS, IDLE_TIMEOUT_MS
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -42,6 +42,9 @@ from gtfs_realtime_etl_spark.operators.cdc import merge_upsert
 
 #: Committed versions the sink retains; older ones are collected.
 KEEP_VERSIONS = 2
+#: Boolean tombstone column every CDC batch carries; a winning row with
+#: it set is deleted from the view.
+DELETE_COL = "deleted"
 
 
 def _jpath(spark: SparkSession, path: str):
@@ -74,14 +77,10 @@ def read_upsert_view(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(f"{root}/{v}")
 
 
-def make_upsert_view_sink(
-    root: str,
-    keys: Sequence[str],
-    version_col: str,
-    delete_col: str | None = None,
-):
+def make_upsert_view_sink(root: str, keys: Sequence[str], version_col: str):
     """foreachBatch function maintaining a keyed snapshot under
-    ``root`` from CDC micro-batches.  Idempotent under batch retry;
+    ``root`` from CDC micro-batches (tombstones in :data:`DELETE_COL`,
+    which the snapshot does not keep).  Idempotent under batch retry;
     crash-safe by construction (append-only commits — see module
     docstring)."""
 
@@ -94,7 +93,7 @@ def make_upsert_view_sink(
         if batch_id in committed:  # retried batch: already live
             return
 
-        cols = [c for c in batch_df.columns if c != delete_col]
+        cols = [c for c in batch_df.columns if c != DELETE_COL]
         if committed:
             base = spark.read.parquet(f"{root}/v_{committed[-1]}").select(*cols)
         else:
@@ -102,7 +101,7 @@ def make_upsert_view_sink(
 
         merged = merge_upsert(
             base, batch_df, keys=keys, version_col=version_col,
-            delete_col=delete_col,
+            delete_col=DELETE_COL,
         )
         merged.write.mode("overwrite").parquet(f"{root}/v_{batch_id}")
 

@@ -20,49 +20,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: The grouping key and the event-time column of a feed's positions.
+#: The grouping key, the event-time column and the averaged metric of a
+#: feed's positions.
 KEY_COL = "route_id"
 TS_COL = "timestamp"
+VALUE_COL = "speed"
+#: Event-time watermark of the streaming forms and the session gap
+#: (read when the frame is built).
+WATERMARK = "10 minutes"
+SESSION_GAP = "5 minutes"
 
 
-def windowed_counts(
-    events: DataFrame,
-    watermark: str = "10 minutes",
-    agg_col: str | None = None,
-) -> DataFrame:
-    """Per-(5-minute tumbling event-time window, key) counts, optionally
-    with a mean over ``agg_col``.  Streaming inputs get the watermark
-    (late rows beyond it are dropped and state is evicted); batch inputs
-    run the identical aggregation over everything — the backfill twin."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Per-(5-minute tumbling event-time window, key) counts and mean
+    :data:`VALUE_COL`.  Streaming inputs get the watermark (late rows
+    beyond it are dropped and state is evicted); batch inputs run the
+    identical aggregation over everything — the backfill twin."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(TS_COL, watermark)
+        src = events.withWatermark(TS_COL, WATERMARK)
     win = F.window(F.col(TS_COL), "5 minutes")
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    if agg_col is not None:
-        aggs.append(F.avg(agg_col).alias(f"avg_{agg_col}"))
     return (
         src.groupBy(win.alias("win"), F.col(KEY_COL))
-        .agg(*aggs)
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.avg(VALUE_COL).alias(f"avg_{VALUE_COL}"),
+        )
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
             KEY_COL,
             "n_events",
-            *([f"avg_{agg_col}"] if agg_col is not None else []),
+            f"avg_{VALUE_COL}",
         )
     )
 
 
-def session_windowed_counts(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def session_windowed_counts(events: DataFrame) -> DataFrame:
     """Native gap-based session windows (``F.session_window``): events
-    of a key closer than ``gap`` merge into one session; the watermark
-    closes (and evicts) a session once no more in-gap events can
-    arrive.
+    of a key closer than :data:`SESSION_GAP` merge into one session; the
+    watermark closes (and evicts) a session once no more in-gap events
+    can arrive.
 
     Complements streaming/stateful.streaming_sessionize, which builds
     the same sessions with applyInPandasWithState: use THIS when
@@ -72,10 +70,11 @@ def session_windowed_counts(
     the identical grouping — the backfill twin."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(TS_COL, watermark)
+        src = events.withWatermark(TS_COL, WATERMARK)
     return (
         src.groupBy(
-            F.session_window(F.col(TS_COL), gap).alias("win"), F.col(KEY_COL)
+            F.session_window(F.col(TS_COL), SESSION_GAP).alias("win"),
+            F.col(KEY_COL),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import sys
 import time
@@ -201,20 +200,24 @@ def probe_pair_join(docs, which: str, mode: str) -> dict:
     )
 
     if which == "containment":
-        num, den, fn = CONT_NUM, CONT_DEN, containment_pairs
+        num, den = CONT_NUM, CONT_DEN
     else:
         from gtfs_realtime_etl_spark.plans.analytics12 import (
             SETSIM_NUM,
             SETSIM_DEN,
         )
 
-        num, den, fn = SETSIM_NUM, SETSIM_DEN, setsim_pairs
+        num, den = SETSIM_NUM, SETSIM_DEN
     out = candidate_bound(docs, mode, num, den)
     if out["cand_bound"] > CAND_BUDGET:
         out.update(wall_s=None, pairs=None, skipped="cand_bound over budget")
         return out
     t0 = time.perf_counter()
-    out["pairs"] = fn(docs, token_mode=mode).count()
+    if which == "containment":
+        pairs = containment_pairs(docs, token_mode=mode)
+    else:
+        pairs = setsim_pairs(docs, token_mode=mode)
+    out["pairs"] = pairs.count()
     out["wall_s"] = round(time.perf_counter() - t0, 2)
     return out
 
@@ -223,7 +226,7 @@ def probe_dedup_incremental(docs) -> dict:
     from pyspark.sql import functions as F
 
     from gtfs_realtime_etl_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
+        MAX_BUCKET,
         lsh_band_rows,
     )
     from gtfs_realtime_etl_spark.plans.analytics23 import (
@@ -242,13 +245,13 @@ def probe_dedup_incremental(docs) -> dict:
         F.max("cnt").alias("max_bucket"),
         F.sum(
             F.when(
-                (F.col("cnt") >= 2) & (F.col("cnt") <= DEFAULT_MAX_BUCKET),
+                (F.col("cnt") >= 2) & (F.col("cnt") <= MAX_BUCKET),
                 F.col("cnt") * (F.col("cnt") - 1) / 2,
             )
         ).alias("cand_pairs_capped"),
         F.sum(F.col("cnt") * (F.col("cnt") - 1) / 2).alias("cand_pairs_uncapped"),
         F.sum(
-            F.when(F.col("cnt") > DEFAULT_MAX_BUCKET, 1).otherwise(0)
+            F.when(F.col("cnt") > MAX_BUCKET, 1).otherwise(0)
         ).alias("buckets_over_cap"),
     ).collect()[0]
     return {

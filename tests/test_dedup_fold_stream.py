@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gtfs_realtime_etl_spark.operators import dedup
 from gtfs_realtime_etl_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_lsh_dedup,
@@ -27,6 +28,7 @@ from gtfs_realtime_etl_spark.plans.analytics23 import (
     dedup_incremental_pairs,
 )
 from gtfs_realtime_etl_spark.sources.testdata import load_testdata
+from gtfs_realtime_etl_spark.streaming import dedup_fold
 from gtfs_realtime_etl_spark.streaming.dedup_fold import (
     finalize_fold,
     make_dedup_fold_sink,
@@ -52,14 +54,19 @@ def _docs(spark):
     )
 
 
-def _one_shot(documents, max_bucket):
+@pytest.fixture()
+def cap(monkeypatch):
+    """Set the dedup bucket cap every fold step reads at call time."""
+    return lambda value: monkeypatch.setattr(dedup, "MAX_BUCKET", value)
+
+
+def _one_shot(documents):
     return minhash_lsh_dedup(
         documents,
         num_hashes=DEDUP_INC_NUM,
         bands=DEDUP_INC_BANDS,
         shingle_k=DEDUP_INC_K,
         threshold=DEDUP_INC_THRESHOLD,
-        max_bucket=max_bucket,
     ).select(
         "id_a",
         "id_b",
@@ -83,9 +90,20 @@ def _write_slices(rows, src_dir, n_slices):
         pq.write_table(tbl, os.path.join(src_dir, f"slice_{i}.parquet"))
 
 
-def _stream_slices(spark, tmp_path, rows, max_bucket, n_slices=3):
+def _drain(q):
+    """Run the fold stream until every landed file is folded, then stop
+    it (the stream has no drain-and-stop trigger)."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert q.exception() is None
+
+
+def _stream_slices(spark, tmp_path, rows, monkeypatch, n_slices=3):
     """Land ``rows`` as ``n_slices`` files and fold them through the
     stream, one file per micro-batch."""
+    monkeypatch.setattr(dedup_fold, "TRIGGER_SECONDS", 1)
     src = str(tmp_path / "incoming")
     _write_slices(rows, src, n_slices=n_slices)
     stream = (
@@ -98,15 +116,20 @@ def _stream_slices(spark, tmp_path, rows, max_bucket, n_slices=3):
         index_root=str(tmp_path / "index"),
         cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        max_bucket=max_bucket,
     )
-    q.awaitTermination(300)
+    _drain(q)
 
 
-def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
+def test_stream_fold_equals_one_shot_under_binding_cap(
+    spark, tmp_path, monkeypatch, cap
+):
     documents = _docs(spark)
-    _stream_slices(spark, tmp_path, documents.orderBy("doc_id").collect(), CAP)
+    # The cap must actually bite here, or the "even when caps bind"
+    # claim is vacuous.
+    cap(UNCAPPED)
+    n_uncapped = len(_rows(_one_shot(documents)))
+    cap(CAP)
+    _stream_slices(spark, tmp_path, documents.orderBy("doc_id").collect(), monkeypatch)
 
     got = _rows(
         finalize_fold(
@@ -114,26 +137,26 @@ def test_stream_fold_equals_one_shot_under_binding_cap(spark, tmp_path):
             documents,
             str(tmp_path / "index"),
             str(tmp_path / "cands"),
-            max_bucket=CAP,
         )
     )
-    exp = _rows(_one_shot(documents, CAP))
+    exp = _rows(_one_shot(documents))
     assert got == exp
     # ... and equals the in-plan batch fold with the same cap.
-    assert got == _rows(dedup_incremental_pairs(documents, max_bucket=CAP))
-    # The cap must actually bite here, or the "even when caps bind"
-    # claim is vacuous.
-    assert len(_rows(_one_shot(documents, UNCAPPED))) > len(exp)
+    assert got == _rows(dedup_incremental_pairs(documents))
+    assert n_uncapped > len(exp)
 
 
-def test_stream_candidates_equal_one_shot_candidates_uncapped(spark, tmp_path):
+def test_stream_candidates_equal_one_shot_candidates_uncapped(
+    spark, tmp_path, monkeypatch, cap
+):
     """With no binding cap, the candidates the stream accumulates are
     exactly the one-shot candidate set: each pair is found in the batch
     where its later member arrives.  The index ends with one row per
     (doc, band) over the whole corpus."""
     documents = _docs(spark)
     rows = documents.orderBy("doc_id").collect()
-    _stream_slices(spark, tmp_path, rows, UNCAPPED)
+    cap(UNCAPPED)
+    _stream_slices(spark, tmp_path, rows, monkeypatch)
 
     streamed = {
         tuple(r)
@@ -149,7 +172,6 @@ def test_stream_candidates_equal_one_shot_candidates_uncapped(spark, tmp_path):
             num_hashes=DEDUP_INC_NUM,
             bands=DEDUP_INC_BANDS,
             shingle_k=DEDUP_INC_K,
-            max_bucket=UNCAPPED,
         ).collect()
     }
     assert streamed == one_shot and one_shot
@@ -159,21 +181,22 @@ def test_stream_candidates_equal_one_shot_candidates_uncapped(spark, tmp_path):
     assert idx.select("doc_id").distinct().count() == len(rows)
 
 
-def test_sink_retries_are_idempotent(spark, tmp_path):
+def test_sink_retries_are_idempotent(spark, tmp_path, cap):
+    cap(CAP)
     documents = _docs(spark)
     index_root = str(tmp_path / "index")
     cand_root = str(tmp_path / "cands")
     ckpt = str(tmp_path / "ckpt")
-    sink = make_dedup_fold_sink(index_root, cand_root, ckpt, max_bucket=CAP)
+    sink = make_dedup_fold_sink(index_root, cand_root, ckpt)
 
     b0 = documents.filter(F.col("doc_id") % 2 == 0)
     b1 = documents.filter(F.col("doc_id") % 2 == 1)
     sink(b0, 0)
     sink(b1, 1)
     baseline = _rows(
-        finalize_fold(spark, documents, index_root, cand_root, max_bucket=CAP)
+        finalize_fold(spark, documents, index_root, cand_root)
     )
-    assert baseline == _rows(_one_shot(documents, CAP))
+    assert baseline == _rows(_one_shot(documents))
 
     def counts():
         return (
@@ -187,7 +210,7 @@ def test_sink_retries_are_idempotent(spark, tmp_path):
     sink(b1, 1)
     assert counts() == before
     assert baseline == _rows(
-        finalize_fold(spark, documents, index_root, cand_root, max_bucket=CAP)
+        finalize_fold(spark, documents, index_root, cand_root)
     )
 
     # Partial failure: marker lost AFTER both appends landed — the
@@ -197,7 +220,7 @@ def test_sink_retries_are_idempotent(spark, tmp_path):
     os.remove(os.path.join(ckpt, "fold_commits", "1"))
     sink(b1, 1)
     assert baseline == _rows(
-        finalize_fold(spark, documents, index_root, cand_root, max_bucket=CAP)
+        finalize_fold(spark, documents, index_root, cand_root)
     )
     # One index row per (doc, band): the bucket sizes rely on it.
     idx = spark.read.parquet(index_root)
@@ -214,7 +237,7 @@ def test_sink_retries_are_idempotent(spark, tmp_path):
     not os.environ.get("SPARK_GRAFT_SCALE_SMOKE"),
     reason="opt-in: SPARK_GRAFT_SCALE_SMOKE=1 runs the 20x streaming smoke",
 )
-def test_streaming_dedup_scale_smoke(spark, tmp_path):
+def test_streaming_dedup_scale_smoke(spark, tmp_path, monkeypatch):
     """Opt-in scale probe: a 20x corpus (100k docs, heavy planted
     duplicates) streamed through the fold in micro-batches of two
     slice files each.  Each batch's probe must stay bounded (capped
@@ -238,16 +261,15 @@ def test_streaming_dedup_scale_smoke(spark, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
+    monkeypatch.setattr(dedup_fold, "TRIGGER_SECONDS", 1)
     t0 = time.time()
     q = start_dedup_fold_stream(
         stream,
         index_root=str(tmp_path / "index"),
         cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        max_bucket=1000,
     )
-    q.awaitTermination(600)
+    _drain(q)
     dt = time.time() - t0
     n = (
         spark.read.parquet(str(tmp_path / "cands"))

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.operators import dedup
 from gtfs_realtime_etl_spark.operators.dedup import (
     finalize_dedup_candidates,
     jaccard_pairs,
@@ -17,6 +18,7 @@ from gtfs_realtime_etl_spark.operators.dedup import (
     minhash_lsh_dedup,
     probe_index,
 )
+from gtfs_realtime_etl_spark.plans import analytics23
 from gtfs_realtime_etl_spark.plans.analytics23 import (
     DEDUP_INC_BATCHES,
     DEDUP_INC_K,
@@ -116,29 +118,31 @@ def test_batch_predicate_prunes_partitions(spark, tmp_path):
     assert pruned_files == {f for f in all_files if "batch=2/" in f}
 
 
-def test_fold_is_slicing_invariant(spark):
+def test_fold_is_slicing_invariant(spark, monkeypatch):
     """2-batch and 4-batch slicings of the same corpus must produce the
     identical verified pair set — the arrival order / batch granularity
     independence the incremental contract rests on."""
     documents = _documents(spark)
-    assert _rows(dedup_incremental_pairs(documents, n_batches=2)) == _rows(
-        dedup_incremental_pairs(documents, n_batches=4)
-    )
+    assert DEDUP_INC_BATCHES == 4
+    four = _rows(dedup_incremental_pairs(documents))
+    monkeypatch.setattr(analytics23, "DEDUP_INC_BATCHES", 2)
+    assert _rows(dedup_incremental_pairs(documents)) == four
 
 
-def test_bucket_cap_matches_one_shot_semantics(spark):
+def test_bucket_cap_matches_one_shot_semantics(spark, monkeypatch):
     """Force a tiny cap so buckets DO overflow: pairs a bucket emitted
     while small must be dropped once the bucket outgrows the cap,
     exactly like the one-shot's whole-bucket drop."""
     documents = _documents(spark)
-    capped_fold = dedup_incremental_pairs(documents, max_bucket=3)
+    uncapped = _rows(dedup_incremental_pairs(documents))
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 3)
+    capped_fold = dedup_incremental_pairs(documents)
     capped_one_shot = minhash_lsh_dedup(
         documents,
         num_hashes=DEDUP_INC_NUM,
         bands=BANDS,
         shingle_k=DEDUP_INC_K,
         threshold=DEDUP_INC_THRESHOLD,
-        max_bucket=3,
     ).select(
         "id_a",
         "id_b",
@@ -147,5 +151,4 @@ def test_bucket_cap_matches_one_shot_semantics(spark):
     got, exp = _rows(capped_fold), _rows(capped_one_shot)
     assert got == exp
     # The cap must actually bite at this setting, or the test is vacuous.
-    uncapped = dedup_incremental_pairs(documents)
-    assert len(_rows(uncapped)) > len(got)
+    assert len(uncapped) > len(got)

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.operators import clusters, dedup
 from gtfs_realtime_etl_spark.operators.clusters import (
     connected_components,
     resolve_duplicates,
@@ -72,18 +73,19 @@ def test_simhash_near_dups(corpus):
     assert (pairs["hamming"] <= 3).all()
 
 
-def test_simhash_bucket_cap_bounds_blowup(spark):
+def test_simhash_bucket_cap_bounds_blowup(spark, monkeypatch):
     """An adversarial corpus (many identical docs → one giant bucket)
     must not explode quadratically: the per-bucket cap drops oversized
     buckets entirely, so pair output is bounded by construction."""
     rows = [(i, "same text everywhere forever") for i in range(50)]
     rows += [(100 + i, f"unique document number {i} alpha beta") for i in range(10)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = simhash_dedup(docs, hamming_threshold=3, max_bucket=10).toPandas()
+    uncapped = simhash_dedup(docs, hamming_threshold=3).toPandas()
+    assert ((uncapped["id_a"] < 100) & (uncapped["id_b"] < 100)).sum() == 50 * 49 / 2
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 10)
+    capped = simhash_dedup(docs, hamming_threshold=3).toPandas()
     # the 50-identical-doc bucket (size 50 > cap 10) contributes nothing
     assert not ((capped["id_a"] < 100) & (capped["id_b"] < 100)).any()
-    uncapped = simhash_dedup(docs, hamming_threshold=3, max_bucket=1000).toPandas()
-    assert ((uncapped["id_a"] < 100) & (uncapped["id_b"] < 100)).sum() == 50 * 49 / 2
 
 
 def test_connected_components_chain_and_triangle(spark):
@@ -97,9 +99,9 @@ def test_connected_components_chain_and_triangle(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
 
 
-def test_components_paths_equivalent(spark):
+def test_components_paths_equivalent(spark, monkeypatch):
     """The driver union-find gate path and the distributed propagation
-    path produce identical labels (driver_max_edges=0 forces the
+    path produce identical labels (DRIVER_MAX_EDGES=0 forces the
     iterative path on the same graph)."""
     import random
 
@@ -113,17 +115,20 @@ def test_components_paths_equivalent(spark):
             edges.add((min(a, b), max(a, b)))
     pairs = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
     fast = dict(connected_components(pairs).collect())
-    slow = dict(connected_components(pairs, driver_max_edges=0).collect())
+    monkeypatch.setattr(clusters, "DRIVER_MAX_EDGES", 0)
+    slow = dict(connected_components(pairs).collect())
     assert fast == slow and len(fast) > 0
 
 
-def test_components_nonconvergence_fails_loud(spark):
-    """A chain longer than max_iter hops must raise (silent wrong labels
+def test_components_nonconvergence_fails_loud(spark, monkeypatch):
+    """A chain longer than MAX_ITER hops must raise (silent wrong labels
     are the failure mode at 100 TB), on the distributed path."""
     chain = [(i, i + 1) for i in range(10)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
+    monkeypatch.setattr(clusters, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(clusters, "MAX_ITER", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2, driver_max_edges=0)
+        connected_components(pairs)
 
 
 def test_resolve_duplicates_keeps_min_id_survivors(spark, corpus):

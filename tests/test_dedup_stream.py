@@ -34,7 +34,6 @@ def _sink(tmp_path):
         index_root=str(tmp_path / "index"),
         cand_root=str(tmp_path / "cands"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_bucket=100_000,
     )
 
 

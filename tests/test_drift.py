@@ -12,15 +12,16 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from gtfs_realtime_etl_spark.streaming import drift
 from gtfs_realtime_etl_spark.streaming.drift import baseline_stats, feature_drift
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
 
 def _rows():
-    """3 five-minute windows × 60 events.  Windows 0 and 1 hover around
-    the baseline mean (10.0 ± small deterministic wiggle); window 2 is
-    shifted by +5 — an unmistakable drift."""
+    """3 five-minute windows × 60 events of one source.  Windows 0 and 1
+    hover around the baseline mean (10.0 ± small deterministic wiggle);
+    window 2 is shifted by +5 — an unmistakable drift."""
     rows = []
     for w in range(3):
         for i in range(60):
@@ -39,6 +40,7 @@ def _write(tmp_path, rows, n_files=3):
         pq.write_table(
             pa.table(
                 {
+                    "src": pa.array(["a"] * len(chunk), pa.string()),
                     "ts": pa.array([r[0] for r in chunk], pa.timestamp("us")),
                     "value": pa.array([r[1] for r in chunk], pa.float64()),
                 }
@@ -55,20 +57,24 @@ def _write(tmp_path, rows, n_files=3):
 def baseline(spark):
     # frozen reference: the same un-drifted value distribution
     ref = spark.createDataFrame(
-        [(10.0 + ((i * 7) % 11 - 5) * 0.1,) for i in range(600)], "value double"
+        [("a", 10.0 + ((i * 7) % 11 - 5) * 0.1) for i in range(600)],
+        "src string, value double",
     )
     return baseline_stats(ref)
 
 
-def test_drifted_window_flagged_and_batch_twin_matches(spark, tmp_path, baseline):
+def test_drifted_window_flagged_and_batch_twin_matches(
+    spark, tmp_path, baseline, monkeypatch
+):
     src = _write(tmp_path, _rows())
-    stream = spark.readStream.schema("ts timestamp, value double").option(
+    stream = spark.readStream.schema("src string, ts timestamp, value double").option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
     # 1-minute watermark: at end-of-stream (max ts = T0+14:55) the
     # watermark reaches T0+13:55 — windows 0 and 1 close and emit, the
     # still-open drifted window is covered via the batch twin below
-    out = feature_drift(stream, baseline, window="5 minutes", watermark="1 minute")
+    monkeypatch.setattr(drift, "WATERMARK", "1 minute")
+    out = feature_drift(stream, baseline)
     q = (
         out.writeStream.format("memory")
         .queryName("drift_stream")
@@ -89,7 +95,7 @@ def test_drifted_window_flagged_and_batch_twin_matches(spark, tmp_path, baseline
     batch = spark.read.parquet(src)
     exp = {
         r["window"]["start"]: (r["n"], r["drifted"])
-        for r in feature_drift(batch, baseline, window="5 minutes").collect()
+        for r in feature_drift(batch, baseline).collect()
     }
     # every emitted window matches the batch backfill twin exactly
     for k, v in got.items():
@@ -102,7 +108,7 @@ def test_drifted_window_flagged_and_batch_twin_matches(spark, tmp_path, baseline
 
 def test_baseline_partitioning_invariant(spark):
     ref = spark.createDataFrame(
-        [(float(i % 13),) for i in range(1000)], "value double"
+        [("a", float(i % 13)) for i in range(1000)], "src string, value double"
     )
     one = baseline_stats(ref.coalesce(1)).collect()[0]
     many = baseline_stats(ref.repartition(16)).collect()[0]
@@ -116,15 +122,8 @@ def test_grouped_drift_per_source(spark, baseline, tmp_path):
         rows.append(("a", ts, 10.0 + ((i * 7) % 11 - 5) * 0.1))
         rows.append(("b", ts, 15.0 + ((i * 7) % 11 - 5) * 0.1))  # shifted source
     df = spark.createDataFrame(rows, "src string, ts timestamp, value double")
-    base = baseline_stats(
-        df.where(F.col("src") == "a"), group_col="src"
-    ).unionAll(
-        baseline_stats(df.where(F.col("src") == "a"), group_col="src").select(
-            F.lit("b").alias("src"), "mu", "sigma"
-        )
-    )
-    out = {
-        r["src"]: r["drifted"]
-        for r in feature_drift(df, base, group_col="src", window="10 minutes").collect()
-    }
+    base = baseline_stats(df.where(F.col("src") == "a"))
+    base = base.unionAll(base.select(F.lit("b").alias("src"), "mu", "sigma"))
+    # 200 s of events: one 5-minute window per source
+    out = {r["src"]: r["drifted"] for r in feature_drift(df, base).collect()}
     assert out == {"a": False, "b": True}

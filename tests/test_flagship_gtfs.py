@@ -131,7 +131,7 @@ def test_flagship_on_reference_shaped_lake(spark, lake):
     # Re-shape to the reference writer's output: drop the lat/lon
     # doubles (geometry only), keep everything else.
     ref_shaped = engine_rows.drop("latitude", "longitude")
-    write_locations_batch(ref_shaped, ref_root, geoparquet=True)
+    write_locations_batch(ref_shaped, ref_root)
 
     locations = read_reference_lake(spark, ref_root)
     # lon/lat re-derived from WKB, bit-exact vs the engine lake
@@ -232,38 +232,6 @@ def test_reliability_zero_variance_stop(spark):
     assert math.isnan(got.loc["on_edge", "reliability"])
 
 
-def test_flagship_optional_mercator_columns(spark, lake):
-    """with_web_mercator=True appends EPSG:3857 mercator_x/y consistent
-    with each stop's lon/lat (closing the notebook's client-side
-    GeoPandas to_crs step, ipynb:701-705); default output unchanged."""
-    tabs = load_gtfs_static(spark, lake["fx"].gtfs_dir)
-    locations = read_locations(spark, lake["lake_root"])
-    base = schedule_deviation(
-        locations, tabs["routes"], tabs["trips"], tabs["stops"], tabs["stop_times"]
-    )
-    merc = schedule_deviation(
-        locations,
-        tabs["routes"],
-        tabs["trips"],
-        tabs["stops"],
-        tabs["stop_times"],
-        with_web_mercator=True,
-    )
-    assert "mercator_x" not in base.columns
-    assert {"mercator_x", "mercator_y"} <= set(merc.columns)
-    rows = merc.limit(20).collect()
-    assert rows
-    for r in rows:
-        assert r.mercator_x == pytest.approx(
-            math.radians(r.stop_lon) * 6378137.0, abs=1e-6
-        )
-        assert r.mercator_y == pytest.approx(
-            math.log(math.tan(math.pi / 4 + math.radians(r.stop_lat) / 2))
-            * 6378137.0,
-            abs=1e-6,
-        )
-
-
 def test_partition_pruning(spark, lake):
     """P5: a partition filter must prune the file scan (not post-filter)."""
     locations = read_locations(spark, lake["lake_root"])
@@ -306,10 +274,3 @@ def test_day_slice_arrow_handoff(spark, lake):
     assert isinstance(tbl, pa.Table)
     assert tbl.num_rows == sliced.count() > 0
     assert set(tbl.column_names) == set(sliced.columns)
-
-    # column pruning variant: the handoff carries only the viz columns
-    viz = day_slice_arrow(
-        spark, root, 2024, 3, 5, columns=("longitude", "latitude", "trip_id")
-    )
-    assert viz.column_names == ["longitude", "latitude", "trip_id"]
-    assert viz.num_rows == tbl.num_rows

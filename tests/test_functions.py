@@ -330,34 +330,6 @@ def test_bigrams_edges(spark):
     assert got[3] == ["x y", "y z"]
 
 
-def test_to_web_mercator_known_values(spark):
-    """EPSG:3857 anchors (values pyproj's 4326->3857 transformer yields
-    to float precision; (1,1) is the widely published OSM anchor
-    111319.49079327357 / 111325.1428663851)."""
-    from gtfs_realtime_etl_spark.functions.geo import to_web_mercator
-
-    cases = [
-        (0.0, 0.0, 0.0, 0.0),
-        (180.0, 0.0, 20037508.342789244, 0.0),
-        (1.0, 1.0, 111319.49079327357, 111325.1428663851),
-        (-79.38, 43.65, -8836541.179170055, 5411437.673564396),
-        (151.2093, -33.8688, 16832542.27920734, -4011198.6473075734),
-    ]
-    df = spark.createDataFrame(
-        [(lon, lat) for lon, lat, _, _ in cases], "lon double, lat double"
-    )
-    got = (
-        df.select("lon", "lat", to_web_mercator(F.col("lon"), F.col("lat")).alias("m"))
-        .orderBy("lon")
-        .collect()
-    )
-    exp = {(lon, lat): (x, y) for lon, lat, x, y in cases}
-    for r in got:
-        x, y = exp[(r.lon, r.lat)]
-        assert abs(r.m.x - x) <= 1e-6, (r.lon, r.lat)
-        assert abs(r.m.y - y) <= 1e-6, (r.lon, r.lat)
-
-
 def _duckdb_portable_log2(vals: list[int]) -> dict[int, float]:
     """``portable_int_log2_sql`` evaluated by DuckDB over ``vals``."""
     import duckdb

@@ -16,7 +16,7 @@
   imports at module level.
 - Every defaulted parameter of a public def in functions/, operators/,
   sources/, streaming/ and plans/ is set to another value by some call
-  in the repository: a default no caller overrides is a constant."""
+  outside tests/: an option only tests set is a constant."""
 
 from __future__ import annotations
 
@@ -245,14 +245,19 @@ def _sets(call: ast.Call, position: int | None, name: str, default: str) -> bool
 
 
 def test_defaults_are_set_by_some_caller():
-    """One value, one constant: each defaulted parameter of a public def
-    in the engine's layers is set to another value by at least one call
-    somewhere in the repository (engine, tests, scripts, benchmark).
-    Calls match defs by name, like the caller guard above.  A default
-    that no call overrides is a module constant or an inlined literal;
-    a branch only a non-default value reaches is dead code."""
+    """Options: a parameter earns its default only when two callers,
+    not counting tests, need different values.  So each defaulted
+    parameter of a public def in the engine's layers is set to another
+    value by at least one call outside ``tests/`` (engine, scripts,
+    benchmark, entry points).  Calls match defs by name, like the
+    caller guard above.  A default that only tests override is a module
+    constant (tests patch it or pick inputs that reach its branches) or
+    an inlined literal; a branch only another value reaches is dead
+    code."""
     calls: dict[str, list[ast.Call]] = {}
     for path in sorted(REPO_DIR.rglob("*.py")):
+        if "tests" in path.relative_to(REPO_DIR).parts:
+            continue
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if isinstance(node, ast.Call):
                 func = node.func

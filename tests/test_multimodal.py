@@ -11,12 +11,12 @@ from gtfs_realtime_etl_spark.operators.multimodal import (
 )
 
 
-def _media(spark, n=20, modality="image"):
+def _media(spark, n=20):
     docs = spark.createDataFrame(
         [(i, f"document body number {i} " + "x" * (50 + i)) for i in range(n)],
         "doc_id long, text string",
     )
-    return synthesize_media(spark, docs, modality=modality)
+    return synthesize_media(spark, docs)
 
 
 def test_extract_features_histogram_sums_to_one(spark):

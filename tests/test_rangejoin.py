@@ -59,20 +59,9 @@ def test_overlap_join_matches_naive(spark, width):
 
 
 def test_overlap_join_with_keys_and_residual(spark):
+    """Per-side key columns match through the residual."""
     left = _intervals(spark, 3, 100, "l", with_key=True)
-    right = _intervals(spark, 4, 100, "r", with_key=True).withColumnRenamed(
-        "grp", "grp"
-    )
-    got = overlap_join(
-        left,
-        right,
-        left_bounds=("l_start", "l_end"),
-        right_bounds=("r_start", "r_end"),
-        bucket_width=100,
-        on=["grp"],
-        residual=F.col("l_id") < F.col("r_id"),
-    )
-    pairs = {(r["l_id"], r["r_id"]) for r in got.collect()}
+    right = _intervals(spark, 4, 100, "r", with_key=True)
     expect = {
         (a, b)
         for a, b in _naive_pairs(
@@ -81,8 +70,16 @@ def test_overlap_join_with_keys_and_residual(spark):
         )
         if a < b
     }
+    got = overlap_join(
+        left.withColumnRenamed("grp", "l_grp"),
+        right.withColumnRenamed("grp", "r_grp"),
+        left_bounds=("l_start", "l_end"),
+        right_bounds=("r_start", "r_end"),
+        bucket_width=100,
+        residual=(F.col("l_grp") == F.col("r_grp")) & (F.col("l_id") < F.col("r_id")),
+    )
+    pairs = {(r["l_id"], r["r_id"]) for r in got.collect()}
     assert pairs == expect
-    assert "grp" in got.columns and got.columns.count("grp") == 1
 
 
 def test_overlap_join_zero_length_intervals(spark):
@@ -124,7 +121,6 @@ def test_overlap_join_guards_pathological_span(spark):
         left_bounds=("l_start", "l_end"),
         right_bounds=("r_start", "r_end"),
         bucket_width=10,
-        max_buckets=100,
     )
     with pytest.raises(Exception, match="overlap_join"):
         got.collect()

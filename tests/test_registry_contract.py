@@ -131,7 +131,7 @@ def test_minhash_scale_smoke(spark):
         )
     )
     t0 = time.time()
-    n = minhash_lsh_candidates(docs, max_bucket=1000).count()
+    n = minhash_lsh_candidates(docs).count()
     dt = time.time() - t0
     assert n > 0
     # 20x data with giant planted clusters: capped buckets keep the pair
@@ -161,7 +161,7 @@ def test_simhash_scale_smoke(spark):
         .select((F.col("doc_id") * 100 + F.col("rep")).alias("doc_id"), "text")
     )
     t0 = time.time()
-    n = simhash_dedup(docs, hamming_threshold=3, max_bucket=1000).count()
+    n = simhash_dedup(docs, hamming_threshold=3).count()
     dt = time.time() - t0
     assert n >= 0
     assert dt < 300, f"simhash scale smoke took {dt:.0f}s"

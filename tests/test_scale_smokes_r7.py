@@ -70,7 +70,7 @@ def test_epoch_shuffle_two_level_beats_naive_rank(spark):
     t_naive = time.time() - t0
 
     t0 = time.time()
-    two_level_sum = checksum(epoch_shuffle_positions(docs, n_epochs=2))
+    two_level_sum = checksum(epoch_shuffle_positions(docs))
     t_two = time.time() - t0
 
     # bit-identical positions (same relation, order-free checksum)

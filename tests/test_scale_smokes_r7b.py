@@ -51,7 +51,7 @@ def test_mahalanobis_20x_plants_outlier_first(spark):
         ),
     )
     t0 = time.perf_counter()
-    rows = mahalanobis_topk(big.unionByName(planted), 5).collect()
+    rows = mahalanobis_topk(big.unionByName(planted)).collect()
     wall = time.perf_counter() - t0
     assert rows[0].vec_id == 0 and rows[0].label == -1
     assert rows[0].d2_micro > rows[1].d2_micro

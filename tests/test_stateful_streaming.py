@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from gtfs_realtime_etl_spark.operators.sessions import sessionize
 from tests.conftest import full_suite_only
+from gtfs_realtime_etl_spark.streaming import stateful
 from gtfs_realtime_etl_spark.streaming.stateful import (
     streaming_sessionize,
     streaming_vehicle_state,
@@ -49,27 +50,27 @@ def _drain(stream_df, name: str, mode: str, spark):
 
 
 @full_suite_only  # 125 s (default-lane --durations): 8-trigger watermark e2e
-def test_streaming_sessionize_matches_batch(spark, event_stream_dir):
+def test_streaming_sessionize_matches_batch(spark, event_stream_dir, monkeypatch):
     frames = (
         spark.readStream.schema("user_id STRING, ts_sec LONG, event_time TIMESTAMP")
         .parquet(event_stream_dir)
     )
+    # A short gap; the idle timeout stays at its 30 minutes, so slow
+    # micro-batches cannot close open sessions early.
+    monkeypatch.setattr(stateful, "GAP_SECONDS", GAP)
     got = _drain(
-        streaming_sessionize(frames, gap_seconds=GAP, idle_timeout_ms=3_600_000),
-        "closed_sessions", "append", spark,
+        streaming_sessionize(frames), "closed_sessions", "append", spark
     ).sort_values(["key", "session_start"]).reset_index(drop=True)
 
     # Batch twin: sessionize, then keep every session except each key's
     # last (still open at end-of-stream, so the stream hasn't emitted it).
-    batch = spark.createDataFrame(
-        pd.DataFrame(EVENTS, columns=["user_id", "ts_sec"])
-    )
-    s = sessionize(batch, ts_col="ts_sec", gap=GAP)
+    batch = spark.createDataFrame(pd.DataFrame(EVENTS, columns=["user_id", "ts"]))
+    s = sessionize(batch, gap=GAP)
     agg = (
         s.groupBy("user_id", "session_id")
         .agg(
-            F.min("ts_sec").alias("session_start"),
-            F.max("ts_sec").alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .withColumn(

@@ -1,10 +1,7 @@
 """Stream-static enrichment: streaming result equals the batch twin,
-the static side refreshes between micro-batches, and illegal join
-types fail loud."""
+and the static side refreshes between micro-batches."""
 
 from __future__ import annotations
-
-import pytest
 
 from gtfs_realtime_etl_spark.streaming.enrich import enrich_stream
 
@@ -25,7 +22,7 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(SCHEMA).json(src)
     enriched = enrich_stream(
-        stream, spark.read.parquet(dim_path), on="route_id", how="left"
+        stream, spark.read.parquet(dim_path), on="route_id"
     )
     q = (
         enriched.writeStream.format("memory")
@@ -44,7 +41,6 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
             spark.read.schema(SCHEMA).json(src),
             spark.read.parquet(dim_path),
             on="route_id",
-            how="left",
         ).collect()
     }
     assert got == expect
@@ -66,7 +62,7 @@ def test_static_side_refreshes_between_batches(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(SCHEMA).json(src)
         enriched = enrich_stream(
-            stream, spark.read.parquet(dim_path), on="route_id", how="inner"
+            stream, spark.read.parquet(dim_path), on="route_id"
         )
         q = (
             enriched.writeStream.format("parquet")
@@ -90,12 +86,3 @@ def test_static_side_refreshes_between_batches(spark, tmp_path):
         (r["speed"], r["kind"]) for r in spark.read.parquet(out).collect()
     }
     assert rows == {(10.0, "old"), (99.0, "new")}
-
-
-def test_illegal_join_type_fails_loud(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _write_json(spark, src, [("R1", 1.0)], "overwrite")
-    stream = spark.readStream.schema(SCHEMA).json(src)
-    dim = spark.createDataFrame([("R1", "x")], "route_id string, kind string")
-    with pytest.raises(ValueError, match="stream-static"):
-        enrich_stream(stream, dim, on="route_id", how="full")

@@ -9,6 +9,7 @@ from collections import Counter
 
 import pytest
 
+from gtfs_realtime_etl_spark.streaming import heavy_hitters
 from gtfs_realtime_etl_spark.streaming.heavy_hitters import (
     streaming_heavy_hitters,
 )
@@ -54,14 +55,16 @@ def _write_slices(tmp_path, rows, n_slices):
 
 
 @pytest.mark.parametrize("n_slices", [1, 4])
-def test_streaming_mg_bounds_any_batching(spark, tmp_path, n_slices):
+def test_streaming_mg_bounds_any_batching(spark, tmp_path, n_slices, monkeypatch):
     src = _write_slices(tmp_path, ROWS, n_slices)
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = streaming_heavy_hitters(stream, capacity=CAP, emit_k=EMIT_K)
+    monkeypatch.setattr(heavy_hitters, "CAPACITY", CAP)
+    monkeypatch.setattr(heavy_hitters, "EMIT_K", EMIT_K)
+    out = streaming_heavy_hitters(stream)
     name = f"hh_{n_slices}"
     q = (
         out.writeStream.format("memory")
@@ -95,7 +98,7 @@ def test_streaming_mg_bounds_any_batching(spark, tmp_path, n_slices):
                 assert tok in toks, (tok, c, n)
 
 
-def test_state_is_capacity_bounded(spark, tmp_path):
+def test_state_is_capacity_bounded(spark, tmp_path, monkeypatch):
     """The emitted snapshot (and hence the stored summary) never
     exceeds the capacity even when the vocabulary is much larger."""
     rows = [("web", f"u{i % 250:04d}") for i in range(500)] + [
@@ -107,9 +110,9 @@ def test_state_is_capacity_bounded(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = streaming_heavy_hitters(
-        stream, capacity=CAP, emit_k=1000
-    )
+    monkeypatch.setattr(heavy_hitters, "CAPACITY", CAP)
+    monkeypatch.setattr(heavy_hitters, "EMIT_K", 1000)
+    out = streaming_heavy_hitters(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("hh_cap")

@@ -88,7 +88,6 @@ def test_stream_ingest_to_lake(spark, tmp_path):
         lake_root,
         str(tmp_path / "ckpt"),
         available_now=True,
-        geoparquet=True,  # reference parity: raw tick files carry the footer
     )
     q.awaitTermination(120)
 
@@ -101,24 +100,20 @@ def test_stream_ingest_to_lake(spark, tmp_path):
     assert {"trip_id", "geohash", "geometry", "bbox", "year", "month", "day"} <= cols
     assert lake.filter("year = 2024 AND month = 3 AND day = 5").count() == lake.count()
 
-    # every RAW-zone file is valid GeoParquet (handler.py:146-154 parity)
-    import json
-
+    # the hot append is plain parquet: only compaction stamps the
+    # GeoParquet footer (test_compaction_stamps_geoparquet_footer)
     import pyarrow.parquet as pq
 
     raw_files = glob.glob(os.path.join(lake_root, "**", "*.parquet"), recursive=True)
     assert raw_files
     for f in raw_files:
-        meta = pq.read_schema(f).metadata or {}
-        geo = json.loads(meta[b"geo"])
-        assert geo["primary_column"] == "geometry"
-        assert geo["columns"]["geometry"]["encoding"] == "WKB"
+        assert b"geo" not in (pq.read_schema(f).metadata or {})
 
 
 def test_quarantine_age_bound_drops_stale_payloads(spark, tmp_path):
     """DLQ max-event-age parity (construct.py:196-208): a bad payload
-    whose file sat unprocessed past the bound is abandoned, a fresh one
-    is quarantined; with the bound disabled, both are quarantined."""
+    whose file sat unprocessed past the 15-minute bound is abandoned, a
+    fresh one is quarantined."""
     import time
 
     from gtfs_realtime_etl_spark.streaming.ingest import (
@@ -142,22 +137,9 @@ def test_quarantine_age_bound_drops_stale_payloads(spark, tmp_path):
         qdir,
         str(tmp_path / "ckpt_q"),
         available_now=True,
-        max_event_age_minutes=15,
     )
     q.awaitTermination(120)
     assert spark.read.parquet(qdir).count() == 1  # stale payload abandoned
-
-    qdir2 = str(tmp_path / "quarantine_unbounded")
-    q2 = start_feed_quarantine_stream(
-        spark,
-        str(feed_dir),
-        qdir2,
-        str(tmp_path / "ckpt_q2"),
-        available_now=True,
-        max_event_age_minutes=None,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(qdir2).count() == 2
 
 
 def test_corrupt_payload_quarantined_batch_succeeds(spark, tmp_path):
@@ -285,9 +267,9 @@ def test_compaction_conserves_rows(spark, tmp_path):
 
 
 def test_compaction_stamps_geoparquet_footer(spark, tmp_path):
-    """S5: compacted files carry spec'd GeoParquet `geo` footer metadata
-    (reference writes GeoParquet, handler.py:146-152) and stay readable
-    by Spark."""
+    """S5: compacted files always carry spec'd GeoParquet `geo` footer
+    metadata (reference writes GeoParquet, handler.py:146-152) and stay
+    readable by Spark."""
     import json
 
     import pyarrow.parquet as pq
@@ -302,9 +284,7 @@ def test_compaction_stamps_geoparquet_footer(spark, tmp_path):
     q.awaitTermination(120)
 
     compacted = str(tmp_path / "compacted")
-    n = compact_partition(
-        spark, raw_root, compacted, 2024, 3, 5, geoparquet=True
-    )
+    n = compact_partition(spark, raw_root, compacted, 2024, 3, 5)
     files = glob.glob(
         os.path.join(compacted, "year=2024/month=3/day=5", "*.parquet")
     )
@@ -442,10 +422,11 @@ def test_pinned_lake_schema_survives_drift(spark, tmp_path):
 
 
 def test_compact_partitions_job(spark, tmp_path):
-    """The scheduled job body at a fixed ``now``: the present day is
-    compacted with its rows conserved, the absent day is skipped
-    (PATH_NOT_FOUND), keys are ``YYYY-MM-DD``; a ``period="month"``
-    run compacts the whole month under a ``YYYY-MM`` key."""
+    """The scheduled job body at a fixed ``now``: the last closed day is
+    compacted with its rows conserved; a day with no partition is
+    skipped (PATH_NOT_FOUND); keys are ``YYYY-MM-DD``; a
+    ``period="month"`` run compacts the whole month under a ``YYYY-MM``
+    key."""
     import datetime as dt
 
     feed_dir = tmp_path / "feeds"
@@ -460,10 +441,13 @@ def test_compact_partitions_job(spark, tmp_path):
     raw_count = spark.read.parquet(raw_root).count()
     assert raw_count == 15  # all on 2024-03-05; 2024-03-04 is absent
 
-    now = dt.datetime(2024, 3, 6, 1, 0)
     daily = str(tmp_path / "daily")
     written = compact_partitions(
-        spark, raw_root, daily, "America/Toronto", duration=2, now=now
+        spark, raw_root, daily, "America/Toronto", now=dt.datetime(2024, 3, 5, 1, 0)
+    )
+    assert written == {}
+    written = compact_partitions(
+        spark, raw_root, daily, "America/Toronto", now=dt.datetime(2024, 3, 6, 1, 0)
     )
     assert written == {"2024-03-05": raw_count}
     assert spark.read.parquet(daily).count() == raw_count
@@ -491,3 +475,13 @@ def test_dates_in_range():
     assert days == [dt.date(2024, 3, 4), dt.date(2024, 3, 3), dt.date(2024, 3, 2)]
     months = dates_in_range(2, "America/Toronto", period="month", now=now)
     assert months == [dt.date(2024, 2, 1), dt.date(2024, 1, 1)]
+
+    # An aware ``now`` is dated in the agency's zone: 03:00 UTC is still
+    # the previous evening in Edmonton (UTC-7).
+    utc = dt.timezone.utc
+    now = dt.datetime(2024, 3, 6, 3, 0, tzinfo=utc)
+    assert dates_in_range(1, "America/Edmonton", now=now) == [dt.date(2024, 3, 4)]
+    now = dt.datetime(2024, 3, 1, 3, 0, tzinfo=utc)
+    assert dates_in_range(1, "America/Edmonton", period="month", now=now) == [
+        dt.date(2024, 1, 1)
+    ]

@@ -30,7 +30,7 @@ def test_windowed_counts_batch_twin(spark):
         ("R1", BASE + 310, 40.0),  # next 5-min window
     ]
     out = (
-        windowed_counts(_events_df(spark, rows), agg_col="speed")
+        windowed_counts(_events_df(spark, rows))
         .orderBy("window_start", "route_id")
         .collect()
     )
@@ -64,7 +64,7 @@ def test_streaming_window_emits_on_watermark_and_drops_late(spark, tmp_path):
             "route_id", "CAST(ts_sec AS TIMESTAMP) AS timestamp", "speed"
         )
     )
-    out = windowed_counts(stream, watermark="1 minute", agg_col="speed")
+    out = windowed_counts(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -78,7 +78,8 @@ def test_streaming_window_emits_on_watermark_and_drops_late(spark, tmp_path):
         # watermark still inside the window: nothing final yet
         assert spark.sql("SELECT * FROM win_agg").count() == 0
 
-        # advance event time far past window end + watermark → emit
+        # advance event time past window end + the 10-minute watermark
+        # → emit
         write_batch("b1", [("R2", BASE + 1000, 1.0)])
         q.processAllAvailable()
         write_batch("b2", [("R2", BASE + 1060, 2.0)])
@@ -118,7 +119,7 @@ def test_session_window_batch_twin_merges_by_gap(spark):
         ("R2", BASE + 0, 0.0),
     ]
     out = (
-        session_windowed_counts(_events_df(spark, rows), gap="5 minutes")
+        session_windowed_counts(_events_df(spark, rows))
         .orderBy("route_id", "session_start")
         .collect()
     )
@@ -151,7 +152,7 @@ def test_session_window_streaming_emits_closed_sessions(spark, tmp_path):
         .json(src_dir)
         .selectExpr("route_id", "CAST(ts_sec AS TIMESTAMP) AS timestamp")
     )
-    out = session_windowed_counts(stream, gap="1 minute", watermark="1 minute")
+    out = session_windowed_counts(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -164,6 +165,7 @@ def test_session_window_streaming_emits_closed_sessions(spark, tmp_path):
         assert spark.sql("SELECT * FROM sess_win").count() == 0
 
         # event far in the future pushes the watermark past the session
+        # end (last event + the 5-minute gap)
         spark.createDataFrame([("R2", BASE + 10_000, 0.0)], schema).write.mode(
             "append"
         ).json(src_dir)

@@ -15,6 +15,7 @@ from gtfs_realtime_etl_spark.functions.hashing import (
     winnow_fingerprints_kernel,
     winnow_profile_kernel,
 )
+from gtfs_realtime_etl_spark.operators import dedup
 from gtfs_realtime_etl_spark.operators.dedup import winnow_candidates
 
 K, W = 5, 4
@@ -79,13 +80,14 @@ def test_winnow_shared_substring_guarantee(spark):
     assert shared_counts[(1, 2)] >= 3  # a long passage -> many shared fps
 
 
-def test_winnow_bucket_cap_drops_boilerplate(spark):
-    """A fingerprint present in more docs than max_bucket is treated as
+def test_winnow_bucket_cap_drops_boilerplate(spark, monkeypatch):
+    """A fingerprint present in more docs than MAX_BUCKET is treated as
     boilerplate and produces no pairs."""
     docs = [(i, "identical boilerplate text everywhere") for i in range(10)]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    assert winnow_candidates(df, min_shared=1, max_bucket=5).count() == 0
-    assert winnow_candidates(df, min_shared=1, max_bucket=100).count() == 45
+    assert winnow_candidates(df, min_shared=1).count() == 45
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 5)
+    assert winnow_candidates(df, min_shared=1).count() == 0
 
 
 def test_winnow_profile_kernel_matches_naive_reference(spark):
