@@ -17,22 +17,13 @@ Design notes for scale:
   double's IEEE-754 bits through ``Double.doubleToRawLongBits``, and
   string ops reorder them little-endian.  Ingest enrichment and the
   flagship's stop geometry both call it, so neither plan has a Python
-  boundary.  Only the read-side inverse, ``wkb_point_lonlat`` (migration
-  of reference-shaped lakes), is a pandas_udf.
+  boundary.
 """
 
 from __future__ import annotations
 
-import struct
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StructField,
-    StructType,
-)
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -120,47 +111,6 @@ def point_wkb(lon: Column, lat: Column) -> Column:
     type 1, float64 x, float64 y.  NULL when either coordinate is NULL
     or NaN."""
     return F.unhex(F.concat(F.lit("0101000000"), _le_hex_bits(lon), _le_hex_bits(lat)))
-
-
-# StructType object, not a DDL string: string return types are parsed
-# via the active SparkSession, which does not exist at import time.
-_WKB_POINT_STRUCT = StructType(
-    [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-)
-
-
-@F.pandas_udf(_WKB_POINT_STRUCT)
-def _wkb_point_lonlat_udf(wkb: pd.Series) -> pd.DataFrame:
-    # Inverse of point_wkb: parse a WKB point back to (lon, lat).
-    # Accepts either byte order (byte 0: 1=little, 0=big) — the engine
-    # writes little-endian, but external GeoParquet writers may not.
-    # Geometry type must be Point (1); anything else decodes to null
-    # rather than garbage coordinates.
-    lons: list[float | None] = []
-    lats: list[float | None] = []
-    for b in wkb:
-        if b is None or len(b) != 21:
-            lons.append(None)
-            lats.append(None)
-            continue
-        endian = "<" if b[0] == 1 else ">"
-        gtype, x, y = struct.unpack(endian + "Idd", b[1:])
-        if gtype != 1:
-            lons.append(None)
-            lats.append(None)
-        else:
-            lons.append(x)
-            lats.append(y)
-    return pd.DataFrame({"lon": lons, "lat": lats})
-
-
-def wkb_point_lonlat(wkb: Column) -> Column:
-    """WKB point → ``struct<lon double, lat double>`` — the read-side
-    inverse of :func:`point_wkb`, for ingesting lakes written by the
-    reference's GeoParquet writer, which DROPS the lat/lon columns and
-    keeps only the geometry (etl/runtime/handler.py:131-142).  Arrow-
-    batched pandas_udf: it runs only when such a lake is migrated."""
-    return _wkb_point_lonlat_udf(wkb)
 
 
 def hex_wkb(wkb: Column) -> Column:

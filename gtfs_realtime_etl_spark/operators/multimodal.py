@@ -102,7 +102,7 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_media(spark, documents: DataFrame) -> DataFrame:
+def synthesize_media(documents: DataFrame) -> DataFrame:
     """Deterministic fake image table derived from the documents corpus
     — test/bench input for the plumbing above (no real codecs needed)."""
     return documents.select(

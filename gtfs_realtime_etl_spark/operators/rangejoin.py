@@ -24,7 +24,7 @@ loud, don't OOM an executor).
 
 Beyond the reference surface (its joins are equi-only — SURVEY.md
 SS2.3); this is the batch foundation for co-activity / conflict
-detection, and the batch twin of ``streaming/joins.py::interval_join``.
+detection.
 """
 
 from __future__ import annotations
@@ -80,8 +80,7 @@ def overlap_join(
                 F.concat(
                     F.lit(
                         f"overlap_join: interval spans >= {MAX_BUCKETS} buckets "
-                        f"of width {bucket_width}; raise bucket_width or "
-                        "max_buckets ("
+                        f"of width {bucket_width}; raise bucket_width ("
                     ),
                     F.col(s).cast("string"),
                     F.lit(".."),

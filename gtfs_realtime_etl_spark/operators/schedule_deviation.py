@@ -39,8 +39,8 @@ Physical-plan notes (100 TB design):
 - The window and the final aggregate both key on subsets of the join
   output; at 100 TB the dominant cost is the single trip_id shuffle of
   the fact side.
-- SKEW CAVEAT (measured, tests/test_skew.py): because the window's
-  clustering requirement (trip_id, stop_id, arrival_time,
+- SKEW CAVEAT (measured, tests/test_flagship_skew_split.py): because
+  the window's clustering requirement (trip_id, stop_id, arrival_time,
   stop_sequence) is satisfied by the join's trip_id partitioning,
   Catalyst fuses join + window into ONE stage with no exchange between
   them — one shuffle saved, but AQE's OptimizeSkewedJoin then REFUSES

@@ -68,8 +68,8 @@ from gtfs_realtime_etl_spark.sources.testdata import load_testdata
 # Scale shape: the explode multiplies rows ×2,080 but each exploded
 # row is 3 numbers wide, and partial agg collapses them within the
 # task — network traffic is tasks × 2,080 partials, not rows × 2,080.
-# tests/test_linalg.py checks the triangle against a numpy population
-# covariance.
+# tests/test_embedding_covariance.py checks the triangle against a
+# numpy population covariance.
 # ---------------------------------------------------------------------------
 
 COV_ROUND = 8

@@ -1356,7 +1356,7 @@ FROM agg JOIN counts ON agg.label = counts.label
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    media = synthesize_media(spark, documents)
+    media = synthesize_media(documents)
     return media_stats(media)
 
 
@@ -2496,7 +2496,7 @@ Q_ANN_IVF_TOPK_SQL = _ann_ivf_sql()
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load_testdata(spark, sf_dir, "documents")
-    media = synthesize_media(spark, documents)
+    media = synthesize_media(documents)
     feats = extract_features(media)
     return feats.select(
         "media_id",

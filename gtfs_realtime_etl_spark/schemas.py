@@ -80,38 +80,6 @@ LOCATIONS_LAKE = StructType(
     ]
 )
 
-#: A lake written by the REFERENCE's GeoParquet writer: latitude and
-#: longitude are DROPPED at write time (etl/runtime/handler.py:142
-#: ``drop_columns(['latitude','longitude'])``) and only the WKB
-#: ``geometry`` column carries position, alongside the generated bbox
-#: covering (``generate_covering=True``, handler.py:146-152).  Readers
-#: pin this schema for reference-lake interop; the missing-on-disk
-#: ``bbox`` case (older writers) surfaces as nulls, never a schema error.
-REFERENCE_LAKE = StructType(
-    [
-        StructField("trip_id", StringType()),
-        StructField("route_id", StringType()),
-        StructField("direction_id", StringType()),
-        StructField("vehicle_id", StringType()),
-        StructField("bearing", DoubleType()),
-        StructField("speed", DoubleType()),
-        StructField("timestamp", TimestampType()),
-        StructField("geohash", StringType()),
-        StructField("bbox", StructType(
-            [
-                StructField("xmin", DoubleType()),
-                StructField("ymin", DoubleType()),
-                StructField("xmax", DoubleType()),
-                StructField("ymax", DoubleType()),
-            ]
-        )),
-        StructField("geometry", BinaryType()),
-        StructField("year", IntegerType()),
-        StructField("month", IntegerType()),
-        StructField("day", IntegerType()),
-    ]
-)
-
 #: GTFS static dimension tables (CSV with header).
 GTFS_ROUTES = StructType(
     [

@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gtfs_realtime_etl_spark.functions.geo import wkb_point_lonlat
-from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE, REFERENCE_LAKE
+from gtfs_realtime_etl_spark.schemas import LOCATIONS_LAKE
 
 PARTITION_COLS = ("year", "month", "day")
 
@@ -72,40 +71,6 @@ def read_locations(spark: SparkSession, root: str) -> DataFrame:
     needed a unified-schema workaround for exactly this drift
     (compaction/runtime/handler.py:86-102)."""
     return spark.read.schema(LOCATIONS_LAKE).parquet(root)
-
-
-def read_reference_lake(spark: SparkSession, root: str) -> DataFrame:
-    """Read a lake written by the REFERENCE pipeline and present it in
-    the engine's canonical ``LOCATIONS_LAKE`` shape.
-
-    The reference's GeoParquet writer drops latitude/longitude at write
-    time and keeps only the WKB ``geometry`` column
-    (etl/runtime/handler.py:131-142); a user migrating an existing
-    reference lake therefore has geometry-only rows.  This reader pins
-    the reference write schema (``REFERENCE_LAKE``) and re-derives the
-    lon/lat doubles from the WKB bytes
-    (functions/geo.py::wkb_point_lonlat — the exact inverse of the
-    writer's float64 packing, so the roundtrip is bit-exact), yielding
-    the same columns ``read_locations`` produces on an engine-written
-    lake.  Downstream operators (schedule_deviation, day_slice, the
-    notebook SQL shape) run unchanged on either lake.
-
-    Scale shape: one Arrow-batched projection over the scan — no
-    shuffle, no join; partition pruning on year/month/day is untouched
-    because the decode is a per-row projection on top of the pruned
-    scan."""
-    df = spark.read.schema(REFERENCE_LAKE).parquet(root)
-    # Single UDF evaluation per row: materialize the struct once, then
-    # split it — two independent pt["lat"]/pt["lon"] projections would
-    # let the optimizer inline the Arrow UDF twice.
-    df = df.withColumn("_pt", wkb_point_lonlat(F.col("geometry")))
-    df = df.withColumn("latitude", F.col("_pt.lat")).withColumn(
-        "longitude", F.col("_pt.lon")
-    )
-    # Canonical column order (LOCATIONS_LAKE): lat/lon restored to their
-    # pre-drop positions so engine-lake and reference-lake readers are
-    # column-for-column interchangeable.
-    return df.select(*[f.name for f in LOCATIONS_LAKE.fields])
 
 
 def day_slice(

@@ -1,4 +1,4 @@
 """Structured Streaming ingest (Kafka / HTTP / file sources), lake
-maintenance (compaction), stateful operators, and watermarked windows.
+maintenance (compaction), and the streaming dedup fold.
 
 Import each name from the module that defines it."""

@@ -114,58 +114,6 @@ def test_flagship_matches_duckdb_oracle(spark, lake):
     assert g["geometry"][i] == wkb.hex().upper()
 
 
-def test_flagship_on_reference_shaped_lake(spark, lake):
-    """Read-side GeoParquet interop: a lake in the REFERENCE's write
-    shape — lat/lon DROPPED, position carried only by the WKB geometry
-    column (etl/runtime/handler.py:131-142) — must feed the flagship
-    through read_reference_lake() and reproduce the DuckDB oracle
-    exactly (the WKB float64 roundtrip is bit-exact, so results match
-    the engine-written lake bit-for-bit)."""
-    from pyspark.sql import functions as F
-
-    from gtfs_realtime_etl_spark.sources.lake import read_reference_lake
-
-    base = lake["base"]
-    ref_root = str(base / "reference_lake")
-    engine_rows = read_locations(spark, lake["lake_root"])
-    # Re-shape to the reference writer's output: drop the lat/lon
-    # doubles (geometry only), keep everything else.
-    ref_shaped = engine_rows.drop("latitude", "longitude")
-    write_locations_batch(ref_shaped, ref_root)
-
-    locations = read_reference_lake(spark, ref_root)
-    # lon/lat re-derived from WKB, bit-exact vs the engine lake
-    chk = (
-        locations.join(
-            engine_rows.select(
-                "trip_id", "vehicle_id", "timestamp",
-                F.col("latitude").alias("lat0"),
-                F.col("longitude").alias("lon0"),
-            ),
-            ["trip_id", "vehicle_id", "timestamp"],
-        )
-        .filter(
-            (F.col("latitude") != F.col("lat0"))
-            | (F.col("longitude") != F.col("lon0"))
-        )
-        .count()
-    )
-    assert chk == 0, "WKB->lon/lat roundtrip not bit-exact"
-
-    tabs = load_gtfs_static(spark, lake["fx"].gtfs_dir)
-    got = schedule_deviation(
-        locations, tabs["routes"], tabs["trips"], tabs["stops"], tabs["stop_times"]
-    ).toPandas()
-    exp = _oracle(lake["lake_root"], lake["fx"].gtfs_dir)
-    key = ["stop_id", "stop_lon", "stop_lat"]
-    g = got.sort_values(key).reset_index(drop=True)
-    e = exp.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(e) > 50
-    assert (g["stop_id"].values == e["stop_id"].values).all()
-    assert (g["count"].values == e["count"].values).all()
-    assert g["avg_diff"].values == pytest.approx(e["avg_diff"].values, abs=1e-9)
-
-
 def test_reliability_matches_scipy_shape(spark, lake):
     tabs = load_gtfs_static(spark, lake["fx"].gtfs_dir)
     locations = read_locations(spark, lake["lake_root"])

@@ -101,35 +101,6 @@ def test_point_wkb_bytes(spark):
     assert [got[i] for i, _, _ in rows[len(xs):]] == [None] * len(null_rows)
 
 
-def test_wkb_point_lonlat_roundtrip(spark):
-    """wkb_point_lonlat is the exact inverse of point_wkb: little- and
-    big-endian WKB points decode bit-exactly; nulls, wrong-length
-    payloads, and non-Point geometry types decode to null."""
-    from gtfs_realtime_etl_spark.functions.geo import wkb_point_lonlat
-
-    le = struct.pack("<BIdd", 1, 1, -79.38, 43.65)
-    be = struct.pack(">BIdd", 0, 1, 139.6917, 35.6895)
-    linestring = struct.pack("<BIdd", 1, 2, 1.0, 2.0)
-    rows = [(le,), (be,), (linestring,), (None,), (b"\x01short",)]
-    df = spark.createDataFrame(rows, "wkb binary")
-    out = df.select(wkb_point_lonlat(F.col("wkb")).alias("pt")).collect()
-    assert (out[0].pt.lon, out[0].pt.lat) == (-79.38, 43.65)
-    assert (out[1].pt.lon, out[1].pt.lat) == (139.6917, 35.6895)
-    assert out[2].pt.lon is None and out[2].pt.lat is None
-    assert out[3].pt.lon is None
-    assert out[4].pt.lon is None
-
-    # roundtrip through the writer on a grid of awkward doubles
-    vals = [(-180.0, -90.0), (0.0, 0.0), (1e-308, -1e-308), (179.999999, 89.999999)]
-    df2 = spark.createDataFrame(vals, "lon double, lat double")
-    rt = df2.select(
-        "lon", "lat",
-        wkb_point_lonlat(point_wkb(F.col("lon"), F.col("lat"))).alias("pt"),
-    ).collect()
-    for r in rt:
-        assert r.pt.lon == r.lon and r.pt.lat == r.lat
-
-
 def test_gtfs_time_handling(spark):
     df = spark.createDataFrame(
         [("06:30:15",), ("25:10:00",), ("00:00:00",)], "t string"

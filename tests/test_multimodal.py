@@ -16,7 +16,7 @@ def _media(spark, n=20):
         [(i, f"document body number {i} " + "x" * (50 + i)) for i in range(n)],
         "doc_id long, text string",
     )
-    return synthesize_media(spark, docs)
+    return synthesize_media(docs)
 
 
 def test_extract_features_histogram_sums_to_one(spark):
